@@ -142,8 +142,9 @@ object Compaction {
   /** [[compactSnapshotted]] addressed by table DIRECTORY instead of a
     * warehouse/table pair — the entry point the SQL `OPTIMIZE` command
     * uses, where the target is a catalog table's path or a quoted
-    * location. Identical semantics; `label` only names the result. */
-  /** `scope`: restrict the BIN-PACK candidate set to files this predicate
+    * location. Identical semantics; `label` only names the result.
+    *
+    * `scope`: restrict the BIN-PACK candidate set to files this predicate
     * keeps (manifest zones/blooms/partition values — the `OPTIMIZE …
     * WHERE` face): at warehouse scale "compact the hot partition" must
     * not pay for the cold petabytes even in candidate listing. Scoping
@@ -197,12 +198,17 @@ object Compaction {
     // Pure small-file debt (no clustering asked, no pending masks) BIN-
     // PACKS: only files under half the target rewrite, grouped into
     // ~target-sized bins; right-sized files carry forward BY REFERENCE
-    // (paths survive the commit identically). Compaction cost then
-    // scales with the DEBT, not the table — at 100 TB a nightly
-    // small-file pass touches the day's sync droppings, never the
-    // petabytes of already-compacted history. Clustering/Z-order stay
-    // full rewrites (they are about layout), and masked tables stay on
-    // the full path (the rewrite is what materializes the deletes).
+    // (paths survive the commit identically). Once a table holds
+    // right-sized files, compaction cost scales with the DEBT, not the
+    // table — at 100 TB a nightly small-file pass touches the day's sync
+    // droppings, never the petabytes of already-compacted history. A
+    // table still under half the target in total is all debt: its one
+    // packed file stays a candidate, so every bin-pack rewrites the
+    // whole table — which is why the Advisor names `compact` only at
+    // five small files (Advisor.CompactMinFiles), not at two.
+    // Clustering/Z-order stay full rewrites (they are about layout), and
+    // masked tables stay on the full path (the rewrite is what
+    // materializes the deletes).
     require(scope.isEmpty || delFiles.isEmpty,
       s"a scoped (WHERE) compaction refuses tables with pending " +
         s"equality-delete masks (${delFiles.size} here): the mask fold " +
@@ -355,12 +361,17 @@ object Compaction {
     val noOp = CompactionResult(table, files.size, files.size,
       dataFiles.map(_.rows).sum, totalBytes)
     // the HALF-target selection threshold is what keeps the job O(debt)
-    // under ongoing ingest: packed outputs average ABOVE half target
-    // (bins is a byte ceiling), so they permanently exit the candidate
-    // set — a wider threshold would re-select its own outputs and
-    // rewrite the accumulated class on every run once any new small
-    // file arrived. Consolidating half-to-full-target files is a
-    // deliberate O(table) layout job: ask for `clusterBy`.
+    // under ongoing ingest once the table outgrows it: packed outputs of
+    // a big enough class average ABOVE half target (bins is a byte
+    // ceiling), so they permanently exit the candidate set — a wider
+    // threshold would re-select its own outputs and rewrite the
+    // accumulated class on every run once any new small file arrived.
+    // A table smaller than half the target in total packs to one file
+    // that is still under it, re-enters the candidate set, and is
+    // rewritten by every later pack: O(table) per run, which the
+    // Advisor's five-file trigger (Advisor.CompactMinFiles) amortizes
+    // over four new files. Consolidating half-to-full-target files is
+    // a deliberate O(table) layout job: ask for `clusterBy`.
     val small = dataFiles.filter(f => f.bytes < targetBytes / 2 && keep(f))
     if (small.size <= 1) return noOp
     val classes = graft.table.SnapshotLog.epochGroups(spark, small)

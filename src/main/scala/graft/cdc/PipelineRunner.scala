@@ -60,12 +60,19 @@ object PipelineRunner {
     * table — the maintenance loop a platform cron runs per table, here
     * wired directly after each sync so repeated runs keep file counts,
     * mask debt and history depth bounded WITHOUT manual maintenance
-    * calls. Order matters: masks first (materialization clears both the
-    * entries and their files; consolidation is the cheap fallback when
-    * only the file-count debt fired), then small-file bin-pack, then
-    * retention — each through the same soak-tested commit protocol, so
-    * the loop is safe to run while other writers append. Returns the
-    * actions actually paid. */
+    * calls. Each pass rewrites the table at most once:
+    *  - materialization (mask debt) rewrites every data file into fresh
+    *    key-range-clustered output, so it also pays any small-file debt
+    *    found before it — bin-packing that output again would re-read
+    *    the table and undo its clustering;
+    *  - otherwise a named compaction runs, and on a masked table its
+    *    rewrite folds the masks in, so mask-file consolidation (the
+    *    cheap fallback when only the mask-file count fired) runs only
+    *    when no compaction does;
+    *  - retention runs last.
+    * Each step goes through the same soak-tested commit protocol, so the
+    * loop is safe to run while other writers append. Returns the actions
+    * actually paid. */
   def maintainTable(spark: SparkSession, warehouseDir: String, table: String,
                     retainLast: Int = 5,
                     targetBytes: Long = 128L * 1024 * 1024): Seq[String] = {
@@ -77,12 +84,11 @@ object PipelineRunner {
     val paid = scala.collection.mutable.ArrayBuffer.empty[String]
     if (findings.contains("materialize_deletes")) {
       Merge.materializeDeletes(spark, dir).foreach(_ => paid += "materialize_deletes")
-    } else if (findings.contains("consolidate_masks")) {
-      Merge.consolidateMasks(spark, dir).foreach(_ => paid += "consolidate_masks")
-    }
-    if (findings.contains("compact")) {
+    } else if (findings.contains("compact")) {
       val r = Compaction.compactSnapshotted(spark, warehouseDir, table, targetBytes)
       if (r.filesAfter < r.filesBefore) paid += "compact"
+    } else if (findings.contains("consolidate_masks")) {
+      Merge.consolidateMasks(spark, dir).foreach(_ => paid += "consolidate_masks")
     }
     if (findings.contains("expire_snapshots")) {
       val (dropped, _) = SnapshotLog.expireSnapshots(spark, dir, retainLast = retainLast)

@@ -618,7 +618,13 @@ private[connector] final class GraftV2Table(dir: String,
                                               * catalog — what [[v1Table]] names itself so the
                                               * engine's post-batch `refreshTable(name)` resolves
                                               * back through the SAME catalog. */
-                                            v2Ident: Option[(String, Identifier)] = None)
+                                            v2Ident: Option[(String, Identifier)] = None,
+                                            /** The snapshot state, when the caller already
+                                              * resolved it ([[GraftDataSource.relationFor]]
+                                              * for [[GraftV2ReadRule]]): the table then reads
+                                              * exactly that snapshot, and its metadata is
+                                              * not resolved twice. */
+                                            preState: Option[GraftDataSource.VisibleState] = None)
     extends Table with SupportsRead with SupportsWrite
     with TruncatableTable with SupportsDelete
     with SupportsMetadataColumns with SupportsRowLevelOperations
@@ -630,10 +636,8 @@ private[connector] final class GraftV2Table(dir: String,
   private[connector] def tableDir: String = dir
   private[connector] def pinnedAsOf: Option[Long] = asOf
 
-  private[connector] lazy val state
-      : (Seq[SnapshotLog.DataFile], Seq[SnapshotLog.DataFile],
-         Seq[StructType], StructType, Option[graft.table.FieldRegistry]) =
-    GraftDataSource.visibleState(spark, dir, asOf)
+  private[connector] lazy val state: GraftDataSource.VisibleState =
+    preState.getOrElse(GraftDataSource.visibleState(spark, dir, asOf))
 
   override def name(): String =
     dir + asOf.fold("")(v => s"@v$v")

@@ -34,13 +34,20 @@ import graft.table.SnapshotLog
   *    them against per-file zones/blooms/partition values driver-side,
   *    and stock Spark does the rest (parquet row-group pushdown, column
   *    pruning, whole-stage codegen). This is the Delta `TahoeFileIndex`
-  *    shape and the steady state of a maintained table (compaction
-  *    folds masks and drifted epochs away).
-  *  - **general path** (pending masks or drifted epochs): the relation
-  *    wraps [[SnapshotLog.read]]'s full merge-on-read / epoch-widening
-  *    plan, so results are always correct; it costs the DSv1 row bridge,
-  *    which is why maintenance (or `materializeDeletes`) is the road
-  *    back to the fast path.
+  *    shape and the steady state of a freshly maintained table.
+  *  - **general path** (pending position or equality masks, drifted
+  *    epochs, a live field registry): a [[GraftComputedRelation]] pinned
+  *    to the resolved snapshot. In a session with
+  *    [[graft.functions.GraftExtensions]], [[GraftV2ReadRule]] serves
+  *    every batch read of it through [[GraftV2Table]]'s scan: masked
+  *    files read vectorized, pushed filters prune files from the
+  *    manifests, and debt beyond the mask budget falls back to the
+  *    scan's own [[GraftBridgeScan]]. A masked table therefore stays a
+  *    merge-on-read table between maintenance runs instead of having to
+  *    be rewritten to be read cheaply. Without the extensions (and for
+  *    INSERT/DML targets, which keep their V1 resolution) the relation
+  *    answers through [[SnapshotLog.read]]'s merge-on-read plan over the
+  *    DSv1 Row bridge — always correct, just slower.
   *
   * WRITE commits through the log's optimistic protocol: `Append` is an
   * `append` snapshot; `Overwrite` removes every live file and adds the
@@ -109,7 +116,7 @@ final class GraftDataSource extends RelationProvider
             base.add("_change_op", org.apache.spark.sql.types.StringType)
               .add("_change_snapshot", org.apache.spark.sql.types.LongType))
         }
-      return new GraftComputedRelation(sqlContext, feed, dir,
+      return new GraftComputedRelation(sqlContext, feed, feed.schema, dir,
         insertable = false)
     }
     val asOf = resolveAsOf(spark, dir, parameters)
@@ -462,25 +469,37 @@ object GraftDataSource {
     }
   }
 
-  /** Plan the relation for a pinned snapshot: `HadoopFsRelation` over
+  /** A snapshot's (mask files, data files, per-epoch visible schemas,
+    * user-visible schema, live field registry) — [[visibleState]]'s
+    * answer, shared by the V1 relations and [[GraftV2Table]]. */
+  private[connector] type VisibleState =
+    (Seq[SnapshotLog.DataFile], Seq[SnapshotLog.DataFile],
+     Seq[StructType], StructType, Option[graft.table.FieldRegistry])
+
+  /** Plan the relation for a snapshot: `HadoopFsRelation` over
     * [[GraftFileIndex]] when the snapshot is mask-free and single-epoch
-    * (modulo hidden internal columns), else the always-correct computed
-    * relation over the full merge-on-read read path. SQL `INSERT INTO` /
-    * `INSERT OVERWRITE` against these relations is rewritten to log
-    * commits by [[GraftInsertRule]] — it must be a RULE, not a relation
-    * mixin, because `DataSource.resolveRelation` rebuilds a plain
-    * `HadoopFsRelation` (dropping any subclass) for catalog tables. */
+    * (modulo hidden internal columns), else the general-path
+    * [[GraftComputedRelation]], pinned to the snapshot resolved here and
+    * carrying the [[GraftV2Table]] [[GraftV2ReadRule]] reads it through.
+    * SQL `INSERT INTO` / `INSERT OVERWRITE` against these relations is
+    * rewritten to log commits by [[GraftInsertRule]] — it must be a RULE,
+    * not a relation mixin, because `DataSource.resolveRelation` rebuilds
+    * a plain `HadoopFsRelation` (dropping any subclass) for catalog
+    * tables. */
   private[connector] def relationFor(spark: SparkSession, sqlContext: SQLContext,
                                      dir: String, asOf: Option[Long]): BaseRelation = {
-    val (dels, data, epochSchemas, visible, reg) = visibleState(spark, dir, asOf)
+    // resolve "latest" to an id ONCE: the general path's deferred read
+    // and its V2 scan must both see exactly this snapshot
+    val pin = asOf.orElse(SnapshotLog.currentSnapshotId(spark, dir))
+    val state @ (dels, data, epochSchemas, visible, reg) = visibleState(spark, dir, pin)
     if (data.isEmpty) // empty snapshot: zero rows under the recovered schema
       new GraftComputedRelation(sqlContext,
         spark.createDataFrame(spark.sparkContext
           .emptyRDD[org.apache.spark.sql.Row], visible),
-        dir, insertable = asOf.isEmpty)
+        visible, dir, insertable = asOf.isEmpty)
     // a live (non-identity) field registry resolves columns by id —
     // physical file names differ from the visible ones, which the bare
-    // parquet scan cannot express: the computed path projects them;
+    // parquet scan cannot express: the general path projects them;
     // OPTIMIZE's materializing rewrite is the road back to this fast path
     else if (reg.isEmpty && dels.isEmpty && epochSchemas.distinct.size <= 1 &&
         // a visible schema WIDER than the bearing epoch (schema carriers
@@ -498,8 +517,9 @@ object GraftDataSource {
         options = Map.empty)(spark)
     else
       new GraftComputedRelation(sqlContext,
-        SnapshotLog.read(spark, dir, asOf).get, dir,
-        insertable = asOf.isEmpty)
+        SnapshotLog.read(spark, dir, pin).get, visible, dir,
+        insertable = asOf.isEmpty,
+        v2Table = Some(new GraftV2Table(dir, asOf, preState = Some(state))))
   }
 
   /** `INSERT INTO` (append commit) / `INSERT OVERWRITE` (atomic
@@ -574,18 +594,29 @@ object GraftDataSource {
   }
 }
 
-/** The general-path relation: wraps the DataFrame [[SnapshotLog.read]]
-  * plans (merge-on-read mask anti-join, epoch-widening union) behind the
-  * DSv1 scan interface. Column pruning is honored (`PrunedScan`); row
-  * filtering rides Spark's own post-scan Filter. Correct for every
-  * snapshot shape; the fast path exists because this one pays the
-  * Row bridge. */
+/** The relation behind every non-fast-path read: the general path (a
+  * snapshot with masks, drifted epochs or a live field registry), the
+  * empty snapshot and the batch change feed.
+  *
+  * `df` is evaluated only when Spark asks this relation for rows. On the
+  * general path it is [[SnapshotLog.read]]'s merge-on-read /
+  * epoch-widening plan, which a session with the graft extensions never
+  * builds: [[GraftV2ReadRule]] swaps the relation for `v2Table`'s
+  * vectorized scan during analysis. The declared `schema` is the snapshot's visible
+  * one (the fast path's and [[GraftV2Table]]'s); [[buildScan]] binds the
+  * computed columns to it by name. Column pruning is honored
+  * (`PrunedScan`); row filtering rides Spark's own post-scan Filter. */
 private[connector] final class GraftComputedRelation(
-    override val sqlContext: SQLContext, df: DataFrame,
-    val tableDir: String, val insertable: Boolean)
+    override val sqlContext: SQLContext, df: => DataFrame,
+    visible: StructType, val tableDir: String, val insertable: Boolean,
+    /** The pinned snapshot as a V2 table, on the general path only —
+      * what [[GraftV2ReadRule]] reads this relation through. */
+    val v2Table: Option[GraftV2Table] = None)
     extends BaseRelation with PrunedScan with InsertableRelation {
 
-  override def schema: StructType = GraftDataSource.nullable(df.schema)
+  private lazy val computed: DataFrame = df
+
+  override val schema: StructType = GraftDataSource.nullable(visible)
 
   override def insert(data: DataFrame, overwrite: Boolean): Unit = {
     require(insertable, s"graft table $tableDir: cannot INSERT into a " +
@@ -597,8 +628,10 @@ private[connector] final class GraftComputedRelation(
   override def needConversion: Boolean = true
 
   override def buildScan(requiredColumns: Array[String]): RDD[Row] = {
-    val pruned = if (requiredColumns.isEmpty) df
-      else df.select(requiredColumns.map(org.apache.spark.sql.functions.col).toSeq: _*)
+    import org.apache.spark.sql.functions.col
+    val pruned = if (requiredColumns.isEmpty) computed
+      else computed.select(requiredColumns.toSeq.map(c =>
+        col(c).cast(schema(c).dataType).as(c)): _*)
     pruned.rdd
   }
 }

@@ -2,6 +2,7 @@ package graft.connector
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder}
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.sources
@@ -108,6 +109,21 @@ private[connector] final class GraftV2BatchScan(
 
   /** Test face: the CURRENT file list (post runtime filtering). */
   private[connector] def keptFiles: Seq[DataFile] = kept
+
+  /** `numFiles`, the files the scan reads after static and runtime
+    * pruning — the same SQL metric name a parquet file scan reports, so
+    * plan inspection reads both paths alike. */
+  override def supportedCustomMetrics(): Array[CustomMetric] =
+    Array(new CustomSumMetric {
+      override def name(): String = "numFiles"
+      override def description(): String = "number of files read"
+    })
+
+  override def reportDriverMetrics(): Array[CustomTaskMetric] =
+    Array(new CustomTaskMetric {
+      override def name(): String = "numFiles"
+      override def value(): Long = kept.size.toLong
+    })
 
   override def readSchema(): StructType = required
 

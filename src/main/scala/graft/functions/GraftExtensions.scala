@@ -77,6 +77,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // rule's docstring); CDF reads widen the output by the change columns
     ext.injectResolutionRule(s =>
       new org.apache.spark.sql.graftshim.GraftStreamingTableRule(s))
+    // batch format("graft") reads of masked / drifted / registry
+    // snapshots resolve onto the vectorized V2 scan instead of the
+    // DSv1 Row bridge; write and DML targets keep their V1 relation
+    // (see GraftV2ReadRule's docstring)
+    ext.injectResolutionRule(_ => new graft.connector.GraftV2ReadRule)
     // SQL maintenance statements (OPTIMIZE / VACUUM) — a delegating
     // parser claims the two statements vanilla Spark has no grammar for
     // and lowers them onto compactDir/expireSnapshots (the Delta

@@ -7,15 +7,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * data files opened), diagnose the table's debt and name the job that
   * pays it. Each row is one actionable finding:
   *
-  *  - `compact`            — small-file debt: data files under half the
-  *                           target size (the reference's
+  *  - `compact`            — small-file debt: at least
+  *                           [[CompactMinFiles]] data files under half
+  *                           the target size (the reference's
   *                           coalesce(1)-per-sync failure mode at scale);
   *                           pay with [[graft.cdc.Compaction]].
-  *  - `materialize_deletes`— merge-on-read mask debt: pending
-  *                           equality-delete entries taxing every read
-  *                           with the broadcast mask join; pay with
-  *                           [[Merge.materializeDeletes]] (or the
-  *                           clustering compaction, which folds them in).
+  *  - `materialize_deletes`— merge-on-read mask debt: pending mask rows
+  *                           reach `maskRatio` of the live data rows;
+  *                           pay with [[Merge.materializeDeletes]] (or
+  *                           the clustering compaction, which folds them
+  *                           in).
+  *  - `consolidate_masks`  — mask-file debt below that ratio: every scan
+  *                           opens each pending mask file; fold them to
+  *                           one with [[Merge.consolidateMasks]].
   *  - `cluster`            — zone-map decay: the fraction of data-file
   *                           pairs whose key ranges OVERLAP (overlap ⇒
   *                           pruning and COW merges touch extra files);
@@ -29,15 +33,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                           unreferenced files) beyond the keep window;
   *                           pay with [[SnapshotLog.expireSnapshots]].
   *
+  * The two O(table) findings are sized to the debt, so a table taking a
+  * small change every few minutes is not rewritten on every run:
+  *  - `materialize_deletes` rewrites the whole table, so it waits until
+  *    the masked rows are a tenth of the live rows (`maskRatio` 0.1).
+  *    Amortized, that is one full rewrite per tenth of the table in
+  *    masked rows: at most about 10 rows rewritten per masked row, and
+  *    under 10 % of the rows a read decodes are dead. Until then the
+  *    masks are cheap to read — the V2 scan applies them vectorized.
+  *  - `compact` waits for [[CompactMinFiles]] small files (Iceberg's
+  *    bin-pack `min-input-files` default). While a whole table is under
+  *    half the target size its packed file stays a candidate, so each
+  *    bin-pack rewrites the table; the five-file floor bounds that to
+  *    one rewrite per four new small files.
+  *
   * At 100 TB this is how maintenance gets SCHEDULED: the advisor is a
   * metadata scan a cron can run per table per hour, and the thresholds
   * are the knobs a platform team tunes once.
   */
 object Advisor {
 
+  /** Small data files that name `compact` — the `min-input-files`
+    * default of Iceberg's bin-pack rewrite. */
+  val CompactMinFiles = 5
+
   def advise(spark: SparkSession, tableDir: String,
              targetBytes: Long = 128L * 1024 * 1024,
-             maskThreshold: Long = 1,
+             maskRatio: Double = 0.1,
              overlapThreshold: Double = 0.3,
              retainLast: Int = 5,
              maskFileThreshold: Int = 4): DataFrame = {
@@ -47,15 +69,18 @@ object Advisor {
     val findings = scala.collection.mutable.ArrayBuffer.empty[(String, Long, String)]
 
     val small = data.count(_.bytes < targetBytes / 2)
-    if (small > 1)
+    if (small >= CompactMinFiles)
       findings += (("compact", small.toLong,
         s"$small of ${data.size} data files under ${targetBytes / 2} bytes"))
 
     val maskRows = dels.map(_.rows).sum
-    if (maskRows >= maskThreshold)
+    val dataRows = data.map(_.rows).sum
+    // the ratio as a quotient: exact at the boundary (10 of 100 is the
+    // double 0.1), where maskRatio * dataRows may round past it
+    if (maskRows > 0 && maskRows.toDouble / math.max(dataRows, 1L) >= maskRatio)
       findings += (("materialize_deletes", maskRows,
-        s"$maskRows pending equality-delete entries in ${dels.size} file(s) " +
-          "tax every read with the mask join"))
+        s"$maskRows pending mask entries in ${dels.size} file(s) against " +
+          s"$dataRows live data rows — every read decodes the dead rows"))
 
     // high-frequency CDC accrues one tiny mask FILE per rowdelta commit;
     // every scan opens each — fold them to one (metadata-only, cheaper

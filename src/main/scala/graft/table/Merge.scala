@@ -569,19 +569,6 @@ object Merge {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Fold pending equality deletes back into data: rewrite the masked
-    * table clustered, drop every delete file, commit as `replace` (same
-    * logical rows — invisible to [[SnapshotLog.diff]] consumers, like
-    * any compaction). This is the maintenance job that bounds read
-    * amplification: run it when the mask count or masked-fraction
-    * crosses a threshold, and the read path returns to a bare pruned
-    * scan. The rewrite is key-range-clustered on the delete key by
-    * default; `clusterZOrder = Seq(x, y)` instead restores a 2-D
-    * Z-ORDER layout (near-square zone-map tiles on both dims, with the
-    * key column's stats still recorded for merge pruning) — so MOR
-    * maintenance on a Z-ordered table doesn't silently decay the layout
-    * `readWhere` depends on. Returns None when the table has no pending
-    * deletes (no commit made). */
   /** POSITIONAL merge-on-read DELETE — the deletion-vector path (Iceberg
     * position deletes / Delta deletion vectors, both published designs):
     * ONE scan locates the matching rows' (file path, row ordinal) pairs
@@ -657,6 +644,19 @@ object Merge {
         masksOnly = true)))
   }
 
+  /** Fold pending masks (equality and positional deletes) back into
+    * data: rewrite the masked table clustered, drop every delete file,
+    * commit as `replace` (same logical rows — invisible to
+    * [[SnapshotLog.diff]] consumers, like any compaction). This is the
+    * maintenance job that bounds read amplification: the [[Advisor]]
+    * names it once the masked rows reach a tenth of the live rows, and
+    * the read path returns to a bare pruned scan. The rewrite is key-range-clustered on the delete key by
+    * default; `clusterZOrder = Seq(x, y)` instead restores a 2-D
+    * Z-ORDER layout (near-square zone-map tiles on both dims, with the
+    * key column's stats still recorded for merge pruning) — so MOR
+    * maintenance on a Z-ordered table doesn't silently decay the layout
+    * `readWhere` depends on. Returns None when the table has no pending
+    * deletes (no commit made). */
   def materializeDeletes(spark: SparkSession, tableDir: String,
                          targetFiles: Int = 2,
                          clusterZOrder: Seq[String] = Nil,

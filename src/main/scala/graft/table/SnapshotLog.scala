@@ -1393,11 +1393,13 @@ object SnapshotLog {
     }
 
   /** Footer schema of one immutable data file, memoized process-wide
-    * (r15): `spark.read.parquet(path).schema` runs a (tiny) Spark JOB
-    * per call, and [[epochGroups]] runs per PLAN — so standing read
-    * traffic was paying one job per epoch per query for a value that
-    * can never change (files are content-immutable under uuid naming;
-    * bytes join the key as a belt-and-braces guard). LRU-bounded. */
+    * (r15): [[epochGroups]] runs per PLAN, so standing read traffic
+    * would pay one footer probe per epoch per query for a value that can
+    * never change (files are content-immutable under uuid naming; bytes
+    * join the key as a belt-and-braces guard). LRU-bounded. A miss reads
+    * the footer on the driver ([[sparkFooterSchema]]); only a file
+    * without Spark's schema record pays `spark.read.parquet(path)
+    * .schema`, whose inference runs a (tiny) Spark JOB. */
   private val epochSchemaCache =
     new java.util.LinkedHashMap[String, org.apache.spark.sql.types.StructType](
       64, 0.75f, true) {
@@ -1412,9 +1414,38 @@ object SnapshotLog {
       val hit = epochSchemaCache.get(key)
       if (hit != null) return hit
     }
-    val v = spark.read.parquet(f.path).schema
+    val v = sparkFooterSchema(spark, f.path)
+      .getOrElse(spark.read.parquet(f.path).schema)
     epochSchemaCache.synchronized(epochSchemaCache.put(key, v))
     v
+  }
+
+  /** The schema Spark's parquet writer records in a file's footer
+    * (`org.apache.spark.sql.parquet.row.metadata`), made nullable the
+    * way a file-source read makes it — what `spark.read.parquet(path)
+    * .schema` infers for such a file (Spark prefers this record over
+    * converting the parquet schema), read on the driver with no job.
+    * None for a file some other writer produced. */
+  private def sparkFooterSchema(spark: SparkSession, path: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.types._
+    def nullable(dt: DataType): DataType = dt match {
+      case st: StructType => StructType(st.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+        valueContainsNull = true)
+      case other => other
+    }
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new Path(path), spark.sessionState.newHadoopConf()))
+    val recorded =
+      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      finally reader.close()
+    recorded.flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case st: StructType => nullable(st).asInstanceOf[StructType] }
   }
 
   /** Read a set of live data files SAFELY across schema epochs: uniform
@@ -1431,11 +1462,17 @@ object SnapshotLog {
     val groups = epochGroups(spark, files)
     val schemas = groups.map(_._1)
     if (renames.isEmpty && schemas.forall(_ == schemas.head))
-      spark.read.parquet(files.map(_.path): _*)
+      readAs(spark, schemas.head, files)
     else graft.schema.Evolution.mergeEpochs(
-      groups.map { case (_, fs) => spark.read.parquet(fs.map(_.path): _*) },
-      renames)
+      groups.map { case (sch, fs) => readAs(spark, sch, fs) }, renames)
   }
+
+  /** One epoch's files under its already-probed footer schema — a
+    * `spark.read.parquet` that skips the schema-inference job. */
+  private def readAs(spark: SparkSession,
+                     schema: org.apache.spark.sql.types.StructType,
+                     files: Seq[DataFile]): DataFrame =
+    spark.read.schema(schema).parquet(files.map(_.path): _*)
 
   /** [[readEpochSafe]] with the two scan-metadata position columns
     * ([[PosFileCol]], [[PosOrdCol]]) appended — what a positional-delete
@@ -1452,10 +1489,9 @@ object SnapshotLog {
     val groups = epochGroups(spark, files)
     val schemas = groups.map(_._1)
     if (renames.isEmpty && schemas.forall(_ == schemas.head))
-      withPos(spark.read.parquet(files.map(_.path): _*))
+      withPos(readAs(spark, schemas.head, files))
     else graft.schema.Evolution.mergeEpochs(
-      groups.map { case (_, fs) =>
-        withPos(spark.read.parquet(fs.map(_.path): _*)) },
+      groups.map { case (sch, fs) => withPos(readAs(spark, sch, fs)) },
       renames)
   }
 
@@ -1510,9 +1546,9 @@ object SnapshotLog {
                                 keepPos: Boolean): DataFrame = {
     val (posDels, eqDels) = dels.partition(_.kind == "posdelete")
     val needPos = keepPos || posDels.nonEmpty
-    val bySeq = data.groupBy(_.seq).toSeq.sortBy(_._1)
-    val withSeq = unionEpochs(bySeq.map { case (seq, fs) =>
-      val raw = spark.read.parquet(fs.map(_.path): _*)
+    val withSeq = unionEpochs(epochGroups(spark, data).map { case (sch, fs) =>
+      val seq = fs.head.seq
+      val raw = readAs(spark, sch, fs)
       val df =
         if (!needPos) raw
         else raw.select(col("*"),
@@ -1731,8 +1767,9 @@ object SnapshotLog {
     * (folded frame keyed key + `_graft_del_seq`, key column name). */
   private[graft] def foldMasks(spark: SparkSession,
                                dels: Seq[DataFile]): (DataFrame, String) = {
-    val delDf = dels.groupBy(_.seq).toSeq.map { case (seq, fs) =>
-      val df = spark.read.parquet(fs.map(_.path): _*)
+    val delDf = epochGroups(spark, dels).map { case (sch, fs) =>
+      val seq = fs.head.seq
+      val df = readAs(spark, sch, fs)
       if (df.columns.contains("_graft_del_seq")) df
       else df.withColumn("_graft_del_seq", lit(seq))
     }.reduce(_ unionByName _)

@@ -799,6 +799,60 @@ class CdcSpec extends AnyFunSuite {
     assert(cleared.isEmpty)
   }
 
+  test("advisor sizes compact and materialize_deletes to the debt") {
+    import spark.implicits._
+    import graft.table.{Advisor, Merge, SnapshotLog}
+    val dir = Files.createTempDirectory("graft-advdebt").toString + "/t"
+    def append(lo: Long): Unit = SnapshotLog.commit(spark, dir, "append",
+      SnapshotLog.writeData((lo until lo + 100).map(k => (k, k)).toDF("id", "v")
+        .coalesce(1), dir, statsCol = Some("id")))
+    def advice(): Map[String, Long] = Advisor.advise(spark, dir, retainLast = 100)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    def delete(ks: Seq[Long]): Unit = Merge.mergeOnRead(spark, dir,
+      ks.map(k => (k, 0L, true)).toDF("id", "v", "is_del"), "id", Some("is_del"))
+    // four small files are not yet worth a bin-pack; the fifth is
+    (0 until 4).foreach(i => append(i * 100L))
+    assert(!advice().contains("compact"), advice().toString)
+    append(400L)
+    assert(advice().get("compact").contains(5L), advice().toString)
+    // 49 masked rows against 500 live rows sit under the tenth: the
+    // four mask files still fold, but nothing is rewritten
+    delete(0L until 46L)
+    Seq(100L, 200L, 300L).foreach(k => delete(Seq(k)))
+    val under = advice()
+    assert(!under.contains("materialize_deletes"), under.toString)
+    assert(under.get("consolidate_masks").contains(4L), under.toString)
+    // the 50th masked row reaches a tenth of the live rows
+    delete(Seq(400L))
+    assert(advice().get("materialize_deletes").contains(50L), advice().toString)
+  }
+
+  test("one maintenance pass rewrites a masked small-file table once") {
+    import spark.implicits._
+    import graft.table.{Merge, SnapshotLog}
+    val base = Files.createTempDirectory("graft-maint1").toString
+    val dir = s"$base/t_parquet"
+    Seq(3L, 0L, 5L, 1L, 4L, 2L).foreach { i =>
+      SnapshotLog.commit(spark, dir, "append", SnapshotLog.writeData(
+        (i * 100 until i * 100 + 100).map(k => (k, k)).toDF("id", "v").coalesce(1),
+        dir, statsCol = Some("id")))
+    }
+    Merge.mergeOnRead(spark, dir,
+      (0L until 600L by 10).map(k => (k, 0L, true)).toDF("id", "v", "is_del"),
+      "id", Some("is_del"))
+    val before = SnapshotLog.commits(spark, dir).size
+    // both O(table) debts are named, but the materialization's clustered
+    // output already pays the small-file debt: one rewrite, not two
+    val paid = PipelineRunner.maintainTable(spark, base, "t", retainLast = 100)
+    assert(paid === Seq("materialize_deletes"))
+    val ops = SnapshotLog.commits(spark, dir).drop(before).map(_.op)
+    assert(ops === Seq("replace"), ops.toString)
+    val zones = SnapshotLog.filesAt(spark, dir).map(_.stats("id")).sortBy(_._1)
+    assert(zones.size > 1 && zones.sliding(2).forall { case Seq(a, b) => a._2 < b._1 },
+      s"the rewrite must keep disjoint key zones: $zones")
+    assert(SnapshotLog.read(spark, dir).get.count() === 540L)
+  }
+
   test("schema drift through the snapshot layer: widened reads, epoch schemas preserved, masks cross epochs") {
     import spark.implicits._
     import graft.table.{Merge, SnapshotLog}

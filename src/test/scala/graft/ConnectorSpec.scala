@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation, V1ScanWrapper}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -174,6 +175,89 @@ class ConnectorSpec extends AnyFunSuite {
     assert(back.schema.fieldNames.toSet === Set("id", "cat", "score"))
     // column pruning still reaches the fallback relation
     assert(back.select("cat").distinct().count() === 2)
+  }
+
+  /** The description of the executed (post-AQE) V2 batch scan of a
+    * collected DataFrame, when the read planned one. */
+  private def batchScanOf(df: DataFrame): Option[String] = {
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val effective = plan.collectFirst {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+    }.getOrElse(plan)
+    effective.collectFirst { case b: BatchScanExec => b.scan.description() }
+  }
+
+  /** Four range-clustered files of `rows(400)` with id zones. */
+  private def clustered(tag: String): String = {
+    val dir = tmp(tag)
+    rows(400).repartitionByRange(4, col("id"))
+      .write.format("graft").option("statsCols", "id").save(dir)
+    dir
+  }
+
+  /** The snapshot's rows as the Scala API reads them, in `df`'s column order. */
+  private def apiRows(dir: String, df: DataFrame, asOf: Option[Long] = None) =
+    SnapshotLog.read(spark, dir, asOf).get.select(df.columns.map(col): _*)
+      .orderBy("id").collect().toSeq
+
+  test("equality- and position-masked snapshots read through the vectorized V2 scan") {
+    val eqDir = clustered("eqscan")
+    Merge.mergeOnRead(spark, eqDir, spark.range(390, 410).select(col("id"),
+      lit("upd").as("cat"), (col("id") * 3).as("v")), keyCol = "id")
+    val eq = spark.read.format("graft").load(eqDir)
+    val eqScan = batchScanOf(eq)
+    assert(eqScan.exists(d => d.startsWith("GraftBatchScan(") && d.contains("eqKeys=")),
+      s"expected the masked V2 scan, got $eqScan")
+    assert(eq.orderBy("id").collect().toSeq === apiRows(eqDir, eq))
+    assert(eq.count() === 410)
+
+    val posDir = clustered("posscan")
+    Merge.deleteWhere(spark, posDir, col("id") % 7 === 0)
+    val pos = spark.read.format("graft").load(posDir)
+    val posScan = batchScanOf(pos)
+    assert(posScan.exists(d => d.startsWith("GraftBatchScan(") &&
+      d.contains("maskedRows=58")),
+      s"expected the position-masked V2 scan, got $posScan")
+    assert(pos.orderBy("id").collect().toSeq === apiRows(posDir, pos))
+    assert(pos.count() === 400 - 58)
+  }
+
+  test("a point lookup on a masked snapshot prunes files; versionAsOf takes the same scan") {
+    val dir = clustered("masklookup")
+    Merge.mergeOnRead(spark, dir, spark.range(0, 400, 50).select(col("id"),
+      lit("upd").as("cat"), (col("id") * 3).as("v")), keyCol = "id")
+    Merge.mergeOnRead(spark, dir, spark.range(10, 400, 100).select(col("id"),
+      lit("upd2").as("cat"), (col("id") * 5).as("v")), keyCol = "id")
+    val dataFiles = SnapshotLog.filesAt(spark, dir).count(_.kind == "data")
+    val lookup = spark.read.format("graft").load(dir).filter(col("id") === 250)
+    val desc = batchScanOf(lookup).getOrElse(fail("no V2 scan for the lookup"))
+    val kept = "files=(\\d+)".r.findFirstMatchIn(desc).get.group(1).toInt
+    assert(kept < dataFiles, s"lookup kept $kept of $dataFiles files: $desc")
+    assert(lookup.collect().map(r => (r.getString(1), r.getLong(2))).toSeq ===
+      Seq(("upd", 750L)))
+    // snapshot 2 is masked too: time travel reads it through the same scan
+    val v2 = spark.read.format("graft").option("versionAsOf", "2").load(dir)
+    assert(batchScanOf(v2).exists(_.contains("eqKeys=8")))
+    assert(v2.orderBy("id").collect().toSeq === apiRows(dir, v2, Some(2L)))
+  }
+
+  test("masked reads over the mask budget answer through the V2 bridge scan") {
+    val dir = clustered("maskbudget")
+    Merge.deleteWhere(spark, dir, col("id") % 3 === 0)
+    Merge.mergeOnRead(spark, dir, spark.range(395, 405).select(col("id"),
+      lit("upd").as("cat"), (col("id") * 3).as("v")), keyCol = "id")
+    spark.conf.set("graft.v2.maskedScan.maxPositions", "0")
+    try {
+      val back = spark.read.format("graft").load(dir)
+      assert(batchScanOf(back).isEmpty, "over-budget masks must not plan the vectorized scan")
+      val scans = back.queryExecution.optimizedPlan.collect {
+        case DataSourceV2ScanRelation(_, w: V1ScanWrapper, _, _, _) =>
+          w.v1Scan.description() }
+      assert(scans.exists(_.startsWith("GraftBridgeScan(")), scans.toString)
+      assert(back.orderBy("id").collect().toSeq === apiRows(dir, back))
+      assert(back.filter(col("id") === 398).select("v").head.getLong(0) === 398L * 3)
+    } finally spark.conf.unset("graft.v2.maskedScan.maxPositions")
   }
 
   test("overwrite replaces atomically; history keeps the pre-overwrite snapshot") {
