@@ -832,8 +832,7 @@ private[connector] final class GraftV2Table(dir: String,
   * from metadata alone. */
 private[connector] final class GraftScanBuilder(spark: SparkSession,
     dir: String,
-    state: (Seq[SnapshotLog.DataFile], Seq[SnapshotLog.DataFile],
-      Seq[StructType], StructType, Option[graft.table.FieldRegistry]))
+    state: GraftDataSource.VisibleState)
     extends ScanBuilder with SupportsPushDownFilters
     with SupportsPushDownRequiredColumns with SupportsPushDownAggregates
     with SupportsPushDownLimit {

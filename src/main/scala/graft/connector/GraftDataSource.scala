@@ -415,6 +415,13 @@ object GraftDataSource {
   private[connector] def nullable(s: StructType): StructType =
     StructType(s.fields.map(_.copy(nullable = true)))
 
+  /** A snapshot's (mask files, data files, per-epoch visible schemas,
+    * user-visible schema, live field registry) — [[visibleState]]'s
+    * answer, shared by the V1 relations and [[GraftV2Table]]. */
+  private[connector] type VisibleState =
+    (Seq[SnapshotLog.DataFile], Seq[SnapshotLog.DataFile],
+     Seq[StructType], StructType, Option[graft.table.FieldRegistry])
+
   /** The snapshot's (mask files, data files, per-epoch visible schemas,
     * user-visible schema) — schemas probed from one footer per epoch
     * (returned so callers never re-probe), internal columns (row lineage)
@@ -428,9 +435,7 @@ object GraftDataSource {
     * still-on-disk file any retained manifest ever added. Only a table
     * with no recoverable schema anywhere refuses. */
   private[connector] def visibleState(spark: SparkSession, dir: String,
-                                      asOf: Option[Long])
-      : (Seq[SnapshotLog.DataFile], Seq[SnapshotLog.DataFile],
-         Seq[StructType], StructType, Option[graft.table.FieldRegistry]) = {
+                                      asOf: Option[Long]): VisibleState = {
     val (files, reg0) = SnapshotLog.stateAt(spark, dir, asOf)
     // identity registries impose nothing; only a live rename/drop makes
     // schemas resolve through the mapping (and forces the computed path)
@@ -468,13 +473,6 @@ object GraftDataSource {
       (dels, data, bearing, merged, reg)
     }
   }
-
-  /** A snapshot's (mask files, data files, per-epoch visible schemas,
-    * user-visible schema, live field registry) — [[visibleState]]'s
-    * answer, shared by the V1 relations and [[GraftV2Table]]. */
-  private[connector] type VisibleState =
-    (Seq[SnapshotLog.DataFile], Seq[SnapshotLog.DataFile],
-     Seq[StructType], StructType, Option[graft.table.FieldRegistry])
 
   /** Plan the relation for a snapshot: `HadoopFsRelation` over
     * [[GraftFileIndex]] when the snapshot is mask-free and single-epoch

@@ -114,14 +114,11 @@ private[connector] final class GraftV2BatchScan(
     * pruning — the same SQL metric name a parquet file scan reports, so
     * plan inspection reads both paths alike. */
   override def supportedCustomMetrics(): Array[CustomMetric] =
-    Array(new CustomSumMetric {
-      override def name(): String = "numFiles"
-      override def description(): String = "number of files read"
-    })
+    Array(new GraftNumFilesMetric)
 
   override def reportDriverMetrics(): Array[CustomTaskMetric] =
     Array(new CustomTaskMetric {
-      override def name(): String = "numFiles"
+      override def name(): String = GraftNumFilesMetric.Name
       override def value(): Long = kept.size.toLong
     })
 
@@ -311,6 +308,18 @@ private[connector] final class GraftV2BatchScan(
           math.max(0L, kept.map(_.rows).sum - masked))
       }
   }
+}
+
+/** [[GraftV2BatchScan]]'s `numFiles` metric. Spark re-creates a custom
+  * metric from its class name to aggregate it, so it is a top-level
+  * class with a no-argument constructor. */
+private[connector] final class GraftNumFilesMetric extends CustomSumMetric {
+  override def name(): String = GraftNumFilesMetric.Name
+  override def description(): String = "number of files read"
+}
+
+private[connector] object GraftNumFilesMetric {
+  val Name = "numFiles"
 }
 
 /** `sources.Filter` (EXTERNAL JVM literal types) → the driver-side

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation, V1ScanWrapper}
 import org.apache.spark.sql.functions._
@@ -14,8 +14,9 @@ import graft.table.{Merge, SnapshotLog}
   * guarantees — mask-free single-epoch snapshots scan as a plain
   * parquet `FileSourceScanExec` (whole-stage codegen, parquet row-group
   * pushdown) whose file set the manifest zones/blooms/partition values
-  * prune, while masked or drifted snapshots fall back to the computed
-  * merge-on-read plan and stay CORRECT.
+  * prune, while masked or drifted snapshots read through the V2 scan
+  * (vectorized masked reads, the bridge scan past the mask budget) and
+  * stay CORRECT.
   */
 class ConnectorSpec extends AnyFunSuite {
 
@@ -27,16 +28,24 @@ class ConnectorSpec extends AnyFunSuite {
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-connspec-$tag").toString + "/t"
 
-  /** The executed scan node (post-AQE) of a collected DataFrame, when the
-    * plan went through the fast HadoopFsRelation path. */
-  private def fileScanOf(df: DataFrame): Option[FileSourceScanExec] = {
+  /** The executed (post-AQE) plan of a collected DataFrame. */
+  private def executedPlanOf(df: DataFrame): SparkPlan = {
     df.collect()
     val plan = df.queryExecution.executedPlan
-    val effective = plan.collectFirst {
+    plan.collectFirst {
       case a: AdaptiveSparkPlanExec => a.executedPlan
     }.getOrElse(plan)
-    effective.collectFirst { case f: FileSourceScanExec => f }
   }
+
+  /** The executed scan node of a collected DataFrame, when the plan went
+    * through the fast HadoopFsRelation path. */
+  private def fileScanOf(df: DataFrame): Option[FileSourceScanExec] =
+    executedPlanOf(df).collectFirst { case f: FileSourceScanExec => f }
+
+  /** The description of the executed V2 batch scan of a collected
+    * DataFrame, when the read planned one. */
+  private def batchScanOf(df: DataFrame): Option[String] =
+    executedPlanOf(df).collectFirst { case b: BatchScanExec => b.scan.description() }
 
   private def rows(n: Int): DataFrame =
     spark.range(n).select(col("id"),
@@ -177,17 +186,6 @@ class ConnectorSpec extends AnyFunSuite {
     assert(back.select("cat").distinct().count() === 2)
   }
 
-  /** The description of the executed (post-AQE) V2 batch scan of a
-    * collected DataFrame, when the read planned one. */
-  private def batchScanOf(df: DataFrame): Option[String] = {
-    df.collect()
-    val plan = df.queryExecution.executedPlan
-    val effective = plan.collectFirst {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-    }.getOrElse(plan)
-    effective.collectFirst { case b: BatchScanExec => b.scan.description() }
-  }
-
   /** Four range-clustered files of `rows(400)` with id zones. */
   private def clustered(tag: String): String = {
     val dir = tmp(tag)
@@ -231,9 +229,13 @@ class ConnectorSpec extends AnyFunSuite {
       lit("upd2").as("cat"), (col("id") * 5).as("v")), keyCol = "id")
     val dataFiles = SnapshotLog.filesAt(spark, dir).count(_.kind == "data")
     val lookup = spark.read.format("graft").load(dir).filter(col("id") === 250)
-    val desc = batchScanOf(lookup).getOrElse(fail("no V2 scan for the lookup"))
+    val scan = executedPlanOf(lookup).collectFirst { case b: BatchScanExec => b }
+      .getOrElse(fail("no V2 scan for the lookup"))
+    val desc = scan.scan.description()
     val kept = "files=(\\d+)".r.findFirstMatchIn(desc).get.group(1).toInt
     assert(kept < dataFiles, s"lookup kept $kept of $dataFiles files: $desc")
+    // the scan reports the files it read under the file scan's metric name
+    assert(scan.metrics("numFiles").value === kept)
     assert(lookup.collect().map(r => (r.getString(1), r.getLong(2))).toSeq ===
       Seq(("upd", 750L)))
     // snapshot 2 is masked too: time travel reads it through the same scan
