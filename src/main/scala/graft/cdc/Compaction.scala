@@ -366,12 +366,9 @@ object Compaction {
     // ceiling), so they permanently exit the candidate set — a wider
     // threshold would re-select its own outputs and rewrite the
     // accumulated class on every run once any new small file arrived.
-    // A table smaller than half the target in total packs to one file
-    // that is still under it, re-enters the candidate set, and is
-    // rewritten by every later pack: O(table) per run, which the
-    // Advisor's five-file trigger (Advisor.CompactMinFiles) amortizes
-    // over four new files. Consolidating half-to-full-target files is
-    // a deliberate O(table) layout job: ask for `clusterBy`.
+    // A table under half the target in total stays all debt (see
+    // compactDir). Consolidating half-to-full-target files is a
+    // deliberate O(table) layout job: ask for `clusterBy`.
     val small = dataFiles.filter(f => f.bytes < targetBytes / 2 && keep(f))
     if (small.size <= 1) return noOp
     val classes = graft.table.SnapshotLog.epochGroups(spark, small)
