@@ -537,13 +537,13 @@ object CdcQueries {
         .orderBy(col("kafka_offset"))
     }),
     // POINT-LOOKUP through manifest BLOOM filters
-    // ([[graft.table.SnapshotLog.readPoints]]): the fixture table is four
+    // ([[graft.table.SnapshotLog.readPruned]]): the fixture table is four
     // ingest-ordered appends that each span the whole orderkey range —
     // zone maps keep every file for any point — but each file carries a
     // 4 KB bloom of its keys, so a lookup touches ~one file. The three
     // smallest orderkeys probe as ONE batched IN-set lookup: all keys'
-    // survivors resolve in one metadata pass and scan once (r9 — the
-    // per-key readPoint union scanned overlapping survivors N times).
+    // survivors resolve in one metadata pass and scan once (a per-key
+    // union would scan overlapping survivors N times).
     // Equality with the plain SQL IN-filter proves blooms never lose a
     // row (no false negatives). CdcSpec pins the skip counts.
     "cdc_point_lookup" -> ((s, d) => {
@@ -552,13 +552,14 @@ object CdcQueries {
       val keys = graft.schema.Tables(s, d, "orders").select(col("o_orderkey").cast("long"))
         .distinct().orderBy(col("o_orderkey")).limit(3)
         .collect().map(_.getLong(0)).toSeq // 3-row driver fetch: the lookup keys
-      SnapshotLog.readPoints(s, t, "o_orderkey", keys).get
+      SnapshotLog.readPruned(s, t,
+          graft.table.Constraints.in("o_orderkey", keys: _*)).get
         .filter(col("o_orderkey").isin(keys: _*))
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         .orderBy(col("o_orderkey"))
     }),
     // 2-D ZONE-MAP pruned read over a Z-ORDER-compacted snapshot table
-    // ([[graft.table.SnapshotLog.readWhere]]): the events table is
+    // ([[graft.table.SnapshotLog.readPruned]]): the events table is
     // rewritten by compactSnapshotted(clusterZOrder = user_id, minute),
     // every file carries per-COLUMN [min,max] stats in its manifest, and
     // the (user range ∧ minute range) read prunes files on BOTH
@@ -574,8 +575,8 @@ object CdcQueries {
       val (m0, m1) = (mins.map(_._1).min, mins.map(_._2).max)
       val mLo = m0 + (m1 - m0 + 1) / 4
       val mHi = mLo + 1439
-      SnapshotLog.readWhere(s, t,
-          Map("user_id" -> (10L, 19L), "minute" -> (mLo, mHi))).get
+      SnapshotLog.readPruned(s, t, graft.table.Constraints(ranges =
+          Map("user_id" -> (10L, 19L), "minute" -> (mLo, mHi)))).get
         .filter(col("user_id").between(10, 19) && col("minute").between(mLo, mHi))
         .select(col("event_id"), col("user_id"), col("minute"), col("event_type"))
         .orderBy(col("event_id"))
@@ -600,7 +601,7 @@ object CdcQueries {
         .get.orderBy(col("kafka_offset"))
     }),
     // PARTITION-pruned read over a date-partitioned snapshot table
-    // ([[graft.table.SnapshotLog.readPartitions]]): events clustered by
+    // ([[graft.table.SnapshotLog.readPruned]]): events clustered by
     // event day into range files, each file's partition-VALUE set
     // recorded in the manifest (the Iceberg posture — values live in
     // metadata, columns stay in the data, no Hive directory scheme).
@@ -612,7 +613,8 @@ object CdcQueries {
       val t = partitionedWarehouse(s, d)
       val day = SnapshotLog.read(s, t).get
         .agg(min(col("event_date"))).head().getString(0)
-      SnapshotLog.readPartitions(s, t, Map("event_date" -> Seq(day))).get
+      SnapshotLog.readPruned(s, t,
+          graft.table.Constraints(parts = Map("event_date" -> Seq(day)))).get
         .filter(col("event_date") === day)
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("event_date"))
@@ -886,7 +888,7 @@ object CdcQueries {
     scala.collection.concurrent.TrieMap.empty[String, String]
   /** A snapshot table over the driver's events parquet, Z-ORDER
     * compacted on (user_id, minute) with per-column manifest stats —
-    * the [[graft.table.SnapshotLog.readWhere]] fixture. The initial
+    * the 2-D [[graft.table.SnapshotLog.readPruned]] fixture. The initial
     * append is deliberately layout-random (`repartition(8)`) so the
     * compaction, not ingest luck, is what localizes the dimensions. */
   private def zoneWarehouse(spark: SparkSession, dir: String): String =
@@ -912,7 +914,7 @@ object CdcQueries {
   /** A date-partitioned snapshot table over the driver's events parquet:
     * rows clustered by event day via range partitioning, per-file
     * partition-value sets recorded in the manifest for
-    * [[graft.table.SnapshotLog.readPartitions]] pruning. */
+    * [[graft.table.SnapshotLog.readPruned]] pruning. */
   private def partitionedWarehouse(spark: SparkSession, dir: String): String =
     partitionedWarehouseCache.getOrElseUpdate(s"${System.identityHashCode(spark)}|$dir", {
       import graft.table.SnapshotLog

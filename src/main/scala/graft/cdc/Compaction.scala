@@ -287,7 +287,7 @@ object Compaction {
       statsCols = clusterZOrder,
       maxRecordsPerFile = rowCap,
       // partition-value metadata survives the rewrite (a compaction must
-      // not blind readPartitions); an unclustered rewrite may mix values
+      // not blind partition pruning); an unclustered rewrite may mix values
       // per file — over-cap sets simply stop recording (conservative).
       // Registry tables translate the recorded (physical) keys to the
       // frame's logical names — which this rewrite then makes physical.

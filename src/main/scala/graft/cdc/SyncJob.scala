@@ -33,7 +33,7 @@ import graft.schema.Schemas
   *    layout the plain mode gets from `partitionBy` directories — but
   *    manifest-native: the write clusters by `sync_date`, each file's
   *    partition-value set is recorded in the manifest
-  *    ([[graft.table.SnapshotLog.readPartitions]] prunes on it), and the
+  *    ([[graft.table.SnapshotLog.readPruned]] prunes on it), and the
   *    column stays in the data. A date-bounded read then skips other
   *    partitions' files from metadata alone, same as directory pruning
   *    but with snapshot isolation on top. This is the capability

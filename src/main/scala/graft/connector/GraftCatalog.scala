@@ -946,12 +946,12 @@ private[connector] final class GraftScanBuilder(spark: SparkSession,
     case None =>
       // full manifest pruning from the pushed filters — zones, blooms
       // AND partition-value sets, through the same Constraints the V1
-      // FileIndex uses (the r13 upgrade from zone-only ranges).
+      // FileIndex uses.
       // Pruning decisions speak LOGICAL names (the filters') — manifest
       // stats keys are PHYSICAL: translate each file's metadata through
       // the pinned registry first, or a rename-swap / re-added namesake
       // column would prune against the WRONG column's zones
-      val cs = GraftSourceConstraints.from(pushed, visible)
+      val cs = GraftV2BatchScan.constraints(pushed.toSeq, visible)
       val zoneKept =
         if (pushed.isEmpty) data
         else data.filter(f =>

@@ -507,7 +507,7 @@ object GraftDataSource {
         epochSchemas.headOption.forall(_.fields.forall(f =>
           visible.fields.exists(v => v.name == f.name && v.dataType == f.dataType))))
       HadoopFsRelation(
-        location = new GraftFileIndex(spark, dir, data, visible, asOf),
+        location = new GraftFileIndex(dir, data, asOf),
         partitionSchema = new StructType(),
         dataSchema = visible,
         bucketSpec = None,

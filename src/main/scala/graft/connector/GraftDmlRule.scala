@@ -2,7 +2,7 @@ package graft.connector
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.TableIdentifier
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, EqualNullSafe, EqualTo, Expression, Literal, SubqueryExpression}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.{coalesce, col, count, input_file_name, li
 import org.apache.spark.sql.graftshim.GraftSqlShim
 import org.apache.spark.sql.types._
 
-import graft.table.{Merge, SnapshotLog}
+import graft.table.{Constraints, Merge, SnapshotLog}
 import graft.table.SnapshotLog.DataFile
 
 /** SQL row-level DML for graft tables — `DELETE FROM`, `UPDATE`,
@@ -33,12 +33,13 @@ import graft.table.SnapshotLog.DataFile
   * O(table):
   *
   *  - DELETE/UPDATE prune candidate files driver-side against manifest
-  *    zones/blooms/partition values ([[Constraints]] — the same decision
-  *    the read path makes), then one filtered pass per candidate set
-  *    finds the files that ACTUALLY hold matching rows; only those
-  *    rewrite, everything else carries by reference. `DELETE FROM t`
-  *    with no predicate is metadata-only (no reads, no writes — one
-  *    commit removing every live file, every prior snapshot intact).
+  *    zones/blooms/partition values ([[graft.table.Constraints]] — the
+  *    same core every read face prunes through), then one filtered pass
+  *    per candidate set finds the files that ACTUALLY hold matching
+  *    rows; only those rewrite, everything else carries by reference.
+  *    `DELETE FROM t` with no predicate is metadata-only (no reads, no
+  *    writes — one commit removing every live file, every prior
+  *    snapshot intact).
   *  - MERGE prunes by the ON clause's target-key equality through
   *    [[Merge.pruneTouched]] (driver array ≤100 k keys, distributed
   *    broadcast join beyond), then resolves clause semantics row-wise
@@ -342,10 +343,10 @@ object GraftDml {
 
   /** Fold analyzer-inserted casts AROUND literals (`id >= 1000` on a
     * BIGINT column resolves as `id >= cast(1000 as bigint)`): the
-    * Constraints/Covers matchers speak `Literal` directly, and without
-    * the fold every int-literal predicate over a long column silently
-    * loses zone pruning AND the metadata-drop proof — exactly the
-    * retention-DELETE shape. Only foldable literal casts evaluate;
+    * [[Constraints]] core and [[Covers]] speak `Literal` directly, and
+    * without the fold every int-literal predicate over a long column
+    * silently loses zone pruning AND the metadata-drop proof — exactly
+    * the retention-DELETE shape. Only foldable literal casts evaluate;
     * everything else passes through untouched. */
   private def foldLiteralCasts(e: Expression): Expression = e.transform {
     case c: org.apache.spark.sql.catalyst.expressions.Cast
@@ -365,50 +366,14 @@ object GraftDml {
     * comparisons never match null — a covered-looking file with nulls
     * must keep those rows). Old manifests without null counts are never
     * covered — conservative, like every pruning decision here. */
-  private object Covers {
-    import org.apache.spark.sql.types._
-    private def zl(dt: DataType, v: Any): Option[Long] = (dt, v) match {
-      case (_, null) => None
-      case (ByteType, x: Byte) => Some(x.toLong)
-      case (ShortType, x: Short) => Some(x.toLong)
-      case (IntegerType, x: Int) => Some(x.toLong)
-      case (LongType, x: Long) => Some(x)
-      case (DateType, x: Int) => Some(x.toLong)
-      case (TimestampType, x: Long) => Some(x)
-      case _ => None
-    }
-
-    def from(conjuncts: Seq[Expression]): Option[Map[String, (Long, Long)]] = {
-      val acc = scala.collection.mutable.Map.empty[String, (Long, Long)]
-      def narrow(c: String, lo: Long, hi: Long): Boolean = {
-        val (l0, h0) = acc.getOrElse(c, (Long.MinValue, Long.MaxValue))
-        acc(c) = (math.max(l0, lo), math.min(h0, hi)); true
-      }
-      val ok = conjuncts.forall {
-        case EqualTo(a: AttributeReference, Literal(v, dt)) =>
-          zl(dt, v).exists(x => narrow(a.name, x, x))
-        case EqualTo(Literal(v, dt), a: AttributeReference) =>
-          zl(dt, v).exists(x => narrow(a.name, x, x))
-        case GreaterThan(a: AttributeReference, Literal(v, dt)) => // col > v
-          zl(dt, v).exists(x => x < Long.MaxValue && narrow(a.name, x + 1, Long.MaxValue))
-        case GreaterThanOrEqual(a: AttributeReference, Literal(v, dt)) =>
-          zl(dt, v).exists(x => narrow(a.name, x, Long.MaxValue))
-        case LessThan(a: AttributeReference, Literal(v, dt)) => // col < v
-          zl(dt, v).exists(x => x > Long.MinValue && narrow(a.name, Long.MinValue, x - 1))
-        case LessThanOrEqual(a: AttributeReference, Literal(v, dt)) =>
-          zl(dt, v).exists(x => narrow(a.name, Long.MinValue, x))
-        case GreaterThan(Literal(v, dt), a: AttributeReference) => // v > col
-          zl(dt, v).exists(x => x > Long.MinValue && narrow(a.name, Long.MinValue, x - 1))
-        case GreaterThanOrEqual(Literal(v, dt), a: AttributeReference) =>
-          zl(dt, v).exists(x => narrow(a.name, Long.MinValue, x))
-        case LessThan(Literal(v, dt), a: AttributeReference) => // v < col
-          zl(dt, v).exists(x => x < Long.MaxValue && narrow(a.name, x + 1, Long.MaxValue))
-        case LessThanOrEqual(Literal(v, dt), a: AttributeReference) =>
-          zl(dt, v).exists(x => narrow(a.name, x, Long.MaxValue))
-        case _ => false
-      }
-      if (ok && acc.nonEmpty) Some(acc.toMap) else None
-    }
+  private[connector] object Covers {
+    def from(conjuncts: Seq[Expression]): Option[Map[String, (Long, Long)]] =
+      // `<=>` stays outside the coverage proof; every other conjunct
+      // must be a comparison the core maps to a zone interval
+      if (conjuncts.nonEmpty && conjuncts.forall(c =>
+          !c.isInstanceOf[EqualNullSafe] && Constraints.interval(c).isDefined))
+        Some(Constraints.from(conjuncts).ranges)
+      else None
 
     def covered(f: DataFile, intervals: Map[String, (Long, Long)]): Boolean =
       intervals.forall { case (c, (lo, hi)) =>
@@ -569,7 +534,7 @@ object GraftDml {
           idStamped = idStamped))
       ()
     case _ =>
-      val cs = Constraints.from(split(cond), schemaOf(t))
+      val cs = Constraints.from(split(cond))
       val candidates = live.filter(cs.keeps)
       val coverIv = Covers.from(split(cond))
       val (dropped, boundary) = coverIv match {
@@ -610,7 +575,8 @@ object GraftDml {
 
   /** sources.Filter → a Catalyst predicate over `out` — shared by the V2
     * SupportsDelete face and the V2 filtered-overwrite (replaceWhere)
-    * face, so both lower onto the same row-level machinery as SQL DML. */
+    * face, so both lower onto the same row-level machinery as SQL DML,
+    * and by the V2 scan's file pruning ([[GraftV2BatchScan.constraints]]). */
   private[connector] def sourceFilterExpr(f: org.apache.spark.sql.sources.Filter,
       out: Seq[Attribute]): Option[Expression] = {
     import org.apache.spark.sql.{sources => sf}
@@ -825,7 +791,7 @@ object GraftDml {
     val resolver = org.apache.spark.sql.catalyst.analysis.caseInsensitiveResolution
     val (baseId, live, reg) = pinned(spark, t, "UPDATE").getOrElse(return)
     if (live.isEmpty) return
-    val cs = Constraints.from(split(cond), schemaOf(t))
+    val cs = Constraints.from(split(cond))
     val candidates = live.filter(cs.keeps)
     val (touched, nMatched) = touchDetect(spark, t, candidates, cond, reg)
     if (touched.isEmpty) return

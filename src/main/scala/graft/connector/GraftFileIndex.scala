@@ -1,14 +1,12 @@
 package graft.connector
 
 import org.apache.hadoop.fs.{FileStatus, Path}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileIndex, PartitionDirectory}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.table.SnapshotLog
+import graft.table.Constraints
 import graft.table.SnapshotLog.DataFile
 
 /** The [[FileIndex]] behind `spark.read.format("graft")` — the piece that
@@ -27,7 +25,8 @@ import graft.table.SnapshotLog.DataFile
   * (zone interval misses, bloom answers definitely-absent, recorded
   * partition-value set disjoint). Spark still applies the full predicate
   * to every surviving row, so a conservative keep costs I/O, not
-  * correctness — the same contract as [[SnapshotLog.readWhere]].
+  * correctness — the same [[Constraints]] contract every pruning face
+  * shares.
   *
   * The index is pinned to ONE resolved snapshot (the file list is
   * captured at construction): a concurrent append/compact/expire after
@@ -35,10 +34,8 @@ import graft.table.SnapshotLog.DataFile
   * snapshot-isolation face of the table format.
   */
 final class GraftFileIndex(
-    spark: SparkSession,
     val tableDir: String,
     files: Seq[DataFile],
-    visibleSchema: StructType,
     /** The explicit time-travel pin the relation was resolved with, when
       * one was given — DML (which always executes against the CURRENT
       * snapshot) refuses relations carrying one, so `DELETE FROM view`
@@ -76,161 +73,10 @@ final class GraftFileIndex(
 
   override def listFiles(partitionFilters: Seq[Expression],
                          dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept = prunedFiles(dataFilters)
-    val statuses = kept.map { f =>
+    val cs = Constraints.from(dataFilters)
+    val statuses = files.filter(cs.keeps).map { f =>
       new FileStatus(f.bytes, false, 1, 128L << 20, 0L, new Path(f.path))
     }
     Seq(PartitionDirectory(InternalRow.empty, statuses.toArray))
-  }
-
-  /** The pruning decision alone — (kept, skipped) counts for a filter
-    * set — so tests and maintenance can measure skipping without a scan. */
-  def pruneCounts(dataFilters: Seq[Expression]): (Int, Int) = {
-    val kept = prunedFiles(dataFilters).size
-    (kept, files.size - kept)
-  }
-
-  private def prunedFiles(dataFilters: Seq[Expression]): Seq[DataFile] = {
-    val cs = Constraints.from(dataFilters, visibleSchema)
-    files.filter(f => cs.keeps(f))
-  }
-}
-
-/** Driver-side constraints extracted from a conjunction of Catalyst
-  * predicates, phrased in the manifest's three metadata domains:
-  *
-  *  - `ranges`: per-column [lo, hi] in the zone-map long domain
-  *    (numerics as themselves, timestamps as epoch micros, dates as
-  *    epoch days — the exact domains [[SnapshotLog.writeData]] records);
-  *  - `points`: per-column equality key sets probed against manifest
-  *    BLOOMS (longs as themselves, strings through the shared xxhash64
-  *    domain) — a file is kept when ANY key might be present (the IN-set
-  *    rule of [[SnapshotLog.readPoints]]);
-  *  - `parts`: per-column allowed partition-value strings checked
-  *    against the recorded per-file partition-value sets.
-  *
-  * Anything unrecognized contributes NO constraint (conservative), and a
-  * file missing metadata for a constrained column is always kept — both
-  * inherited from the SnapshotLog pruning predicates this defers to.
-  */
-private[connector] final case class Constraints(
-    ranges: Map[String, (Long, Long)],
-    points: Map[String, Seq[Long]],
-    parts: Map[String, Seq[String]]) {
-
-  def keeps(f: DataFile): Boolean =
-    SnapshotLog.zoneKeeps(f, ranges) &&
-      SnapshotLog.partKeeps(f, parts) &&
-      points.forall { case (c, keys) =>
-        keys.exists(k => SnapshotLog.pointKeeps(f, c, k))
-      }
-}
-
-private[connector] object Constraints {
-
-  def from(filters: Seq[Expression], schema: StructType): Constraints = {
-    val b = new Builder(schema)
-    filters.foreach(b.walk)
-    b.result()
-  }
-
-  private final class Builder(schema: StructType) {
-    private val ranges = scala.collection.mutable.Map.empty[String, (Long, Long)]
-    private val points = scala.collection.mutable.Map.empty[String, Seq[Long]]
-    private val parts = scala.collection.mutable.Map.empty[String, Seq[String]]
-
-    def result(): Constraints = Constraints(ranges.toMap, points.toMap, parts.toMap)
-
-    /** The zone-domain long of a literal, when the column's type has a
-      * recorded zone kind. Catalyst already stores timestamps as Long
-      * micros and dates as Int days, so the conversion is a widening. */
-    private def zoneLong(dt: DataType, v: Any): Option[Long] = (dt, v) match {
-      case (_, null) => None
-      case (ByteType, x: Byte) => Some(x.toLong)
-      case (ShortType, x: Short) => Some(x.toLong)
-      case (IntegerType, x: Int) => Some(x.toLong)
-      case (LongType, x: Long) => Some(x)
-      case (DateType, x: Int) => Some(x.toLong)
-      case (TimestampType, x: Long) => Some(x)
-      case _ => None
-    }
-
-    /** The bloom-domain key of an equality literal: integrals probe as
-      * themselves, strings through xxhash64 — the domains the manifest
-      * blooms were BUILT in ([[SnapshotLog.keyAsLong]]). Timestamps and
-      * dates are deliberately EXCLUDED: their Catalyst literals are epoch
-      * micros/days while keyAsLong's `cast(col AS long)` records epoch
-      * SECONDS — probing across domains would answer definitely-absent
-      * for present rows, turning pruning into silent row loss. Their
-      * zones (recorded in the literal's own domain) still prune. */
-    private def bloomKey(dt: DataType, v: Any): Option[Long] = (dt, v) match {
-      case (StringType, s: UTF8String) => Some(SnapshotLog.hashStringKey(s.toString))
-      case (ByteType | ShortType | IntegerType | LongType, _) => zoneLong(dt, v)
-      case _ => None
-    }
-
-    private def narrow(c: String, lo: Long, hi: Long): Unit = {
-      val (l0, h0) = ranges.getOrElse(c, (Long.MinValue, Long.MaxValue))
-      ranges(c) = (math.max(l0, lo), math.min(h0, hi))
-    }
-
-    private def addPoints(c: String, ks: Seq[Long]): Unit =
-      // two independent equality constraints on one column intersect;
-      // keeping only the first key set stays conservative and correct
-      // (the later one can only shrink what survives the row filter)
-      if (!points.contains(c)) points(c) = ks
-
-    private def addParts(c: String, vs: Seq[String]): Unit =
-      if (!parts.contains(c)) parts(c) = vs
-
-    /** Partition-value sets are recorded as `cast(col AS string)`; only
-      * string-typed literals round-trip that cast verbatim, so only they
-      * constrain partition pruning (everything else stays conservative). */
-    private def partString(dt: DataType, v: Any): Option[String] = (dt, v) match {
-      case (StringType, s: UTF8String) => Some(s.toString)
-      case _ => None
-    }
-
-    private def eq(a: Attribute, dt: DataType, v: Any): Unit = {
-      if (v == null) return
-      zoneLong(dt, v).foreach(x => narrow(a.name, x, x))
-      bloomKey(dt, v).foreach(k => addPoints(a.name, Seq(k)))
-      partString(dt, v).foreach(s => addParts(a.name, Seq(s)))
-    }
-
-    def walk(e: Expression): Unit = e match {
-      case And(l, r) => walk(l); walk(r)
-      case EqualTo(a: Attribute, Literal(v, dt)) => eq(a, dt, v)
-      case EqualTo(Literal(v, dt), a: Attribute) => eq(a, dt, v)
-      case EqualNullSafe(a: Attribute, Literal(v, dt)) => eq(a, dt, v)
-      case EqualNullSafe(Literal(v, dt), a: Attribute) => eq(a, dt, v)
-      case GreaterThan(a: Attribute, Literal(v, dt)) =>
-        zoneLong(dt, v).foreach(x => narrow(a.name, x, Long.MaxValue))
-      case GreaterThanOrEqual(a: Attribute, Literal(v, dt)) =>
-        zoneLong(dt, v).foreach(x => narrow(a.name, x, Long.MaxValue))
-      case LessThan(a: Attribute, Literal(v, dt)) =>
-        zoneLong(dt, v).foreach(x => narrow(a.name, Long.MinValue, x))
-      case LessThanOrEqual(a: Attribute, Literal(v, dt)) =>
-        zoneLong(dt, v).foreach(x => narrow(a.name, Long.MinValue, x))
-      case GreaterThan(Literal(v, dt), a: Attribute) => // v > col  ⇒  col < v
-        zoneLong(dt, v).foreach(x => narrow(a.name, Long.MinValue, x))
-      case GreaterThanOrEqual(Literal(v, dt), a: Attribute) =>
-        zoneLong(dt, v).foreach(x => narrow(a.name, Long.MinValue, x))
-      case LessThan(Literal(v, dt), a: Attribute) => // v < col  ⇒  col > v
-        zoneLong(dt, v).foreach(x => narrow(a.name, x, Long.MaxValue))
-      case LessThanOrEqual(Literal(v, dt), a: Attribute) =>
-        zoneLong(dt, v).foreach(x => narrow(a.name, x, Long.MaxValue))
-      case In(a: Attribute, list) if list.nonEmpty && list.forall(_.isInstanceOf[Literal]) =>
-        val lits = list.collect { case Literal(v, dt) if v != null => (v, dt) }
-        if (lits.nonEmpty && lits.size == list.size) {
-          val zs = lits.flatMap { case (v, dt) => zoneLong(dt, v) }
-          if (zs.size == lits.size) narrow(a.name, zs.min, zs.max)
-          val ks = lits.flatMap { case (v, dt) => bloomKey(dt, v) }
-          if (ks.size == lits.size) addPoints(a.name, ks)
-          val ps = lits.flatMap { case (v, dt) => partString(dt, v) }
-          if (ps.size == lits.size) addParts(a.name, ps)
-        }
-      case _ => () // unrecognized shapes constrain nothing (conservative)
-    }
   }
 }

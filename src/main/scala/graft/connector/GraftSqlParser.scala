@@ -477,7 +477,7 @@ final case class GraftOptimizeCommand(target: String, where: Option[String],
           UnresolvedAttribute.quoted(
             schema.fieldNames.find(_.equalsIgnoreCase(u.name)).getOrElse(u.name))
       })
-      val cs = Constraints.from(conjuncts, schema)
+      val cs = graft.table.Constraints.from(conjuncts)
       (f: graft.table.SnapshotLog.DataFile) => cs.keeps(f)
     }
     val r = graft.cdc.Compaction.compactDir(spark, dir,

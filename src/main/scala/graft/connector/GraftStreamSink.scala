@@ -45,7 +45,7 @@ import graft.table.{Merge, SnapshotLog}
   * Manifest pruning metadata rides the writer options exactly like the
   * batch face: `statsCols`, `bloomCol`, `partitionCols` — plus
   * `writeStream.partitionBy(...)` columns, which record per-file
-  * partition-value sets for [[GraftFileIndex]]/`readWhere` pruning.
+  * partition-value sets for [[GraftFileIndex]]/`readPruned` pruning.
   *
   * Reference anchor: the reference's streaming job writes raw parquet
   * appends with no transactional boundary

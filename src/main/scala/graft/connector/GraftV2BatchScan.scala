@@ -1,6 +1,7 @@
 package graft.connector
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
@@ -9,7 +10,7 @@ import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.StructType
 
-import graft.table.SnapshotLog
+import graft.table.{Constraints, SnapshotLog}
 import graft.table.SnapshotLog.DataFile
 
 /** The FAST-PATH V2 scan: a real [[Batch]] over the engine's own
@@ -34,7 +35,7 @@ import graft.table.SnapshotLog.DataFile
   * zones, blooms, partition-value sets) and inserts a DPP subquery; at
   * execution `BatchScanExec` hands the realized join keys here as
   * `In`/`EqualTo` filters and [[filter]] re-prunes the FILE LIST through
-  * the same [[Constraints]] machinery the static pushdown uses. At
+  * the same [[GraftV2BatchScan.constraints]] the static pushdown uses. At
   * 100 TB this is the difference between scanning every fact file and
   * only the ones whose metadata admits a surviving dim key — for a
   * predicate the user never wrote against the fact. Pruning may only
@@ -151,7 +152,7 @@ private[connector] final class GraftV2BatchScan(
   }
 
   override def filter(filters: Array[Filter]): Unit = {
-    val cs = GraftSourceConstraints.from(filters, visible)
+    val cs = GraftV2BatchScan.constraints(filters.toSeq, visible)
     val before = kept.size
     // runtime filters speak LOGICAL names; file metadata is physical —
     // translate per file exactly like the static pushdown does
@@ -322,101 +323,22 @@ private[connector] object GraftNumFilesMetric {
   val Name = "numFiles"
 }
 
-/** `sources.Filter` (EXTERNAL JVM literal types) → the driver-side
-  * [[Constraints]] the manifest pruning predicates consume — the V2 twin
-  * of [[Constraints.from]] (which walks Catalyst expressions with
-  * INTERNAL literal types). Shared by the static V2 pushdown and the
-  * runtime DPP filters, so both prune through identical semantics:
-  * zones in the writer's long domains, blooms via the shared key hash,
-  * partition values as the recorded string casts. Unrecognized shapes
-  * constrain nothing (pruning may only skip). */
-private[connector] object GraftSourceConstraints {
+private[connector] object GraftV2BatchScan {
 
-  /** Zone-domain long of an external literal — numerics as themselves,
-    * dates as epoch days, timestamps as epoch micros (the exact domains
-    * [[SnapshotLog.writeData]] records). */
-  private def zoneLong(v: Any): Option[Long] = v match {
-    case null => None
-    case n: Byte => Some(n.toLong)
-    case n: Short => Some(n.toLong)
-    case n: Int => Some(n.toLong)
-    case n: Long => Some(n)
-    case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
-    case d: java.time.LocalDate => Some(d.toEpochDay)
-    case t: java.sql.Timestamp =>
-      Some(t.getTime * 1000L + (t.getNanos / 1000L) % 1000L)
-    case t: java.time.Instant =>
-      Some(t.getEpochSecond * 1000000L + t.getNano / 1000L)
-    case _ => None
-  }
-
-  /** Bloom-domain key: integrals as themselves, strings through the
-    * shared xxhash64; temporal types deliberately EXCLUDED — the bloom
-    * build's `cast(col AS long)` records epoch SECONDS while these
-    * literals carry micros/days, and probing across domains would turn
-    * pruning into silent row loss (the [[Constraints]] rule). */
-  private def bloomKey(v: Any): Option[Long] = v match {
-    case s: String => Some(SnapshotLog.hashStringKey(s))
-    case _: Byte | _: Short | _: Int | _: Long => zoneLong(v)
-    case _ => None
-  }
-
-  /** Partition-value sets are recorded as `cast(col AS string)`; only
-    * string literals round-trip that verbatim. */
-  private def partString(v: Any): Option[String] = v match {
-    case s: String => Some(s)
-    case _ => None
-  }
-
-  def from(filters: Array[Filter], schema: StructType): Constraints = {
-    val ranges = scala.collection.mutable.Map.empty[String, (Long, Long)]
-    val points = scala.collection.mutable.Map.empty[String, Seq[Long]]
-    val parts = scala.collection.mutable.Map.empty[String, Seq[String]]
-    def col(c: String): Option[String] =
-      schema.fieldNames.find(_.equalsIgnoreCase(c))
-    def narrow(c: String, lo: Long, hi: Long): Unit = {
-      val (l0, h0) = ranges.getOrElse(c, (Long.MinValue, Long.MaxValue))
-      ranges(c) = (math.max(l0, lo), math.min(h0, hi))
+  /** The pruning [[Constraints]] of pushed or runtime V2 filters: each
+    * conjunct is rebuilt as the Catalyst predicate it came from
+    * ([[GraftDml.sourceFilterExpr]] — the schema's column, matched
+    * case-insensitively, against `Literal(value)`), so both faces share
+    * one literal-to-domain table. A conjunct that does not translate (a
+    * value `Literal` rejects, a column the schema lacks) constrains
+    * nothing. */
+  def constraints(filters: Seq[Filter], schema: StructType): Constraints = {
+    val out = schema.map(f => AttributeReference(f.name, f.dataType)())
+    def conjuncts(f: Filter): Seq[Filter] = f match {
+      case sources.And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case x => Seq(x)
     }
-    // independent equality constraints on one column intersect; keeping
-    // only the first key set stays conservative (the Constraints rule)
-    def addPoints(c: String, ks: Seq[Long]): Unit =
-      if (!points.contains(c)) points(c) = ks
-    def addParts(c: String, vs: Seq[String]): Unit =
-      if (!parts.contains(c)) parts(c) = vs
-    def eq(c0: String, v: Any): Unit = col(c0).foreach { c =>
-      if (v != null) {
-        zoneLong(v).foreach(x => narrow(c, x, x))
-        bloomKey(v).foreach(k => addPoints(c, Seq(k)))
-        partString(v).foreach(s => addParts(c, Seq(s)))
-      }
-    }
-    def walk(f: Filter): Unit = f match {
-      case sources.And(l, r) => walk(l); walk(r)
-      case sources.EqualTo(c, v) => eq(c, v)
-      case sources.EqualNullSafe(c, v) => eq(c, v)
-      case sources.GreaterThan(c, v) => col(c).foreach(cc =>
-        zoneLong(v).foreach(x => narrow(cc, x + 1, Long.MaxValue)))
-      case sources.GreaterThanOrEqual(c, v) => col(c).foreach(cc =>
-        zoneLong(v).foreach(x => narrow(cc, x, Long.MaxValue)))
-      case sources.LessThan(c, v) => col(c).foreach(cc =>
-        zoneLong(v).foreach(x => narrow(cc, Long.MinValue, x - 1)))
-      case sources.LessThanOrEqual(c, v) => col(c).foreach(cc =>
-        zoneLong(v).foreach(x => narrow(cc, Long.MinValue, x)))
-      case sources.In(c0, vs0) if vs0.nonEmpty => col(c0).foreach { c =>
-        val vs = vs0.toSeq.filter(_ != null)
-        if (vs.nonEmpty && vs.size == vs0.length) {
-          val zs = vs.flatMap(zoneLong(_))
-          if (zs.size == vs.size) narrow(c, zs.min, zs.max)
-          val ks = vs.flatMap(bloomKey(_))
-          if (ks.size == vs.size) addPoints(c, ks)
-          val ps = vs.flatMap(partString(_))
-          if (ps.size == vs.size) addParts(c, ps)
-        }
-      }
-      case _ => () // non-conjunctive / unrecognized shapes never prune
-    }
-    filters.foreach(walk)
-    Constraints(ranges.toMap, points.toMap, parts.toMap)
+    Constraints.from(filters.flatMap(conjuncts).flatMap(f =>
+      scala.util.Try(GraftDml.sourceFilterExpr(f, out)).toOption.flatten))
   }
 }

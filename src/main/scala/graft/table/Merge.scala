@@ -607,9 +607,8 @@ object Merge {
     // manifest zone pruning; metadata keys are physical — translate once
     val rangesP = ranges.map { case (c, r) =>
       reg.flatMap(_.physicalOf(c)).getOrElse(c) -> r }
-    val candidates =
-      if (rangesP.isEmpty) data
-      else data.filter(SnapshotLog.zoneKeeps(_, rangesP))
+    val zone = Constraints(ranges = rangesP)
+    val candidates = data.filter(zone.keeps)
     if (candidates.isEmpty) return None
     // cond evaluates in LOGICAL space; the recorded positions are
     // physical. Rows hidden by a PENDING mask may re-mask (a position
@@ -638,8 +637,7 @@ object Merge {
       summary = summary ++ Map("mode" -> "posdelete",
         "pos_delete_entries" -> written.map(_.rows).sum.toString),
       guard = SnapshotLog.ConflictGuard(
-        mayReadAdded = Some(fs => fs.filter(f =>
-          rangesP.isEmpty || SnapshotLog.zoneKeeps(f, rangesP))),
+        mayReadAdded = Some(fs => fs.filter(zone.keeps)),
         readPaths = candidates.map(_.path).toSet,
         masksOnly = true)))
   }
@@ -655,7 +653,7 @@ object Merge {
     * Z-ORDER layout (near-square zone-map tiles on both dims, with the
     * key column's stats still recorded for merge pruning) — so MOR
     * maintenance on a Z-ordered table doesn't silently decay the layout
-    * `readWhere` depends on. Returns None when the table has no pending
+    * zone pruning depends on. Returns None when the table has no pending
     * deletes (no commit made). */
   def materializeDeletes(spark: SparkSession, tableDir: String,
                          targetFiles: Int = 2,

@@ -55,8 +55,8 @@ import org.apache.spark.sql.functions._
   *  - **manifest-level pruning**: each added file carries row count plus
   *    min/max of a designated stats column, so offset- or time-bounded
   *    reads skip whole files from metadata alone — the manifest is a
-  *    zone map ([[filesAt]] exposes the stats; [[readRange]] applies
-  *    them).
+  *    zone map ([[filesAt]] exposes the stats; [[readRange]] and
+  *    [[readPruned]] apply them).
   *  - **safe compaction**: [[graft.cdc.Compaction]] commits `replace`
   *    manifests through this protocol instead of swapping directories —
   *    readers of any pinned snapshot are unaffected mid-rewrite.
@@ -470,9 +470,8 @@ object SnapshotLog {
 
   /** The LONG-domain zone expression for a stats column, or None when no
     * zone kind exists for its type: numerics cast, timestamps record
-    * epoch MICROSECONDS, dates epoch DAYS. Readers asking readRange/
-    * readWhere about a timestamp/date column must phrase bounds in the
-    * same domain (`unix_micros` / `datediff from 1970-01-01`). */
+    * epoch MICROSECONDS, dates epoch DAYS — the domains
+    * [[Constraints]] maps timestamp and date literals into. */
   private def zoneExpr(df: DataFrame, column: String): Option[Column] = {
     import org.apache.spark.sql.types._
     df.schema(column).dataType match {
@@ -599,8 +598,8 @@ object SnapshotLog {
       .foreach(c => System.err.println(
         s"[graft] WARNING: stats column '$c' of $tableDir is " +
           s"${written.schema(c).dataType.simpleString} — no long zone kind " +
-          "exists for it and no bloom was requested; readRange/readWhere/" +
-          "merge pruning will NOT engage on this column"))
+          "exists for it and no bloom was requested; zone pruning will " +
+          "NOT engage on this column"))
     // per-file PARTITION VALUE sets (the Iceberg posture: partition
     // values live in the manifest, never in directory names — the
     // columns stay in the data, so no re-attachment read trick is
@@ -619,7 +618,7 @@ object SnapshotLog {
       // file's modulo-bucket id set under the composite key — the
       // storage-partitioned-join channel (the Iceberg bucket-transform
       // school). The key can never collide with a real column filter,
-      // so partKeeps stays inert for user predicates.
+      // so partition pruning stays inert for user predicates.
       val pexpr = c match {
         case BucketKeyPattern(n, inner) =>
           val isString = written.schema.fields
@@ -708,8 +707,8 @@ object SnapshotLog {
           warnings +=
             s"[graft] WARNING: stats column '$c' of $tableDir is " +
               s"${dt.simpleString} — no long zone kind exists for it and " +
-              "no bloom was requested; readRange/readWhere/merge pruning " +
-              "will NOT engage on this column"
+              "no bloom was requested; zone pruning will NOT engage on " +
+              "this column"
         }
     }
     val bloom = bloomColP match {
@@ -1877,181 +1876,35 @@ object SnapshotLog {
     assemble(spark, pruned, dels, reg)
   }
 
-  /** Multi-column manifest-pruned read: skip every data file whose
-    * per-column [min, max] zone provably misses ANY of the requested
-    * ranges — the N-dimensional generalization of [[readRange]], from
-    * METADATA alone. Columns without recorded stats on a file keep it
-    * (conservative). The pruning only BITES on multiple dimensions when
-    * the layout localizes them together — a Z-ORDER clustered rewrite
+  /** Manifest-pruned read: skip every data file the [[Constraints]]
+    * prove hold no qualifying row, from METADATA alone — per-column zone
+    * maps, manifest blooms and partition-value sets. Zones only bite
+    * where the layout localizes a column: a Z-ORDER clustered rewrite
     * ([[graft.cdc.Compaction.compactSnapshotted]] with `clusterZOrder`)
-    * makes each file a near-square tile of the 2-D key space, so both
-    * dimensions skip; a 1-D sort gives one sharp dimension and one
-    * full-span dimension. Equality-delete files are never pruned (their
-    * stats describe masked keys, not produced rows). NOTE: pruning is an
+    * makes each file a near-square tile of the key space, so several
+    * dimensions skip. Ingest-ordered files all span most of a key space,
+    * which is where a point lookup's bloom bites (no false negatives —
+    * the Delta/Iceberg bloom-index role). Recorded partition-value sets
+    * replace Hive `sync_date=` directory pruning (the Iceberg posture:
+    * values live in the manifest, the columns stay in the data).
+    * Equality-delete masks are never pruned and still apply (their stats
+    * describe masked keys, not produced rows). Pruning is an
     * optimization, not a filter — callers still apply the actual
     * predicate; the contract is only that no QUALIFYING row is skipped. */
-  def readWhere(spark: SparkSession, tableDir: String,
-                ranges: Map[String, (Long, Long)],
-                asOf: Option[Long] = None): Option[DataFrame] = {
+  def readPruned(spark: SparkSession, tableDir: String, cs: Constraints,
+                 asOf: Option[Long] = None): Option[DataFrame] = {
     val (files, reg) = logicalStateAt(spark, tableDir, asOf)
     val (dels, data) = files.partition(isMask)
-    val pruned = data.filter(zoneKeeps(_, ranges))
-    assemble(spark, pruned, dels, reg)
+    assemble(spark, data.filter(cs.keeps), dels, reg)
   }
 
-  /** [[readWhere]] phrased in TIME: bounds given as timestamps prune
-    * against the epoch-micros zones [[writeData]] records for
-    * TimestampType stats columns (DateType zones are epoch DAYS — use
-    * [[readWhere]] with day numbers directly). This is the face a
-    * time-bounded incremental read uses: "events between t0 and t1"
-    * skips every file whose recorded window provably misses, from
-    * metadata alone. */
-  def readTimeRange(spark: SparkSession, tableDir: String, column: String,
-                    from: java.sql.Timestamp, to: java.sql.Timestamp,
-                    asOf: Option[Long] = None): Option[DataFrame] =
-    readWhere(spark, tableDir,
-      Map(column -> (from.getTime * 1000L, to.getTime * 1000L)), asOf)
-
-  /** PARTITION-pruned read: keep only data files whose recorded
-    * partition-value set (written via `writeData(partitionCols = …)`)
-    * intersects the requested values for EVERY filtered column — the
-    * manifest-native replacement for Hive `sync_date=` directory
-    * pruning: partition values live in the manifest (the Iceberg
-    * posture), the columns stay in the data files, and a month-bounded
-    * read of a date-partitioned sync provably skips every other
-    * partition's files from metadata alone. Files without a recorded
-    * set for a filtered column are conservatively kept; equality-delete
-    * masks are never pruned and still apply. Pruning is an optimization,
-    * not a filter — callers still apply the actual predicate. */
-  def readPartitions(spark: SparkSession, tableDir: String,
-                     filters: Map[String, Seq[String]],
-                     asOf: Option[Long] = None): Option[DataFrame] = {
-    val (files, reg) = logicalStateAt(spark, tableDir, asOf)
-    val (dels, data) = files.partition(isMask)
-    val pruned = data.filter(partKeeps(_, filters))
-    assemble(spark, pruned, dels, reg)
-  }
-
-  /** [[readPartitions]]'s pruning decision alone: (kept, skipped). */
-  def prunePartitionStats(spark: SparkSession, tableDir: String,
-                          filters: Map[String, Seq[String]],
-                          asOf: Option[Long] = None): (Int, Int) = {
+  /** [[readPruned]]'s pruning decision alone — (data files kept, data
+    * files skipped) — so maintenance jobs and tests can measure skipping
+    * without scanning anything. */
+  def pruneCounts(spark: SparkSession, tableDir: String, cs: Constraints,
+                  asOf: Option[Long] = None): (Int, Int) = {
     val data = logicalStateAt(spark, tableDir, asOf)._1.filter(_.kind == "data")
-    val kept = data.count(partKeeps(_, filters))
-    (kept, data.size - kept)
-  }
-
-  private[graft] def partKeeps(f: DataFile, filters: Map[String, Seq[String]]): Boolean =
-    filters.forall { case (c, wanted) =>
-      f.parts.get(c) match {
-        case Some(vs) => vs.exists(wanted.contains)
-        case None => true
-      }
-    }
-
-  /** [[readWhere]]'s pruning decision alone — (files kept, files
-    * skipped) — so maintenance jobs and tests can measure zone-map
-    * effectiveness without scanning anything. */
-  def pruneStats(spark: SparkSession, tableDir: String,
-                 ranges: Map[String, (Long, Long)],
-                 asOf: Option[Long] = None): (Int, Int) = {
-    val data = logicalStateAt(spark, tableDir, asOf)._1.filter(_.kind == "data")
-    val kept = data.count(zoneKeeps(_, ranges))
-    (kept, data.size - kept)
-  }
-
-  /** The shared zone-map pruning predicate: a file is kept unless EVERY
-    * requested column has recorded stats proving its range misses. A
-    * column with no stats on this file keeps it (conservative — the
-    * legacy single-column statsMin/statsMax are NOT consulted here, as
-    * they may describe a different column than the one asked about). */
-  private[graft] def zoneKeeps(f: DataFile, ranges: Map[String, (Long, Long)]): Boolean =
-    ranges.forall { case (c, (lo, hi)) =>
-      f.stats.get(c) match {
-        case Some((mn, mx)) => mx >= lo && mn <= hi
-        case None => true
-      }
-    }
-
-  private[graft] def pointKeeps(f: DataFile, column: String, key: Long): Boolean =
-    zoneKeeps(f, Map(column -> (key, key))) &&
-      (f.blooms.get(column) match {
-        case Some(b64) => graft.functions.BloomFilterOps.mightContain(
-          java.util.Base64.getDecoder.decode(b64), key, BloomHashes)
-        case None => true
-      })
-
-  /** POINT-LOOKUP pruned read: keep only data files whose key-column
-    * zone contains `key` AND whose manifest BLOOM (written via
-    * `writeData(bloomCol=...)`) might contain it. Zone maps go blind
-    * when ingest-ordered files all span most of the key space — ranges
-    * overlap, every file stays — which is exactly where the per-file
-    * bloom bites: a membership test with no false negatives, so pruning
-    * can only skip, never lose (the Delta/Iceberg bloom-index role).
-    * Equality-delete masks still apply; callers apply the actual
-    * predicate on the result. */
-  def readPoint(spark: SparkSession, tableDir: String, column: String,
-                key: Long, asOf: Option[Long] = None): Option[DataFrame] = {
-    val (files, reg) = logicalStateAt(spark, tableDir, asOf)
-    val (dels, data) = files.partition(isMask)
-    val pruned = data.filter(pointKeeps(_, column, key))
-    assemble(spark, pruned, dels, reg)
-  }
-
-  /** Point lookup on a STRING key column (UUID-style keys): lexicographic
-    * zones are not recorded for strings — and random UUIDs would never
-    * cluster into prunable ranges anyway — so pruning is bloom-only,
-    * over the shared xxhash64 domain the bloom was built in
-    * (`writeData(bloomCol = <string column>)`). Files without a bloom
-    * are conservatively kept; no false negatives, so the pruned read is
-    * exact after the caller's equality filter. */
-  def readPointString(spark: SparkSession, tableDir: String, column: String,
-                      key: String, asOf: Option[Long] = None): Option[DataFrame] = {
-    val (files, reg) = logicalStateAt(spark, tableDir, asOf)
-    val (dels, data) = files.partition(isMask)
-    val h = hashStringKey(key)
-    val pruned = data.filter(f => f.blooms.get(column) match {
-      case Some(b64) => graft.functions.BloomFilterOps.mightContain(
-        java.util.Base64.getDecoder.decode(b64), h, BloomHashes)
-      case None => true
-    })
-    assemble(spark, pruned, dels, reg)
-  }
-
-  /** [[readPointString]]'s pruning decision alone: (kept, skipped). */
-  def prunePointStringStats(spark: SparkSession, tableDir: String,
-                            column: String, key: String,
-                            asOf: Option[Long] = None): (Int, Int) = {
-    val data = logicalStateAt(spark, tableDir, asOf)._1.filter(_.kind == "data")
-    val h = hashStringKey(key)
-    val kept = data.count(f => f.blooms.get(column) match {
-      case Some(b64) => graft.functions.BloomFilterOps.mightContain(
-        java.util.Base64.getDecoder.decode(b64), h, BloomHashes)
-      case None => true
-    })
-    (kept, data.size - kept)
-  }
-
-  /** Batched multi-key point lookup — the IN-set face of [[readPoint]]:
-    * every key's surviving files resolve in ONE metadata pass (a file is
-    * kept when ANY key passes its zone ∧ bloom probe), and the union of
-    * survivors scans ONCE — N keys cost one scan of ~N files, not N
-    * scans of overlapping file sets. Callers still apply the actual
-    * IN filter; pruning may only skip, never lose. */
-  def readPoints(spark: SparkSession, tableDir: String, column: String,
-                 keys: Seq[Long], asOf: Option[Long] = None): Option[DataFrame] = {
-    val (files, reg) = logicalStateAt(spark, tableDir, asOf)
-    val (dels, data) = files.partition(isMask)
-    val pruned = data.filter(f => keys.exists(pointKeeps(f, column, _)))
-    assemble(spark, pruned, dels, reg)
-  }
-
-  /** [[readPoint]]'s pruning decision alone: (kept, skipped) data-file
-    * counts for a key. */
-  def prunePointStats(spark: SparkSession, tableDir: String, column: String,
-                      key: Long, asOf: Option[Long] = None): (Int, Int) = {
-    val data = logicalStateAt(spark, tableDir, asOf)._1.filter(_.kind == "data")
-    val kept = data.count(pointKeeps(_, column, key))
+    val kept = data.count(cs.keeps)
     (kept, data.size - kept)
   }
 

@@ -296,9 +296,10 @@ object ScaleCurve {
       val probeKey = spark.read
         .parquet(SnapshotLog.filesAt(spark, blDir).head.path)
         .agg(expr("percentile_approx(id, 0.5, 1000)")).head().getLong(0)
-      val (zoneKept, _) = SnapshotLog.pruneStats(spark, blDir,
-        Map("id" -> (probeKey, probeKey)))
-      val (bloomKept, _) = SnapshotLog.prunePointStats(spark, blDir, "id", probeKey)
+      val (zoneKept, _) = SnapshotLog.pruneCounts(spark, blDir,
+        graft.table.Constraints(ranges = Map("id" -> (probeKey, probeKey))))
+      val (bloomKept, _) = SnapshotLog.pruneCounts(spark, blDir,
+        graft.table.Constraints.in("id", probeKey))
       // r10: checkpointed-log curve — one tiny append against the table
       // whose live set is nFiles (+1 from the bloom commit, grows ×k).
       // Under the v1 self-contained format the new manifest serialized

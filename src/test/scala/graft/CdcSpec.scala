@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc._
 import graft.schema.Schemas
+import graft.table.Constraints
 
 /** CDC protocol tests over the in-repo fixtures (FIXTURES.md §A.3):
   * decode fidelity, offset resume, empty delta, at-least-once replay,
@@ -965,24 +966,26 @@ class CdcSpec extends AnyFunSuite {
     val files = SnapshotLog.filesAt(spark, dir)
     assert(files.size == 4 && files.forall(_.blooms.contains("id")))
     // a key inside every range: zone map keeps 4, bloom keeps ~1
-    val (keptRange, _) = SnapshotLog.pruneStats(spark, dir, Map("id" -> (41L, 41L)))
+    val (keptRange, _) = SnapshotLog.pruneCounts(spark, dir,
+      Constraints(ranges = Map("id" -> (41L, 41L))))
     assert(keptRange == 4, "overlapping ranges must defeat the zone map")
-    val (kept, skipped) = SnapshotLog.prunePointStats(spark, dir, "id", 41L)
+    val (kept, skipped) = SnapshotLog.pruneCounts(spark, dir, Constraints.in("id", 41L))
     assert(kept <= 2 && skipped >= 2,
       s"bloom should prune most overlapping files: kept=$kept skipped=$skipped")
     // correctness: the pruned read still finds the row (no false negatives)
-    val got = SnapshotLog.readPoint(spark, dir, "id", 41L).get
+    val got = SnapshotLog.readPruned(spark, dir, Constraints.in("id", 41L)).get
       .filter(col("id") === 41L).collect()
     assert(got.length == 1 && got(0).getString(1) == "v10")
     // an absent key inside the ranges: bloom prunes everything or the
     // read returns no rows — either way the filter result is empty
-    val absent = SnapshotLog.readPoint(spark, dir, "id", 3999999L)
+    val absent = SnapshotLog.readPruned(spark, dir, Constraints.in("id", 3999999L))
       .map(_.filter(col("id") === 3999999L).count()).getOrElse(0L)
     assert(absent == 0L)
     // batched IN-set lookup: keys living in two different files resolve
     // in one pass, survivors stay bloom-bounded, and the filtered read
     // equals the per-key union exactly
-    val got2 = SnapshotLog.readPoints(spark, dir, "id", Seq(41L, 42L, 3999999L)).get
+    val got2 = SnapshotLog.readPruned(spark, dir,
+        Constraints.in("id", 41L, 42L, 3999999L)).get
       .filter(col("id").isin(41L, 42L, 3999999L)).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got2 == Map(41L -> "v10", 42L -> "v10"))
@@ -1001,7 +1004,7 @@ class CdcSpec extends AnyFunSuite {
     val xr = Map("x" -> (10L, 19L))
     val yr = Map("y" -> (10L, 19L))
     // random layout: the zone map cannot skip anything
-    assert(SnapshotLog.pruneStats(spark, dir, xr)._2 == 0)
+    assert(SnapshotLog.pruneCounts(spark, dir, Constraints(ranges = xr))._2 == 0)
     val bytes = SnapshotLog.filesAt(spark, dir).map(_.bytes).sum
     val res = Compaction.compactSnapshotted(spark, base, "grid",
       targetBytes = math.max(1L, bytes / 16), clusterZOrder = Seq("x", "y"))
@@ -1011,14 +1014,14 @@ class CdcSpec extends AnyFunSuite {
       f.stats.contains("x") && f.stats.contains("y")))
     // z-order tiles: BOTH single-dimension slices now skip files, and the
     // conjunction skips at least as many as either slice alone
-    val (_, xSkip) = SnapshotLog.pruneStats(spark, dir, xr)
-    val (_, ySkip) = SnapshotLog.pruneStats(spark, dir, yr)
-    val (_, bothSkip) = SnapshotLog.pruneStats(spark, dir, xr ++ yr)
+    val (_, xSkip) = SnapshotLog.pruneCounts(spark, dir, Constraints(ranges = xr))
+    val (_, ySkip) = SnapshotLog.pruneCounts(spark, dir, Constraints(ranges = yr))
+    val (_, bothSkip) = SnapshotLog.pruneCounts(spark, dir, Constraints(ranges = xr ++ yr))
     assert(xSkip > 0, s"x slice skipped nothing over ${files.map(_.stats)}")
     assert(ySkip > 0, s"y slice skipped nothing over ${files.map(_.stats)}")
     assert(bothSkip >= math.max(xSkip, ySkip))
     // pruning is transparent: pruned read + filter == exact result
-    val got = SnapshotLog.readWhere(spark, dir, xr ++ yr).get
+    val got = SnapshotLog.readPruned(spark, dir, Constraints(ranges = xr ++ yr)).get
       .filter(col("x").between(10, 19) && col("y").between(10, 19))
       .count()
     assert(got == 100)
@@ -1457,8 +1460,10 @@ class CdcSpec extends AnyFunSuite {
     assert(files.forall(_.kind == "data"))
     assert(files.forall(f => f.stats.contains("x") && f.stats.contains("y") &&
       f.stats.contains("id")))
-    val (_, xSkip) = SnapshotLog.pruneStats(spark, dir, Map("x" -> (10L, 19L)))
-    val (_, ySkip) = SnapshotLog.pruneStats(spark, dir, Map("y" -> (10L, 19L)))
+    val (_, xSkip) = SnapshotLog.pruneCounts(spark, dir,
+      Constraints(ranges = Map("x" -> (10L, 19L))))
+    val (_, ySkip) = SnapshotLog.pruneCounts(spark, dir,
+      Constraints(ranges = Map("y" -> (10L, 19L))))
     assert(xSkip > 0 && ySkip > 0,
       s"z-order materialization must restore per-dim skipping: x=$xSkip y=$ySkip")
     // content is exactly the churned grid
@@ -1540,9 +1545,9 @@ class CdcSpec extends AnyFunSuite {
       Seq(("uuid-nope", 0L, true)).toDF("pk", "v", "is_del"), "pk", Some("is_del"))
     assert(m2.deleteEntries == 0, s"$m2")
     // bloom point lookup on the string key skips most files and is exact
-    val (kept, skipped) = SnapshotLog.prunePointStringStats(spark, dir, "pk", uid(1005))
+    val (kept, skipped) = SnapshotLog.pruneCounts(spark, dir, Constraints.in("pk", uid(1005)))
     assert(skipped >= 1, s"kept=$kept skipped=$skipped")
-    val got = SnapshotLog.readPointString(spark, dir, "pk", uid(1005)).get
+    val got = SnapshotLog.readPruned(spark, dir, Constraints.in("pk", uid(1005))).get
       .filter(col("pk") === uid(1005)).collect()
     assert(got.length == 1 && got(0).getLong(1) == 2L)
   }
@@ -1893,9 +1898,9 @@ class CdcSpec extends AnyFunSuite {
       assert(viaAnchor.forall(f => f.blooms.contains("k") &&
         f.stats.contains("v") && f.parts.contains("part") && f.seq > 0))
       // pruned reads keep working through the anchor
-      assert(SnapshotLog.readWhere(spark, dir, Map("v" -> (30L, 30L)))
+      assert(SnapshotLog.readPruned(spark, dir, Constraints(ranges = Map("v" -> (30L, 30L))))
         .get.count() == 1)
-      assert(SnapshotLog.readPointString(spark, dir, "k", "k7").get
+      assert(SnapshotLog.readPruned(spark, dir, Constraints.in("k", "k7")).get
         .filter(col("k") === "k7").count() == 1)
       // expiry sweeps a superseded parquet checkpoint's row dir with it
       for (i <- 13 to 22)
@@ -2062,21 +2067,21 @@ class CdcSpec extends AnyFunSuite {
     assert(files.forall(_.parts.get("sync_date").exists(_.size == 1)),
       "each clustered file must record exactly its one date")
     // the month-bounded read provably skips other partitions' files
-    val (kept, skipped) = SnapshotLog.prunePartitionStats(spark, dir,
-      Map("sync_date" -> Seq("2026-01-16")))
+    val (kept, skipped) = SnapshotLog.pruneCounts(spark, dir,
+      Constraints(parts = Map("sync_date" -> Seq("2026-01-16"))))
     assert(kept == 2 && skipped == 4, s"kept=$kept skipped=$skipped")
     // pruning may only skip, never lose: pruned read + real filter ==
     // full read + real filter
-    val viaPruned = SnapshotLog.readPartitions(spark, dir,
-        Map("sync_date" -> Seq("2026-01-16"))).get
+    val viaPruned = SnapshotLog.readPruned(spark, dir,
+        Constraints(parts = Map("sync_date" -> Seq("2026-01-16")))).get
       .filter(col("sync_date") === "2026-01-16")
     val viaFull = SnapshotLog.read(spark, dir).get
       .filter(col("sync_date") === "2026-01-16")
     assert(viaPruned.count() == 80 && viaFull.count() == 80)
     assert(viaPruned.exceptAll(viaFull).isEmpty && viaFull.exceptAll(viaPruned).isEmpty)
     // a date no file holds prunes to nothing
-    assert(SnapshotLog.readPartitions(spark, dir,
-      Map("sync_date" -> Seq("2099-12-31"))).isEmpty)
+    assert(SnapshotLog.readPruned(spark, dir,
+      Constraints(parts = Map("sync_date" -> Seq("2099-12-31")))).isEmpty)
   }
 
   test("snapshotted partitioned sync: sync_date value sets ride the manifest") {
@@ -2093,10 +2098,10 @@ class CdcSpec extends AnyFunSuite {
       files.forall(_.parts.get("sync_date").contains(Seq("2026-01-15"))),
       files.map(_.parts).toString)
     // the fixture's one date reads fully; any other date prunes to zero
-    assert(SnapshotLog.readPartitions(spark, tdir,
-      Map("sync_date" -> Seq("2026-01-15"))).get.count() == 10)
-    val (kept0, skipped0) = SnapshotLog.prunePartitionStats(spark, tdir,
-      Map("sync_date" -> Seq("2027-05-05")))
+    assert(SnapshotLog.readPruned(spark, tdir,
+      Constraints(parts = Map("sync_date" -> Seq("2026-01-15")))).get.count() == 10)
+    val (kept0, skipped0) = SnapshotLog.pruneCounts(spark, tdir,
+      Constraints(parts = Map("sync_date" -> Seq("2027-05-05"))))
     assert(kept0 == 0 && skipped0 == files.size)
     // compaction must not blind the pruning: value sets re-derive
     Compaction.compactSnapshotted(spark, s"$base/warehouse", "orders",
@@ -2358,7 +2363,18 @@ class CdcSpec extends AnyFunSuite {
     assert(byTopic(Schemas.topicFor("customers")) == 6L, byTopic.toString) // earliest
   }
 
-  test("readTimeRange prunes on timestamp zones and never loses a row") {
+  /** `lo <= ts <= hi` as pruning constraints, bounds as timestamp
+    * literals (micros, the domain the writer's timestamp zones record). */
+  private def tsBetween(lo: String, hi: String): Constraints = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, LessThanOrEqual, Literal}
+    val ts = UnresolvedAttribute.quoted("ts")
+    Constraints.from(Seq(
+      GreaterThanOrEqual(ts, Literal(java.sql.Timestamp.valueOf(lo))),
+      LessThanOrEqual(ts, Literal(java.sql.Timestamp.valueOf(hi)))))
+  }
+
+  test("timestamp constraints prune on timestamp zones and never lose a row") {
     import spark.implicits._
     import graft.table.SnapshotLog
     val dir = Files.createTempDirectory("graft-timerange").toString + "/t"
@@ -2368,16 +2384,34 @@ class CdcSpec extends AnyFunSuite {
       SnapshotLog.commit(spark, dir, "append",
         SnapshotLog.writeData(month(m).toDF("id", "ts").coalesce(1), dir,
           statsCols = Seq("ts")))
-    val feb = SnapshotLog.readTimeRange(spark, dir, "ts",
-        java.sql.Timestamp.valueOf("2024-02-01 00:00:00"),
-        java.sql.Timestamp.valueOf("2024-02-28 23:59:59")).get
+    val febOnly = tsBetween("2024-02-01 00:00:00", "2024-02-28 23:59:59")
+    val feb = SnapshotLog.readPruned(spark, dir, febOnly).get
       .filter(col("ts").between("2024-02-01", "2024-03-01"))
     assert(feb.count() == 50)
     // exactly one of three month-files survives the metadata prune
-    val (kept, skipped) = SnapshotLog.pruneStats(spark, dir, Map("ts" ->
-      (java.sql.Timestamp.valueOf("2024-02-01 00:00:00").getTime * 1000L,
-        java.sql.Timestamp.valueOf("2024-02-28 23:59:59").getTime * 1000L)))
+    val (kept, skipped) = SnapshotLog.pruneCounts(spark, dir, febOnly)
     assert(kept == 1 && skipped == 2, s"kept=$kept skipped=$skipped")
+  }
+
+  test("timestamp bounds prune at microsecond precision: a sub-millisecond bound keeps its boundary file") {
+    import spark.implicits._
+    import graft.table.SnapshotLog
+    val dir = Files.createTempDirectory("graft-timerange-us").toString + "/t"
+    // the later file starts 300 µs past a whole millisecond
+    for (ts <- Seq(Seq("2024-03-31 23:00:00", "2024-03-31 23:30:00"),
+                   Seq("2024-04-01 00:00:00.0003", "2024-04-01 00:10:00")))
+      SnapshotLog.commit(spark, dir, "append",
+        SnapshotLog.writeData(ts.zipWithIndex.map { case (t, i) =>
+          (i.toLong, java.sql.Timestamp.valueOf(t)) }.toDF("id", "ts").coalesce(1),
+          dir, statsCols = Seq("ts")))
+    // an upper bound 500 µs past the millisecond: a bound floored to the
+    // millisecond would fall below the file's minimum and drop it
+    val upTo = tsBetween("2024-04-01 00:00:00", "2024-04-01 00:00:00.0005")
+    assert(SnapshotLog.pruneCounts(spark, dir, upTo) == ((1, 1)))
+    val got = SnapshotLog.readPruned(spark, dir, upTo).get
+      .filter(col("ts") <= lit(java.sql.Timestamp.valueOf("2024-04-01 00:00:00.0005")))
+      .collect()
+    assert(got.map(_.getTimestamp(1).getNanos).toSeq == Seq(300000))
   }
 
   test("snapshot tags: named time travel, immutability, tag-aware retention islands") {
@@ -2656,7 +2690,7 @@ class CdcSpec extends AnyFunSuite {
     assert(SnapshotLog.stagedTokens(spark, dir).isEmpty)
   }
 
-  test("pruned reads stay epoch-safe: drifted columns survive readWhere/readRange") {
+  test("pruned reads stay epoch-safe: drifted columns survive readPruned/readRange") {
     import spark.implicits._
     import graft.table.SnapshotLog
     val dir = Files.createTempDirectory("graft-epochread").toString + "/t"
@@ -2668,7 +2702,7 @@ class CdcSpec extends AnyFunSuite {
         .coalesce(1), dir, statsCol = Some("id")))
     // a raw multi-path read inferring the epoch-1 schema would silently
     // drop 'extra'; the epoch-safe assembly null-fills it on epoch 1
-    val wide = SnapshotLog.readWhere(spark, dir, Map("id" -> (1L, 2L))).get
+    val wide = SnapshotLog.readPruned(spark, dir, Constraints(ranges = Map("id" -> (1L, 2L)))).get
     assert(wide.columns.contains("extra"))
     val m = wide.collect().map(r => r.getLong(0) ->
       Option(r.getAs[java.lang.Long]("extra"))).toMap

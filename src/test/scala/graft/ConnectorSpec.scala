@@ -88,6 +88,24 @@ class ConnectorSpec extends AnyFunSuite {
     assert(flipped.count() === 301)
   }
 
+  test("strict comparisons prune like their inclusive twins: id > 99 skips a file ending at 99") {
+    val dir = tmp("strict")
+    // one append per hundred: file b holds exactly ids [100b, 100b + 99]
+    for (b <- 0 until 4)
+      rows(400).filter(col("id").between(b * 100, b * 100 + 99)).coalesce(1)
+        .write.format("graft").mode(if (b == 0) "error" else "append")
+        .option("statsCols", "id").save(dir)
+    val all = spark.read.format("graft").load(dir)
+    def numFiles(df: DataFrame) = fileScanOf(df).get.metrics("numFiles").value
+    assert(numFiles(all.filter(col("id") >= 100)) === 3)
+    for (strict <- Seq(all.filter(col("id") > 99), all.filter(lit(99) < col("id")))) {
+      assert(numFiles(strict) === 3)
+      assert(strict.count() === 300)
+    }
+    val below = Seq(all.filter(col("id") < 300), all.filter(lit(300) > col("id")))
+    below.foreach(df => assert(numFiles(df) === 3 && df.count() === 300))
+  }
+
   test("bloom pruning: equality lookup skips zone-blind files; IN probes all keys") {
     val dir = tmp("bloom")
     // round-robin slices: every file spans the whole key range (zones

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.table.{Merge, SnapshotLog}
+import graft.table.{Constraints, Merge, SnapshotLog}
 
 /** POSITIONAL deletion vectors ([[Merge.deleteWhere]] — the Iceberg
   * position-delete / Delta deletion-vector school): a predicate DELETE
@@ -77,9 +77,9 @@ class PosDeleteSpec extends AnyFunSuite {
       "the MOR upsert's new version must win")
     assert(got.filter(col("id") >= 1990).count() === 0)
     // the pruned point/range faces apply both mask kinds too
-    assert(SnapshotLog.readPoint(spark, dir, "id", 1995L).get
+    assert(SnapshotLog.readPruned(spark, dir, Constraints.in("id", 1995L)).get
       .filter(col("id") === 1995).count() === 0)
-    assert(SnapshotLog.readPoint(spark, dir, "id", 505L).get
+    assert(SnapshotLog.readPruned(spark, dir, Constraints.in("id", 505L)).get
       .filter(col("id") === 505).head.getString(2) === "q505")
     assert(SnapshotLog.readRange(spark, dir, 1980L, 2010L).get
       .filter(col("id").between(1980, 2010)).count() === 10)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.table.{FieldRegistry, Merge, SnapshotLog}
+import graft.table.{Constraints, FieldRegistry, Merge, SnapshotLog}
 
 /** Field-id column mapping: `ALTER TABLE … RENAME/DROP COLUMN` as
   * METADATA-ONLY commits (Delta column-mapping / Iceberg field-id
@@ -90,12 +90,13 @@ class SchemaRegistrySpec extends AnyFunSuite {
       assert(schemas === Seq(Seq("id", "v", "cat")),
         s"all files must share the physical schema, got $schemas")
       // pruning speaks LOGICAL: the renamed column's zones still engage
-      val (kept, skipped) = SnapshotLog.pruneStats(spark, dir,
-        Map("val" -> (0L, 50L)))
+      val (kept, skipped) = SnapshotLog.pruneCounts(spark, dir,
+        Constraints(ranges = Map("val" -> (0L, 50L))))
       assert(skipped > 0, "renamed column's zones must still prune")
       assert(kept < kept + skipped)
       // and the pruned read face returns exactly the right rows
-      val pruned = SnapshotLog.readWhere(spark, dir, Map("val" -> (0L, 50L))).get
+      val pruned = SnapshotLog.readPruned(spark, dir,
+          Constraints(ranges = Map("val" -> (0L, 50L)))).get
         .filter(col("val").between(0, 50))
       assert(pruned.count() === 26)
     } finally spark.sql("DROP TABLE reg_renw")
@@ -127,8 +128,8 @@ class SchemaRegistrySpec extends AnyFunSuite {
       // zone pruning on the re-added v uses ONLY the new field's zones:
       // the old files carry no metadata for it (kept conservatively),
       // the new file's zone [7000, 7693] skips for a miss-range probe
-      val (kept, skipped) = SnapshotLog.pruneStats(spark, dir,
-        Map("v" -> (0L, 100L)))
+      val (kept, skipped) = SnapshotLog.pruneCounts(spark, dir,
+        Constraints(ranges = Map("v" -> (0L, 100L))))
       assert(skipped === 1, "the new-field file must skip by its own zone")
       // and rows of the seed files still surface (id pruning intact)
       assert(after.filter(col("v") < 100).count() === 0,

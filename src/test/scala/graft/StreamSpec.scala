@@ -685,7 +685,8 @@ class StreamSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got == Map("u-2" -> "b2", "u-3" -> "c", "u-4" -> "d"))
     // string point lookup over the streamed table skips the foreign file
-    val (_, skipped) = SnapshotLog.prunePointStringStats(spark, s"$base/t", "pk", "u-4")
+    val (_, skipped) = SnapshotLog.pruneCounts(spark, s"$base/t",
+      graft.table.Constraints.in("pk", "u-4"))
     assert(skipped >= 1)
     // idempotent re-drain
     drain()

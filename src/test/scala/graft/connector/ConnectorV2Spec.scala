@@ -158,6 +158,18 @@ class ConnectorV2Spec extends AnyFunSuite {
       "WHERE id >= 2100 AND id < 2200").head.getLong(0) === 95)
   }
 
+  test("pushed timestamp filters before 1582 keep their file: literals convert calendar-exact") {
+    val wh = freshWarehouse("oldts")
+    // the writer records the zone in proleptic micros; Spark hands the
+    // V2 filter a hybrid-calendar java.sql.Timestamp for the same instant
+    spark.sql("SELECT 1L AS id, TIMESTAMP '1000-01-01 00:00:00' AS ts")
+      .coalesce(1).write.format("graft").option("statsCols", "ts").save(s"$wh/t")
+    val got = spark.sql("SELECT id FROM gv2_oldts.t " +
+      "WHERE ts = TIMESTAMP '1000-01-01 00:00:00'")
+    assert(got.queryExecution.executedPlan.toString.contains("BatchScan"))
+    assert(got.collect().map(_.getLong(0)).toSeq === Seq(1L))
+  }
+
   test("runtime filtering: a filtered dim join prunes fact FILES at execution") {
     val wh = freshWarehouse("dpp")
     import spark.implicits._
