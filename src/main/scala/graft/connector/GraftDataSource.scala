@@ -449,7 +449,8 @@ object GraftDataSource {
       val recovered = SnapshotLog.commitsReverse(spark, dir)
         .filter(c => asOf.forall(c.snapshotId <= _))
         .flatMap(_.added.filter(_.kind == "data"))
-        .map(f => scala.util.Try(spark.read.parquet(f.path).schema))
+        .map(f => scala.util.Try(
+          org.apache.spark.sql.graftshim.GraftParquetSchema.schemaOf(spark, f.path)))
         .collectFirst { case scala.util.Success(sch) => sch }
       require(recovered.isDefined, s"graft table $dir has no data files" +
         asOf.fold("")(v => s" at snapshot $v") +

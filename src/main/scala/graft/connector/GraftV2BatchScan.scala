@@ -153,12 +153,15 @@ private[connector] final class GraftV2BatchScan(
 
   override def filter(filters: Array[Filter]): Unit = {
     val cs = GraftV2BatchScan.constraints(filters.toSeq, visible)
-    val before = kept.size
     // runtime filters speak LOGICAL names; file metadata is physical —
     // translate per file exactly like the static pushdown does
-    kept = kept.filter(f =>
+    val next = kept.filter(f =>
       cs.keeps(reg.map(_.translateMeta(f)).getOrElse(f)))
-    runtimePruned += before - kept.size
+    if (next.size < kept.size) synchronized {
+      runtimePruned += kept.size - next.size
+      kept = next
+      innerBatch = None
+    }
   }
 
   // -------------------------------------- storage-partitioned reporting
@@ -243,7 +246,19 @@ private[connector] final class GraftV2BatchScan(
 
   override def createReaderFactory(): PartitionReaderFactory = inner().createReaderFactory()
 
-  private def inner(): Batch = bucketGroups match {
+  /** The inner batch of the CURRENT file list, built once per list: the
+    * engine asks for partitions and a reader factory separately (and
+    * again on every plan copy), and each build creates reader factories,
+    * each of which broadcasts the session's whole Hadoop configuration.
+    * [[filter]] drops it when runtime pruning shrinks the list. */
+  private var innerBatch: Option[Batch] = None
+
+  private def inner(): Batch = synchronized {
+    if (innerBatch.isEmpty) innerBatch = Some(buildInner())
+    innerBatch.get
+  }
+
+  private def buildInner(): Batch = bucketGroups match {
     case _ if withPos =>
       // ROW-ID read: every file its own partition, masks (positional
       // AND equality) applied by original ordinal, metadata columns

@@ -312,10 +312,14 @@ object Curation {
   /** Bloom-filter decontamination — [[decontaminate]]'s 100 TB form. The
     * exact path broadcasts the eval set's DISTINCT SHINGLE STRINGS, which
     * grows with the benchmark suite (GBs once the eval pool is itself
-    * corpus-sized); this path broadcasts a CONSTANT ~128 KB
+    * corpus-sized); this path ships a CONSTANT ~128 KB
     * [[graft.functions.BloomBuildAgg]] bitset over the shingle hashes
     * instead, and probes it map-side (codegen'd, no join at all on the
-    * corpus side). Bloom probes have NO false negatives, so every
+    * corpus side). The bitset binds as a SCALAR SUBQUERY, evaluated once
+    * per query the way Spark binds its own runtime bloom-filter join; a
+    * broadcast cross join would attach it to every shingle row, and the
+    * probe's generated code copies a joined binary column (128 KB) per
+    * row. Bloom probes have NO false negatives, so every
     * exactly-contaminated document is still flagged — the safety property
     * decontamination actually needs; false positives only ever
     * over-flag, and reaching the ≥5-shingle threshold by accident is
@@ -335,8 +339,7 @@ object Curation {
     val bloom = hashed.filter(isEval)
       .agg(bloom_build(col("h"), 1 << 20, 5).as("bf"))
     val bloomFlagged = hashed.filter(!isEval)
-      .crossJoin(broadcast(bloom))
-      .filter(bloom_might_contain(col("bf"), col("h"), 5))
+      .filter(bloom_might_contain(bloom.scalar(), col("h"), 5))
       .groupBy(col("doc_id")).agg(count(lit(1)).as("n_hits"))
       .filter(col("n_hits") >= ContaminationThreshold)
       .select(col("doc_id"), lit(true).as("bloom_flag"))

@@ -339,19 +339,32 @@ object Dedup {
   /** Near-dup resolution: collapse the LSH-verified pair graph into
     * connected components and pick each component's keeper (min doc_id) —
     * the step a production dedup pipeline actually ends with (drop
-    * everything whose keeper isn't itself).
+    * everything whose keeper isn't itself). One row per document that
+    * sits in some verified pair: (doc_id, keeper, is_dup).
     *
-    * Min-label propagation WITH pointer jumping: each round every node
-    * takes the min over its neighbours' labels, then labels contract
-    * through their own labels (label := label(label)). The jump step
-    * doubles the propagation distance per round, so convergence is
-    * O(log diameter) rounds, not O(diameter) — a 1M-doc boilerplate chain
-    * resolves in ~20 rounds instead of 1M. Per round: two keyed joins +
-    * one min-agg; the driver sees only a scalar convergence count.
+    * Two shapes, one answer ([[keepersOf]] picks; RankSpec pins parity):
+    *  - SMALL graph — the documents input is under the
+    *    [[GlobalRank.distributedWorthIt]] size switch AND a bounded
+    *    `limit(MaxLocalPairs + 1)` collect of the verified pairs fits:
+    *    union-find on the driver, the keeper table returned as a local
+    *    relation. The pairs' own jobs and that collect; no loop.
+    *  - otherwise, min-label propagation WITH pointer jumping: each round
+    *    every node takes the min over its neighbours' labels, then labels
+    *    contract through their own labels (label := label(label)). The
+    *    jump step doubles the propagation distance per round, so
+    *    convergence is O(log diameter) rounds, not O(diameter) — a
+    *    1M-doc boilerplate chain resolves in ~20 rounds instead of 1M.
+    *    Per round: two keyed joins + one min-agg; the driver sees only a
+    *    scalar convergence count. At scale the collect is never tried.
     */
   def resolveKeepers(spark: SparkSession, dir: String, threshold: Double = 0.8,
                      maxIters: Int = 25): DataFrame =
     resolveKeepersRaw(spark, dir, threshold, maxIters).orderBy(col("doc_id"))
+
+  /** The most verified pairs a keeper election collects to the driver:
+    * 100k (Long, Long) pairs are a few MB — a fixed bound, never a
+    * buffer that grows with the corpus. */
+  val MaxLocalPairs = 100000
 
   /** [[resolveKeepers]] without the presentation sort — the form
     * aggregate consumers ([[pipelineSummary]]) compose over, where the
@@ -359,7 +372,20 @@ object Dedup {
     * downstream join. */
   private def resolveKeepersRaw(spark: SparkSession, dir: String,
                                 threshold: Double = 0.8,
-                                maxIters: Int = 25): DataFrame = {
+                                maxIters: Int = 25): DataFrame =
+    // verifiedPairs, not ngramJaccard: the component fold is order-free,
+    // so the presentation sort's range exchange would be paid for nothing
+    keepersOf(verifiedPairs(spark, dir, threshold).select(col("doc_a"), col("doc_b")),
+      Tables(spark, dir, "documents"), maxIters)
+
+  /** The keeper table of a (doc_a, doc_b) long-id pair graph
+    * ([[resolveKeepers]]' two shapes). `sizedBy` is the input the size
+    * switch measures; `pairs` is by-name so the eager checkpoints its
+    * construction makes are freed with the election's own. */
+  private[graft] def keepersOf(pairs: => DataFrame, sizedBy: DataFrame,
+                               maxIters: Int = 25,
+                               maxLocalPairs: Int = MaxLocalPairs): DataFrame = {
+    val spark = sizedBy.sparkSession
     // Checkpoint-block hygiene: localCheckpoint blocks live in the block
     // manager until the ContextCleaner GCs the RDD, so a 25-round loop
     // would otherwise pin ~50 stale frames of blocks for the whole query
@@ -388,13 +414,17 @@ object Dedup {
     // The same calls scale out (executor-local blocks; switch to reliable
     // checkpoint() if executor loss must be survivable mid-job).
     val preIds = sc.getPersistentRDDs.keySet.toSet
-    // verifiedPairs, not ngramJaccard: the component fold is order-free,
-    // so the presentation sort's range exchange would be paid inside this
-    // eager checkpoint for nothing
-    val (pairs, _) = checkpointed(
-      verifiedPairs(spark, dir, threshold).select(col("doc_a"), col("doc_b")))
-    val (edges, edgeIds) = checkpointed(pairs
-      .union(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
+    val graph = pairs
+    if (!GlobalRank.distributedWorthIt(sizedBy, GlobalRank.inputBytes(sizedBy))) {
+      val local = graph.limit(maxLocalPairs + 1).collect()
+      if (local.length <= maxLocalPairs) {
+        free(sc.getPersistentRDDs.keySet.toSet.diff(preIds))
+        return electLocally(spark, local.map(r => (r.getLong(0), r.getLong(1))))
+      }
+    }
+    val (cpPairs, _) = checkpointed(graph)
+    val (edges, edgeIds) = checkpointed(cpPairs
+      .union(cpPairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))))
     // edges (materialized) is the only consumer of pairs AND of the LSH
     // pipeline's internal checkpoints (signature/shingle tables) — free
     // everything created since the snapshot except edges itself
@@ -450,6 +480,27 @@ object Dedup {
     }
     free(edgeIds)
     labels.select(col("doc_id"), col("label").as("keeper"))
+      .withColumn("is_dup", col("doc_id") =!= col("keeper"))
+  }
+
+  /** Union-find over driver-held pairs: every union hangs the larger root
+    * under the smaller, so each component's root IS its min doc_id. */
+  private def electLocally(spark: SparkSession, pairs: Seq[(Long, Long)]): DataFrame = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var cur = x // path compression
+      while (cur != root) { val next = parent(cur); parent(cur) = root; cur = next }
+      root
+    }
+    pairs.foreach { case (a, b) =>
+      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra < rb) parent(rb) = ra else if (rb < ra) parent(ra) = rb
+    }
+    import spark.implicits._
+    parent.keys.toSeq.map(d => (d, find(d))).toDF("doc_id", "keeper")
       .withColumn("is_dup", col("doc_id") =!= col("keeper"))
   }
 

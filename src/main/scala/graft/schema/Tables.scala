@@ -2,17 +2,20 @@ package graft.schema
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftParquetSchema
 
 /** Loaders for the driver-provided analytic tables at
   * /root/testdata/sf&#42; (TESTDATA.md / FIXTURES.md B). Centralizing the
   * reads keeps scan-level concerns (column pruning via select-at-source,
-  * the events nanosecond-timestamp normalization) in one place.
+  * the events nanosecond-timestamp normalization) in one place. Every
+  * read takes its schema from the footer on the driver
+  * ([[GraftParquetSchema]]), so loading a table runs no Spark job.
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     name match {
       case "events" => events(spark, dir)
-      case other    => spark.read.parquet(s"$dir/$other.parquet")
+      case other    => GraftParquetSchema.read(spark, s"$dir/$other.parquet")
     }
 
   /** events.parquet's ts arrives in whatever physical form the generator
@@ -96,7 +99,7 @@ object Tables {
   }
 
   def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = GraftParquetSchema.read(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType.typeName match {
       case "long"          => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case "timestamp_ntz" => raw.withColumn("ts", col("ts").cast("timestamp"))

@@ -77,6 +77,11 @@ object Constraints {
       case In(a: Attribute, list) if list.nonEmpty =>
         val lits = list.collect { case Literal(v, dt) if v != null => (v, dt) }
         if (lits.size == list.size) members(a.name, lits)
+      // the optimizer's form of an IN list longer than
+      // `spark.sql.optimizer.inSetConversionThreshold`: the set already
+      // holds Catalyst-internal values, as a Literal does
+      case InSet(a: Attribute, hset) if hset.nonEmpty && !hset.contains(null) =>
+        members(a.name, hset.toSeq.map(v => (v, a.dataType)))
       case _ => comparison(e).foreach {
         case (a, "=" | "<=>", v, dt) => members(a.name, Seq((v, dt)))
         case (a, op, v, dt) => bound(op, dt, v).foreach(narrow(a.name, _))

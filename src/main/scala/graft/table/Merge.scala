@@ -2,6 +2,7 @@ package graft.table
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftParquetSchema
 import org.apache.spark.sql.types.StructType
 
 /** Copy-on-write MERGE (upsert) through the [[SnapshotLog]] commit
@@ -473,10 +474,9 @@ object Merge {
       .localCheckpoint(true) // consumed twice: emptiness probe + write
     // off-lattice drift fails the WRITE: cheap fast path (one footer)
     // when nothing drifted, full per-epoch validation when it did
-    val headSchema = spark.read.parquet(live0.head.path).schema
+    val headSchema = GraftParquetSchema.schemaOf(spark, live0.head.path)
     if (renames.nonEmpty || !sameShape(headSchema, upserts.schema)) {
-      val epochSchemas = live0.groupBy(_.seq).values
-        .map(fs => spark.read.parquet(fs.head.path).schema).toSeq
+      val epochSchemas = SnapshotLog.epochGroups(spark, live0).map(_._1)
       graft.schema.Evolution.mergedSchema(epochSchemas :+ upserts.schema, renames)
     }
     val keys = keySet(delta0, keyColP, maxDriverKeys)

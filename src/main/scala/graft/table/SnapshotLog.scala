@@ -5,6 +5,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.GraftParquetSchema
 
 /** Minimal snapshot/table-format layer over a parquet directory — the
   * capability the reference *installs but never uses*: its Docker image
@@ -591,7 +592,7 @@ object SnapshotLog {
     // instead of failing the stats read-back on a fileless directory
     // (write-first-then-discard callers depend on this: deleteWhere)
     if (sizes.isEmpty) { fs.delete(new Path(dst), true); return Seq.empty }
-    val written = spark.read.parquet(dst)
+    val written = GraftParquetSchema.read(spark, dst)
     val allStats = requested.filter(c => zoneExpr(written, c).isDefined)
     requested.filterNot(allStats.contains)
       .filterNot(bloomColP.contains)
@@ -1148,7 +1149,7 @@ object SnapshotLog {
         val dir = new Path(logDir(tableDir), rel)
         import spark.implicits._
         try {
-          val raw = spark.read.parquet(dir.toString)
+          val raw = GraftParquetSchema.read(spark, dir.toString)
           // pre-r11 parquet checkpoints lack the null-count column:
           // fill with empty (= unknown) so the row decodes
           val compat0 =
@@ -1396,9 +1397,7 @@ object SnapshotLog {
     * would pay one footer probe per epoch per query for a value that can
     * never change (files are content-immutable under uuid naming; bytes
     * join the key as a belt-and-braces guard). LRU-bounded. A miss reads
-    * the footer on the driver ([[sparkFooterSchema]]); only a file
-    * without Spark's schema record pays `spark.read.parquet(path)
-    * .schema`, whose inference runs a (tiny) Spark JOB. */
+    * the footer on the driver ([[GraftParquetSchema]]), with no job. */
   private val epochSchemaCache =
     new java.util.LinkedHashMap[String, org.apache.spark.sql.types.StructType](
       64, 0.75f, true) {
@@ -1413,38 +1412,9 @@ object SnapshotLog {
       val hit = epochSchemaCache.get(key)
       if (hit != null) return hit
     }
-    val v = sparkFooterSchema(spark, f.path)
-      .getOrElse(spark.read.parquet(f.path).schema)
+    val v = GraftParquetSchema.schemaOf(spark, f.path)
     epochSchemaCache.synchronized(epochSchemaCache.put(key, v))
     v
-  }
-
-  /** The schema Spark's parquet writer records in a file's footer
-    * (`org.apache.spark.sql.parquet.row.metadata`), made nullable the
-    * way a file-source read makes it — what `spark.read.parquet(path)
-    * .schema` infers for such a file (Spark prefers this record over
-    * converting the parquet schema), read on the driver with no job.
-    * None for a file some other writer produced. */
-  private def sparkFooterSchema(spark: SparkSession, path: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    import org.apache.spark.sql.types._
-    def nullable(dt: DataType): DataType = dt match {
-      case st: StructType => StructType(st.fields.map(f =>
-        f.copy(dataType = nullable(f.dataType), nullable = true)))
-      case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
-      case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
-        valueContainsNull = true)
-      case other => other
-    }
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(path), spark.sessionState.newHadoopConf()))
-    val recorded =
-      try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
-        .get("org.apache.spark.sql.parquet.row.metadata"))
-      finally reader.close()
-    recorded.flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
-      .collect { case st: StructType => nullable(st).asInstanceOf[StructType] }
   }
 
   /** Read a set of live data files SAFELY across schema epochs: uniform
@@ -1569,7 +1539,7 @@ object SnapshotLog {
       if (posDels.isEmpty) eqApplied
       else {
         val applied = eqApplied
-          .join(broadcast(spark.read.parquet(posDels.map(_.path): _*)
+          .join(broadcast(GraftParquetSchema.read(spark, posDels.map(_.path): _*)
               .select(col(PosFileCol), col(PosOrdCol)).distinct()),
             Seq(PosFileCol, PosOrdCol), "left_anti")
         if (keepPos) applied else applied.drop(PosFileCol, PosOrdCol)
@@ -1644,7 +1614,7 @@ object SnapshotLog {
   def readStaged(spark: SparkSession, tableDir: String, token: String): DataFrame = {
     val fs = fsOf(spark, tableDir)
     val (files, _) = readStagedManifest(fs, tableDir, token)
-    val stagedDf = applyRegistry(spark.read.parquet(files.map(_.path): _*),
+    val stagedDf = applyRegistry(GraftParquetSchema.read(spark, files.map(_.path): _*),
       registryAt(spark, tableDir))
     read(spark, tableDir) match {
       case Some(cur) => cur.unionByName(stagedDf, allowMissingColumns = true)
@@ -1656,7 +1626,7 @@ object SnapshotLog {
   def readStagedOnly(spark: SparkSession, tableDir: String, token: String): DataFrame = {
     val fs = fsOf(spark, tableDir)
     val (files, _) = readStagedManifest(fs, tableDir, token)
-    applyRegistry(spark.read.parquet(files.map(_.path): _*),
+    applyRegistry(GraftParquetSchema.read(spark, files.map(_.path): _*),
       registryAt(spark, tableDir))
   }
 
@@ -2038,7 +2008,7 @@ object SnapshotLog {
       val op = if (c.op == "append") "insert" else "upsert"
       val upserts =
         if (dataAdded.isEmpty || c.op == "replace") None
-        else Some(spark.read.parquet(dataAdded.map(_.path): _*)
+        else Some(GraftParquetSchema.read(spark, dataAdded.map(_.path): _*)
           .withColumn("_change_op", lit(op))
           .withColumn("_change_snapshot", lit(c.snapshotId)))
       val deletes =
@@ -2046,12 +2016,12 @@ object SnapshotLog {
         // mask entries (mask CONSOLIDATION) are not new delete events
         if (delAdded.isEmpty || c.op == "replace") None
         else {
-          val delDf = spark.read.parquet(delAdded.map(_.path): _*)
+          val delDf = GraftParquetSchema.read(spark, delAdded.map(_.path): _*)
           val keyCol = delDf.columns.head
           val masked =
             if (dataAdded.isEmpty) delDf.select(col(keyCol)).distinct()
             else delDf.select(col(keyCol)).distinct()
-              .join(spark.read.parquet(dataAdded.map(_.path): _*).select(col(keyCol)),
+              .join(GraftParquetSchema.read(spark, dataAdded.map(_.path): _*).select(col(keyCol)),
                 Seq(keyCol), "left_anti")
           // phantom pruning needs the PARENT snapshot's live data files;
           // a missing parent manifest (first commit, or expired beyond
@@ -2104,7 +2074,7 @@ object SnapshotLog {
     val dataAdded = c.added.filter(_.kind == "data")
     val addedDf =
       if (dataAdded.isEmpty) None // all-tombstone merge: nothing rewritten in
-      else Some(spark.read.parquet(dataAdded.map(_.path): _*))
+      else Some(GraftParquetSchema.read(spark, dataAdded.map(_.path): _*))
     val changed = addedDf.map(_
       .filter(col(Merge.LineageCol) === c.snapshotId)
       .drop(Merge.LineageCol))
@@ -2199,10 +2169,10 @@ object SnapshotLog {
     val delAdded = c.added.filter(_.kind == "eqdelete")
     val addedDf =
       if (dataAdded.isEmpty) None
-      else Some(spark.read.parquet(dataAdded.map(_.path): _*))
+      else Some(GraftParquetSchema.read(spark, dataAdded.map(_.path): _*))
     val maskKeys =
       if (delAdded.isEmpty) None
-      else Some(spark.read.parquet(delAdded.map(_.path): _*)
+      else Some(GraftParquetSchema.read(spark, delAdded.map(_.path): _*)
         .select(col(keyCol)).distinct())
     val parentId = c.snapshotId - 1
     if (parentId < 1) // no parent: nothing existed, everything inserts
@@ -2267,7 +2237,7 @@ object SnapshotLog {
     * still references (retention keeps referenced bytes). */
   private def posDeleteRows(spark: SparkSession,
                             posAdded: Seq[DataFile]): DataFrame = {
-    val masks = spark.read.parquet(posAdded.map(_.path): _*)
+    val masks = GraftParquetSchema.read(spark, posAdded.map(_.path): _*)
       .select(col(PosFileCol), col(PosOrdCol)).distinct()
     val targets = masks.select(PosFileCol).distinct()
       .collect().map(_.getString(0)).toIndexedSeq
@@ -2281,9 +2251,9 @@ object SnapshotLog {
     def withPos(df: DataFrame) = df.select(col("*"),
       col("_metadata.file_path").as(PosFileCol),
       col("_metadata.row_index").as(PosOrdCol))
-    val groups = targets.map(p => spark.read.parquet(p).schema -> p)
-      .groupBy(_._1).toSeq.map { case (_, ps) =>
-        withPos(spark.read.parquet(ps.map(_._2): _*)) }
+    val groups = targets.map(p => GraftParquetSchema.schemaOf(spark, p) -> p)
+      .groupBy(_._1).toSeq.map { case (sch, ps) =>
+        withPos(spark.read.schema(sch).parquet(ps.map(_._2): _*)) }
     val unioned =
       if (groups.size == 1) groups.head
       else graft.schema.Evolution.mergeEpochs(groups, Map.empty)

@@ -106,6 +106,23 @@ class ConnectorSpec extends AnyFunSuite {
     below.foreach(df => assert(numFiles(df) === 3 && df.count() === 300))
   }
 
+  test("an IN list past the InSet threshold prunes like a short one") {
+    val dir = tmp("inset")
+    // twelve appends with disjoint zones: file b holds ids [100b, 100b + 99]
+    for (b <- 0 until 12)
+      rows(1200).filter(col("id").between(b * 100, b * 100 + 99)).coalesce(1)
+        .write.format("graft").mode(if (b == 0) "error" else "append")
+        .option("statsCols", "id").save(dir)
+    val all = spark.read.format("graft").load(dir)
+    def numFiles(df: DataFrame) = fileScanOf(df).get.metrics("numFiles").value
+    val short = all.filter(col("id").isin((0L to 9L): _*))
+    val long = all.filter(col("id").isin((0L to 10L): _*)) // 11 values: planned as INSET
+    assert(long.queryExecution.optimizedPlan.expressions.isEmpty ||
+      long.queryExecution.optimizedPlan.toString.contains("INSET"))
+    assert(numFiles(short) === 1 && short.count() === 10)
+    assert(numFiles(long) === 1 && long.count() === 11)
+  }
+
   test("bloom pruning: equality lookup skips zone-blind files; IN probes all keys") {
     val dir = tmp("bloom")
     // round-robin slices: every file spans the whole key range (zones

@@ -16,6 +16,15 @@ class RankSpec extends AnyFunSuite {
   lazy val spark = Sessions.local("4", "rank-spec")
   val sf = "/root/testdata/sf0.001"
 
+  /** `body` with every size switch forced onto its distributed shape. */
+  private def forcedDistributed[T](body: => T): T = {
+    val prev = spark.conf.getOption("graft.rank.distributedMinBytes")
+    spark.conf.set("graft.rank.distributedMinBytes", "0")
+    try body
+    finally prev.fold(spark.conf.unset("graft.rank.distributedMinBytes"))(
+      v => spark.conf.set("graft.rank.distributedMinBytes", v))
+  }
+
   test("ranked assigns a dense 0-based global rank in ord order") {
     val df = spark.range(5000).select(
       (col("id") * 2654435761L % 100003L).as("k"), col("id"))
@@ -73,13 +82,10 @@ class RankSpec extends AnyFunSuite {
 
   test("zorder layout stats agree across the window and distributed paths") {
     val base = graft.llm.Curation.zorderLayout(spark, sf).collect().toSeq
-    val prev = spark.conf.getOption("graft.rank.distributedMinBytes")
-    spark.conf.set("graft.rank.distributedMinBytes", "0") // force distributed
-    try {
+    forcedDistributed {
       val dist = graft.llm.Curation.zorderLayout(spark, sf).collect().toSeq
       assert(dist == base)
-    } finally prev.fold(spark.conf.unset("graft.rank.distributedMinBytes"))(
-      v => spark.conf.set("graft.rank.distributedMinBytes", v))
+    }
   }
 
   test("groupedCumSum equals the per-key window running sum") {
@@ -103,34 +109,82 @@ class RankSpec extends AnyFunSuite {
     val ops = graft.ops.Events
     val base = ops.funnel(spark, sf).collect().toSeq
     val baseW = ops.windowedFunnel(spark, sf).collect().toSeq
-    val prev = spark.conf.getOption("graft.rank.distributedMinBytes")
-    spark.conf.set("graft.rank.distributedMinBytes", "0") // force chained
-    try {
+    forcedDistributed { // the chained funnel
       assert(ops.funnel(spark, sf).collect().toSeq == base)
       assert(ops.windowedFunnel(spark, sf).collect().toSeq == baseW)
-    } finally prev.fold(spark.conf.unset("graft.rank.distributedMinBytes"))(
-      v => spark.conf.set("graft.rank.distributedMinBytes", v))
+    }
   }
 
   test("containment agrees across the checkpoint and members-only paths") {
     val base = graft.llm.Dedup.containment(spark, sf).collect().toSeq
-    val prev = spark.conf.getOption("graft.rank.distributedMinBytes")
-    spark.conf.set("graft.rank.distributedMinBytes", "0") // force members-only
-    try {
+    forcedDistributed { // the members-only path
       assert(graft.llm.Dedup.containment(spark, sf).collect().toSeq == base)
-    } finally prev.fold(spark.conf.unset("graft.rank.distributedMinBytes"))(
-      v => spark.conf.set("graft.rank.distributedMinBytes", v))
+    }
+  }
+
+  /** A pair graph with a long path (ids permuted, so its minimum sits
+    * mid-path and the pointer jump has work), isolated pairs and two
+    * stars (one centred on its minimum, one not), read back from parquet
+    * so the size switch sees real input bytes. */
+  private def pairGraph(pairs: Seq[(Long, Long)]) = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-keepers").toString + "/p"
+    pairs.toDF("doc_a", "doc_b").coalesce(1).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+  private val pathIds = (0 until 64).map(i => 100L + (i * 37L + 20) % 64)
+  private val fixture: Seq[(Long, Long)] =
+    pathIds.zip(pathIds.tail) ++
+      Seq((500L, 501L), (600L, 602L), (703L, 700L)) ++
+      (901L to 910L).map(900L -> _) ++
+      ((1001L to 1005L).map(1000L -> _) :+ (950L -> 1000L))
+
+  private def keepers(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).sortBy(_._1).toSeq
+  private def electedOnDriver(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.collectLeaves().forall(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+
+  test("keeper election agrees across the driver and label-propagation paths") {
+    import graft.llm.Dedup
+    for (pairs <- Seq(fixture, Seq.empty[(Long, Long)])) {
+      val g = pairGraph(pairs)
+      val small = Dedup.keepersOf(g, g)
+      assert(electedOnDriver(small))
+      val viaLoop = forcedDistributed {
+        val df = Dedup.keepersOf(g, g)
+        assert(!electedOnDriver(df))
+        keepers(df)
+      }
+      assert(keepers(small) == viaLoop)
+      val byId = viaLoop.map(k => k._1 -> k._2).toMap
+      if (pairs.isEmpty) assert(viaLoop.isEmpty)
+      else {
+        assert(viaLoop.size == 64 + 6 + 11 + 7)
+        assert(pathIds.forall(byId(_) == 100L))
+        assert(byId(501L) == 500L && byId(703L) == 700L && byId(602L) == 600L)
+        assert((901L to 910L).forall(byId(_) == 900L) && byId(900L) == 900L)
+        assert((1000L to 1005L).forall(byId(_) == 950L))
+        assert(viaLoop.forall { case (d, k, dup) => dup == (d != k) })
+      }
+    }
+  }
+
+  test("keeper election over maxLocalPairs edges takes the label-propagation loop") {
+    val g = pairGraph(fixture)
+    val capped = graft.llm.Dedup.keepersOf(g, g, maxLocalPairs = fixture.size - 1)
+    assert(!electedOnDriver(capped))
+    val fits = graft.llm.Dedup.keepersOf(g, g, maxLocalPairs = fixture.size)
+    assert(electedOnDriver(fits))
+    assert(keepers(capped) == keepers(fits))
   }
 
   test("token shards and pack sequences agree across the cumsum paths") {
     val baseShards = graft.llm.Curation.tokenShards(spark, sf).collect().toSeq
     val basePack = graft.llm.Curation.packSequences(spark, sf).collect().toSeq
-    val prev = spark.conf.getOption("graft.rank.distributedMinBytes")
-    spark.conf.set("graft.rank.distributedMinBytes", "0") // force distributed
-    try {
+    forcedDistributed {
       assert(graft.llm.Curation.tokenShards(spark, sf).collect().toSeq == baseShards)
       assert(graft.llm.Curation.packSequences(spark, sf).collect().toSeq == basePack)
-    } finally prev.fold(spark.conf.unset("graft.rank.distributedMinBytes"))(
-      v => spark.conf.set("graft.rank.distributedMinBytes", v))
+    }
   }
 }

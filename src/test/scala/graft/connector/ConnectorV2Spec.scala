@@ -908,6 +908,37 @@ class ConnectorV2Spec extends AnyFunSuite {
     assert(spark.sql("SELECT count(*) FROM gv2_mor.t").head.getLong(0) === 2792)
   }
 
+  test("a runtime-filtered re-plan of a masked scan reads only the pruned files") {
+    val wh = freshWarehouse("morrt")
+    val dir = s"$wh/t"
+    for (b <- 0 until 4)
+      rows(b * 1000L, (b + 1) * 1000L).coalesce(1).write.format("graft")
+        .mode(if (b == 0) "error" else "append")
+        .option("statsCols", "id").save(dir)
+    Merge.deleteWhere(spark, dir, col("id") % 10 === 3 && col("id") < 2000)
+    val scan = new GraftScanBuilder(spark, dir).build().asInstanceOf[GraftV2BatchScan]
+    def fileOf(p: String) = new org.apache.hadoop.fs.Path(p).toUri.getPath
+    // masked partitions wrap the single-file partition the reader consumes
+    def planned: Set[String] = scan.planInputPartitions().toSeq.flatMap {
+      case fp: org.apache.spark.sql.execution.datasources.FilePartition => Seq(fp)
+      case wrapped: Product => wrapped.productIterator.collect {
+        case fp: org.apache.spark.sql.execution.datasources.FilePartition => fp }
+    }.flatMap(_.files.map(f => fileOf(f.filePath.toString))).toSet
+    def kept: Set[String] = scan.keptFiles.map(f => fileOf(f.path)).toSet
+    assert(kept.size === 4 && planned === kept)
+    assert(scan.createReaderFactory() != null)
+    // one masked file (ids 1000..1999) and one plain file (3000..3999)
+    scan.filter(Array[sources.Filter](sources.In("id", Array[Any](1500L, 3500L))))
+    assert(kept.size === 2 && planned === kept, scan.description())
+    // only the masked file: the re-plan must not serve the earlier batch
+    scan.filter(Array[sources.Filter](sources.EqualTo("id", 1500L)))
+    assert(kept.size === 1 && planned === kept, scan.description())
+    assert(scan.description().contains("rtPruned=3"), scan.description())
+    // a filter that prunes nothing keeps the same plan
+    scan.filter(Array[sources.Filter](sources.GreaterThanOrEqual("id", 0L)))
+    assert(kept.size === 1 && planned === kept)
+  }
+
   test("vectorized equality-mask read: seq rule, re-inserts and budget fallback (r15)") {
     val wh = freshWarehouse("eqv")
     val dir = s"$wh/t"

@@ -19,8 +19,9 @@ import graft.table.SnapshotLog.DataFile
   * their zones, null counts, partition-value sets and blooms are derived
   * from the rows the way [[SnapshotLog.writeData]] records them. Random
   * conjunctions mix strict, inclusive and literal-on-the-left
-  * comparisons, `IN`, `<=>` and null literals, and are evaluated row by
-  * row by Catalyst itself:
+  * comparisons, `IN`, `<=>`, null literals and the `InSet` the optimizer
+  * makes of an IN list past ten values, and are evaluated row by row by
+  * Catalyst itself:
   *
   *  - pruning never drops a file holding a satisfying row;
   *  - the Catalyst form and the `sources.Filter` form Spark pushes to
@@ -57,6 +58,15 @@ object PruneProps extends Properties("Prune") {
       Gen.oneOf(0L, 1L, 300L, 500L, 999L, 1000L, 1001L, 86400000000L))
       .map { case (t, k) => micros(t) + k },
     Gen.oneOf("a", "b", "c", "d").map(UTF8String.fromString))
+
+  /** Wider per-column domains for the long IN lists that plan as
+    * `InSet`: mostly values no row holds, so a set can pass ten members. */
+  private val wide: Seq[Gen[Any]] = Seq(
+    Gen.choose(-100, 100),
+    Gen.choose(-100L, 100L),
+    Gen.choose(0, 400).map(k => (days("1970-01-01") + k).toInt),
+    Gen.choose(0L, 400L).map(micros("1970-01-01T00:00:00Z") + _),
+    Gen.alphaLowerChar.map(ch => UTF8String.fromString(ch.toString)))
 
   private def orNull(g: Gen[Any]): Gen[Any] = Gen.frequency(6 -> g, 1 -> Gen.const(null))
 
@@ -112,12 +122,15 @@ object PruneProps extends Properties("Prune") {
     case _ => v
   }
 
-  private val ops = Seq("=", "<=>", "<", "<=", ">", ">=", "in")
+  private val ops = Seq("=", "<=>", "<", "<=", ">", ">=", "in", "inset")
 
   private val genConjunct: Gen[Conjunct] = for {
     c <- Gen.choose(0, 4)
     op <- Gen.oneOf(ops)
-    vs <- Gen.choose(1, 3).flatMap(Gen.listOfN(_, orNull(domains(c))))
+    vs <- if (op == "inset")
+        Gen.choose(11, 14).flatMap(Gen.listOfN(_,
+          orNull(Gen.frequency(1 -> domains(c), 1 -> wide(c)))))
+      else Gen.choose(1, 3).flatMap(Gen.listOfN(_, orNull(domains(c))))
     flip <- Gen.oneOf(true, false)
     java8 <- Gen.oneOf(true, false)
     upper <- Gen.oneOf(true, false)
@@ -125,6 +138,7 @@ object PruneProps extends Properties("Prune") {
     val a = attrs(c)
     val dt = a.dataType
     val name = if (upper) a.name.toUpperCase else a.name
+    val set = vs.toSet
     val lit = Literal(vs.head, dt)
     val x = external(dt, vs.head, java8)
     def cmp(mk: (Expression, Expression) => Expression, flipped: String) =
@@ -137,6 +151,7 @@ object PruneProps extends Properties("Prune") {
       case ">" => cmp(GreaterThan, "<")
       case ">=" => cmp(GreaterThanOrEqual, "<=")
       case "in" => (In(a, vs.map(Literal(_, dt))), "in")
+      case "inset" => (InSet(a, set), "inset")
     }
     val f = pushedOp match {
       case "=" => sources.EqualTo(name, x)
@@ -146,6 +161,8 @@ object PruneProps extends Properties("Prune") {
       case ">" => sources.GreaterThan(name, x)
       case ">=" => sources.GreaterThanOrEqual(name, x)
       case "in" => sources.In(name, vs.map(external(dt, _, java8)).toArray)
+      // what Spark pushes for an InSet: its members, in set order
+      case "inset" => sources.In(name, set.toArray.map(external(dt, _, java8)))
     }
     Conjunct(e, f)
   }
