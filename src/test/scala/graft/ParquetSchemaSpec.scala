@@ -21,7 +21,7 @@ import graft.table.SnapshotLog
 class ParquetSchemaSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = Sessions.local("4", "parquet-schema-spec")
-  val sf = "/root/testdata/sf0.001"
+  private val sf = new EntrySpec().sf // the shared sf0.001 test data
 
   private def tmp(tag: String): String =
     java.nio.file.Files.createTempDirectory(s"graft-pqschema-$tag").toString
