@@ -2,7 +2,7 @@ package graft.cdc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.schema.Schemas
+import graft.schema.{Fixtures, Schemas}
 
 /** Named queries over the CDC fixture topics (FIXTURES.md §A) — the
   * reference's decode surface (S1-S3, T1-T7, A1-A2 of SURVEY.md §2) as
@@ -666,16 +666,13 @@ object CdcQueries {
       .filter(col("rk") === 1).drop("rk")
   }
 
-  private val cowWarehouseCache =
-    scala.collection.concurrent.TrieMap.empty[Int, String]
   /** Build (once per session) the copy-on-write warehouse behind
     * `cdc_merge_cow`: epoch-1 latest-state written key-range-clustered
     * (2 files, order_id manifest stats), epoch-2 latest-state upserted
     * through [[graft.table.Merge.upsert]]. */
   private def cowWarehouse(spark: SparkSession): String =
-    cowWarehouseCache.getOrElseUpdate(System.identityHashCode(spark), {
+    Fixtures.memo(spark, "graft-cow") { base =>
       import graft.table.{Merge, SnapshotLog}
-      val base = java.nio.file.Files.createTempDirectory("graft-cow").toString
       val dir = s"$base/orders_state"
       val all = parse(spark, "orders")
       val snap = latestPerKey(all.filter(col("kafka_offset") <= 5))
@@ -686,10 +683,8 @@ object CdcQueries {
       Merge.upsert(spark, dir,
         latestPerKey(all.filter(col("kafka_offset") >= 6)), "order_id")
       dir
-    })
+    }
 
-  private val cowDelWarehouseCache =
-    scala.collection.concurrent.TrieMap.empty[Int, String]
   /** The delete-aware COW warehouse behind `cdc_merge_cow_deletes`:
     * epoch 1 (offsets ≤ 3 of the orders_del fixture) compacted
     * tombstone-aware and written key-clustered; epoch 2 (offsets ≥ 4:
@@ -697,22 +692,21 @@ object CdcQueries {
     * and applied through [[graft.table.Merge.applyChanges]] with its
     * tombstone flag. */
   private def cowDelWarehouse(spark: SparkSession): String =
-    cowDelWarehouseCache.getOrElseUpdate(System.identityHashCode(spark), {
+    Fixtures.memo(spark, "graft-cowdel") { base =>
       import graft.table.Merge
-      val (dir, delta) = delStateEpoch1(spark, "graft-cowdel")
+      val (dir, delta) = delStateEpoch1(spark, base)
       Merge.applyChanges(spark, dir, delta, "pk", Some("is_delete"))
       dir
-    })
+    }
 
   /** Shared scaffolding for the delete-aware merge fixtures: build the
     * epoch-1 (offsets ≤ 3) tombstone-aware latest state of the
-    * orders_del topic, write it key-clustered as snapshot 1 of a fresh
-    * table dir, and return (tableDir, epoch-2 latest-per-pk delta with
-    * its `is_delete` flag) for the strategy under test to apply. */
-  private def delStateEpoch1(spark: SparkSession, prefix: String): (String, DataFrame) = {
+    * orders_del topic, write it key-clustered as snapshot 1 of a table
+    * dir under `base`, and return (tableDir, epoch-2 latest-per-pk delta
+    * with its `is_delete` flag) for the strategy under test to apply. */
+  private def delStateEpoch1(spark: SparkSession, base: String): (String, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     import graft.table.SnapshotLog
-    val base = java.nio.file.Files.createTempDirectory(prefix).toString
     val dir = s"$base/orders_del_state"
     val d = Envelope.decodeKeyed(
         source.read(spark, Schemas.topicFor("orders_del"), StartingOffsets.Earliest),
@@ -736,15 +730,12 @@ object CdcQueries {
     (dir, delta)
   }
 
-  private val strKeyWarehouseCache =
-    scala.collection.concurrent.TrieMap.empty[Int, String]
   /** The string-keyed COW warehouse behind `cdc_merge_string_key`:
     * epoch-1 latest-state written in two pk-range files with per-file
     * key BLOOMS, epoch-2 latest-state upserted by the string pk. */
   private def strKeyWarehouse(spark: SparkSession): String =
-    strKeyWarehouseCache.getOrElseUpdate(System.identityHashCode(spark), {
+    Fixtures.memo(spark, "graft-strkeywh") { base =>
       import graft.table.{Merge, SnapshotLog}
-      val base = java.nio.file.Files.createTempDirectory("graft-strkeywh").toString
       val dir = s"$base/orders_str"
       val all = parse(spark, "orders")
       def keyed(df: DataFrame) =
@@ -757,19 +748,16 @@ object CdcQueries {
       Merge.applyChanges(spark, dir,
         keyed(latestPerKey(all.filter(col("kafka_offset") >= 6))), "pk", None)
       dir
-    })
+    }
 
-  private val driftMergeCache =
-    scala.collection.concurrent.TrieMap.empty[Int, String]
   /** The COW-merge-under-drift warehouse behind `cdc_merge_drift`:
     * epoch-1 latest-state written under the old shape in THREE
     * key-range files ([1-2], [3-4], [5-6]); the epoch-2 delta (keys
     * 2, 5, 7, 8 under the new shape) touches files 1 and 3 and leaves
     * file 2 carried forward by reference with its OLD schema. */
   private def driftMergeWarehouse(spark: SparkSession): String =
-    driftMergeCache.getOrElseUpdate(System.identityHashCode(spark), {
+    Fixtures.memo(spark, "graft-driftmerge") { base =>
       import graft.table.{Merge, SnapshotLog}
-      val base = java.nio.file.Files.createTempDirectory("graft-driftmerge").toString
       val dir = s"$base/orders_drift_state"
       val (e1, e2) = driftEpochs(spark)
       val snap = latestPerKey(e1).repartitionByRange(3, col("order_id"))
@@ -779,23 +767,19 @@ object CdcQueries {
       Merge.applyChanges(spark, dir, latestPerKey(e2), "order_id", None,
         renames = Map("address" -> "shipping_address"))
       dir
-    })
+    }
 
-  private val morWarehouseCache =
-    scala.collection.concurrent.TrieMap.empty[Int, String]
   /** The merge-on-read twin of [[cowDelWarehouse]]: the SAME epoch-1
     * state and epoch-2 delta, but applied as a `rowdelta` commit (new
     * data files + one equality-delete key file; zero rewrites). */
   private def morWarehouse(spark: SparkSession): String =
-    morWarehouseCache.getOrElseUpdate(System.identityHashCode(spark), {
+    Fixtures.memo(spark, "graft-mor") { base =>
       import graft.table.Merge
-      val (dir, delta) = delStateEpoch1(spark, "graft-mor")
+      val (dir, delta) = delStateEpoch1(spark, base)
       Merge.mergeOnRead(spark, dir, delta, "pk", Some("is_delete"))
       dir
-    })
+    }
 
-  private val posDelWarehouseCache =
-    scala.collection.concurrent.TrieMap.empty[Int, String]
   /** The DELETION-VECTOR merge warehouse behind `cdc_mor_posdelete` —
     * FOURTH storage strategy over the same stream, same oracle: every
     * delta-touched key's OLD version is masked POSITIONALLY
@@ -805,9 +789,9 @@ object CdcQueries {
     * surviving rows append as plain data. The Delta deletion-vector
     * MERGE shape. */
   private def posDelWarehouse(spark: SparkSession): String =
-    posDelWarehouseCache.getOrElseUpdate(System.identityHashCode(spark), {
+    Fixtures.memo(spark, "graft-posdelwh") { base =>
       import graft.table.{Merge, SnapshotLog}
-      val (dir, delta) = delStateEpoch1(spark, "graft-posdelwh")
+      val (dir, delta) = delStateEpoch1(spark, base)
       val touched = delta.select(col("pk")).distinct()
         .collect().map(_.getInt(0)).toSeq
       Merge.deleteWhere(spark, dir, col("pk").isin(touched: _*))
@@ -818,60 +802,50 @@ object CdcQueries {
           SnapshotLog.writeData(survivors, dir, statsCol = Some("pk")),
           summary = Map("table" -> "orders_del_state"))
       dir
-    })
+    }
 
-  private val cowLineageWarehouseCache =
-    scala.collection.concurrent.TrieMap.empty[Int, String]
   /** The LINEAGE-stamped copy-on-write twin of [[morWarehouse]]: the
     * SAME epoch-1 state and epoch-2 delta, applied as an `upsert` commit
     * with `lineage = true` so the change feed is derivable from it. */
   private def cowLineageWarehouse(spark: SparkSession): String =
-    cowLineageWarehouseCache.getOrElseUpdate(System.identityHashCode(spark), {
+    Fixtures.memo(spark, "graft-cowlin") { base =>
       import graft.table.Merge
-      val (dir, delta) = delStateEpoch1(spark, "graft-cowlin")
+      val (dir, delta) = delStateEpoch1(spark, base)
       Merge.applyChanges(spark, dir, delta, "pk", Some("is_delete"), lineage = true)
       dir
-    })
+    }
 
-  private val morMatWarehouseCache =
-    scala.collection.concurrent.TrieMap.empty[Int, String]
   /** [[morWarehouse]] plus the maintenance step: pending equality
     * deletes folded back into clustered data by
     * [[graft.table.Merge.materializeDeletes]] (a `replace` commit). */
   private def morMatWarehouse(spark: SparkSession): String =
-    morMatWarehouseCache.getOrElseUpdate(System.identityHashCode(spark), {
+    Fixtures.memo(spark, "graft-mormat") { base =>
       import graft.table.Merge
-      val (dir, delta) = delStateEpoch1(spark, "graft-mormat")
+      val (dir, delta) = delStateEpoch1(spark, base)
       Merge.mergeOnRead(spark, dir, delta, "pk", Some("is_delete"))
       Merge.materializeDeletes(spark, dir)
       dir
-    })
+    }
 
-  private val driftSnapshotCache =
-    scala.collection.concurrent.TrieMap.empty[Int, String]
   /** The two drifting-schema epochs committed as consecutive SNAPSHOTS
     * of one table (epoch 1 under the old source shape, epoch 2 under
     * the widened/renamed/extended one). */
   private def driftSnapshotWarehouse(spark: SparkSession): String =
-    driftSnapshotCache.getOrElseUpdate(System.identityHashCode(spark), {
+    Fixtures.memo(spark, "graft-driftsnap") { base =>
       import graft.table.SnapshotLog
-      val base = java.nio.file.Files.createTempDirectory("graft-driftsnap").toString
       val dir = s"$base/orders_drift"
       val (e1, e2) = driftEpochs(spark)
       SnapshotLog.commit(spark, dir, "append", SnapshotLog.writeData(e1, dir))
       SnapshotLog.commit(spark, dir, "append", SnapshotLog.writeData(e2, dir))
       dir
-    })
+    }
 
-  private val bloomWarehouseCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   /** Four ingest-ordered appends of orders (round-robin by orderkey, so
     * every file spans the whole key range — the zone-map-blind layout)
     * with per-file orderkey BLOOMS in the manifests. */
   private def bloomWarehouse(spark: SparkSession, dir: String): String =
-    bloomWarehouseCache.getOrElseUpdate(s"${System.identityHashCode(spark)}|$dir", {
+    Fixtures.memo(spark, "graft-bloomwh", dir) { base =>
       import graft.table.SnapshotLog
-      val base = java.nio.file.Files.createTempDirectory("graft-bloomwh").toString
       val tdir = s"$base/orders_bloom"
       val ord = graft.schema.Tables(spark, dir, "orders")
         .select(col("o_orderkey").cast("long").as("o_orderkey"),
@@ -882,19 +856,16 @@ object CdcQueries {
             ord.filter(pmod(col("o_orderkey"), lit(4)) === slice).coalesce(1),
             tdir, statsCol = Some("o_orderkey"), bloomCol = Some("o_orderkey")))
       base
-    })
+    }
 
-  private val zoneWarehouseCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   /** A snapshot table over the driver's events parquet, Z-ORDER
     * compacted on (user_id, minute) with per-column manifest stats —
     * the 2-D [[graft.table.SnapshotLog.readPruned]] fixture. The initial
     * append is deliberately layout-random (`repartition(8)`) so the
     * compaction, not ingest luck, is what localizes the dimensions. */
   private def zoneWarehouse(spark: SparkSession, dir: String): String =
-    zoneWarehouseCache.getOrElseUpdate(s"${System.identityHashCode(spark)}|$dir", {
+    Fixtures.memo(spark, "graft-zone", dir) { base =>
       import graft.table.SnapshotLog
-      val base = java.nio.file.Files.createTempDirectory("graft-zone").toString
       val tdir = s"$base/events_parquet"
       val ev = graft.schema.Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"),
@@ -907,18 +878,15 @@ object CdcQueries {
       Compaction.compactSnapshotted(spark, base, "events",
         targetBytes = math.max(1L, bytes / 16), clusterZOrder = Seq("user_id", "minute"))
       base
-    })
+    }
 
-  private val partitionedWarehouseCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   /** A date-partitioned snapshot table over the driver's events parquet:
     * rows clustered by event day via range partitioning, per-file
     * partition-value sets recorded in the manifest for
     * [[graft.table.SnapshotLog.readPruned]] pruning. */
   private def partitionedWarehouse(spark: SparkSession, dir: String): String =
-    partitionedWarehouseCache.getOrElseUpdate(s"${System.identityHashCode(spark)}|$dir", {
+    Fixtures.memo(spark, "graft-partwh", dir) { base =>
       import graft.table.SnapshotLog
-      val base = java.nio.file.Files.createTempDirectory("graft-partwh").toString
       val tdir = s"$base/events_bydate"
       val ev = graft.schema.Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -928,17 +896,14 @@ object CdcQueries {
         SnapshotLog.writeData(ev, tdir, statsCol = Some("event_id"),
           partitionCols = Seq("event_date")))
       tdir
-    })
+    }
 
-  private val rollbackWarehouseCache =
-    scala.collection.concurrent.TrieMap.empty[Int, String]
   /** A 3-snapshot orders table whose head is a ROLLBACK: epoch-1 append,
     * epoch-2 append, then [[graft.table.SnapshotLog.rollback]] to
     * snapshot 1 — current-state reads must equal epoch 1 exactly. */
   private def rollbackWarehouse(spark: SparkSession): String =
-    rollbackWarehouseCache.getOrElseUpdate(System.identityHashCode(spark), {
+    Fixtures.memo(spark, "graft-rollback") { base =>
       import graft.table.SnapshotLog
-      val base = java.nio.file.Files.createTempDirectory("graft-rollback").toString
       val dir = s"$base/orders_parquet"
       val all = parse(spark, "orders")
       SnapshotLog.commit(spark, dir, "append",
@@ -949,19 +914,15 @@ object CdcQueries {
           statsCol = Some("kafka_offset")))
       SnapshotLog.rollback(spark, dir, toSnapshot = 1L)
       dir
-    })
+    }
 
-  private val snapshotWarehouseCache =
-    scala.collection.concurrent.TrieMap.empty[Int, String]
   private def snapshotWarehouse(spark: SparkSession): String =
     // the fixture topics are immutable within a session, so the built
     // 3-snapshot warehouse is reusable across queries and bench passes
-    snapshotWarehouseCache.getOrElseUpdate(
-      System.identityHashCode(spark), buildSnapshotWarehouse(spark))
+    Fixtures.memo(spark, "graft-snapwh")(buildSnapshotWarehouse(spark, _))
 
-  private def buildSnapshotWarehouse(spark: SparkSession): String = {
+  private def buildSnapshotWarehouse(spark: SparkSession, base: String): String = {
     import graft.table.SnapshotLog
-    val base = java.nio.file.Files.createTempDirectory("graft-snapwh").toString
     val dir = s"$base/orders_parquet"
     val all = parse(spark, "orders")
     val f1 = SnapshotLog.writeData(all.filter(col("kafka_offset") <= 5), dir,

@@ -3,6 +3,7 @@ package graft.connector
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.schema.Fixtures
 import graft.table.SnapshotLog
 
 /** DuckDB-oracled entries for the `format("graft")` data-source face:
@@ -15,15 +16,6 @@ import graft.table.SnapshotLog
   * oracle.
   */
 object ConnectorQueries {
-
-  private val whCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-  private def cached(spark: SparkSession, dir: String, kind: String)
-                    (build: String => String): String =
-    whCache.getOrElseUpdate(s"${System.identityHashCode(spark)}|$dir|$kind", {
-      val base = java.nio.file.Files.createTempDirectory(s"graft-conn-$kind").toString
-      build(base)
-    })
 
   private def orders(s: SparkSession, d: String): DataFrame =
     graft.schema.Tables(s, d, "orders")
@@ -51,7 +43,7 @@ object ConnectorQueries {
   /** Two appends THROUGH the writer face: epoch 1 = even orderkeys
     * (snapshot 1), epoch 2 = odd (snapshot 2). */
   private def ordersWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "orders") { base =>
+    Fixtures.memo(s, "graft-conn-orders", d) { base =>
       val dir = s"$base/orders_graft"
       val ord = orders(s, d)
       ord.filter(pmod(col("o_orderkey"), lit(2)) === 0)
@@ -65,7 +57,7 @@ object ConnectorQueries {
   /** One commit of 4 RANGE files with o_orderkey zone maps — the layout
     * where a range WHERE prunes from metadata. */
   private def rangeWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "range") { base =>
+    Fixtures.memo(s, "graft-conn-range", d) { base =>
       val dir = s"$base/orders_range"
       orders(s, d).repartitionByRange(4, col("o_orderkey"))
         .write.format("graft").option("statsCols", "o_orderkey").save(dir)
@@ -76,7 +68,7 @@ object ConnectorQueries {
     * zone-blind layout) with manifest blooms: equality lookups prune on
     * the bloom alone. */
   private def bloomWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "bloom") { base =>
+    Fixtures.memo(s, "graft-conn-bloom", d) { base =>
       val dir = s"$base/orders_bloom"
       val ord = orders(s, d)
       for (slice <- 0 until 4)
@@ -92,7 +84,7 @@ object ConnectorQueries {
     * full streaming loop under the oracle: the streamed copy must be
     * row-identical to the raw input (exactly-once, no loss, no dupes). */
   private def streamedWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "streamed") { base =>
+    Fixtures.memo(s, "graft-conn-streamed", d) { base =>
       val dst = s"$base/orders_streamed"
       val q = s.readStream.format("graft").load(ordersWarehouse(s, d))
         .writeStream.format("graft")
@@ -109,7 +101,7 @@ object ConnectorQueries {
     * faces): the table-name loop must be row-identical to the raw input,
     * same exactly-once contract as the path-addressed loop. */
   private def tableStreamWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "tstream") { base =>
+    Fixtures.memo(s, "graft-conn-tstream", d) { base =>
       val ord = orders(s, d)
       ord.filter(pmod(col("o_orderkey"), lit(2)) === 0)
         .write.format("graft").option("statsCols", "o_orderkey")
@@ -135,7 +127,7 @@ object ConnectorQueries {
     * ANSWER (pruning may only skip); ConnectorV2Spec pins the file
     * drop itself. */
   private def dppWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "dpp") { base =>
+    Fixtures.memo(s, "graft-conn-dpp", d) { base =>
       val ord = orders(s, d)
       val statuses = ord.select(col("o_orderstatus")).distinct()
         .collect().map(_.getString(0)).sorted
@@ -159,7 +151,7 @@ object ConnectorQueries {
     * oracle pins that the clustered layout changed NOTHING about the
     * answer. */
   private def spjWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "spj") { base =>
+    Fixtures.memo(s, "graft-conn-spj", d) { base =>
       graft.schema.Tables(s, d, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         .write.format("graft").option("bucketBy", "8,o_custkey")
@@ -180,7 +172,7 @@ object ConnectorQueries {
     * that the zero-exchange masked join changed NOTHING about the
     * answer. */
   private def spjMorWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "spjmor") { base =>
+    Fixtures.memo(s, "graft-conn-spjmor", d) { base =>
       graft.schema.Tables(s, d, "orders")
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         .write.format("graft").option("bucketBy", "8,o_custkey")
@@ -219,7 +211,7 @@ object ConnectorQueries {
     * that the per-batch key probe loses exactly the dead rows and keeps
     * every re-insert. */
   private def eqMorWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "eqmor") { base =>
+    Fixtures.memo(s, "graft-conn-eqmor", d) { base =>
       val dir = s"$base/orders_eqmor"
       orders(s, d).write.format("graft")
         .option("statsCols", "o_orderkey").save(dir)
@@ -250,7 +242,7 @@ object ConnectorQueries {
     * the vectorized eq probe (`eqKeys=` in the scan description); the
     * oracle pins the zero-exchange masked join changed NOTHING. */
   private def spjEqMorWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "spjeq") { base =>
+    Fixtures.memo(s, "graft-conn-spjeq", d) { base =>
       val o3 = orders(s, d)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
       o3.write.format("graft").option("bucketBy", "8,o_custkey")
@@ -290,7 +282,7 @@ object ConnectorQueries {
     * REQUIRES the vectorized plan; the oracle pins every order on a
     * masked date lost, everything else kept. */
   private def eqDateWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "eqdate") { base =>
+    Fixtures.memo(s, "graft-conn-eqdate", d) { base =>
       val dir = s"$base/orders_eqd"
       val o = graft.schema.Tables(s, d, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"),
@@ -321,7 +313,7 @@ object ConnectorQueries {
     * statements to land as guarded rowdelta commits; the oracle pins
     * the surviving rows. */
   private def eqRowDeltaWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "eqrowdelta") { base =>
+    Fixtures.memo(s, "graft-conn-eqrowdelta", d) { base =>
       val dir = s"$base/orders_erd"
       orders(s, d).write.format("graft")
         .option("statsCols", "o_orderkey").save(dir)
@@ -360,7 +352,7 @@ object ConnectorQueries {
     * INSERT's own executed plan and the committed files' metadata; the
     * oracle pins the rows. */
   private def v2UnbucketedWriteWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "v2uw") { base =>
+    Fixtures.memo(s, "graft-conn-v2uw", d) { base =>
       val cat = catalogFor(s, "graft_v2uw", base)
       s.sql(s"""CREATE TABLE $cat.orders_uw (
               |  o_orderkey BIGINT, o_custkey BIGINT,
@@ -387,7 +379,7 @@ object ConnectorQueries {
     * storage-partition-join too. The oracle pins that the hashed layout
     * changed nothing about the answer. */
   private def spjStrWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "spjstr") { base =>
+    Fixtures.memo(s, "graft-conn-spjstr", d) { base =>
       graft.schema.Tables(s, d, "orders")
         .select(concat(lit("c-"), col("o_custkey")).as("ck"),
           col("o_orderkey"), col("o_totalprice"))
@@ -409,7 +401,7 @@ object ConnectorQueries {
     * The build REQUIRES the layout proof (singleton bucket ids, sorted
     * stamps); the oracle pins the rows. */
   private def v2BucketWriteWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "v2bw") { base =>
+    Fixtures.memo(s, "graft-conn-v2bw", d) { base =>
       val cat = catalogFor(s, "graft_v2bw", base)
       s.sql(s"""CREATE TABLE $cat.orders_bw (
               |  o_orderkey BIGINT, o_custkey BIGINT,
@@ -440,7 +432,7 @@ object ConnectorQueries {
     * `rowdelta` commits. The build REQUIRES the rowdelta commit shape;
     * the oracle pins the surviving rows. */
   private def rowDeltaWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "rowdelta") { base =>
+    Fixtures.memo(s, "graft-conn-rowdelta", d) { base =>
       val dir = s"$base/orders_rd"
       orders(s, d).write.format("graft")
         .option("statsCols", "o_orderkey").save(dir)
@@ -464,7 +456,7 @@ object ConnectorQueries {
     * the multi-level-namespace face under the oracle: organizing tables
     * into namespaces may only change the NAME, never the rows. */
   private def nsWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "ns") { base =>
+    Fixtures.memo(s, "graft-conn-ns", d) { base =>
       val cat = catalogFor(s, "graft_ns", base)
       s.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.raw")
       orders(s, d).filter(col("o_orderstatus") === "F")
@@ -483,7 +475,7 @@ object ConnectorQueries {
     * insert path (log commits, inherited pruning metadata) under the
     * oracle. */
   private def insertWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "insert") { base =>
+    Fixtures.memo(s, "graft-conn-insert", d) { base =>
       val dir = s"$base/orders_ins"
       val ord = orders(s, d)
       ord.filter(col("o_orderstatus") === "F")
@@ -501,7 +493,7 @@ object ConnectorQueries {
     * prices bumped), then one `DELETE` (every 10th orderkey) — the
     * GraftDmlRule copy-on-write path under the oracle. */
   private def dmlWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "dml") { base =>
+    Fixtures.memo(s, "graft-conn-dml", d) { base =>
       val dir = s"$base/orders_dml"
       orders(s, d).write.format("graft")
         .option("statsCols", "o_orderkey").save(dir)
@@ -520,7 +512,7 @@ object ConnectorQueries {
     * oracle then pins that dropping files without reading them loses
     * and keeps exactly the right rows. */
   private def metaDeleteWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "metadel") { base =>
+    Fixtures.memo(s, "graft-conn-metadel", d) { base =>
       val dir = s"$base/orders_metadel"
       val ord = orders(s, d)
       ord.repartitionByRange(8, col("o_orderkey"))
@@ -543,7 +535,7 @@ object ConnectorQueries {
     * rows DELETE, other matches UPDATE, the rest INSERT — all three WHEN
     * clauses of the DML face under one oracle. */
   private def mergeWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "merge") { base =>
+    Fixtures.memo(s, "graft-conn-merge", d) { base =>
       val dir = s"$base/orders_merge"
       val ord = orders(s, d)
       ord.filter(pmod(col("o_orderkey"), lit(3)) === 0)
@@ -571,7 +563,7 @@ object ConnectorQueries {
     * then `VACUUM` retiring the pre-OPTIMIZE history. Neither statement
     * may change a single logical row. */
   private def optimizeWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "optimize") { base =>
+    Fixtures.memo(s, "graft-conn-optimize", d) { base =>
       val dir = s"$base/orders_opt"
       val ord = orders(s, d)
       for (slice <- 0 until 3)
@@ -596,7 +588,7 @@ object ConnectorQueries {
     * of 10 deleted (key-only events). The streamed events must equal the
     * declaratively-derived feed over the raw input. */
   private def cdfWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "cdf") { base =>
+    Fixtures.memo(s, "graft-conn-cdf", d) { base =>
       val dir = s"$base/orders_cdf"
       val sink = s"$base/events"
       val ord = orders(s, d)
@@ -628,7 +620,7 @@ object ConnectorQueries {
     * as inserts, deletes with the FULL parent-state payload (doubled
     * where %30=0 — the state after the update commit). */
   private def preimgWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "preimg") { base =>
+    Fixtures.memo(s, "graft-conn-preimg", d) { base =>
       val dir = s"$base/orders_preimg"
       val ord = orders(s, d)
       ord.write.format("graft").option("statsCols", "o_orderkey").save(dir)
@@ -651,7 +643,7 @@ object ConnectorQueries {
     * INSERTed WITH the flag set from the status — reads must null-fill
     * the old epoch and carry the new one verbatim. */
   private def alterWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "alter") { base =>
+    Fixtures.memo(s, "graft-conn-alter", d) { base =>
       val dir = s"$base/orders_alter"
       val ord = orders(s, d)
       ord.filter(col("o_orderstatus") === "F")
@@ -673,7 +665,7 @@ object ConnectorQueries {
     * INSERT under the new name — the read must resolve both epochs (old
     * physical files + new writes) into one logical column. */
   private def renameWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "rename") { base =>
+    Fixtures.memo(s, "graft-conn-rename", d) { base =>
       val dir = s"$base/orders_rename"
       val ord = orders(s, d)
       ord.filter(col("o_orderstatus") === "F")
@@ -696,7 +688,7 @@ object ConnectorQueries {
     * both epochs to bigint (old files' int values widen at scan time;
     * no data byte rewritten). */
   private def widenWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "widen") { base =>
+    Fixtures.memo(s, "graft-conn-widen", d) { base =>
       val dir = s"$base/orders_widen"
       val ord = orders(s, d)
       ord.filter(col("o_orderstatus") === "F")
@@ -723,7 +715,7 @@ object ConnectorQueries {
     * then pins that the mask filter loses and keeps exactly the right
     * rows. */
   private def morWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "mor") { base =>
+    Fixtures.memo(s, "graft-conn-mor", d) { base =>
       val dir = s"$base/orders_mor"
       orders(s, d).repartitionByRange(4, col("o_orderkey"))
         .write.format("graft").option("statsCols", "o_orderkey").save(dir)
@@ -741,7 +733,7 @@ object ConnectorQueries {
     * TableCatalog + complete aggregate pushdown (manifest-only answers —
     * the engine-contract twin of the injected GraftMetadataAggRule). */
   private def v2Warehouse(s: SparkSession, d: String): String =
-    cached(s, d, "v2") { base =>
+    Fixtures.memo(s, "graft-conn-v2", d) { base =>
       orders(s, d).write.format("graft")
         .option("statsCols", "o_orderkey").save(s"$base/orders_v2")
       base
@@ -755,7 +747,7 @@ object ConnectorQueries {
     * zone-pruned row-level DML machinery. Every row surviving in the
     * final read proves the whole write path against the DuckDB oracle. */
   private def v2WriteWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "v2w") { base =>
+    Fixtures.memo(s, "graft-conn-v2w", d) { base =>
       val cat = catalogFor(s, "graft_v2w", base)
       orders(s, d).createOrReplaceTempView("v2w_src")
       s.sql(s"""CREATE TABLE $cat.orders_w
@@ -775,7 +767,7 @@ object ConnectorQueries {
     * so every live file records exactly one status value — the layout
     * where manifest partition listing is EXACT. */
   private def partitionsWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "parts") { base =>
+    Fixtures.memo(s, "graft-conn-parts", d) { base =>
       val dir = s"$base/orders_parts"
       Seq("F", "O", "P").zipWithIndex.foreach { case (st, i) =>
         val w = orders(s, d).filter(col("o_orderstatus") === st)
@@ -793,7 +785,7 @@ object ConnectorQueries {
     * under the oracle (no row may leak out of, or survive inside, the
     * replaced slice). */
   private def replaceWhereWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "rw") { base =>
+    Fixtures.memo(s, "graft-conn-rw", d) { base =>
       val dir = s"$base/orders_rw"
       orders(s, d).write.format("graft")
         .option("statsCols", "o_orderkey").save(dir)
@@ -812,7 +804,7 @@ object ConnectorQueries {
     * Left UNPUBLISHED: the oracled query exercises the branch READ face;
     * publish semantics are pinned in BranchSpec. */
   private def branchWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "branch") { base =>
+    Fixtures.memo(s, "graft-conn-branch", d) { base =>
       import graft.table.Branch
       val dir = s"$base/orders_branch"
       val ord = orders(s, d)
@@ -835,7 +827,7 @@ object ConnectorQueries {
     * crashed fan-out leaves. Epoch readers must join exactly the epoch-2
     * state: both complete halves, none of the torn rows. */
   private def epochWarehouse(s: SparkSession, d: String): String =
-    cached(s, d, "epoch") { wh =>
+    Fixtures.memo(s, "graft-conn-epoch", d) { wh =>
       import graft.table.SyncEpoch
       val ord = orders(s, d)
       val li = graft.schema.Tables(s, d, "lineitem")

@@ -45,7 +45,7 @@ import graft.table.SnapshotLog
   * file pruning already applied. `SupportsReportStatistics` hands CBO
   * manifest-exact row/byte counts.
   *
-  * The WRITE path (r12) rides the V1-fallback write contract — see
+  * The WRITE path is the real engine-planned batch write — see
   * [[GraftV2WriteBuilder]]: `INSERT INTO cat.t`, `INSERT OVERWRITE`,
   * `df.writeTo("cat.t").append()`, `TRUNCATE TABLE`, filter-convertible
   * `DELETE`, and atomic CTAS / `[CREATE OR] REPLACE TABLE … AS SELECT`
@@ -683,38 +683,27 @@ private[connector] final class GraftV2Table(dir: String,
       provider = Some("graft"))
   }
 
-  /** The real-V2-write plan (r14 bucket-declared, r15 any
-    * inline-computable metadata shape): when defined, appends, INSERT
-    * OVERWRITE and (lineage-free) replaceWhere run as genuine
-    * distributed V2 writes — engine-planned exchange + inline manifest
-    * stats — and V1_BATCH_WRITE must NOT be declared (the engine
-    * refuses a non-V1 write under that capability). Pinned per table
-    * instance so the capability decision and the write builder can
-    * never disagree. */
-  private lazy val bucketWritePlan: Option[GraftRealWritePlan] =
-    if (asOf.isDefined) None
-    else GraftBucketWrite.planFor(spark, dir, state._4)
+  /** The real-V2-write plan: appends, INSERT OVERWRITE and
+    * (lineage-free) replaceWhere run as genuine distributed V2 writes —
+    * engine-planned exchange + inline manifest stats — so
+    * V1_BATCH_WRITE is never declared (the engine refuses a non-V1
+    * write under that capability). Pinned per table instance so the
+    * capability decision and the write builder can never disagree. */
+  private lazy val realWritePlan: GraftRealWritePlan =
+    GraftBucketWrite.planFor(spark, dir, state._4)
 
   /** A time-travel-pinned table is READ-ONLY (no write capabilities at
     * all, so INSERT/DELETE refuse at analysis, not at commit time).
-    * An eligible real-write table drops V1_BATCH_WRITE (real V2
-    * writes), keeping OVERWRITE_BY_FILTER through the real write's own
-    * replaceWhere unless lineage stamping demands the V1 face; every
-    * other table keeps the V1-fallback contract unchanged. */
+    * Every other table writes for real, keeping OVERWRITE_BY_FILTER
+    * through the real write's own replaceWhere unless lineage stamping
+    * demands the V1 face. */
   override def capabilities(): util.Set[TableCapability] =
     (if (asOf.isDefined) Set(TableCapability.BATCH_READ)
-     else bucketWritePlan match {
-       case Some(plan) =>
-         Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-           TableCapability.TRUNCATE) ++
-           (if (plan.replaceWhereSupported)
-             Set(TableCapability.OVERWRITE_BY_FILTER)
-            else Set.empty[TableCapability])
-       case None =>
-         Set(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
-           TableCapability.BATCH_WRITE, TableCapability.TRUNCATE,
-           TableCapability.OVERWRITE_BY_FILTER)
-     }).asJava
+     else Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
+       TableCapability.TRUNCATE) ++
+       (if (realWritePlan.replaceWhereSupported)
+         Set(TableCapability.OVERWRITE_BY_FILTER)
+        else Set.empty[TableCapability])).asJava
 
   /** Provider/location plus the DURABLE log-persisted properties — what
     * `SHOW TBLPROPERTIES cat.t` and `DESCRIBE EXTENDED` surface. */
@@ -767,7 +756,7 @@ private[connector] final class GraftV2Table(dir: String,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(asOf.isEmpty,
       s"graft table $dir: cannot write to a time-travel relation")
-    new GraftV2WriteBuilder(dir, state._4, bucketWritePlan)
+    new GraftV2WriteBuilder(dir, state._4, realWritePlan)
   }
 
   /** `TRUNCATE TABLE cat.t` — one metadata commit removing every live

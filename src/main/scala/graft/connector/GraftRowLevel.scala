@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.graftshim.{GraftBucketWriterFactory, GraftColSpec, GraftDeltaTaskResult, GraftDeltaWriterFactory, GraftWriteShim}
+import org.apache.spark.sql.graftshim.{GraftBucketWriterFactory, GraftDeltaTaskResult, GraftDeltaWriterFactory, GraftWriteShim}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -91,10 +91,8 @@ private[connector] final class GraftDeltaWrite(
     StructField(SnapshotLog.PosOrdCol, LongType, nullable = false)))
 
   // inherited pruning metadata for the INSERT side, the insertInto
-  // posture; columns the inline writer can't compute DEGRADE with a
-  // warning (there is no V1 fallback once the engine committed to the
-  // delta plan — a refusal would break vanilla-session DML outright)
-  private val (statsSpecs, partSpecs, bloomSpec, bucketSpec) = {
+  // posture, planned by the one spec builder every write shares
+  private val (specs, bucketSpec) = {
     val visible = state._4
     val (stats0, bloom0, parts0) =
       GraftDataSource.inheritedMeta(spark, dir, visible)
@@ -106,46 +104,23 @@ private[connector] final class GraftDeltaWrite(
       .filter(c => visible.fieldNames.exists(_.equalsIgnoreCase(c)))
     val stats = if (stats0.nonEmpty) stats0 else propCols("statsCols")
     val bloom = bloom0.orElse(propCols("bloomCol").headOption)
-    val parts = (if (parts0.nonEmpty) parts0 else propCols("partitionCols"))
-      .filterNot(SnapshotLog.BucketKeyPattern.matches)
-    def ordOf(c: String): Option[Int] =
-      rowSchema.fields.indexWhere(_.name.equalsIgnoreCase(c)) match {
-        case -1 => None
-        case i => Some(i)
-      }
-    def spec(c: String,
-             tag: org.apache.spark.sql.types.DataType => Option[Int])
-        : Option[GraftColSpec] =
-      for { i <- ordOf(c); t <- tag(rowSchema.fields(i).dataType) }
-        yield GraftColSpec(phys(c), i, t)
+    val parts = if (parts0.nonEmpty) parts0 else propCols("partitionCols")
     // a pure DELETE's write schema carries no data columns (only row
-    // ids reach the writer) — no data file can be written, so missing
-    // stats specs are structural, not degradation worth warning about
+    // ids reach the writer) — no data file can be written, so nothing
+    // is recorded
     val writesData = visible.fieldNames.exists(n =>
       rowSchema.fieldNames.exists(_.equalsIgnoreCase(n)))
-    def specsOf(cols: Seq[String],
-                tag: org.apache.spark.sql.types.DataType => Option[Int],
-                what: String): Seq[GraftColSpec] = cols.flatMap { c =>
-      val s = spec(c, tag)
-      if (s.isEmpty && writesData) System.err.println(
-        s"[graft] WARNING: $what column '$c' of $dir is not inline-" +
-          "computable by the delta writer — this commit's new files " +
-          "won't record it (pruning degrades until the next OPTIMIZE)")
-      s
-    }
-    val bucket = (for { c <- prop("bucketCol")
-      n <- prop("bucketCount").flatMap(_.toIntOption) } yield (c, n))
-      .flatMap { case (c, n) =>
-        for { i <- ordOf(c)
-              t <- rowSchema.fields(i).dataType match {
-                case StringType => Some(GraftWriteShim.TString)
-                case dt => GraftWriteShim.zoneTagOf(dt)
-              } } yield (phys(c), i, t, n)
-      }
-    (specsOf(stats, GraftWriteShim.zoneTagOf, "stats"),
-      specsOf(parts, GraftWriteShim.partTagOf, "partition"),
-      bloom.flatMap(c => spec(c, GraftWriteShim.bloomTagOf)),
-      bucket)
+    val specs =
+      if (writesData) GraftBucketWrite.specsOf(spark, dir, rowSchema,
+        stats, bloom, parts, phys)
+      else GraftBucketWrite.specsOf(spark, dir, rowSchema, Nil, None, Nil, phys)
+    val bucket = for {
+      c <- prop("bucketCol")
+      n <- prop("bucketCount").flatMap(_.toIntOption)
+      i = rowSchema.fields.indexWhere(_.name.equalsIgnoreCase(c)) if i >= 0
+      t <- GraftWriteShim.bucketTagOf(rowSchema.fields(i).dataType)
+    } yield (phys(c), i, t, n)
+    (specs, bucket)
   }
 
   private val writeUuid = java.util.UUID.randomUUID().toString
@@ -161,8 +136,7 @@ private[connector] final class GraftDeltaWrite(
       bucketOrdinal = bucketSpec.map(_._2).getOrElse(-1),
       bucketTag = bucketSpec.map(_._3).getOrElse(-1),
       bucketCount = bucketSpec.map(_._4).getOrElse(0),
-      statsSpecs, partSpecs, bloomSpec,
-      SnapshotLog.BloomBits, SnapshotLog.BloomHashes, owfData, confD)
+      specs, owfData, confD)
     new GraftDeltaWriterFactory(dataFactory, s"$dir/data/$writeUuid",
       posSchema, owfPos, confP)
   }
@@ -171,11 +145,9 @@ private[connector] final class GraftDeltaWrite(
     val results = messages.toSeq.collect { case m: GraftDeltaTaskResult => m }
     val bucketKey = bucketSpec.map { case (c, _, _, n) =>
       SnapshotLog.bucketPartKey(n, c) }
-    val dataFiles = GraftBucketWrite.toDataFiles(
-      results.flatMap(_.data), bucketKey,
-      firstStats = statsSpecs.headOption.map(_.name),
-      bloomName = bloomSpec.map(_.name),
-      sortedCol = bucketSpec.map(_._1))
+    val dataFiles = SnapshotLog.fileEntries(results.flatMap(_.data), specs,
+      bucketKey = bucketKey,
+      sortedBy = r => if (r.sorted) bucketSpec.map(_._1) else None)
     val posFiles = results.flatMap(_.pos).filter(_.rows > 0).map(p =>
       SnapshotLog.DataFile(p.path, p.rows, p.bytes, None, None,
         kind = "posdelete"))

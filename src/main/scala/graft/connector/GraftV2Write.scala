@@ -10,22 +10,24 @@ import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RequiresDistributionAndOrdering, SupportsOverwrite, SupportsTruncate, V1Write, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.graftshim.{GraftBucketWriterFactory, GraftColSpec, GraftWriteShim, GraftWriteTaskResult}
+import org.apache.spark.sql.graftshim.{GraftBucketWriterFactory, GraftWriteShim, GraftWriteSpecs, GraftWriteTaskResult}
 import org.apache.spark.sql.sources.{Filter, InsertableRelation}
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
 import graft.table.SnapshotLog
 
 /** The WRITE half of the DataSourceV2 face ([[GraftCatalog]]).
   *
-  * Both shapes ride the engine's V1-fallback write contract (the
-  * published JDBC-connector pattern): the [[WriteBuilder]] returns a
-  * [[V1Write]] whose `InsertableRelation` lowers onto the SAME
-  * snapshot-log commit entry points every other face uses
-  * ([[GraftDataSource.insertInto]] / [[SnapshotLog.writeData]] +
-  * [[SnapshotLog.commitAt]]), so V1 writers, SQL DML, streaming sinks
-  * and V2 writers interleave safely by construction — one optimistic
-  * log arbitrates them all.
+  * Both shapes write through the real engine-planned batch write
+  * ([[GraftBucketWrite]]: the task-side inline-stats writer every face
+  * shares) and commit through the SAME snapshot-log entry points every
+  * other face uses ([[SnapshotLog.commitRetrying]] /
+  * [[GraftDataSource.replaceAll]]), so V1 writers, SQL DML, streaming
+  * sinks and V2 writers interleave safely by construction — one
+  * optimistic log arbitrates them all. The engine's V1-fallback
+  * contract remains only where the real write cannot serve: a bucketed
+  * CTAS (its exec plans no exchange) and a lineage table's replaceWhere
+  * (the V1 face stamps lineage).
   *
   *  - [[GraftV2WriteBuilder]] — writes into an EXISTING table:
   *    `INSERT INTO cat.t`, `df.writeTo("cat.t").append()`, and
@@ -46,8 +48,8 @@ import graft.table.SnapshotLog
   */
 private[connector] final class GraftV2WriteBuilder(dir: String,
     visible: StructType,
-    /** The table-pinned real-V2-write plan (None → the V1 bridge). */
-    realWrite: Option[GraftRealWritePlan] = None) extends WriteBuilder
+    /** The table-pinned real-V2-write plan. */
+    realWrite: GraftRealWritePlan) extends WriteBuilder
     with SupportsTruncate with SupportsOverwrite {
 
   private var overwrite = false
@@ -79,30 +81,26 @@ private[connector] final class GraftV2WriteBuilder(dir: String,
     overwrite = true; overwriteFilters = filters; this
   }
 
-  /** Eligible tables (r14 bucket-declared; r15 any inline-computable
-    * metadata shape) return the REAL V2 [[GraftBucketWrite]] — the
-    * engine then honors its `RequiresDistributionAndOrdering` (the
-    * V1-fallback exec runs the pre-optimization `analyzedQuery` BY
-    * DESIGN, so a V1Write can never receive an engine-planned exchange)
-    * and executors write files + inline manifest stats directly —
-    * including predicate replaceWhere when the plan supports it (r15:
-    * rows validate against the predicate IN the write task, the commit
-    * is the same predicate-scoped slice swap as the V1 face). Metadata
-    * shapes the inline writer can't serve stay on the V1 bridge. */
+  /** Every write returns the REAL V2 [[GraftBucketWrite]] — the engine
+    * then honors its `RequiresDistributionAndOrdering` (the V1-fallback
+    * exec runs the pre-optimization `analyzedQuery` BY DESIGN, so a
+    * V1Write can never receive an engine-planned exchange) and
+    * executors write files + inline manifest stats directly — including
+    * predicate replaceWhere (rows validate against the predicate IN the
+    * write task, the commit is the same predicate-scoped slice swap as
+    * the V1 face). */
   override def build(): Write = {
     val isTruncate = overwriteFilters.isEmpty ||
       overwriteFilters.forall(_.isInstanceOf[org.apache.spark.sql.sources.AlwaysTrue])
     val replaceWhere = overwrite && !isTruncate
-    realWrite match {
-      case Some(plan) if !replaceWhere => plan.mk(overwrite, None)
-      case Some(plan) if plan.replaceWhereSupported =>
-        plan.mk(false, Some((overwriteFilters,
-          overwriteFilters.mkString(" AND "))))
-      // a real-write table whose plan can't serve replaceWhere (lineage
-      // stamping) never declares OVERWRITE_BY_FILTER, so the engine
-      // refuses at analysis; this arm is a defensive fallback
-      case _ => v1Write()
-    }
+    if (!replaceWhere) realWrite.mk(overwrite, None)
+    else if (realWrite.replaceWhereSupported)
+      realWrite.mk(false, Some((overwriteFilters,
+        overwriteFilters.mkString(" AND "))))
+    // a lineage-stamped table never declares OVERWRITE_BY_FILTER, so the
+    // engine refuses its replaceWhere at analysis; this arm is a
+    // defensive fallback onto the V1 face's stamping path
+    else v1Write()
   }
 
   private def v1Write(): Write = new V1Write {
@@ -153,10 +151,9 @@ private[connector] final case class GraftRealWritePlan(
 private[connector] final case class GraftWriteBucketSpec(
     logicalCol: String, ordinal: Int, tag: Int, n: Int)
 
-/** The REAL DataSourceV2 batch write of a graft table (r14 bucketed;
-  * r15 generalized to every inline-computable metadata shape and to
-  * predicate replaceWhere) — the engine-contract path the V1 bridge
-  * cannot express:
+/** The REAL DataSourceV2 batch write of a graft table — bucketed or
+  * not, any metadata shape, predicate replaceWhere included — the
+  * engine-contract path the V1 bridge cannot express:
   *
   *  1. `RequiresDistributionAndOrdering` reports
   *     `clustered(bucket(n, col))` + a `(bucket(n, col), col)` local
@@ -170,8 +167,7 @@ private[connector] final case class GraftWriteBucketSpec(
   *     `OutputWriterFactory` (FANNED OUT one file per bucket id when
   *     bucketed) with every manifest statistic computed INLINE
   *     ([[org.apache.spark.sql.graftshim.GraftBucketWriterFactory]]) —
-  *     no post-write stats read-back pass at all, which at 100 TB
-  *     halves the write's IO vs the V1 `writeData` path.
+  *     no post-write stats read-back pass at all.
   *  3. `commit` turns the per-task results into ONE manifest CAS —
   *     append, the atomic whole-live-set replacement for INSERT
   *     OVERWRITE, or the predicate-scoped slice swap for replaceWhere
@@ -194,8 +190,7 @@ private[connector] final class GraftBucketWrite(
     overwriteAll: Boolean,
     replaceWhere: Option[(Array[Filter], String)],
     logicalSchema: StructType, physicalSchema: StructType,
-    statsSpecs: Seq[GraftColSpec], partSpecs: Seq[GraftColSpec],
-    bloomSpec: Option[GraftColSpec],
+    specs: GraftWriteSpecs,
     /** CTAS/RTAS staging (r15): record the written files here instead
       * of committing — the staging transaction owns the manifest. */
     stageOnly: Option[Seq[SnapshotLog.DataFile] => Unit] = None)
@@ -254,8 +249,7 @@ private[connector] final class GraftBucketWrite(
       bucket.map(_.ordinal).getOrElse(-1),
       bucket.map(_.tag).getOrElse(-1),
       bucket.map(_.n).getOrElse(0),
-      statsSpecs, partSpecs, bloomSpec,
-      SnapshotLog.BloomBits, SnapshotLog.BloomHashes, owf, conf)
+      specs, owf, conf)
     boundPredicate match {
       case Some((pred, label)) =>
         new GraftValidatingWriterFactory(inner, pred, label)
@@ -266,12 +260,10 @@ private[connector] final class GraftBucketWrite(
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val results = messages.toSeq
       .collect { case m: GraftWriteTaskResult => m.files }.flatten
-    val files = GraftBucketWrite.toDataFiles(results,
+    val files = SnapshotLog.fileEntries(results, specs,
       bucketKey = bucket.map(b =>
         SnapshotLog.bucketPartKey(b.n, physicalBucketCol)),
-      firstStats = statsSpecs.headOption.map(_.name),
-      bloomName = bloomSpec.map(_.name),
-      sortedCol = bucket.map(_ => physicalBucketCol))
+      sortedBy = r => if (r.sorted) bucket.map(_ => physicalBucketCol) else None)
     // a STAGED write (CTAS/RTAS) only records its files — the manifest
     // commit is the staging transaction's, in commitStagedChanges
     stageOnly match {
@@ -353,52 +345,38 @@ private[connector] final class GraftValidatingWriterFactory(
 
 private[connector] object GraftBucketWrite {
 
-  /** Task [[org.apache.spark.sql.graftshim.GraftFileResult]]s → manifest
-    * [[SnapshotLog.DataFile]] entries — shared by the bucketed batch
-    * write and the delta write's insert side. */
-  private[connector] def toDataFiles(
-      results: Seq[org.apache.spark.sql.graftshim.GraftFileResult],
-      bucketKey: Option[String],
-      firstStats: Option[String],
-      bloomName: Option[String],
-      sortedCol: Option[String]): Seq[SnapshotLog.DataFile] =
-    results.map { r =>
-      val stats = r.mins.keys.map(c => c -> (r.mins(c), r.maxs(c))).toMap
-      val first = firstStats.flatMap(stats.get)
-      SnapshotLog.DataFile(r.path, r.rows, r.bytes,
-        first.map(_._1), first.map(_._2), kind = "data",
-        stats = stats,
-        blooms = (for { c <- bloomName; b <- r.bloom } yield
-          c -> java.util.Base64.getEncoder.encodeToString(b)).toMap,
-        parts = r.parts ++ bucketKey.map(_ -> Seq(r.bucketId.toString)),
-        nulls = r.nulls.filter { case (c, _) => stats.contains(c) },
-        sortedBy = if (r.sorted) sortedCol else None)
-    }
+  /** The writer specs of a write into `schema`'s row layout: the
+    * declared metadata planned by [[GraftWriteShim.specsFor]] — the
+    * planner `writeData` uses — in the session time zone. */
+  def specsOf(spark: SparkSession, dir: String, schema: StructType,
+              stats: Seq[String], bloom: Option[String], parts: Seq[String],
+              physical: String => String): GraftWriteSpecs =
+    GraftWriteShim.specsFor(schema, stats, bloom,
+      parts.filterNot(SnapshotLog.BucketKeyPattern.matches),
+      spark.sessionState.conf.sessionLocalTimeZone, dir, physical)
 
-  /** The real-V2-write plan for `dir` (r15: ANY table whose inherited
-    * metadata columns are inline-computable — long-domain zones,
-    * string/integral partition values and bloom keys — bucketed or
-    * not). Any other shape returns None — the V1 bridge serves it
-    * exactly as before (correct, just with the post-write stats
-    * read-back pass). `replaceWhereSupported` additionally requires the
-    * table NOT be lineage-stamped: the V1 replaceWhere stamps incoming
-    * rows with the commit id, which the inline writer does not — a
-    * silent stamp drop would downgrade the change feed.
-    * Computed ONCE per table instance (the capability decision and the
-    * builder must agree — a fresh evaluation at build time could race a
-    * concurrent metadata commit into a capability/write mismatch). */
+  /** The real-V2-write plan for `dir`: the table's inherited metadata
+    * columns (or, on an empty table, its declared TBLPROPERTIES) ride
+    * the inline writer whatever their types, and a declared bucket
+    * layout over a bucketable column clusters the write (over any other
+    * column it binds nothing — the V1 insert's posture).
+    * `replaceWhereSupported` additionally requires the table NOT be
+    * lineage-stamped: the V1 replaceWhere stamps incoming rows with the
+    * commit id, which the inline writer does not — a silent stamp drop
+    * would downgrade the change feed. Computed ONCE per table instance
+    * (the capability decision and the builder must agree — a fresh
+    * evaluation at build time could race a concurrent metadata commit
+    * into a capability/write mismatch); the writer specs are planned at
+    * build time, so a refused metadata column fails the write, never
+    * the table load. */
   def planFor(spark: SparkSession, dir: String, visible: StructType)
-      : Option[GraftRealWritePlan] = {
+      : GraftRealWritePlan = {
     val props = SnapshotLog.tableProps(spark, dir)
     def prop(k: String): Option[String] = props.collectFirst {
       case (kk, v) if kk.equalsIgnoreCase(k) => v }
     def propCols(key: String): Seq[String] = prop(key).toSeq
       .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
       .filter(c => visible.fieldNames.exists(_.equalsIgnoreCase(c)))
-    val bucketSpec = (for { c <- prop("bucketCol")
-      n <- prop("bucketCount").flatMap(_.toIntOption) } yield (c, n))
-      .filter { case (c, _) => visible.fields.exists(f =>
-        f.name.equalsIgnoreCase(c) && SnapshotLog.bucketable(f.dataType)) }
     // inherit the table's pruning metadata exactly as the V1 insert
     // does; the synthetic bucket key is recorded by the writer itself
     val (stats0, bloom0, parts0) =
@@ -406,112 +384,30 @@ private[connector] object GraftBucketWrite {
     val stats = (if (stats0.nonEmpty) stats0 else propCols("statsCols"))
     val bloom = bloom0.orElse(propCols("bloomCol").headOption)
     val parts = (if (parts0.nonEmpty) parts0 else propCols("partitionCols"))
-      .filterNot(SnapshotLog.BucketKeyPattern.matches)
     // LOGICAL → physical naming + row ordinals (row layout is the
     // visible schema; a field registry renames stored columns only)
     val reg = SnapshotLog.registryAt(spark, dir).filterNot(_.isIdentity)
     def phys(c: String): String = reg.flatMap(_.physicalOf(c)).getOrElse(c)
     val physicalSchema = StructType(visible.fields.map(f =>
       f.copy(name = phys(f.name), nullable = true)))
-    def ordOf(c: String): Option[Int] =
-      visible.fields.indexWhere(_.name.equalsIgnoreCase(c)) match {
-        case -1 => None
-        case i => Some(i)
-      }
-    def spec(c: String, tag: org.apache.spark.sql.types.DataType => Option[Int])
-        : Option[GraftColSpec] =
-      for { i <- ordOf(c); t <- tag(visible.fields(i).dataType) }
-        yield GraftColSpec(phys(c), i, t)
-    // a DECLARED bucket layout must bind (tag resolvable) or the table
-    // stays on the V1 path — a real write that silently dropped the
-    // declared clustering would decay the SPJ layout
-    val bucket: Option[GraftWriteBucketSpec] = bucketSpec match {
-      case Some((c0, n)) =>
-        val tag = ordOf(c0).map(i => visible.fields(i).dataType).flatMap {
-          case StringType => Some(GraftWriteShim.TString)
-          case dt => GraftWriteShim.zoneTagOf(dt)
-        }
-        tag.map(t => GraftWriteBucketSpec(c0, ordOf(c0).get, t, n))
-      case None => None
-    }
-    val bucketOk = bucketSpec.isEmpty == bucket.isEmpty
-    // stats columns without an inline zone kind: strings with a
-    // bloom are fine (indexed there, like writeData); anything else
-    // falls back to the V1 path so the WARN + recording semantics
-    // stay exactly the V1 writer's
-    val statsSpecs = stats.flatMap(c => spec(c, GraftWriteShim.zoneTagOf))
-    val statsOk = stats.forall(c =>
-      spec(c, GraftWriteShim.zoneTagOf).isDefined ||
-        (visible.fields.exists(f => f.name.equalsIgnoreCase(c) &&
-          f.dataType == StringType) && bloom.exists(_.equalsIgnoreCase(c))))
-    val partSpecs = parts.flatMap(c => spec(c, GraftWriteShim.partTagOf))
-    val bloomSpec = bloom.flatMap(c => spec(c, GraftWriteShim.bloomTagOf))
-    val eligible = bucketOk && statsOk &&
-      partSpecs.size == parts.size &&
-      bloomSpec.isDefined == bloom.isDefined
-    if (!eligible) None
-    else {
-      // lineage posture: appends never stamp on ANY path (insertInto
-      // doesn't), but replaceWhere does — route it back to V1 stamping
-      // by not declaring the capability when lineage is in force
-      val (history, logDeclared, dProps) = SnapshotLog.durableMeta(spark, dir)
-      val lineage = history.isDefined || logDeclared.isDefined ||
-        dProps.keysIterator.exists(_.equalsIgnoreCase("lineageKey"))
-      Some(GraftRealWritePlan(
-        mk = (overwriteAll, replaceWhere) =>
-          new GraftBucketWrite(spark, dir, bucket, overwriteAll,
-            replaceWhere, visible, physicalSchema,
-            statsSpecs, partSpecs, bloomSpec),
-        replaceWhereSupported = !lineage))
-    }
-  }
-}
-
-private[connector] object GraftStagedWrite {
-
-  /** The STAGED real-V2 write plan (r15): CTAS/RTAS of an UNBUCKETED
-    * table whose declared metadata (TBLPROPERTIES) is inline-computable
-    * writes through the engine-contract batch write — stats in the
-    * writing task, no post-write read-back — and only RECORDS its files
-    * (the staging transaction commits them). Bucketed declarations keep
-    * the V1 staged path: the CTAS exec never consults
-    * RequiresDistributionAndOrdering, so the fanout would write
-    * tasks×buckets files where `bucketArrange` writes bucketCount. */
-  def planFor(spark: SparkSession, dir: String, declared: StructType,
-              prop: String => Option[String],
-              stage: Seq[SnapshotLog.DataFile] => Unit): Option[Write] = {
-    if (prop("bucketCol").isDefined || prop("bucketCount").isDefined)
-      return None
-    def propCols(key: String): Seq[String] = prop(key).toSeq
-      .flatMap(_.split(',')).map(_.trim).filter(_.nonEmpty)
-      .filter(c => declared.fieldNames.exists(_.equalsIgnoreCase(c)))
-    val stats = propCols("statsCols")
-    val bloom = propCols("bloomCol").headOption
-    val parts = propCols("partitionCols")
-      .filterNot(SnapshotLog.BucketKeyPattern.matches)
-    val physicalSchema = StructType(declared.fields.map(_.copy(nullable = true)))
-    def ordOf(c: String): Option[Int] =
-      declared.fields.indexWhere(_.name.equalsIgnoreCase(c)) match {
-        case -1 => None
-        case i => Some(i)
-      }
-    def spec(c: String, tag: org.apache.spark.sql.types.DataType => Option[Int])
-        : Option[GraftColSpec] =
-      for { i <- ordOf(c); t <- tag(declared.fields(i).dataType) }
-        yield GraftColSpec(declared.fields(i).name, i, t)
-    val statsSpecs = stats.flatMap(c => spec(c, GraftWriteShim.zoneTagOf))
-    val statsOk = stats.forall(c =>
-      spec(c, GraftWriteShim.zoneTagOf).isDefined ||
-        (declared.fields.exists(f => f.name.equalsIgnoreCase(c) &&
-          f.dataType == StringType) && bloom.exists(_.equalsIgnoreCase(c))))
-    val partSpecs = parts.flatMap(c => spec(c, GraftWriteShim.partTagOf))
-    val bloomSpec = bloom.flatMap(c => spec(c, GraftWriteShim.bloomTagOf))
-    val eligible = statsOk && partSpecs.size == parts.size &&
-      bloomSpec.isDefined == bloom.isDefined
-    if (!eligible) None
-    else Some(new GraftBucketWrite(spark, dir, None, false, None,
-      declared, physicalSchema, statsSpecs, partSpecs, bloomSpec,
-      stageOnly = Some(stage)))
+    val bucket = for {
+      c <- prop("bucketCol")
+      n <- prop("bucketCount").flatMap(_.toIntOption)
+      i = visible.fields.indexWhere(_.name.equalsIgnoreCase(c)) if i >= 0
+      t <- GraftWriteShim.bucketTagOf(visible.fields(i).dataType)
+    } yield GraftWriteBucketSpec(c, i, t, n)
+    // lineage posture: appends never stamp on ANY path (insertInto
+    // doesn't), but replaceWhere does — route it back to V1 stamping
+    // by not declaring the capability when lineage is in force
+    val (history, logDeclared, dProps) = SnapshotLog.durableMeta(spark, dir)
+    val lineage = history.isDefined || logDeclared.isDefined ||
+      dProps.keysIterator.exists(_.equalsIgnoreCase("lineageKey"))
+    GraftRealWritePlan(
+      mk = (overwriteAll, replaceWhere) =>
+        new GraftBucketWrite(spark, dir, bucket, overwriteAll,
+          replaceWhere, visible, physicalSchema,
+          specsOf(spark, dir, visible, stats, bloom, parts, phys)),
+      replaceWhereSupported = !lineage)
   }
 }
 
@@ -555,11 +451,13 @@ private[connector] final class GraftStagedTable(spark: SparkSession,
       case (k, v) if k.equalsIgnoreCase(key) => v })
 
   /** Whether this staging's query writes through the REAL batch write
-    * (r15): unbucketed + inline-computable declared metadata. Decided
-    * once — capabilities and the builder must agree. */
-  private lazy val stagedRealWrite: Boolean =
-    GraftStagedWrite.planFor(spark, dir, declared, prop,
-      fs => { staged = fs; wrote = true }).isDefined
+    * (stats in the writing task, files only RECORDED for the staging
+    * transaction to commit): every unbucketed declaration. Bucketed
+    * declarations keep the V1 staged path: the CTAS exec never consults
+    * RequiresDistributionAndOrdering, so the fanout would write
+    * tasks×buckets files where `bucketArrange` writes bucketCount. */
+  private def stagedRealWrite: Boolean =
+    prop("bucketCol").isEmpty && prop("bucketCount").isEmpty
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {
@@ -568,10 +466,19 @@ private[connector] final class GraftStagedTable(spark: SparkSession,
       // a no-op acknowledgement, not state
       override def truncate(): WriteBuilder = this
       override def build(): Write =
-        if (stagedRealWrite)
-          GraftStagedWrite.planFor(spark, dir, declared, prop,
-            fs => { staged = fs; wrote = true }).get
-        else v1StagedWrite()
+        if (stagedRealWrite) realStagedWrite() else v1StagedWrite()
+      private def realStagedWrite(): Write = {
+        def field(c: String) =
+          declared.fields.find(_.name.equalsIgnoreCase(c)).map(_.name)
+        def propCols(key: String): Seq[String] = prop(key).toSeq
+          .flatMap(_.split(',')).map(_.trim).filter(c => field(c).nonEmpty)
+        new GraftBucketWrite(spark, dir, None, false, None, declared,
+          StructType(declared.fields.map(_.copy(nullable = true))),
+          GraftBucketWrite.specsOf(spark, dir, declared,
+            propCols("statsCols"), propCols("bloomCol").headOption,
+            propCols("partitionCols"), c => field(c).getOrElse(c)),
+          stageOnly = Some(fs => { staged = fs; wrote = true }))
+      }
       private def v1StagedWrite(): Write = new V1Write {
         override def toInsertableRelation: InsertableRelation =
           new InsertableRelation {

@@ -2,7 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.schema.Tables
+import graft.schema.{Fixtures, Tables}
 
 /** Multimodal-column plumbing: opaque `binary` payload columns with typed
   * metadata, batch-shaped decode/feature-extract over partitions.
@@ -78,7 +78,7 @@ object Multimodal {
     if (!spark.catalog.tableExists(tbl)) {
       import spark.implicits._
       javax.imageio.ImageIO.setUseCache(false) // in-memory encode, no tmp spool
-      val base = java.nio.file.Files.createTempDirectory("graft-png").toString
+      val base = Fixtures.dir("graft-png")
       Tables.parallelized(Tables(spark, dir, "documents"))
         .select(col("doc_id")).as[Long]
         .mapPartitions { ids =>
@@ -271,7 +271,7 @@ object Multimodal {
     val tbl = s"graft_wav_$tag"
     if (!spark.catalog.tableExists(tbl)) {
       import spark.implicits._
-      val base = java.nio.file.Files.createTempDirectory("graft-wav").toString
+      val base = Fixtures.dir("graft-wav")
       Tables.parallelized(Tables(spark, dir, "documents"))
         .select(col("doc_id")).as[Long]
         .mapPartitions { ids =>

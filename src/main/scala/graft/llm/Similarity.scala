@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions.vec_cosine
-import graft.schema.Tables
+import graft.schema.{Fixtures, Tables}
 
 /** Approximate-nearest-neighbor search over the `embeddings` table
   * (64-dim float vectors).
@@ -487,7 +487,7 @@ object Similarity {
         }
         greatest(scored: _*).getField("code") // max(-dist) = min dist; ties → lowest code
       }
-      val base = java.nio.file.Files.createTempDirectory("graft-pq").toString
+      val base = Fixtures.dir("graft-pq")
       Tables(spark, dir, "embeddings")
         .select(col("vec_id"), col("label"),
           array((0 until subspaces).map(subCode): _*).as("codes"))

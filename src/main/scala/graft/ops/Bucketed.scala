@@ -57,7 +57,7 @@ object Bucketed {
       graft.schema.Tables.fingerprint(spark, dir, "lineitem")
     val (ot, lt) = (s"graft_orders_b_$tag", s"graft_lineitem_b_$tag")
     if (!spark.catalog.tableExists(ot) || !spark.catalog.tableExists(lt)) {
-      val base = java.nio.file.Files.createTempDirectory("graft-bucketed").toString
+      val base = graft.schema.Fixtures.dir("graft-bucketed")
       writeBucketed(spark.read.parquet(s"$dir/orders.parquet"), ot,
         "o_orderkey", buckets, s"$base/$ot")
       writeBucketed(spark.read.parquet(s"$dir/lineitem.parquet"), lt,

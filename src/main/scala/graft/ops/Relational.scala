@@ -351,8 +351,6 @@ object Relational {
       .orderBy(col("c_nationkey"))
   }
 
-  private val dppWarehouseCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   /** A month-PARTITIONED copy of orders (hive-style `o_month=yyyy-MM/`
     * dirs) plus a KB-scale months DIMENSION carrying a `busy` attribute
     * (above-average order count, precomputed at build) — the classic
@@ -360,8 +358,7 @@ object Relational {
     * not derivable from the join key, so only a runtime subquery can
     * prune the fact. Built once per (session, sf dir). */
   private def dppWarehouse(spark: SparkSession, dir: String): String =
-    dppWarehouseCache.getOrElseUpdate(s"${System.identityHashCode(spark)}|$dir", {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-dpp").toString
+    graft.schema.Fixtures.memo(spark, "graft-dpp", dir) { tmp =>
       val withMonth = Tables(spark, dir, "orders")
         .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM"))
       withMonth.write.partitionBy("o_month").mode("overwrite")
@@ -373,7 +370,7 @@ object Relational {
         .coalesce(1)
         .write.mode("overwrite").parquet(s"$tmp/months_dim")
       tmp
-    })
+    }
 
   /** DYNAMIC PARTITION PRUNING: the fact is partitioned by month; the
     * dimension rows that survive `busy` are only known at RUNTIME, so

@@ -5,7 +5,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.GraftParquetSchema
+import org.apache.spark.sql.graftshim.{GraftFileResult, GraftParquetSchema, GraftWriteShim, GraftWriteSpecs}
 
 /** Minimal snapshot/table-format layer over a parquet directory — the
   * capability the reference *installs but never uses*: its Docker image
@@ -112,7 +112,7 @@ object SnapshotLog {
     * Written by bucketed writers, consumed by the V2 scan's
     * storage-partitioned-join reporting; inert for ordinary column
     * predicates. */
-  private[graft] val BucketKeyPattern = """bucket\((\d+),(.+)\)""".r
+  val BucketKeyPattern = """bucket\((\d+),(.+)\)""".r
 
   /** FORMULA-VERSIONING CONTRACT: the values recorded under this key
     * are [[bucketIdExpr]] outputs. Any future change to that formula
@@ -120,7 +120,7 @@ object SnapshotLog {
     * under the old key would let two mixed-era tables both report the
     * same transform and silently drop matches from a storage-
     * partitioned join. */
-  private[graft] def bucketPartKey(n: Int, col: String): String =
+  def bucketPartKey(n: Int, col: String): String =
     s"bucket($n,$col)"
 
   /** Is `dt` a type the modulo-bucket layout accepts? Integrals take
@@ -130,14 +130,7 @@ object SnapshotLog {
     * string-keyed tables co-locate too. Other types stay refused: a
     * lossy cast would silently collapse every insert into one bucket. */
   private[graft] def bucketable(dt: org.apache.spark.sql.types.DataType): Boolean =
-    dt match {
-      case org.apache.spark.sql.types.ByteType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.StringType => true
-      case _ => false
-    }
+    GraftWriteShim.bucketTagOf(dt).isDefined
 
   /** The shared residue of a bucket key — the ONE expression both the
     * write-side partitioner and the recorded id hash: integrals
@@ -443,12 +436,6 @@ object SnapshotLog {
   def currentSnapshotId(spark: SparkSession, tableDir: String): Option[Long] =
     snapshots(spark, tableDir).lastOption
 
-  /** Stage a DataFrame as immutable data files under a fresh
-    * `data/<uuid>/` dir — NOT yet visible to any reader. Returns the
-    * [[DataFile]] entries for a subsequent [[commit]]. Stats (row count,
-    * min/max of `statsCol`) come from one footer-cheap aggregate grouped
-    * by file. A crash after this but before [[commit]] leaves unreferenced
-    * files that [[expireSnapshots]]' orphan sweep reclaims. */
   /** Bits per per-file manifest bloom (4 KB serialized) and its hash
     * count — fixed so driver-side probes and the build agree; at ~128 MB
     * data files a 32k-bit / 5-hash bloom holds point-lookup false
@@ -469,21 +456,6 @@ object SnapshotLog {
         org.apache.spark.sql.types.StringType) xxhash64(col(column))
     else col(column).cast("long")
 
-  /** The LONG-domain zone expression for a stats column, or None when no
-    * zone kind exists for its type: numerics cast, timestamps record
-    * epoch MICROSECONDS, dates epoch DAYS — the domains
-    * [[Constraints]] maps timestamp and date literals into. */
-  private def zoneExpr(df: DataFrame, column: String): Option[Column] = {
-    import org.apache.spark.sql.types._
-    df.schema(column).dataType match {
-      case _: NumericType => Some(col(column).cast("long"))
-      case TimestampType => Some(unix_micros(col(column)))
-      case DateType =>
-        Some(datediff(col(column), to_date(lit("1970-01-01"))).cast("long"))
-      case _ => None
-    }
-  }
-
   /** Driver-side twin of [[keyAsLong]] for string keys (Spark's
     * `xxhash64` = XXH64 with seed 42 over the UTF-8 bytes). */
   private[graft] def hashStringKey(s: String): Long = {
@@ -492,7 +464,14 @@ object SnapshotLog {
       .hashUnsafeBytes(u.getBaseObject, u.getBaseOffset, u.numBytes, 42L)
   }
 
-  /** `rawPhysical = true` declares the frame (and the requested metadata
+  /** Stage a DataFrame as immutable data files under a fresh
+    * `data/<uuid>/` dir — NOT yet visible to any reader. Returns the
+    * [[DataFile]] entries for a subsequent [[commit]], every statistic
+    * computed in the task that writes the file. A crash after this but
+    * before [[commit]] leaves unreferenced files that
+    * [[expireSnapshots]]' orphan sweep reclaims.
+    *
+    * `rawPhysical = true` declares the frame (and the requested metadata
     * column names) ALREADY in physical space — set by internal rewrites
     * that read files raw (bin-pack, mask consolidation, merge adapters);
     * everything else is logical space and translates through the table's
@@ -522,227 +501,50 @@ object SnapshotLog {
     val dfP = reg.map(_.toPhysical(df)).getOrElse(df)
     def phys(c: String): String = reg.flatMap(_.physicalOf(c)).getOrElse(c)
     val sortedByP = sortedBy.map(phys)
-    val uuid = java.util.UUID.randomUUID().toString
-    val dst = s"$tableDir/data/$uuid"
-    val fs = fsOf(spark, tableDir)
     // every requested stats column rides the same one-pass per-file
-    // metadata — a per-COLUMN zone map, the Iceberg metrics posture.
-    // Long zones exist for NUMERIC columns (cast), TIMESTAMP (epoch
-    // micros) and DATE (epoch days) — readers probe those domains via
-    // [[zoneDomain]]. Strings get no long zone (a lexicographic range
-    // would be a different, unimplemented zone kind) — string keys are
-    // indexed by their manifest BLOOM instead (`bloomCol`, xxhash64
-    // domain); a requested stats column that yields NO zone and is not
-    // bloom-covered is reported loudly, never dropped in silence: the
-    // caller believes pruning exists where none will.
-    val requested = (statsCol.toSeq ++ statsCols).distinct.map(phys)
-    val bloomColP = bloomCol.map(phys)
-    val partitionColsP = partitionCols.map {
-      case BucketKeyPattern(n, inner) => bucketPartKey(n.toInt, phys(inner))
-      case c => phys(c)
-    }
-    // ------------------------------------------------- INLINE fast path
-    // (r15): when every requested statistic is computable in the writing
-    // task (the type-tag surface of [[GraftWriteShim]] — long-domain
-    // zones, string/integral partition values and bloom keys, derived
-    // bucket ids), the frame writes through the SAME inline-stats task
-    // writers the real V2 write uses, via one runJob — no post-write
-    // read-back pass at all. At 100 TB this halves EVERY write path's
-    // IO (merge deltas, compactions, branches, the streaming sink), not
-    // just the V2-name INSERT's. Ineligible shapes (decimal zones,
-    // temporal blooms, exotic partition types, absent columns) keep the
-    // write-then-aggregate path below, byte-identical to before.
-    val inlineEnabled = spark.conf.getOption("graft.write.inlineStats")
-      .forall(_.toBoolean)
-    (if (inlineEnabled)
-       inlineWritePlan(dfP, tableDir, requested, bloomColP, partitionColsP)
-     else None).foreach {
-      case (statsSpecs, partSpecs, bucketSpecs, bloomSpec) =>
-        {
-          val results = org.apache.spark.sql.graftshim.GraftWriteShim
-            .writeInline(spark, dfP, dst, statsSpecs, partSpecs,
-              bucketSpecs, bloomSpec,
-              maxRecordsPerFile.getOrElse(Long.MaxValue))
-          if (results.isEmpty) {
-            fs.delete(new Path(dst), true)
-            return Seq.empty
-          }
-          val inlineStatNames = statsSpecs.map(_.name)
-          return results.map { r =>
-            val stats = r.mins.keys.map(c => c -> (r.mins(c), r.maxs(c))).toMap
-            val first = inlineStatNames.headOption.flatMap(stats.get)
-            DataFile(r.path, r.rows, r.bytes,
-              first.map(_._1), first.map(_._2), kind = kind, stats = stats,
-              blooms = (for { c <- bloomColP; b <- r.bloom } yield
-                c -> java.util.Base64.getEncoder.encodeToString(b)).toMap,
-              parts = r.parts, nulls = r.nulls.filter {
-                case (c, _) => stats.contains(c) },
-              sortedBy = sortedByP)
-          }
-        }
-    }
-    // --------------------------------------- legacy write-then-aggregate
-    maxRecordsPerFile
-      .fold(dfP.write)(cap => dfP.write.option("maxRecordsPerFile", cap))
-      .mode("error").parquet(dst)
-    val sizes = fs.listStatus(new Path(dst)).toSeq
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(f => f.getPath.toUri.getPath -> f.getLen).toMap
+    // metadata — a per-COLUMN zone map, the Iceberg metrics posture —
+    // and every statistic is computed in the writing task
+    // ([[GraftWriteShim.specsFor]] plans them, refusing an unrecordable
+    // request before any byte is written): no write re-reads its output
+    val specs = GraftWriteShim.specsFor(dfP.schema,
+      (statsCol.toSeq ++ statsCols).map(phys), bloomCol.map(phys),
+      partitionCols.map {
+        case BucketKeyPattern(n, inner) => bucketPartKey(n.toInt, phys(inner))
+        case c => phys(c)
+      }, spark.sessionState.conf.sessionLocalTimeZone, tableDir)
+    val dst = s"$tableDir/data/${java.util.UUID.randomUUID()}"
+    val results = GraftWriteShim.writeInline(spark, dfP, dst, specs,
+      maxRecordsPerFile.getOrElse(Long.MaxValue))
     // an EMPTY frame emits no part files at all — return no entries
-    // instead of failing the stats read-back on a fileless directory
     // (write-first-then-discard callers depend on this: deleteWhere)
-    if (sizes.isEmpty) { fs.delete(new Path(dst), true); return Seq.empty }
-    val written = GraftParquetSchema.read(spark, dst)
-    val allStats = requested.filter(c => zoneExpr(written, c).isDefined)
-    requested.filterNot(allStats.contains)
-      .filterNot(bloomColP.contains)
-      .foreach(c => System.err.println(
-        s"[graft] WARNING: stats column '$c' of $tableDir is " +
-          s"${written.schema(c).dataType.simpleString} — no long zone kind " +
-          "exists for it and no bloom was requested; zone pruning will " +
-          "NOT engage on this column"))
-    // per-file PARTITION VALUE sets (the Iceberg posture: partition
-    // values live in the manifest, never in directory names — the
-    // columns stay in the data, so no re-attachment read trick is
-    // needed and a file accidentally spanning values stays readable).
-    // collect_set is capped by [[MaxPartValuesPerFile]] at record time.
-    val statsAggs = ((count(lit(1)).as("rows") +: allStats.zipWithIndex.flatMap {
-      case (c, i) => Seq(min(zoneExpr(written, c).get).as(s"smin_$i"),
-        max(zoneExpr(written, c).get).as(s"smax_$i"),
-        // per-zone-column null count: min/max describe only non-null
-        // values, so this is the missing bit that lets a fully-covered
-        // file be dropped metadata-only (SQL comparisons never match
-        // null — a file with any null must keep those rows)
-        count(when(col(c).isNull, lit(1))).as(s"snull_$i"))
-    }) ++ partitionColsP.zipWithIndex.map { case (c, i) =>
-      // DERIVED partition keys: a `bucket(n,col)` entry records each
-      // file's modulo-bucket id set under the composite key — the
-      // storage-partitioned-join channel (the Iceberg bucket-transform
-      // school). The key can never collide with a real column filter,
-      // so partition pruning stays inert for user predicates.
-      val pexpr = c match {
-        case BucketKeyPattern(n, inner) =>
-          val isString = written.schema.fields
-            .find(_.name.equalsIgnoreCase(inner))
-            .exists(_.dataType == org.apache.spark.sql.types.StringType)
-          bucketIdExpr(col(inner), n.toInt, isString).cast("string")
-        case _ => col(c).cast("string")
-      }
-      slice(sort_array(collect_set(pexpr)),
-        1, MaxPartValuesPerFile + 1).as(s"pvals_$i")
-    }) ++ bloomColP.map(c => graft.functions.GraftFunctions
-      .bloom_build(keyAsLong(written, c), BloomBits, BloomHashes).as("bloom"))
-    written
-      .groupBy(input_file_name().as("file"))
-      .agg(statsAggs.head, statsAggs.tail: _*)
-      .collect()  // one row per written FILE — bounded metadata, not data
-      .toSeq.map { r =>
-        val path = new java.net.URI(r.getAs[String]("file")).getPath
-        val stats = allStats.zipWithIndex.flatMap { case (c, i) =>
-          (Option(r.getAs[java.lang.Long](s"smin_$i")),
-            Option(r.getAs[java.lang.Long](s"smax_$i"))) match {
-            case (Some(mn), Some(mx)) => Some(c -> (mn.longValue, mx.longValue))
-            case _ => None
-          }
-        }.toMap
-        val blooms = bloomColP.map(c => c ->
-          java.util.Base64.getEncoder.encodeToString(r.getAs[Array[Byte]]("bloom"))).toMap
-        val parts = partitionColsP.zipWithIndex.flatMap { case (c, i) =>
-          val vs = r.getAs[scala.collection.Seq[String]](s"pvals_$i")
-          // over-cap (the +1 slice overflowed) or all-null: record
-          // nothing — the file stays conservatively unprunable on c
-          if (vs == null || vs.isEmpty || vs.size > MaxPartValuesPerFile) None
-          else Some(c -> vs.toSeq)
-        }.toMap
-        val nulls = allStats.zipWithIndex.collect {
-          case (c, i) if stats.contains(c) => c -> r.getAs[Long](s"snull_$i")
-        }.toMap
-        val first = allStats.headOption.flatMap(stats.get)
-        DataFile(path, r.getAs[Long]("rows"), sizes.getOrElse(path, 0L),
-          first.map(_._1), first.map(_._2), kind = kind, stats = stats,
-          blooms = blooms, parts = parts, nulls = nulls,
-          sortedBy = sortedByP)
-      }
+    if (results.isEmpty) {
+      fsOf(spark, tableDir).delete(new Path(dst), true)
+      Seq.empty
+    } else fileEntries(results, specs, kind, sortedBy = _ => sortedByP)
   }
 
-  /** The inline-write eligibility decision (r15): Some(specs) when
-    * every statistic [[writeData]] was asked for is computable by the
-    * task-side writer ([[org.apache.spark.sql.graftshim.GraftWriteShim]]
-    * type tags); None → the legacy write-then-aggregate path. Mirrors
-    * legacy semantics exactly: a zone-less stats column (string) WARNS
-    * and drops from zones rather than disqualifying, but a column the
-    * LEGACY aggregate could zone that the writer cannot (decimal), a
-    * bloom/partition type outside the tag surface, or a named column
-    * absent from the frame (legacy throws its own error) all fall back. */
-  private def inlineWritePlan(dfP: DataFrame, tableDir: String,
-      requested: Seq[String], bloomColP: Option[String],
-      partitionColsP: Seq[String])
-      : Option[(Seq[org.apache.spark.sql.graftshim.GraftColSpec],
-                Seq[org.apache.spark.sql.graftshim.GraftColSpec],
-                Seq[org.apache.spark.sql.graftshim.GraftBucketPartSpec],
-                Option[org.apache.spark.sql.graftshim.GraftColSpec])] = {
-    import org.apache.spark.sql.graftshim.{GraftBucketPartSpec, GraftColSpec, GraftWriteShim => WS}
-    val fields = dfP.schema.fields
-    def ordOf(c: String): Option[Int] =
-      fields.indexWhere(_.name == c) match {
-        case -1 => fields.indexWhere(_.name.equalsIgnoreCase(c)) match {
-          case -1 => None
-          case i => Some(i)
-        }
-        case i => Some(i)
-      }
-    val stats = scala.collection.mutable.ArrayBuffer.empty[GraftColSpec]
-    // warnings buffer until the decision succeeds — a later column may
-    // still fall the whole write back to legacy, which warns itself
-    val warnings = scala.collection.mutable.ArrayBuffer.empty[String]
-    for (c <- requested) ordOf(c) match {
-      case None => return None // absent column: legacy throws its error
-      case Some(i) =>
-        val dt = fields(i).dataType
-        if (zoneExpr(dfP, fields(i).name).isDefined) {
-          WS.zoneTagOf(dt) match {
-            case Some(t) => stats += GraftColSpec(c, i, t)
-            case None => return None // e.g. decimal: legacy zones it
-          }
-        } else if (!bloomColP.contains(c)) {
-          warnings +=
-            s"[graft] WARNING: stats column '$c' of $tableDir is " +
-              s"${dt.simpleString} — no long zone kind exists for it and " +
-              "no bloom was requested; zone pruning will NOT engage on " +
-              "this column"
-        }
+  /** Task write results → manifest entries, shared by every write face.
+    * Partition values live in the manifest, never in directory names
+    * (the Iceberg posture: the columns stay in the data, so a file
+    * accidentally spanning values stays readable); `bucketKey` records a
+    * bucketed write's per-file singleton id. */
+  private[graft] def fileEntries(results: Seq[GraftFileResult],
+      specs: GraftWriteSpecs, kind: String = "data",
+      bucketKey: Option[String] = None,
+      sortedBy: GraftFileResult => Option[String]): Seq[DataFile] =
+    results.map { r =>
+      val stats = r.mins.keys.map(c => c -> (r.mins(c), r.maxs(c))).toMap
+      val first = specs.stats.headOption.flatMap(c => stats.get(c.name))
+      DataFile(r.path, r.rows, r.bytes, first.map(_._1), first.map(_._2),
+        kind = kind, stats = stats,
+        blooms = (for { c <- specs.bloom; b <- r.bloom } yield
+          c.name -> java.util.Base64.getEncoder.encodeToString(b)).toMap,
+        parts = r.parts ++ bucketKey.map(_ -> Seq(r.bucketId.toString)),
+        // min/max describe only non-null values: the null count is what
+        // lets a fully-covered file drop metadata-only
+        nulls = r.nulls.filter { case (c, _) => stats.contains(c) },
+        sortedBy = sortedBy(r))
     }
-    val bloom = bloomColP match {
-      case None => None
-      case Some(c) => ordOf(c) match {
-        case None => return None
-        case Some(i) => WS.bloomTagOf(fields(i).dataType) match {
-          case Some(t) => Some(GraftColSpec(c, i, t))
-          case None => return None // e.g. temporal bloom: legacy domain
-        }
-      }
-    }
-    val parts = scala.collection.mutable.ArrayBuffer.empty[GraftColSpec]
-    val buckets = scala.collection.mutable.ArrayBuffer.empty[GraftBucketPartSpec]
-    for (c <- partitionColsP) c match {
-      case BucketKeyPattern(nStr, inner) => ordOf(inner) match {
-        case None => return None
-        case Some(i) => WS.partTagOf(fields(i).dataType) match {
-          case Some(t) => buckets += GraftBucketPartSpec(c, i, t, nStr.toInt)
-          case None => return None
-        }
-      }
-      case c0 => ordOf(c0) match {
-        case None => return None
-        case Some(i) => WS.partTagOf(fields(i).dataType) match {
-          case Some(t) => parts += GraftColSpec(c0, i, t)
-          case None => return None // legacy casts any type to string
-        }
-      }
-    }
-    warnings.foreach(System.err.println)
-    Some((stats.toSeq, parts.toSeq, buckets.toSeq, bloom))
-  }
 
   /** Atomically publish a new snapshot: next id = current + 1, manifest
     * written to a dot-temp file and renamed into place. Throws

@@ -14,17 +14,18 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-/** Task-side machinery of the REAL DataSourceV2 batch write (the r14
-  * engine-planned bucketed INSERT): each task writes parquet through the
-  * engine's own `OutputWriterFactory` (ParquetFileFormat.prepareWrite —
-  * codec, write support, everything stock), FANNED OUT one file per
-  * bucket id, computing every manifest statistic INLINE while the rows
-  * stream past — zone min/max, null counts, partition-value sets, the
-  * manifest bloom, the bucket-id singleton, and a verified sortedness
-  * flag. At 100 TB this kills the V1 write path's whole second pass
-  * (writeData re-reads everything it just wrote to aggregate stats);
-  * here stats cost one comparison per row per column, in the task that
-  * already holds the row.
+/** Task-side machinery of EVERY graft data-file write: each task writes
+  * parquet through the engine's own `OutputWriterFactory`
+  * (ParquetFileFormat.prepareWrite — codec, write support, everything
+  * stock), fanned out one file per bucket id on bucketed writes,
+  * computing every manifest statistic INLINE while the rows stream past
+  * — zone min/max, null counts, partition-value sets, the manifest
+  * bloom, derived bucket-id sets, and a verified sortedness flag. No
+  * write ever re-reads its own output for stats: they cost one
+  * comparison per row per column, in the task that already holds the
+  * row. [[specsFor]] is the one metadata planner every write face
+  * shares ([[graft.table.SnapshotLog]] `writeData`, the real V2 batch,
+  * staged and delta writes).
   *
   * Lives in this package for `ParquetFileFormat.prepareWrite`
   * (`private[sql]`) and `SerializableConfiguration` (`private[spark]`);
@@ -36,11 +37,21 @@ object GraftWriteShim {
   final val TInt = 0; final val TLong = 1; final val TByte = 2
   final val TShort = 3; final val TDate = 4; final val TTs = 5
   final val TFloat = 6; final val TDouble = 7; final val TString = 8
+  /** Timestamp bloom key: `cast(ts AS long)` = epoch SECONDS (floor). */
+  final val TTsSec = 9
+  final val TBool = 10
+  /** Decimal: `cast(d AS long)` (truncation toward zero) via
+    * [[decimalLong]] — a value outside the long range drops the file's
+    * zone (or bloom) for the column instead of failing the write. */
+  final val TDec = 11
+  /** Partition value of any other type: Spark's own
+    * `cast(col AS string)` in the session time zone, per row. */
+  final val TAny = 12
 
-  /** Tag for a column the inline writer can compute ZONE stats for (the
-    * long domains [[graft.table.SnapshotLog]] records: numerics cast,
-    * dates epoch days, timestamps epoch micros — all of which ARE the
-    * InternalRow representations). None = no inline zone kind. */
+  /** Tag for a column with a ZONE (the long domains the manifest
+    * records: numerics cast, dates epoch days, timestamps epoch micros —
+    * all but decimal ARE the InternalRow representations). None = no
+    * zone kind exists for the type. */
   def zoneTagOf(dt: DataType): Option[Int] = dt match {
     case IntegerType => Some(TInt)
     case LongType => Some(TLong)
@@ -50,12 +61,13 @@ object GraftWriteShim {
     case TimestampType => Some(TTs)
     case FloatType => Some(TFloat)
     case DoubleType => Some(TDouble)
+    case _: DecimalType => Some(TDec)
     case _ => None
   }
 
-  /** Tag for a column recordable as a partition-value set (the
-    * `cast(col AS string)` domain — exact for strings and integrals). */
-  def partTagOf(dt: DataType): Option[Int] = dt match {
+  /** Tag for a bucket key (`SnapshotLog.bucketable`): the integral
+    * residue domain or the xxhash64 string domain. */
+  def bucketTagOf(dt: DataType): Option[Int] = dt match {
     case StringType => Some(TString)
     case IntegerType => Some(TInt)
     case LongType => Some(TLong)
@@ -64,20 +76,80 @@ object GraftWriteShim {
     case _ => None
   }
 
-  /** Tag for a bloom key column (the xxhash64/identity long domain of
-    * `SnapshotLog.keyAsLong`). */
-  def bloomTagOf(dt: DataType): Option[Int] = dt match {
-    case StringType => Some(TString)
-    case IntegerType => Some(TInt)
-    case LongType => Some(TLong)
-    case ByteType => Some(TByte)
-    case ShortType => Some(TShort)
-    case _ => None
+  /** Tag for a partition-value column: the `cast(col AS string)`
+    * domain, computed directly for strings and integrals. */
+  private def partTagOf(dt: DataType): Int = bucketTagOf(dt).getOrElse(TAny)
+
+  /** Tag for a bloom key column — the domain
+    * `SnapshotLog.keyAsLong` probes: strings xxhash64, everything else
+    * `cast(col AS long)`. None = the type has no such cast (date,
+    * binary, complex types). */
+  private def bloomTagOf(dt: DataType): Option[Int] = dt match {
+    case TimestampType => Some(TTsSec)
+    case BooleanType => Some(TBool)
+    case DateType => None
+    case other => zoneTagOf(other).orElse(bucketTagOf(other))
   }
 
-  /** Zone-domain long of row(ord) under `tag` (row must be non-null
-    * there). Float/double truncate toward zero — Catalyst cast-to-long
-    * semantics. */
+  /** The writer specs of one write, from (frame schema, stats columns,
+    * bloom column, partition columns). Zones for every type with a long
+    * zone domain; a stats column without one is reported loudly and
+    * recorded nowhere unless it is the bloom key (string keys are
+    * indexed there) — never dropped in silence, since the caller
+    * believes pruning exists. Partition values of any type; derived
+    * `bucket(n,col)` keys record each file's bucket-id set. A named
+    * column absent from the frame, a bloom key without a long domain
+    * and a non-bucketable bucket key throw IllegalArgumentException
+    * here — before any file is written. `physical` maps each requested
+    * name to the name the manifest records. */
+  def specsFor(schema: StructType, statsCols: Seq[String],
+               bloomCol: Option[String], partitionCols: Seq[String],
+               timeZone: String, table: String,
+               physical: String => String = identity): GraftWriteSpecs = {
+    def field(c: String): (Int, DataType) = {
+      val i = schema.fields.indexWhere(_.name == c) match {
+        case -1 => schema.fields.indexWhere(_.name.equalsIgnoreCase(c))
+        case i => i
+      }
+      if (i < 0) throw new IllegalArgumentException(
+        s"graft table $table: metadata column '$c' is not in the written " +
+          s"frame (${schema.fieldNames.mkString(", ")})")
+      (i, schema.fields(i).dataType)
+    }
+    def refuse(what: String, c: String, dt: DataType) =
+      throw new IllegalArgumentException(
+        s"graft table $table: $what column '$c' is ${dt.simpleString}, " +
+          "which has no long key domain")
+    val bloom = bloomCol.map { c =>
+      val (i, dt) = field(c)
+      GraftColSpec(physical(c), i, bloomTagOf(dt).getOrElse(
+        refuse("bloom", c, dt)), dt)
+    }
+    val stats = statsCols.distinct.flatMap { c =>
+      val (i, dt) = field(c)
+      val tag = zoneTagOf(dt)
+      if (tag.isEmpty && !bloomCol.contains(c)) System.err.println(
+        s"[graft] WARNING: stats column '$c' of $table is " +
+          s"${dt.simpleString} — no long zone kind exists for it and no " +
+          "bloom was requested; zone pruning will NOT engage on this column")
+      tag.map(GraftColSpec(physical(c), i, _, dt))
+    }
+    val (buckets, parts) = partitionCols.partitionMap {
+      case graft.table.SnapshotLog.BucketKeyPattern(n, inner) =>
+        val (i, dt) = field(inner)
+        Left(GraftBucketPartSpec(
+          graft.table.SnapshotLog.bucketPartKey(n.toInt, physical(inner)),
+          i, bucketTagOf(dt).getOrElse(refuse("bucket", inner, dt)), n.toInt))
+      case c =>
+        val (i, dt) = field(c)
+        Right(GraftColSpec(physical(c), i, partTagOf(dt), dt))
+    }
+    GraftWriteSpecs(stats, parts, buckets, bloom, timeZone)
+  }
+
+  /** Zone- or bloom-domain long of row(ord) under `tag` (row must be
+    * non-null there; decimals go through [[decimalLong]]). Float/double
+    * truncate toward zero — Catalyst cast-to-long semantics. */
   private[graftshim] def longOf(row: InternalRow, ord: Int, tag: Int): Long =
     tag match {
       case TInt | TDate => row.getInt(ord).toLong
@@ -87,14 +159,30 @@ object GraftWriteShim {
       case TFloat => row.getFloat(ord).toLong
       case TDouble => row.getDouble(ord).toLong
       case TString => xxh64(row.getUTF8String(ord))
+      case TTsSec => Math.floorDiv(row.getLong(ord), 1000000L)
+      case TBool => if (row.getBoolean(ord)) 1L else 0L
       case _ => throw new IllegalStateException(s"bad tag $tag")
     }
+
+  /** `cast(d AS long)` of the non-null decimal at `c` — truncation
+    * toward zero — or None when the value lies outside the long range
+    * (where the cast overflows). */
+  private[graftshim] def decimalLong(row: InternalRow, c: GraftColSpec)
+      : Option[Long] = {
+    val dt = c.dataType.asInstanceOf[DecimalType]
+    val d = row.getDecimal(c.ordinal, dt.precision, dt.scale)
+    if (dt.precision - dt.scale <= 18) Some(d.toLong)
+    else {
+      val i = d.toJavaBigDecimal.toBigInteger
+      if (i.bitLength < 64) Some(i.longValue) else None
+    }
+  }
 
   private[graftshim] def stringOf(row: InternalRow, ord: Int, tag: Int): String =
     tag match {
       case TString => row.getUTF8String(ord).toString
-      case TInt | TDate => row.getInt(ord).toString
-      case TLong | TTs => row.getLong(ord).toString
+      case TInt => row.getInt(ord).toString
+      case TLong => row.getLong(ord).toString
       case TByte => row.getByte(ord).toString
       case TShort => row.getShort(ord).toString
       case _ => throw new IllegalStateException(s"bad tag $tag")
@@ -123,12 +211,9 @@ object GraftWriteShim {
     }
   }
 
-  /** The INLINE V1 write (r15): run `df` through the same task-side
-    * inline-stats writers the real V2 write uses, via one plain
-    * `runJob` — every manifest statistic (zones, null counts,
-    * partition-value sets incl. derived bucket ids, the bloom) computed
-    * while the rows stream past, killing [[graft.table.SnapshotLog]]
-    * `writeData`'s whole post-write read-back pass. One file per
+  /** Write `df` under `dstDir` through the task-side inline-stats
+    * writers the real V2 write uses, via one plain `runJob` — the
+    * engine of [[graft.table.SnapshotLog]] `writeData`. One file per
     * non-empty partition, rolled at `maxRowsPerFile`. File names are
     * attempt-unique (`taskAttemptId`), so a retried/speculated task can
     * never collide; loser files are invisible (manifests pin explicit
@@ -136,17 +221,12 @@ object GraftWriteShim {
   def writeInline(spark: SparkSession,
                   df: org.apache.spark.sql.DataFrame,
                   dstDir: String,
-                  statsCols: Seq[GraftColSpec],
-                  partCols: Seq[GraftColSpec],
-                  bucketParts: Seq[GraftBucketPartSpec],
-                  bloomCol: Option[GraftColSpec],
+                  specs: GraftWriteSpecs,
                   maxRowsPerFile: Long = Long.MaxValue): Seq[GraftFileResult] = {
     val schema = StructType(df.schema.fields.map(_.copy(nullable = true)))
     val (owf, conf) = prepareFactory(spark, schema)
     val factory = new GraftBucketWriterFactory(dstDir, schema, -1, -1, 0,
-      statsCols, partCols, bloomCol,
-      graft.table.SnapshotLog.BloomBits, graft.table.SnapshotLog.BloomHashes,
-      owf, conf, bucketParts, maxRowsPerFile)
+      specs, owf, conf, maxRowsPerFile)
     val qe = df.queryExecution
     val rdd = qe.toRdd
     if (rdd.getNumPartitions == 0) return Seq.empty
@@ -189,19 +269,28 @@ object GraftWriteShim {
   }
 }
 
-/** One metadata column the task writer tracks: physical name, row
-  * ordinal, extraction tag. */
-final case class GraftColSpec(name: String, ordinal: Int, tag: Int)
+/** One metadata column the task writer tracks: recorded name, row
+  * ordinal, extraction tag, and the column's type (read by the decimal
+  * and cast-to-string tags). */
+final case class GraftColSpec(name: String, ordinal: Int, tag: Int,
+                              dataType: DataType)
 
-/** One DERIVED bucket partition-value column (r15, the inline V1
-  * writeData path): the writer records the SET of `bucket(n, col)` ids
-  * each file holds under `key` — the unarranged-frame generalization of
-  * the bucketed writer's singleton (a plain writeData frame may mix
-  * residues within one file; the manifest then carries the multi-value
-  * set, exactly as the legacy SQL recording did). `isString` selects the
-  * xxhash64 residue branch. */
+/** One DERIVED bucket partition-value column: the writer records the
+  * SET of `bucket(n, col)` ids each file holds under `key` — the
+  * unarranged-frame generalization of the bucketed writer's singleton
+  * (a plain writeData frame may mix residues within one file; the
+  * manifest then carries the multi-value set). */
 final case class GraftBucketPartSpec(
     key: String, ordinal: Int, tag: Int, n: Int)
+
+/** Everything one write records per file ([[GraftWriteShim.specsFor]]):
+  * zone columns, partition-value columns, derived bucket-id columns,
+  * the bloom key, and the time zone cast-to-string partition values
+  * format timestamps in. */
+final case class GraftWriteSpecs(
+    stats: Seq[GraftColSpec], parts: Seq[GraftColSpec],
+    buckets: Seq[GraftBucketPartSpec], bloom: Option[GraftColSpec],
+    timeZone: String)
 
 /** Per-file write result shipped task → driver (bounded metadata: one
   * entry per written FILE). */
@@ -228,16 +317,9 @@ final class GraftBucketWriterFactory(
     bucketOrdinal: Int,
     bucketTag: Int,
     bucketCount: Int,
-    statsCols: Seq[GraftColSpec],
-    partCols: Seq[GraftColSpec],
-    bloomCol: Option[GraftColSpec],
-    bloomBits: Int,
-    bloomHashes: Int,
+    metadata: GraftWriteSpecs,
     writerFactory: OutputWriterFactory,
     val conf: SerializableConfiguration,
-    /** Derived bucket partition-value sets to record per file (r15,
-      * the inline V1 path — an unarranged frame may hold many ids). */
-    bucketParts: Seq[GraftBucketPartSpec] = Nil,
     /** Per-file row cap (the V1 `maxRecordsPerFile` twin): a file
       * reaching it closes and rolls — how a clustered rewrite emits
       * target-SIZED files from fixed partitions. */
@@ -258,17 +340,31 @@ final class GraftBucketWriterFactory(
   }
 
   private[graftshim] def specs = (bucketOrdinal, bucketTag, bucketCount,
-    statsCols, partCols, bloomCol, bloomBits, bloomHashes, dataDir,
-    bucketParts, maxRowsPerFile)
+    metadata, dataDir, maxRowsPerFile)
 }
 
 private[graftshim] final class GraftBucketDataWriter(
     factory: GraftBucketWriterFactory, partitionId: Int, taskId: Long)
     extends DataWriter[InternalRow] {
 
-  private val (bucketOrd, bucketTag, n, statsCols, partCols, bloomCol,
-    bloomBits, bloomHashes, dataDir, bucketParts, maxRowsPerFile) =
+  private val (bucketOrd, bucketTag, n, metadata, dataDir, maxRowsPerFile) =
     factory.specs
+  private val bloomBits = graft.table.SnapshotLog.BloomBits
+  private val bloomHashes = graft.table.SnapshotLog.BloomHashes
+  // decimal and cast-to-string columns take their own loops, so the
+  // per-row loops over the directly-read tags stay branch-free
+  private val (decStats, statsCols) =
+    metadata.stats.partition(_.tag == GraftWriteShim.TDec)
+  private val (anyParts, partCols) =
+    metadata.parts.partition(_.tag == GraftWriteShim.TAny)
+  private val castParts = anyParts.map(c => c.name ->
+    org.apache.spark.sql.catalyst.expressions.Cast(
+      org.apache.spark.sql.catalyst.expressions.BoundReference(
+        c.ordinal, c.dataType, nullable = true),
+      StringType, Some(metadata.timeZone)))
+  private val bucketParts = metadata.buckets
+  private val (decBloom, bloomCol) =
+    metadata.bloom.partition(_.tag == GraftWriteShim.TDec)
 
   /** The shared bucket-id formula ([[GraftWriteShim.bucketIdAt]]):
     * murmur3(seed 42) of the key residue, floorMod n — byte-identical
@@ -290,11 +386,17 @@ private[graftshim] final class GraftBucketDataWriter(
     val maxs = mutable.Map.empty[String, Long]
     val nulls = mutable.Map.empty[String, Long]
     // partition-value sets; null marks an over-cap column (stop
-    // collecting, record nothing — conservative, matches writeData)
+    // collecting, record nothing — conservative: the file stays unprunable)
     val parts = mutable.Map.empty[String, mutable.Set[String]]
-    partCols.foreach(c => parts(c.name) = mutable.Set.empty)
+    metadata.parts.foreach(c => parts(c.name) = mutable.Set.empty)
     bucketParts.foreach(bp => parts(bp.key) = mutable.Set.empty)
-    val bloom: Option[Array[Long]] = bloomCol.map(_ => new Array[Long](bloomBits / 64))
+    val bloom: Option[Array[Long]] =
+      metadata.bloom.map(_ => new Array[Long](bloomBits / 64))
+    // decimal zones whose value left the long range, and a decimal
+    // bloom key that did: the file records no zone (no bloom) for them,
+    // which keeps it under every prune
+    val lostZones = mutable.Set.empty[String]
+    var bloomLost = false
     // sortedness verified, never assumed: ascending nulls-first by the
     // bucket key — a violated file simply loses the stamp; unbucketed
     // writes claim nothing
@@ -338,6 +440,34 @@ private[graftshim] final class GraftBucketDataWriter(
             bits, GraftWriteShim.longOf(row, c.ordinal, c.tag), bloomHashes))
       }
       if (sorted) checkOrder(row)
+      decStats.foreach { c =>
+        if (row.isNullAt(c.ordinal))
+          nulls(c.name) = nulls.getOrElse(c.name, 0L) + 1L
+        else GraftWriteShim.decimalLong(row, c) match {
+          case Some(v) =>
+            if (!mins.contains(c.name) || v < mins(c.name)) mins(c.name) = v
+            if (!maxs.contains(c.name) || v > maxs(c.name)) maxs(c.name) = v
+            if (!nulls.contains(c.name)) nulls(c.name) = 0L
+          case None => lostZones += c.name
+        }
+      }
+      castParts.foreach { case (name, cast) =>
+        val set = parts(name)
+        val v = if (set == null) null else cast.eval(row)
+        if (v != null) {
+          set += v.toString
+          if (set.size > graft.table.SnapshotLog.MaxPartValuesPerFile)
+            parts(name) = null // over-cap: record nothing for c
+        }
+      }
+      decBloom.foreach { c =>
+        if (!bloomLost && !row.isNullAt(c.ordinal))
+          GraftWriteShim.decimalLong(row, c) match {
+            case Some(v) => bloom.foreach(bits =>
+              graft.functions.BloomFilterOps.set(bits, v, bloomHashes))
+            case None => bloomLost = true
+          }
+      }
     }
 
     private def checkOrder(row: InternalRow): Unit = {
@@ -362,10 +492,10 @@ private[graftshim] final class GraftBucketDataWriter(
       val p = new Path(path)
       val bytes = p.getFileSystem(factory.conf.value).getFileStatus(p).getLen
       GraftFileResult(p.toUri.getPath, rows, bytes, bucket,
-        mins.toMap, maxs.toMap, nulls.toMap,
+        (mins --= lostZones).toMap, (maxs --= lostZones).toMap, nulls.toMap,
         parts.toSeq.collect {
           case (c, s) if s != null && s.nonEmpty => c -> s.toSeq.sorted }.toMap,
-        bloom.map { bits =>
+        bloom.filterNot(_ => bloomLost).map { bits =>
           val bb = java.nio.ByteBuffer.allocate(bits.length * 8)
             .order(java.nio.ByteOrder.LITTLE_ENDIAN)
           bb.asLongBuffer().put(bits)

@@ -575,6 +575,64 @@ class ConnectorV2Spec extends AnyFunSuite {
     assert(spark.table("gv2_uw.t").columns.toSeq === Seq("id", "v", "ds"))
   }
 
+  test("decimal zones and date partitions take the real write in CTAS and INSERT") {
+    val wh = freshWarehouse("wide")
+    val cat = spark.sessionState.catalogManager.catalog("gv2_wide")
+      .asInstanceOf[GraftCatalog]
+    def src(lo: Long, hi: Long) = spark.range(lo, hi).selectExpr("id",
+      "CAST(id * -1.25 AS DECIMAL(12,2)) AS m",
+      "date_add(DATE '2024-03-01', CAST(id % 3 AS INT)) AS dt").coalesce(1)
+    val props = new java.util.HashMap[String, String]()
+    props.put("statsCols", "id,m")
+    props.put("partitionCols", "dt")
+    // the staged CTAS table declares no V1 write and builds the real one
+    val staged = cat.stageCreate(
+      org.apache.spark.sql.connector.catalog.Identifier.of(Array.empty, "probe"),
+      src(0, 1).schema, Array.empty, props)
+    try {
+      assert(!staged.capabilities().contains(
+        org.apache.spark.sql.connector.catalog.TableCapability.V1_BATCH_WRITE))
+      val w = staged.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
+        .newWriteBuilder(null).build()
+      assert(w.toString.contains("GraftBucketWrite"), w.toString)
+    } finally staged.abortStagedChanges()
+    def lastAdded(d: String) =
+      SnapshotLog.commits(spark, d).last.added.filter(_.rows > 0)
+    def meta(f: SnapshotLog.DataFile) =
+      (f.rows, f.statsMin, f.statsMax, f.stats, f.nulls, f.parts, f.blooms)
+    // CTAS: manifest metadata equals writeData's for the same frame
+    src(0, 100).createOrReplaceTempView("gv2_wide_a")
+    spark.sql("CREATE TABLE gv2_wide.t TBLPROPERTIES ('statsCols' = 'id,m', " +
+      "'partitionCols' = 'dt') AS SELECT * FROM gv2_wide_a")
+    SnapshotLog.commit(spark, s"$wh/twin", "append", SnapshotLog.writeData(
+      src(0, 100), s"$wh/twin", statsCols = Seq("id", "m"),
+      partitionCols = Seq("dt")))
+    val (c2, c1) = (lastAdded(s"$wh/t"), lastAdded(s"$wh/twin"))
+    assert(c2.size === 1 && c1.size === 1, (c2, c1).toString)
+    assert(meta(c2.head) === meta(c1.head))
+    assert(c2.head.stats.get("m") === Some((-123L, 0L)), c2.head.stats.toString)
+    assert(c2.head.parts("dt") === Seq("2024-03-01", "2024-03-02", "2024-03-03"))
+    // INSERT: the inherited decimal zone and date partition keep the
+    // table on the real write (no V1_BATCH_WRITE, no V1 fallback exec)
+    val ident = org.apache.spark.sql.connector.catalog.Identifier.of(Array.empty, "t")
+    assert(!cat.loadTable(ident).capabilities().contains(
+      org.apache.spark.sql.connector.catalog.TableCapability.V1_BATCH_WRITE))
+    src(100, 200).createOrReplaceTempView("gv2_wide_b")
+    val ins = spark.sql("INSERT INTO gv2_wide.t SELECT * FROM gv2_wide_b")
+    val insPlan = ins.queryExecution.executedPlan.toString
+    assert(insPlan.contains("GraftBucketWrite") && !insPlan.contains("GraftV1Write"),
+      s"the INSERT must take the real V2 write:\n$insPlan")
+    SnapshotLog.commit(spark, s"$wh/twin", "append", SnapshotLog.writeData(
+      src(100, 200), s"$wh/twin", statsCols = Seq("id", "m"),
+      partitionCols = Seq("dt")))
+    val (i2, i1) = (lastAdded(s"$wh/t"), lastAdded(s"$wh/twin"))
+    assert(i2.size === 1 && i1.size === 1, (i2, i1).toString)
+    assert(meta(i2.head) === meta(i1.head))
+    assert(i2.head.stats.get("m") === Some((-248L, -125L)), i2.head.stats.toString)
+    assert(spark.sql("SELECT count(*) FROM gv2_wide.t WHERE dt = DATE '2024-03-02'")
+      .head.getLong(0) === (0 until 200).count(_ % 3 == 1))
+  }
+
   test("engine-planned bucket write: INSERT reports the layout, files stay single-id") {
     val wh = freshWarehouse("dwr")
     spark.sql("CREATE TABLE gv2_dwr.t (k BIGINT, v BIGINT) " +
