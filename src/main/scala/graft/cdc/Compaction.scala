@@ -19,10 +19,11 @@ import org.apache.spark.sql.functions._
   * metadata-backed parquet count). The swap is two renames (old → .bak,
   * tmp → live) with the .bak removed last — a crash between renames
   * leaves either the original or a complete compacted copy plus a .bak to
-  * recover from, never a half-written live dir. Readers racing the swap
-  * see the old or the new listing, both complete (same contract as any
-  * directory-swap compaction; a table format's atomic commit is the
-  * production upgrade path).
+  * recover from, never a half-written live dir; [[recoverSwap]] restores
+  * the live dir before the next flat sync or compaction touches it.
+  * Readers racing the swap see the old or the new listing, both complete
+  * (same contract as any directory-swap compaction; a table format's
+  * atomic commit is the production upgrade path).
   *
   * Scale posture: the rewrite is one distributed pass (scan →
   * repartition(ceil(bytes/target)) → write); nothing is collected. For a
@@ -35,19 +36,40 @@ object Compaction {
   case class CompactionResult(table: String, filesBefore: Int, filesAfter: Int,
                               rows: Long, bytes: Long)
 
-  private def dataFiles(spark: SparkSession, dir: Path): Seq[(Path, Long)] = {
+  /** The parquet files a read of `dir` scans, with their lengths: every
+    * file under it, nested `sync_date=` partition dirs included, whose
+    * own name and whose directories below `dir` are not hidden (`_` or
+    * `.` — job scratch such as `_temporary`, `_SUCCESS`). Empty when the
+    * dir does not exist. */
+  private[cdc] def dataFiles(spark: SparkSession, dir: Path): Seq[(Path, Long)] = {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) Seq.empty
-    else {
-      val it = fs.listFiles(dir, true)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Path, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        val name = f.getPath.getName
-        if (f.isFile && !name.startsWith("_") && !name.startsWith("."))
-          buf += ((f.getPath, f.getLen))
-      }
-      buf.toSeq
+    def hidden(name: String) = name.startsWith("_") || name.startsWith(".")
+    def walk(d: Path): Seq[(Path, Long)] = fs.listStatus(d).toSeq.flatMap { st =>
+      if (hidden(st.getPath.getName)) Nil
+      else if (st.isDirectory) walk(st.getPath)
+      else Seq((st.getPath, st.getLen))
+    }
+    if (fs.exists(dir)) walk(dir) else Seq.empty
+  }
+
+  /** Finish a flat directory swap a crash interrupted between its two
+    * renames: the live dir is gone, `.compact.bak` holds the original.
+    * The compacted copy was counted against the original before the
+    * first rename, so a `.compact.tmp` whose write committed (its
+    * `_SUCCESS` marker) rolls forward; otherwise the original rolls
+    * back. Without this, the next flat sync recreates the live dir with
+    * only the new rows and the next compaction deletes both copies. */
+  private[cdc] def recoverSwap(spark: SparkSession, warehouseDir: String,
+                               table: String): Unit = {
+    val live = new Path(s"$warehouseDir/${table}_parquet")
+    val tmp = new Path(s"$warehouseDir/${table}_parquet.compact.tmp")
+    val bak = new Path(s"$warehouseDir/${table}_parquet.compact.bak")
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(live) && fs.exists(bak)) {
+      val (from, stale) = if (fs.exists(new Path(tmp, "_SUCCESS"))) (tmp, bak) else (bak, tmp)
+      require(fs.rename(from, live), s"compaction recovery: could not restore $live from $from")
+      fs.delete(stale, true)
+      System.err.println(s"[compaction] recovered $table from an interrupted swap (${from.getName})")
     }
   }
 
@@ -59,6 +81,7 @@ object Compaction {
     * reference-parity flat layout. */
   def compact(spark: SparkSession, warehouseDir: String, table: String,
               targetBytes: Long = 128L * 1024 * 1024): CompactionResult = {
+    recoverSwap(spark, warehouseDir, table)
     val live = new Path(s"$warehouseDir/${table}_parquet")
     val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new Path(live, "_graft_log")))

@@ -15,9 +15,11 @@ import graft.schema.Schemas
   *  - health     = per-topic source availability probe (the Debezium
   *                 connector-status GET, :72-87 — failures are reported
   *                 but tolerated, matching the DAG's lenient `:84-86`)
-  *  - sync       = [[SyncJob.syncAll]] over the 4 tables, concurrent
-  *                 (the DAG's parallel `process_<table>` tasks, :89-114)
-  *  - verify     = parquet read-back counts ([[SyncJob.verifyCounts]],
+  *  - sync       = one concurrent fan-out over the 4 tables (the DAG's
+  *                 parallel `process_<table>` tasks, :89-114):
+  *                 [[SyncJob.stageAll]] then a publish in snapshot mode,
+  *                 [[SyncJob.syncAll]] in the flat layout
+  *  - verify     = parquet footer row counts ([[SyncJob.verifyCounts]],
   *                 the `aws s3 ls` file-count check, :117-171)
   *  - reconcile  = source-vs-sink row counts (the Postgres COUNT(*)
   *                 reconciliation, :174-184 / run_pipeline.sh:174-182)
@@ -130,33 +132,31 @@ object PipelineRunner {
     val offsets = new OffsetStore(offsetDir)
     val job = new SyncJob(source, offsets, warehouseDir, singleFile = singleFile,
       snapshotted = snapshotted, wap = (wap || epoch) && snapshotted)
-    // --epoch (snapshot mode): the fan-out stages EVERY table invisibly,
-    // then publishes all commits plus ONE epoch marker — readers joining
-    // via SyncEpoch.readAt always see a consistent multi-table state,
-    // never table A's new sync with table B's old one
+    // snapshot mode stages EVERY table invisibly, then publishes; --epoch
+    // adds ONE epoch marker over the commits — readers joining via
+    // SyncEpoch.readAt always see a consistent multi-table state, never
+    // table A's new sync with table B's old one
+    val live = tables.filter(healthy)
     val synced =
-      if (epoch && snapshotted) {
-        import scala.concurrent.{Await, Future, ExecutionContext}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        val staged = Await.result(
-          Future.traverse(tables.filter(healthy))(t =>
-            Future(job.stageSync(spark, t))), Duration.Inf)
-        val (results, epochId) = job.publishEpoch(spark, staged)
-        epochId.foreach(id =>
-          System.err.println(s"[pipeline] published sync epoch $id"))
-        results
+      if (snapshotted) {
+        val staged = job.stageAll(spark, live)
+        if (epoch) {
+          val (results, epochId) = job.publishEpoch(spark, staged)
+          epochId.foreach(id =>
+            System.err.println(s"[pipeline] published sync epoch $id"))
+          results
+        } else job.publish(spark, staged)
       } else {
         if (epoch)
           System.err.println("[pipeline] WARNING: --epoch needs --snapshots; skipped")
-        job.syncAll(spark, tables.filter(healthy))
+        job.syncAll(spark, live)
       }
 
     // maintenance (optional): compact the small-file ingest layout before
     // verification reads it back — failures abort before the swap, so the
     // verify stage still sees a complete warehouse either way
     compactTargetBytes.foreach { target =>
-      tables.filter(healthy).foreach { t =>
+      live.foreach { t =>
         val r = Compaction.compact(spark, warehouseDir, t, target)
         if (r.filesAfter < r.filesBefore)
           System.err.println(s"[pipeline] compacted $t: ${r.filesBefore} -> ${r.filesAfter} files")
@@ -167,7 +167,7 @@ object PipelineRunner {
     // debt from manifests alone and pay exactly what was named
     val maintained: Map[String, Seq[String]] =
       if (autoMaintain && snapshotted)
-        tables.filter(healthy).map { t =>
+        live.map { t =>
           val paid = maintainTable(spark, warehouseDir, t, retainLast = retainLast)
           if (paid.nonEmpty)
             System.err.println(s"[pipeline] maintained $t: ${paid.mkString(", ")}")

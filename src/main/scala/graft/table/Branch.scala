@@ -67,16 +67,8 @@ object Branch {
     val rem = node.putArray("removed"); removed.foreach(rem.add)
     val sum = node.putObject("summary")
     summary.foreach { case (key, v) => sum.put(key, v) }
-    val tmp = new Path(branchDir(tableDir, name),
-      s".tmp-${java.util.UUID.randomUUID()}.json")
-    val out = fs.create(tmp, false)
-    out.write(SnapshotLog.mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(node))
-    out.close()
-    val won = LogStore.forFileSystem(fs)
-      .putIfAbsent(fs, tmp, entryPath(tableDir, name, k))
-    fs.delete(tmp, false)
-    won
+    LogStore.putBytesIfAbsent(fs, entryPath(tableDir, name, k),
+      SnapshotLog.mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(node))
   }
 
   private def readEntry(spark: SparkSession, tableDir: String, name: String,

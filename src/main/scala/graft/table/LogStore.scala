@@ -270,6 +270,18 @@ object LogStore {
       else AtomicRenameLogStore
     }
 
+  /** Publish `bytes` at `target` iff no file exists there, through the
+    * file system's [[LogStore]]: the bytes are written to a dot-temp file
+    * in the target's directory, deleted again whether or not this caller
+    * won. Returns true iff THIS caller won the target; what a loser does
+    * is the caller's decision. */
+  def putBytesIfAbsent(fs: FileSystem, target: Path, bytes: Array[Byte]): Boolean = {
+    val tmp = new Path(target.getParent, s".tmp-${java.util.UUID.randomUUID()}.json")
+    val out = fs.create(tmp, false)
+    try out.write(bytes) finally out.close()
+    try forFileSystem(fs).putIfAbsent(fs, tmp, target) finally fs.delete(tmp, false)
+  }
+
   /** Install the commit primitive for this process (deployment config:
     * called once at startup, e.g. with a [[ConditionalPutLogStore]] over
     * the deployment's CAS service for object-store warehouses). */

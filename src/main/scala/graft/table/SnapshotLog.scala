@@ -589,19 +589,14 @@ object SnapshotLog {
     val sumNode = root.putObject("summary")
     summary.foreach { case (k, v) => sumNode.put(k, v) }
 
-    val tmp = new Path(logDir(tableDir), s".tmp-${java.util.UUID.randomUUID()}.json")
-    val out = fs.create(tmp, false)
-    out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
-    out.close()
-    val target = manifestPath(tableDir, id)
     // Atomic no-clobber publish, delegated to the scheme's [[LogStore]]:
     // hard link on file: (POSIX rename silently overwrites — EEXIST on
     // link is the kernel-atomic arbiter), rename on HDFS-family stores
     // (the namenode refuses existing targets), and a CAS-guarded
     // conditional put on object stores (where neither primitive exists
     // natively — the S3/MinIO case the reference's warehouse lives in).
-    val won = LogStore.forFileSystem(fs).putIfAbsent(fs, tmp, target)
-    fs.delete(tmp, false) // the linked target survives; losers clean up too
+    val won = LogStore.putBytesIfAbsent(fs, manifestPath(tableDir, id),
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
     if (!won)
       throw new ConcurrentCommitException(
         s"snapshot $id of $tableDir was committed by another writer")
@@ -817,12 +812,8 @@ object SnapshotLog {
         root.put("live_count", live.size)
         Some(rel)
       }
-    val tmp = new Path(logDir(tableDir), s".ckpt-${java.util.UUID.randomUUID()}.json")
-    val out = fs.create(tmp, false)
-    out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
-    out.close()
-    val won = LogStore.forFileSystem(fs).putIfAbsent(fs, tmp, target)
-    fs.delete(tmp, false)
+    val won = LogStore.putBytesIfAbsent(fs, target,
+      mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
     if (!won)
       // a concurrent writer published the (value-identical) checkpoint
       // first: this attempt's parquet rows are garbage — reclaim now
@@ -1432,6 +1423,14 @@ object SnapshotLog {
       registryAt(spark, tableDir))
   }
 
+  /** The rows a staged append's files hold, read back from their parquet
+    * footers on the driver — the write-audit's physical check, with no
+    * Spark job. */
+  def stagedRowCount(spark: SparkSession, tableDir: String, token: String): Long = {
+    val (files, _) = readStagedManifest(fsOf(spark, tableDir), tableDir, token)
+    GraftParquetSchema.rowCount(spark, files.map(_.path))
+  }
+
   /** Publish a staged append as one ordinary atomic `append` snapshot
     * (retrying the id race like any append — the delta is
     * state-independent), then drop the staged manifest. The commit
@@ -1485,12 +1484,8 @@ object SnapshotLog {
     require(ids.contains(id),
       s"cannot tag snapshot $id of $tableDir: not retained (${ids.mkString(",")})")
     fs.mkdirs(new Path(logDir(tableDir), "_tags"))
-    val tmp = new Path(logDir(tableDir), s"_tags/.tmp-${java.util.UUID.randomUUID()}.json")
-    val out = fs.create(tmp, false)
-    out.write(s"""{"snapshot_id": $id}""".getBytes("UTF-8"))
-    out.close()
-    val won = LogStore.forFileSystem(fs).putIfAbsent(fs, tmp, tagPath(tableDir, name))
-    fs.delete(tmp, false)
+    val won = LogStore.putBytesIfAbsent(fs, tagPath(tableDir, name),
+      s"""{"snapshot_id": $id}""".getBytes("UTF-8"))
     if (!won) throw new IllegalArgumentException(
       s"tag '$name' of $tableDir already exists (tags are immutable; removeTag first)")
   }

@@ -117,14 +117,8 @@ object SyncEpoch {
         val n = tn.putObject(t)
         n.put("dir", pin.dir); n.put("snapshot", pin.snapshot)
       }
-      val tmp = new Path(epochRoot(warehouseDir),
-        s".tmp-${java.util.UUID.randomUUID()}.json")
-      val out = fs.create(tmp, false)
-      out.write(mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
-      out.close()
-      val won = LogStore.forFileSystem(fs)
-        .putIfAbsent(fs, tmp, markerPath(warehouseDir, id))
-      fs.delete(tmp, false)
+      val won = LogStore.putBytesIfAbsent(fs, markerPath(warehouseDir, id),
+        mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(root))
       if (won) return id
       attempt += 1
       if (attempt > maxRetries) throw new SnapshotLog.ConcurrentCommitException(

@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.HadoopFSUtils
+import scala.jdk.CollectionConverters._
 
 /** Parquet schema inference on the DRIVER. `spark.read.parquet(paths)`
   * without a schema reads ONE footer to learn the schema, but it does so
@@ -67,6 +68,21 @@ object GraftParquetSchema {
           }
       }
     }.toOption.flatten
+  }
+
+  /** The rows the parquet files at `paths` hold, summed from their
+    * footers' row-group counts on the driver. A `count()` over parquet
+    * that needs no column reads the same row-group counts, so this is
+    * the same physical read-back without a Spark job. A missing file or
+    * an unreadable footer throws. */
+  def rowCount(spark: SparkSession, paths: Seq[String]): Long = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    paths.map { p =>
+      val path = new Path(p)
+      val st = path.getFileSystem(hadoopConf).getFileStatus(path)
+      ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, hadoopConf),
+        ParquetMetadataConverter.NO_FILTER).getBlocks.asScala.map(_.getRowCount).sum
+    }.sum
   }
 
   /** The schema `spark.read.parquet(paths: _*)` infers, with no Spark

@@ -22,6 +22,55 @@ class CdcSpec extends AnyFunSuite {
     (base, store, new SyncJob(source, store, s"$base/warehouse", singleFile = true))
   }
 
+  /** The four reference topics copied into a fresh dir. */
+  def topicCopy(): String = {
+    val dir = Files.createTempDirectory("graft-topics").toString
+    PipelineRunner.DefaultTables.map(t => s"${Schemas.topicFor(t)}.jsonl")
+      .foreach(n => Files.copy(Paths.get(fixtures, n), Paths.get(dir, n)))
+    dir
+  }
+
+  /** Each of the four topics in `dir` grows by its first `n` records
+    * again, at the offsets past its end — new events between two cron
+    * fires. */
+  def grow(dir: String, n: Int = 4): Unit = PipelineRunner.DefaultTables.foreach { t =>
+    import scala.jdk.CollectionConverters._
+    val p = Paths.get(dir, s"${Schemas.topicFor(t)}.jsonl")
+    val lines = Files.readAllLines(p).asScala.toSeq.filter(_.trim.nonEmpty)
+    val offset = "\"offset\": (\\d+)".r
+    val next = lines.map(l => offset.findFirstMatchIn(l).get.group(1).toLong).max + 1
+    val added = lines.take(n).zipWithIndex.map { case (l, i) =>
+      offset.replaceFirstIn(l, s""""offset": ${next + i}""") }
+    Files.write(p, (lines ++ added).mkString("", "\n", "\n").getBytes("UTF-8"))
+  }
+
+  /** Every Spark job `body` runs, counted on the shared context: the
+    * suites run serially in one JVM, and the sync fan-out's jobs run on
+    * pool threads, which a job group would not see. A marker job after
+    * `body` flushes the listener bus (its events arrive in order). */
+  def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val marker = s"cdc-jobs-marker-${System.nanoTime}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.job.description") == marker))
+          seen.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener bus never delivered the marker job")
+    } finally sc.removeSparkListener(l)
+    jobs.get()
+  }
+
   test("decode orders: schema, projection order, provenance columns") {
     val df = Envelope.decode(
       source.read(spark, Schemas.topicFor("orders"), StartingOffsets.Earliest), "orders")
@@ -73,7 +122,7 @@ class CdcSpec extends AnyFunSuite {
   }
 
   test("sync job: full first sync, then empty delta, then idempotent state") {
-    val (_, store, job) = freshDirs()
+    val (base, store, job) = freshDirs()
     val r1 = job.sync(spark, "orders")
     assert(r1.records == 10 && r1.maxOffset == 9 && r1.wrote)
     assert(store.lastOffset("orders") == 9)
@@ -85,6 +134,10 @@ class CdcSpec extends AnyFunSuite {
     assert(r2.records == 0 && !r2.wrote)
     assert(store.lastOffset("orders") == 9)
     assert(job.verifyCounts(spark, Seq("orders"))("orders") == 10)
+    // an unreadable sink file is an error, never a count of 0 rows
+    Files.write(Paths.get(base, "warehouse/orders_parquet/part-torn.parquet"),
+      "not parquet".getBytes)
+    intercept[Exception](job.verifyCounts(spark, Seq("orders")))
   }
 
   test("partitioned warehouse layout: sync_date dirs exist and prune on read") {
@@ -306,6 +359,43 @@ class CdcSpec extends AnyFunSuite {
     assert(r4.allConsistent, s"post-compaction mismatch: ${r4.tables}")
   }
 
+  test("flat compaction: a crash between the swap's renames loses no row") {
+    val topics = topicCopy()
+    val base = Files.createTempDirectory("graft-swapcrash").toString
+    val (wh, offs) = (s"$base/warehouse", s"$base/offsets")
+    assert(PipelineRunner.run(spark, topics, wh, offs, tables = Seq("orders")).allConsistent)
+    // the swap's state after `live -> .bak` and before `.tmp -> live`: a
+    // complete compacted copy written and counted, the original aside
+    val live = s"$wh/orders_parquet"
+    spark.read.parquet(live).coalesce(1).write.parquet(s"$live.compact.tmp")
+    Files.move(Paths.get(live), Paths.get(s"$live.compact.bak"))
+    grow(topics)
+    val r = PipelineRunner.run(spark, topics, wh, offs, tables = Seq("orders"),
+      compactTargetBytes = Some(1L << 30))
+    val orders = r.tables.head
+    assert(r.allConsistent && orders.synced == 4 && orders.sinkRows == 14, r.tables)
+    val back = spark.read.parquet(live)
+    assert(back.count() == 14 &&
+      back.select("kafka_offset").distinct().count() == 14)
+    assert(!Files.exists(Paths.get(s"$live.compact.tmp")) &&
+      !Files.exists(Paths.get(s"$live.compact.bak")))
+  }
+
+  test("an incremental snapshot+epoch pipeline run stays within its Spark job bound") {
+    val topics = topicCopy()
+    val base = Files.createTempDirectory("graft-jobcount").toString
+    def run() = PipelineRunner.run(spark, topics, s"$base/warehouse", s"$base/offsets",
+      snapshotted = true, epoch = true)
+    assert(run().allConsistent)
+    grow(topics)
+    var report: PipelineRunner.PipelineReport = null
+    val jobs = jobsOf { report = run() }
+    assert(report.allConsistent && report.tables.forall(_.synced == 4), report.tables)
+    // per table: the staging write, plus the reconcile's source count;
+    // the audit and the verify read parquet footers on the driver
+    assert(jobs <= 12, s"$jobs Spark jobs for one incremental run")
+  }
+
   test("warehouse round-trips through ORC and CSV with values preserved") {
     // format coverage beyond the reference's parquet-only sink: the same
     // decoded frame written/read via ORC (typed, columnar) and CSV
@@ -441,9 +531,20 @@ class CdcSpec extends AnyFunSuite {
     // verifyCounts reads through the manifest
     assert(job.verifyCounts(spark, Seq("orders"))("orders") == 10)
 
-    // idempotent: an empty delta commits no snapshot
-    val r3 = job.sync(spark, "orders")
-    assert(!r3.wrote && SnapshotLog.currentSnapshotId(spark, dir).contains(2L))
+    // idempotent: an empty delta runs ONE Spark job (the staging write,
+    // which writes no file), commits no snapshot, leaves the offsets and
+    // leaves no stage behind — through sync and through stageSync alike
+    def dataDirs() = new java.io.File(s"$dir/data").list().toSet
+    val (dirsBefore, offsetsBefore) = (dataDirs(), store.lastOffsets("orders"))
+    var r3: SyncResult = null
+    assert(jobsOf { r3 = job.sync(spark, "orders") } == 1)
+    assert(!r3.wrote && r3.records == 0 && r3.maxOffset == 9)
+    var st: job.StagedSync = null
+    assert(jobsOf { st = job.stageSync(spark, "orders") } == 1)
+    assert(st.token.isEmpty && st.records == 0)
+    assert(SnapshotLog.currentSnapshotId(spark, dir).contains(2L))
+    assert(store.lastOffsets("orders") == offsetsBefore)
+    assert(SnapshotLog.stagedTokens(spark, dir).isEmpty && dataDirs() == dirsBefore)
 
     // manifests carry per-file offset stats for metadata pruning
     val files = SnapshotLog.filesAt(spark, dir)
