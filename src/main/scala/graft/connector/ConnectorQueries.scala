@@ -206,8 +206,9 @@ object ConnectorQueries {
     * delete-only delta lands eqdelete masks, then a LATER append
     * re-inserts half the deleted keys — the seq-rule state (a key's
     * delete applies only to rows whose file predates it). The build
-    * REQUIRES the masks and the VECTORIZED eq-masked scan (`eqKeys=` in
-    * the batch-scan description, never the Row bridge); the oracle pins
+    * REQUIRES the masks and the VECTORIZED eq-masked scan over the one
+    * mask file (`eqMaskFiles=1` in the batch-scan description, never
+    * the Row bridge); the oracle pins
     * that the per-batch key probe loses exactly the dead rows and keeps
     * every re-insert. */
   private def eqMorWarehouse(s: SparkSession, d: String): String =
@@ -226,7 +227,7 @@ object ConnectorQueries {
         "the delete-only delta must land as an equality mask")
       new GraftScanBuilder(s, dir).build() match {
         case b: GraftV2BatchScan =>
-          require(b.description().contains("eqKeys="),
+          require(b.description().contains("eqMaskFiles=1"),
             s"the eq-masked read must vectorize: ${b.description()}")
         case other => throw new IllegalStateException(
           s"expected the eq-masked batch scan, got $other")
@@ -239,7 +240,7 @@ object ConnectorQueries {
     * re-insert of half the deleted keys (the seq-rule MOR state). The
     * build REQUIRES the eq mask, the key-grouped reporting to HOLD
     * (an eq-delete removes rows, never moves them between buckets) and
-    * the vectorized eq probe (`eqKeys=` in the scan description); the
+    * the vectorized eq probe (`eqMaskFiles=1` in the scan description); the
     * oracle pins the zero-exchange masked join changed NOTHING. */
   private def spjEqMorWarehouse(s: SparkSession, d: String): String =
     Fixtures.memo(s, "graft-conn-spjeq", d) { base =>
@@ -263,7 +264,7 @@ object ConnectorQueries {
         "the delete-only delta must land as an equality mask")
       new GraftScanBuilder(s, s"$base/orders_e").build() match {
         case b: GraftV2BatchScan =>
-          require(b.description().contains("eqKeys="),
+          require(b.description().contains("eqMaskFiles=1"),
             s"the eq-masked read must vectorize: ${b.description()}")
           require(b.outputPartitioning().isInstanceOf[
             org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning],
@@ -296,7 +297,7 @@ object ConnectorQueries {
         "the delete-only delta must land as an equality mask")
       new GraftScanBuilder(s, dir).build() match {
         case b: GraftV2BatchScan =>
-          require(b.description().contains("eqKeys="),
+          require(b.description().contains("eqMaskFiles=1"),
             s"the DATE-keyed eq read must vectorize: ${b.description()}")
         case other => throw new IllegalStateException(
           s"expected the eq-masked batch scan, got $other")
@@ -309,7 +310,7 @@ object ConnectorQueries {
     * + UPDATE through SupportsRowLevelOperations — whose source scan
     * projects row ids OVER the pending equality mask. The build
     * REQUIRES that composed scan to be the vectorized batch scan
-    * (`rowIds=true` + `eqKeys=`, never the Row bridge) and both
+    * (`rowIds=true` + `eqMaskFiles=1`, never the Row bridge) and both
     * statements to land as guarded rowdelta commits; the oracle pins
     * the surviving rows. */
   private def eqRowDeltaWarehouse(s: SparkSession, d: String): String =
@@ -332,7 +333,7 @@ object ConnectorQueries {
       val probe = v.sql(
         s"SELECT o_orderkey, _graft_file, _graft_pos FROM $cat.orders_erd")
         .queryExecution.executedPlan.toString
-      require(probe.contains("rowIds=true") && probe.contains("eqKeys=") &&
+      require(probe.contains("rowIds=true") && probe.contains("eqMaskFiles=1") &&
           !probe.contains("GraftBridgeRelation"),
         s"the eq-masked row-id scan must vectorize:\n$probe")
       v.sql(s"DELETE FROM $cat.orders_erd WHERE o_orderkey % 9 = 4")
@@ -723,7 +724,7 @@ object ConnectorQueries {
       graft.table.Merge.deleteWhere(s, dir, col("o_orderstatus") === "P")
       val scan = new GraftScanBuilder(s, dir).build()
       require(scan.isInstanceOf[GraftV2BatchScan] &&
-        scan.description().contains("maskedFiles="),
+        scan.description().contains("posMaskFiles=2"),
         s"the masked read must plan VECTORIZED, got ${scan.description()}")
       base
     }

@@ -953,56 +953,29 @@ private[connector] final class GraftScanBuilder(spark: SparkSession,
           if (need < 0) zoneKept else zoneKept.take(need + 1)
         case None => zoneKept
       }
-      // the fast path: one bearing epoch whose column TYPES survive
-      // the visible merge — a REAL vectorized parquet Batch with
-      // runtime file filtering. POSITIONAL (r14) and EQUALITY (r15)
-      // masks stay ON this path (deletion-vector / folded-key reads),
-      // gated by a shared mask-debt budget (the manifests state it up
-      // front) so the plan-time loads stay bounded driver metadata;
-      // debt beyond the budget (compact overdue) reads via the bridge.
-      // Live field registries ride too (r15): inner reads request
-      // PHYSICAL names; only multi-epoch drift still bridges.
-      val (posDels, eqDels) = dels.partition(_.kind == "posdelete")
-      val posDebt = posDels.map(_.rows).sum
-      val eqDebt = eqDels.map(_.rows).sum
-      val maskBudget = spark.conf
-        .getOption("graft.v2.maskedScan.maxPositions")
-        .flatMap(_.toLongOption).getOrElse(4L * 1024 * 1024)
-      // requested scan-metadata columns (_graft_file/_graft_pos — the
-      // row-id face, every vanilla-session DELETE/UPDATE/MERGE's source
-      // scan) stay ON the fast path since r15: the vectorized read
-      // synthesizes them per file (the row-index generator column + a
-      // per-partition constant), no Row bridge
+      // the fast path: bearing epochs whose column TYPES promote into
+      // the visible merge — a REAL vectorized parquet Batch with runtime
+      // file filtering. POSITIONAL and EQUALITY masks stay ON this path:
+      // the scan hands each file the mask files its manifests say can
+      // hit it, and the reading task loads them — planning runs no job.
+      // Live field registries ride too (inner reads request PHYSICAL
+      // names), and so do requested scan-metadata columns
+      // (_graft_file/_graft_pos — the row-id face, every vanilla-session
+      // DELETE/UPDATE/MERGE's source scan), synthesized per file
       val needPos = required.fieldNames.exists(n =>
         n.equalsIgnoreCase(SnapshotLog.PosFileCol) ||
           n.equalsIgnoreCase(SnapshotLog.PosOrdCol))
-      // EQUALITY masks vectorize too (r15): the fold-to-(key → max
-      // delete seq) runs ONCE (memoized on the eqdelete file set,
-      // budget-gated like positions) and ships in the reader factory —
-      // including under ROW-ID projections (the DML source scan of an
-      // eq-masked table) and temporal keys; unsupported key shapes
-      // (key column absent, non-integral/non-string/non-temporal) keep
-      // the always-correct bridge
-      lazy val eqLoaded: Option[org.apache.spark.sql.graftshim.GraftEqMask] =
-        GraftEqMaskCache.getOrLoad(
-          eqDels.map(d => s"${d.path}#${d.rows}#${d.bytes}")
-            .sorted.mkString("|")) {
-          GraftEqMaskCache.load(spark, eqDels, visible, reg)
-        }
-      // eqOk LAST in the gate chain: the memoized load job runs only
-      // when every cheaper condition already passed
-      def eqOk: Boolean = eqDels.isEmpty || eqLoaded.isDefined
-      // a live FIELD REGISTRY (renamed/dropped columns) rides the fast
-      // path too since r15: the epoch schemas above are already LOGICAL
-      // (visibleState translates), so the conditions compare the right
-      // space — the scan only has to request PHYSICAL names from the
-      // files and emit the vectors as-is (vectors carry no names).
-      // DRIFTED epochs also ride (r15): the engine's vectorized parquet
-      // reader natively PROMOTES a file's narrower type to the
-      // requested merged type (int→long, float→double, …) and
-      // null-fills requested-but-absent columns, so any epoch mix whose
-      // fields all promote into the visible merge reads as ONE
-      // columnar scan; only genuinely incompatible drift bridges.
+      val eqDels = dels.filter(_.kind == "eqdelete")
+      val eqKey =
+        if (eqDels.isEmpty) None
+        else GraftV2BatchScan.eqKeyOf(spark, eqDels, visible, reg)
+      // DRIFTED epochs also ride: the engine's vectorized parquet reader
+      // natively PROMOTES a file's narrower type to the requested merged
+      // type (int→long, float→double, …) and null-fills
+      // requested-but-absent columns, so any epoch mix whose fields all
+      // promote into the visible merge reads as ONE columnar scan; only
+      // genuinely incompatible drift bridges. The epoch schemas are
+      // already LOGICAL (visibleState translates registries).
       def promotes(from: DataType, to: DataType): Boolean = (from, to) match {
         case (a, b) if a == b => true
         case (ByteType, ShortType | IntegerType | LongType) => true
@@ -1013,37 +986,11 @@ private[connector] final class GraftScanBuilder(spark: SparkSession,
         case _ => false
       }
       val fastPath =
-        (dels.isEmpty || posDebt + eqDebt <= maskBudget) &&
         epochSchemas.forall(_.fields.forall(f =>
           visible.fields.exists(v =>
             v.name == f.name && promotes(f.dataType, v.dataType)))) &&
-        eqOk
+        (eqDels.isEmpty || eqKey.isDefined)
       if (fastPath) {
-        // ONE bounded plan-time job loads the recorded positions
-        // (≤ maskBudget by the manifest gate above) into the per-file
-        // sorted ordinal arrays the reader filter consumes. The
-        // dedup+sort+group runs DISTRIBUTED and the driver collects
-        // one row per masked FILE (8 bytes per position — ~32 MB at
-        // the full default budget), never one row per position; keys
-        // normalize to the manifests' scheme-less representation.
-        // MEMOIZED on the posdelete file set (r15): the set is
-        // content-addressed snapshot state — standing read traffic
-        // re-planning the same snapshot pays ZERO jobs, and any commit
-        // that adds or compacts masks changes the key
-        val masks: Map[String, Array[Long]] =
-          if (posDels.isEmpty) Map.empty
-          else GraftMaskCache.getOrLoad(
-            posDels.map(d => s"${d.path}#${d.rows}#${d.bytes}")
-              .sorted.mkString("|")) {
-            import org.apache.spark.sql.functions.{col => c, collect_set, sort_array}
-            spark.read.parquet(posDels.map(_.path): _*)
-              .groupBy(c(SnapshotLog.PosFileCol))
-              .agg(sort_array(collect_set(c(SnapshotLog.PosOrdCol))).as("ps"))
-              .collect() // one row per masked FILE — bounded metadata
-              .map(r => new java.net.URI(r.getString(0)).getPath ->
-                r.getSeq[Long](1).toArray)
-              .toMap
-          }
         // declared bucket layout (durable props) → the scan can report
         // key-grouped partitioning for storage-partitioned joins
         val props = SnapshotLog.tableProps(spark, dir)
@@ -1082,64 +1029,13 @@ private[connector] final class GraftScanBuilder(spark: SparkSession,
         }
         new GraftV2BatchScan(spark, dir, visible, required, pushedData,
           kept, staticPruned = data.size - kept.size,
-          bucketSpec = bucketSpec, masks = masks, withPos = needPos,
-          eqMask = if (eqDels.isEmpty) None else eqLoaded, reg = reg)
+          bucketSpec = bucketSpec, withPos = needPos, dels = dels,
+          eqKey = eqKey, reg = reg)
       }
       else
         new GraftBridgeScan(dir, kept, dels, reg, required,
           prunedAway = data.size - kept.size, withPos = needPos)
   }
-}
-
-/** Process-wide memo of loaded positional masks (r15), keyed by the
-  * posdelete file SET (path + rows + bytes of every mask file): the
-  * loaded per-file ordinal arrays are a pure function of those
-  * immutable files, so the key is content-addressed snapshot state —
-  * no explicit invalidation exists or is needed (a commit adding masks
-  * or a compaction clearing them produces a DIFFERENT key; orphaned
-  * entries age out of the LRU). Bounded by TOTAL cached positions so
-  * standing traffic over many masked tables cannot hoard the driver
-  * heap (~8 bytes/position + key strings). */
-private[connector] object GraftMaskCache {
-  private val MaxCachedPositions = 32L * 1024 * 1024
-  private val cache =
-    new java.util.LinkedHashMap[String, Map[String, Array[Long]]](
-      16, 0.75f, true)
-  private var cachedPositions = 0L
-
-  private def sizeOf(v: Map[String, Array[Long]]): Long =
-    v.valuesIterator.map(_.length.toLong).sum
-
-  def getOrLoad(key: String)(miss: => Map[String, Array[Long]])
-      : Map[String, Array[Long]] = {
-    cache.synchronized {
-      val hit = cache.get(key)
-      if (hit != null) return hit
-    }
-    val v = miss
-    cache.synchronized {
-      if (!cache.containsKey(key)) {
-        cache.put(key, v)
-        cachedPositions += sizeOf(v)
-        // evict from the LRU end; the just-added key is most recent,
-        // so it survives unless it is the sole (over-budget) entry
-        val it = cache.entrySet().iterator()
-        while (cachedPositions > MaxCachedPositions && cache.size() > 1 &&
-            it.hasNext) {
-          val e = it.next()
-          if (e.getKey != key) {
-            cachedPositions -= sizeOf(e.getValue)
-            it.remove()
-          }
-        }
-      }
-    }
-    v
-  }
-
-  /** Test face: entry count (the job-count pin asserts a second plan
-    * of the same snapshot is a pure cache hit). */
-  private[connector] def entries: Int = cache.synchronized(cache.size())
 }
 
 /** Renames the column references of a pushed `sources.Filter` into the
@@ -1172,98 +1068,6 @@ private[connector] object GraftFilterRename {
     case StringEndsWith(a, v) => Some(StringEndsWith(phys(a), v))
     case StringContains(a, v) => Some(StringContains(phys(a), v))
     case _ => None
-  }
-}
-
-/** Process-wide memo of folded EQUALITY masks (r15), keyed like
-  * [[GraftMaskCache]] by the content-addressed eqdelete file set. The
-  * cached value is Option: None records "this mask set cannot
-  * vectorize" (unsupported key type / absent column) so the probe is
-  * not re-paid per plan either. Bounded by total cached keys. */
-private[connector] object GraftEqMaskCache {
-  private val MaxCachedKeys = 16L * 1024 * 1024
-  private val cache = new java.util.LinkedHashMap[
-    String, Option[org.apache.spark.sql.graftshim.GraftEqMask]](16, 0.75f, true)
-  private var cachedKeys = 0L
-
-  private def sizeOf(v: Option[org.apache.spark.sql.graftshim.GraftEqMask]): Long =
-    v.map(_.delSeqs.length.toLong).getOrElse(1L)
-
-  def getOrLoad(key: String)(
-      miss: => Option[org.apache.spark.sql.graftshim.GraftEqMask])
-      : Option[org.apache.spark.sql.graftshim.GraftEqMask] = {
-    cache.synchronized {
-      val hit = cache.get(key)
-      if (hit != null) return hit
-    }
-    val v = miss
-    cache.synchronized {
-      if (!cache.containsKey(key)) {
-        cache.put(key, v)
-        cachedKeys += sizeOf(v)
-        val it = cache.entrySet().iterator()
-        while (cachedKeys > MaxCachedKeys && cache.size() > 1 && it.hasNext) {
-          val e = it.next()
-          if (e.getKey != key) {
-            cachedKeys -= sizeOf(e.getValue)
-            it.remove()
-          }
-        }
-      }
-    }
-    v
-  }
-
-  /** Fold the pending eqdelete files to the shippable (sorted key →
-    * max delete seq) arrays — ONE bounded distributed job + a
-    * keys-count collect. Returns None for key shapes the vectorized
-    * filter can't serve (the bridge handles those). Null keys drop
-    * (SQL join semantics: null never matches). */
-  def load(spark: SparkSession, eqDels: Seq[SnapshotLog.DataFile],
-           visible: StructType,
-           reg: Option[graft.table.FieldRegistry] = None)
-      : Option[org.apache.spark.sql.graftshim.GraftEqMask] = {
-    import org.apache.spark.sql.types._
-    val (delAgg, keyCol) = SnapshotLog.foldMasks(spark, eqDels)
-    // the eqdelete key column carries the files' PHYSICAL name; its
-    // TYPE lives in the logical visible schema
-    val logicalKey = reg.flatMap(_.logicalOf(keyCol)).getOrElse(keyCol)
-    val keyField = visible.fields.find(_.name.equalsIgnoreCase(logicalKey))
-      // GraftEqMask.keyCol must stay PHYSICAL: the shim resolves it
-      // against the physical inner read schema
-      .map(_.copy(name = keyCol))
-    keyField.map(_.dataType) match {
-      case Some(ByteType | ShortType | IntegerType | LongType) =>
-        val rows = delAgg.collect().filter(!_.isNullAt(0))
-        val pairs = rows.map(r =>
-          (r.get(0).asInstanceOf[Number].longValue(), r.getLong(1)))
-          .sortBy(_._1)
-        Some(org.apache.spark.sql.graftshim.GraftEqMask(
-          keyField.get.name, pairs.map(_._1), Array.empty, pairs.map(_._2)))
-      case Some(StringType) =>
-        val rows = delAgg.collect().filter(!_.isNullAt(0))
-        val u8 = org.apache.spark.unsafe.types.UTF8String.fromString _
-        val pairs = rows.map(r => (r.getString(0), r.getLong(1)))
-          .sortWith((a, b) => u8(a._1).compareTo(u8(b._1)) < 0)
-        Some(org.apache.spark.sql.graftshim.GraftEqMask(
-          keyField.get.name, Array.empty, pairs.map(_._1), pairs.map(_._2)))
-      case Some(DateType | TimestampType) =>
-        // temporal keys (r15) fold DISTRIBUTED-side into the internal
-        // long domain the key vectors carry — dates epoch days,
-        // timestamps epoch micros — so the probe compares raw cells
-        val toLong =
-          if (keyField.get.dataType == DateType) "unix_date"
-          else "unix_micros"
-        val rows = delAgg
-          .selectExpr(s"$toLong(`${keyCol}`) AS k", "_graft_del_seq")
-          .collect().filter(!_.isNullAt(0))
-        val pairs = rows.map(r =>
-          (r.get(0).asInstanceOf[Number].longValue(), r.getLong(1)))
-          .sortBy(_._1)
-        Some(org.apache.spark.sql.graftshim.GraftEqMask(
-          keyField.get.name, pairs.map(_._1), Array.empty, pairs.map(_._2)))
-      case _ => None // absent or unsupported key type: bridge
-    }
   }
 }
 

@@ -40,9 +40,11 @@ import graft.table.SnapshotLog
   *    to the resolved snapshot. In a session with
   *    [[graft.functions.GraftExtensions]], [[GraftV2ReadRule]] serves
   *    every batch read of it through [[GraftV2Table]]'s scan: masked
-  *    files read vectorized, pushed filters prune files from the
-  *    manifests, and debt beyond the mask budget falls back to the
-  *    scan's own [[GraftBridgeScan]]. A masked table therefore stays a
+  *    files read vectorized, each task loading only the mask files the
+  *    manifests say can hit its file, and pushed filters prune files
+  *    from the manifests; drift that does not promote and equality keys
+  *    the scan cannot probe fall back to the scan's own
+  *    [[GraftBridgeScan]]. A masked table therefore stays a
   *    merge-on-read table between maintenance runs instead of having to
   *    be rewritten to be read cheaply. Without the extensions (and for
   *    INSERT/DML targets, which keep their V1 resolution) the relation

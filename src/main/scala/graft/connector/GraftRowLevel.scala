@@ -150,7 +150,8 @@ private[connector] final class GraftDeltaWrite(
       sortedBy = r => if (r.sorted) bucketSpec.map(_._1) else None)
     val posFiles = results.flatMap(_.pos).filter(_.rows > 0).map(p =>
       SnapshotLog.DataFile(p.path, p.rows, p.bytes, None, None,
-        kind = "posdelete"))
+        kind = "posdelete",
+        parts = p.files.map(SnapshotLog.PosFileCol -> _).toMap))
     if (dataFiles.isEmpty && posFiles.isEmpty) return // matched nothing
     SnapshotLog.commitPinned(spark, dir, baseId, "rowdelta",
       added = posFiles ++ dataFiles, removed = Seq.empty,

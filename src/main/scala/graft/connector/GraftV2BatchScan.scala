@@ -8,7 +8,8 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graftshim.{GraftFileSpec, GraftMaskFile, GraftParquetShim}
+import org.apache.spark.sql.types._
 
 import graft.table.{Constraints, SnapshotLog}
 import graft.table.SnapshotLog.DataFile
@@ -18,16 +19,17 @@ import graft.table.SnapshotLog.DataFile
   * codegen-friendly), with [[SupportsRuntimeFiltering]] — the V2 face of
   * dynamic partition pruning for the table format. Eligibility mirrors
   * the V1 relation's fast path ([[GraftDataSource.relationFor]]):
-  * one bearing schema epoch whose column types survive the visible
-  * merge (parquet null-fills later-declared columns natively) — and,
-  * since r14/r15, POSITIONAL and EQUALITY masks within the debt
-  * budget, row-id projections, and live FIELD REGISTRIES (renames /
-  * drops — the inner read requests physical names), type-promoting
-  * drifted epochs, temporal equality keys and row-id reads of
-  * eq-masked tables all ride this path too: the standing read traffic
-  * stays columnar instead of degrading to the Row bridge. Over-budget
-  * debt, genuinely incompatible drift and unsupported equality-key
-  * types stay on the always-correct [[GraftBridgeScan]].
+  * bearing schema epochs whose column types promote into the visible
+  * merge (parquet null-fills later-declared columns natively).
+  * POSITIONAL and EQUALITY masks, row-id projections, live FIELD
+  * REGISTRIES (renames / drops — the inner read requests physical
+  * names) and temporal equality keys all ride this path: the standing
+  * read traffic stays columnar instead of degrading to the Row bridge.
+  * Masks apply in the reading task, the Iceberg delete-file shape: the
+  * scan hands each data file the mask files its manifests say can hit
+  * it ([[fileSpecs]]), so planning runs no Spark job. Drift that does
+  * not promote and equality keys of other types stay on the
+  * always-correct [[GraftBridgeScan]].
   *
   * RUNTIME file pruning: when this scan sits under a join whose other
   * side is selectively filtered, Catalyst's partition-pruning rule sees
@@ -58,25 +60,19 @@ private[connector] final class GraftV2BatchScan(
       * props) — reported as [[KeyGroupedPartitioning]] when every kept
       * file provably holds ONE bucket residue. */
     bucketSpec: Option[(String, Int)] = None,
-    /** Pending POSITIONAL delete masks, file path → sorted deleted row
-      * ordinals (r14): the deletion-vector read. Non-empty masks keep
-      * the scan on the vectorized columnar path — masked files read
-      * through a per-batch zero-copy selection wrapper
-      * ([[org.apache.spark.sql.graftshim.GraftSelectedColumnVector]])
-      * instead of falling back to the Row bridge. Loaded once at plan
-      * time, bounded by `graft.v2.maskedScan.maxPositions`. */
-    masks: Map[String, Array[Long]] = Map.empty,
     /** Projection includes the scan-metadata columns (`_graft_file`/
       * `_graft_pos`, r15): the vectorized ROW-ID read — one partition
       * per file (the file is a per-partition constant, the row index
       * resets per file), so key-grouped reporting is withheld. This is
       * the scan under every vanilla-session DELETE/UPDATE/MERGE. */
     withPos: Boolean = false,
-    /** Folded EQUALITY mask (r15): (sorted key → max delete seq)
-      * arrays, budget-gated driver metadata. Files whose commit seq is
-      * below some key's delete seq filter rows per batch inside the
-      * columnar read; newer files (re-inserts) pay nothing. */
-    eqMask: Option[org.apache.spark.sql.graftshim.GraftEqMask] = None,
+    /** The pinned snapshot's live mask files, positional and equality:
+      * manifest entries only — their contents load in the reading
+      * tasks. */
+    dels: Seq[DataFile] = Nil,
+    /** The equality key (the mask files' PHYSICAL column, typed as the
+      * visible schema types it); defined iff equality masks are live. */
+    eqKey: Option[StructField] = None,
     /** Live FIELD REGISTRY (r15): the scan's OUTPUT stays logical, but
       * the files hold physical names — inner parquet reads request the
       * translated schemas (vectors carry no names, so emitting them
@@ -90,13 +86,39 @@ private[connector] final class GraftV2BatchScan(
   @volatile private var kept: Seq[DataFile] = staticKept
   @volatile private var runtimePruned: Int = 0
 
-  /** Highest delete seq of the equality mask — a file whose seq is at
-    * or above it can contain no masked row (re-inserts survive by the
-    * `del_seq <= file_seq` rule). */
-  private val eqMaxDelSeq: Long =
-    eqMask.map(_.delSeqs.max).getOrElse(Long.MinValue)
-  private def eqApplies(f: DataFile): Boolean =
-    eqMask.isDefined && f.seq < eqMaxDelSeq
+  private val (posDels, eqDels) = dels.partition(_.kind == "posdelete")
+
+  /** Each positional mask with the data files its manifest entry names
+    * (the recorded `_graft_file` set, normalized to manifest paths);
+    * None when unrecorded — over the partition-value cap, or written
+    * before posdelete writers recorded the set. */
+  private val posNames: Seq[(DataFile, Option[Set[String]])] =
+    posDels.map(m => m -> m.parts.get(SnapshotLog.PosFileCol)
+      .map(_.map(GraftFileSpec.pathOf).toSet))
+
+  /** The read spec of `f`: the mask files that can hit it, from
+    * manifests alone. Both kinds must be younger than the file (a
+    * consolidated mask's embedded delete seqs never exceed its own
+    * seq, so no applicable mask is dropped); a positional mask must
+    * also name the file or record no set, and an equality mask's key
+    * zone must overlap the file's where both record one. */
+  private def specOf(f: DataFile): GraftFileSpec = {
+    val zone = eqKey.flatMap(k => f.stats.get(k.name))
+    def overlaps(m: DataFile): Boolean =
+      (zone, eqKey.flatMap(k => m.stats.get(k.name))) match {
+        case (Some((lo, hi)), Some((mLo, mHi))) => mLo <= hi && lo <= mHi
+        case _ => true
+      }
+    def ref(m: DataFile) = GraftMaskFile(m.path, m.bytes, m.seq)
+    GraftFileSpec(f.path, f.bytes, f.seq,
+      posMasks = posNames.collect {
+        case (m, names) if m.seq > f.seq && names.forall(_(f.path)) => ref(m) },
+      eqMasks = eqDels.collect { case m if m.seq > f.seq && overlaps(m) => ref(m) },
+      keyZone = zone)
+  }
+
+  /** The read spec of every file in the CURRENT list (a test face too). */
+  private[connector] def fileSpecs: Seq[GraftFileSpec] = kept.map(specOf)
 
   /** The files' PHYSICAL twins of the logical schemas — what every
     * inner parquet read requests (identity when no registry lives). */
@@ -127,14 +149,17 @@ private[connector] final class GraftV2BatchScan(
 
   override def toBatch: Batch = this
 
+  /** Mask figures come from the manifests: each kind's live file and
+    * entry counts, and how many kept files were handed a mask file. */
   override def description(): String =
     s"GraftBatchScan(files=${kept.size}, pruned=$staticPruned, " +
       s"rtPruned=$runtimePruned, " +
-      (if (masks.nonEmpty)
-        s"maskedFiles=${masks.size}, maskedRows=${masks.valuesIterator.map(_.length.toLong).sum}, "
-       else "") +
+      (if (posDels.isEmpty) ""
+       else s"posMaskFiles=${posDels.size}, posMaskRows=${posDels.map(_.rows).sum}, ") +
+      (if (eqDels.isEmpty) ""
+       else s"eqMaskFiles=${eqDels.size}, eqMaskRows=${eqDels.map(_.rows).sum}, ") +
+      (if (dels.isEmpty) "" else s"filesWithMasks=${fileSpecs.count(_.masked)}, ") +
       (if (withPos) "rowIds=true, " else "") +
-      eqMask.fold("")(e => s"eqKeys=${e.delSeqs.length}, ") +
       s"cols=${required.fieldNames.mkString(",")})"
 
   /** Columns a runtime filter could prune files on: anything with a zone
@@ -260,68 +285,40 @@ private[connector] final class GraftV2BatchScan(
 
   private def buildInner(): Batch = bucketGroups match {
     case _ if withPos =>
-      // ROW-ID read: every file its own partition, masks (positional
-      // AND equality) applied by original ordinal, metadata columns
-      // synthesized in the reader
-      org.apache.spark.sql.graftshim.GraftParquetShim.posBatch(
-        spark, kept.map(f =>
-          org.apache.spark.sql.graftshim.GraftPosFileSpec(
-            f.path, f.bytes, masks.getOrElse(f.path, Array.empty[Long]),
-            f.seq, eqApplies(f))),
-        physVisible, required,
+      // ROW-ID read: every file its own partition, masks applied by
+      // original ordinal, metadata columns synthesized in the reader
+      GraftParquetShim.posBatch(spark, fileSpecs, physVisible, required,
         SnapshotLog.PosFileCol, SnapshotLog.PosOrdCol, pushed,
-        physOutputSchema = physRequired, eqMask = eqMask)
-    case Some(gs) if masks.nonEmpty || eqMask.isDefined =>
-      org.apache.spark.sql.graftshim.GraftParquetShim.bucketedMaskedBatch(
-        spark, gs.map { case (b, fs) => (b, fs.map(f =>
-          org.apache.spark.sql.graftshim.GraftMaskedFileRef(
-            f.path, f.bytes, masks.getOrElse(f.path, Array.empty[Long]),
-            f.seq, eqApplies(f)))) },
-        physVisible, physRequired, pushed, eqMask = eqMask)
+        physOutputSchema = physRequired, eqKey = eqKey)
     case Some(gs) =>
-      org.apache.spark.sql.graftshim.GraftParquetShim.bucketedBatch(
-        spark, gs.map { case (b, fs) => (b, fs.map(f => (f.path, f.bytes))) },
-        physVisible, physRequired, pushed)
-    case None if masks.nonEmpty || eqMask.isDefined =>
-      // masked files (one partition each, positional ordinals and/or
-      // the equality key set filtered in the reader) + untouched files
-      // on the plain packed batch — all vectorized
-      val (maskedF, plainF) = kept.partition(f =>
-        masks.get(f.path).exists(_.nonEmpty) || eqApplies(f))
-      if (maskedF.isEmpty)
-        org.apache.spark.sql.graftshim.GraftParquetShim.parquetBatch(
-          spark, kept.map(f => (f.path, f.bytes)), physVisible, physRequired,
-          pushed)
-      else
-        org.apache.spark.sql.graftshim.GraftParquetShim.maskedBatch(
-          spark, plainF.map(f => (f.path, f.bytes)),
-          maskedF.map(f => org.apache.spark.sql.graftshim.GraftMaskedFileSpec(
-            f.path, f.bytes,
-            masks.getOrElse(f.path, Array.empty[Long]),
-            f.seq, eqApplies(f))),
-          physVisible, physRequired, pushed, eqMask = eqMask)
+      GraftParquetShim.bucketedBatch(spark,
+        gs.map { case (b, fs) => (b, fs.map(specOf)) },
+        physVisible, physRequired, pushed, eqKey)
     case None =>
-      org.apache.spark.sql.graftshim.GraftParquetShim.parquetBatch(
-        spark, kept.map(f => (f.path, f.bytes)), physVisible, physRequired,
-        pushed)
+      GraftParquetShim.maskedBatch(spark, fileSpecs, physVisible,
+        physRequired, pushed, eqKey)
   }
 
   /** Manifest-exact statistics over the CURRENT (runtime-filtered) file
-    * list; pending positional masks subtract their recorded (distinct)
-    * ordinals — each names one physical row of one live file, so the
-    * difference IS the logical row count. */
+    * list. Positional masks subtract entries without ever undercounting:
+    * one commit's masks are disjoint (each row id is deleted once) while
+    * masks of different commits may overlap, so only the largest
+    * commit's entries subtract, and only from masks whose named files
+    * are all kept — exact for a single DELETE. */
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong =
       java.util.OptionalLong.of(math.max(1L, kept.map(_.bytes).sum))
     override def numRows(): java.util.OptionalLong =
       // an equality mask's subtraction is unknowable from metadata (a
       // key may match zero or many rows) — like the bridge, report none
-      if (eqMask.isDefined) java.util.OptionalLong.empty()
+      if (eqDels.nonEmpty) java.util.OptionalLong.empty()
       else {
-        val masked = kept.iterator
-          .flatMap(f => masks.get(f.path)).map(_.length.toLong).sum
-        java.util.OptionalLong.of(
-          math.max(0L, kept.map(_.rows).sum - masked))
+        val keptPaths = kept.map(_.path).toSet
+        val masked = posNames
+          .collect { case (m, Some(names)) if names.subsetOf(keptPaths) => m }
+          .groupBy(_.seq).valuesIterator.map(_.map(_.rows).sum)
+          .maxOption.getOrElse(0L)
+        java.util.OptionalLong.of(math.max(0L, kept.map(_.rows).sum - masked))
       }
   }
 }
@@ -339,6 +336,27 @@ private[connector] object GraftNumFilesMetric {
 }
 
 private[connector] object GraftV2BatchScan {
+
+  /** The equality key of `eqDels` as the vectorized read probes it: the
+    * PHYSICAL column the mask files carry (from their footers), typed as
+    * the visible schema types it. None for a key the read cannot probe
+    * — absent from the visible schema, or not integral, string, date or
+    * timestamp — whose masks read through the bridge. */
+  def eqKeyOf(spark: SparkSession, eqDels: Seq[DataFile], visible: StructType,
+              reg: Option[graft.table.FieldRegistry]): Option[StructField] =
+    SnapshotLog.epochGroups(spark, eqDels)
+      .flatMap(_._1.fieldNames.filterNot(_ == "_graft_del_seq")).distinct match {
+      case Seq(keyCol) =>
+        val logical = reg.flatMap(_.logicalOf(keyCol)).getOrElse(keyCol)
+        visible.fields.find(_.name.equalsIgnoreCase(logical))
+          .filter(_.dataType match {
+            case ByteType | ShortType | IntegerType | LongType | StringType |
+                 DateType | TimestampType => true
+            case _ => false
+          })
+          .map(_.copy(name = keyCol))
+      case _ => None
+    }
 
   /** The pruning [[Constraints]] of pushed or runtime V2 filters: each
     * conjunct is rebuilt as the Catalyst predicate it came from

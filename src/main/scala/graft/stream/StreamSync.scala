@@ -102,9 +102,7 @@ object StreamSync {
     * table as a key-clustered `append`. */
   def upsertSink(stream: DataFrame, tableDir: String, checkpointDir: String,
                  keyCol: String, orderCol: String,
-                 deleteCol: Option[String] = None,
-                 materializeAtMasks: Option[Int] = None,
-                 consolidateAtMaskFiles: Option[Int] = None): Unit = {
+                 deleteCol: Option[String] = None): Unit = {
     import org.apache.spark.sql.expressions.Window
     import graft.table.{Merge, SnapshotLog}
     val q = stream.writeStream
@@ -145,26 +143,6 @@ object StreamSync {
             Merge.mergeOnRead(spark, tableDir, latest, keyCol, deleteCol,
               summary = Map("batch_id" -> batchId.toString,
                 "stream_id" -> checkpointDir))
-            // inline maintenance: once pending mask ENTRIES cross the
-            // threshold, fold them back into clustered data — bounding
-            // read amplification without an external job. The `replace`
-            // commit is invisible to the change feed and carries no
-            // batch id, so replay guards are unaffected.
-            materializeAtMasks.foreach { threshold =>
-              val pending = SnapshotLog.filesAt(spark, tableDir)
-                .filter(SnapshotLog.isMask).map(_.rows).sum
-              if (pending >= threshold) Merge.materializeDeletes(spark, tableDir)
-            }
-            // cheaper inline maintenance (r10): once mask FILE count
-            // crosses the threshold, fold the masks to one (per-key max
-            // seq, metadata-only — data files untouched), so a
-            // high-frequency stream never accrues a per-mask-file open
-            // on its readers between full materializations
-            consolidateAtMaskFiles.foreach { threshold =>
-              if (SnapshotLog.filesAt(spark, tableDir)
-                    .count(_.kind == "eqdelete") >= threshold)
-                Merge.consolidateMasks(spark, tableDir)
-            }
           }
         }
         ()

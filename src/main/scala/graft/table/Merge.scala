@@ -622,9 +622,11 @@ object Merge {
     // an emptiness pre-probe would run the (possibly large, zone-pruned)
     // locating scan twice. A discarded zero-row file is an unreferenced
     // orphan the grace-gated sweep reclaims, the same contract as a
-    // superseded merge attempt's mask.
+    // superseded merge attempt's mask. The manifest records the set of
+    // files the mask names, so a read hands it only to those files.
     val written = SnapshotLog.writeData(hits.coalesce(1), tableDir,
-      kind = "posdelete", rawPhysical = true)
+      kind = "posdelete", partitionCols = Seq(SnapshotLog.PosFileCol),
+      rawPhysical = true)
     if (written.map(_.rows).sum == 0L) return None
     // the predicate ranged over every candidate row: an interleaved
     // append inside the pruning window may hold rows this DELETE should

@@ -143,74 +143,54 @@ object ScaleCurve {
       val (_, tPosRead) = timed(
         SnapshotLog.read(spark, posTbl).get.count()); settle()
       require(posId.isDefined, "posdelete curve: the ranged DELETE matched nothing")
-      // r14: read-rate-vs-mask-debt curve for the VECTORIZED masked V2
-      // scan. The mask debt grows ~×k with the table (fixed key-space
-      // fraction, fixed modulus); the vectorized read must hold its
-      // per-row rate — masked files pay a binary search per row, not a
-      // Row bridge — while the bridge twin (budget 0) prices the old
-      // path at identical debt. Answers must agree exactly.
+      // read-rate-vs-mask-debt curves for the VECTORIZED masked V2 scan,
+      // each priced against its twin through SnapshotLog's merge-on-read
+      // plan (the reference implementation) at identical debt; answers
+      // must agree exactly. The mask debt grows ~×k with the table
+      // (fixed key-space fraction, fixed modulus); the vectorized read
+      // must hold its per-row rate — masked files pay a binary search per
+      // row, not a Row bridge.
       val morCat = s"gsc_mor_x$k"
       spark.conf.set(s"spark.sql.catalog.$morCat",
         classOf[graft.connector.GraftCatalog].getName)
       spark.conf.set(s"spark.sql.catalog.$morCat.warehouse", tfBase)
       val posDebt = posMasks.map(_.rows).sum
-      // integer checksum: a double sum's value depends on reduction
-      // order, which legitimately differs between the two plans
-      val morQ = "SELECT count(*) AS n, " +
-        s"sum(CAST(v * 100 AS BIGINT)) AS s FROM $morCat.pos"
-      val (nVec, tVecRead) = timed(spark.sql(morQ).collect()(0)); settle()
-      spark.conf.set("graft.v2.maskedScan.maxPositions", "0")
-      val (nBridge, tBridgeRead) =
-        try timed(spark.sql(morQ).collect()(0))
-        finally spark.conf.unset("graft.v2.maskedScan.maxPositions")
-      settle()
-      require(nVec == nBridge,
-        s"vectorized masked read diverged from the bridge: $nVec vs $nBridge")
-      // r15: ROW-ID scan curve — the same masked table read WITH the
+      /** (vectorized answer, its time, reference answer, its time) of one
+        * aggregate over table `t`; `withPos` reads the reference WITH the
+        * row-id columns (SnapshotLog's delta-DML source read). */
+      def twins(t: String, aggs: String*)(withPos: Boolean) = {
+        val (vec, tVec) = timed(spark.sql(
+          s"SELECT ${aggs.mkString(", ")} FROM $morCat.$t").collect()(0))
+        settle()
+        val (ref, tRef) = timed {
+          val (dels, data) = SnapshotLog.filesAt(spark, s"$tfBase/$t")
+            .partition(SnapshotLog.isMask)
+          (if (withPos) SnapshotLog.applyMasksWithPos(spark, data, dels)
+           else SnapshotLog.read(spark, s"$tfBase/$t").get)
+            .selectExpr(aggs: _*).collect()(0)
+        }
+        settle()
+        require(vec == ref, s"vectorized read of $t diverged from the " +
+          s"merge-on-read plan: $vec vs $ref")
+        (tVec, tRef)
+      }
+      // integer checksums: a double sum's value depends on reduction
+      // order, which legitimately differs between the two plans;
+      // sum(_graft_pos) holds on both (survivors keep original ordinals)
+      val vAgg = Seq("count(*) AS n", "sum(CAST(v * 100 AS BIGINT)) AS s")
+      val posAgg = Seq("count(*) AS n", "sum(_graft_pos) AS s")
+      val (tVecRead, tRefRead) = twins("pos", vAgg: _*)(withPos = false)
+      // ROW-ID scan curve: the same masked table read WITH the
       // scan-metadata columns (what every vanilla-session DML source
-      // scan projects). The vectorized row-id read must hold its rate
-      // while table+debt grow ×k; the bridge twin prices the r14 path.
-      // sum(_graft_pos) is an exact integer checksum BOTH plans must
-      // agree on (survivors keep original file ordinals on both).
-      val ridQ = "SELECT count(*) AS n, sum(_graft_pos) AS s " +
-        s"FROM $morCat.pos"
-      val (ridVec, tRidVec) = timed(spark.sql(ridQ).collect()(0)); settle()
-      spark.conf.set("graft.v2.maskedScan.maxPositions", "0")
-      val (ridBridge, tRidBridge) =
-        try timed(spark.sql(ridQ).collect()(0))
-        finally spark.conf.unset("graft.v2.maskedScan.maxPositions")
-      settle()
-      require(ridVec == ridBridge,
-        s"row-id reads diverged: $ridVec vs $ridBridge")
-      // r15: EQUALITY-mask read curve — the write-amplification section's
-      // mor table carries eqdelete masks; the vectorized read probes the
-      // folded key set per batch (binary search) where the bridge pays
-      // a broadcast join on the Row bridge. Checksums must agree.
-      val eqQ = "SELECT count(*) AS n, " +
-        s"sum(CAST(v * 100 AS BIGINT)) AS s FROM $morCat.mor"
-      val (eqVec, tEqVec) = timed(spark.sql(eqQ).collect()(0)); settle()
-      spark.conf.set("graft.v2.maskedScan.maxPositions", "0")
-      val (eqBridge, tEqBridge) =
-        try timed(spark.sql(eqQ).collect()(0))
-        finally spark.conf.unset("graft.v2.maskedScan.maxPositions")
-      settle()
-      require(eqVec == eqBridge,
-        s"vectorized equality-mask read diverged: $eqVec vs $eqBridge")
-      // r15 pass 2: ROW-ID + EQUALITY composed curve — the eq-masked mor
-      // table read WITH the scan-metadata columns, i.e. the source scan
-      // of every vanilla-session DML on an upsert-ingest table
-      // (conn_eq_row_delta's shape). sum(_graft_pos) is the exact
-      // integer checksum both plans must agree on.
-      val eqRidQ = "SELECT count(*) AS n, sum(_graft_pos) AS s " +
-        s"FROM $morCat.mor"
-      val (eqRidVec, tEqRidVec) = timed(spark.sql(eqRidQ).collect()(0)); settle()
-      spark.conf.set("graft.v2.maskedScan.maxPositions", "0")
-      val (eqRidBridge, tEqRidBridge) =
-        try timed(spark.sql(eqRidQ).collect()(0))
-        finally spark.conf.unset("graft.v2.maskedScan.maxPositions")
-      settle()
-      require(eqRidVec == eqRidBridge,
-        s"eq-masked row-id reads diverged: $eqRidVec vs $eqRidBridge")
+      // scan projects)
+      val (tRidVec, tRidRef) = twins("pos", posAgg: _*)(withPos = true)
+      // EQUALITY-mask read curve: the write-amplification section's mor
+      // table carries eqdelete masks; the vectorized read probes the
+      // folded keys per batch where the reference pays a broadcast join
+      val (tEqVec, tEqRef) = twins("mor", vAgg: _*)(withPos = false)
+      // ROW-ID + EQUALITY composed curve: the source scan of every
+      // vanilla-session DML on an upsert-ingest table
+      val (tEqRidVec, tEqRidRef) = twins("mor", posAgg: _*)(withPos = true)
       // r9: CDC apply-rate curve — a ~constant-size (~100k-row)
       // update-dominated delta drained through the STREAMING upsert sink
       // against the ×k table. The apply path costs O(delta + file
@@ -569,10 +549,10 @@ object ScaleCurve {
         s"pos_delete=${posMasks.map(_.rows).sum}pos/0rw/${s(tPosDel)}s " +
         s"pos_read=${s(tPosRead)}s " +
         s"mask_debt=$posDebt v2_masked_vec=${s(tVecRead)}s " +
-        s"v2_masked_bridge=${s(tBridgeRead)}s " +
-        s"rowid_vec=${s(tRidVec)}s rowid_bridge=${s(tRidBridge)}s " +
-        s"eq_vec=${s(tEqVec)}s eq_bridge=${s(tEqBridge)}s " +
-        s"eq_rowid_vec=${s(tEqRidVec)}s eq_rowid_bridge=${s(tEqRidBridge)}s " +
+        s"v2_masked_mor=${s(tRefRead)}s " +
+        s"rowid_vec=${s(tRidVec)}s rowid_mor=${s(tRidRef)}s " +
+        s"eq_vec=${s(tEqVec)}s eq_mor=${s(tEqRef)}s " +
+        s"eq_rowid_vec=${s(tEqRidVec)}s eq_rowid_mor=${s(tEqRidRef)}s " +
         s"apply=$nApply/${s(tApply)}s cdf_tail=$nCdf/${s(tCdf)}s " +
         s"cdf_preimages=$nPre/${s(tPre)}s " +
         s"bloom_files=$nFiles zone_kept=$zoneKept bloom_kept=$bloomKept " +

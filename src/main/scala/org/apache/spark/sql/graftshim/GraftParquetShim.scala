@@ -6,15 +6,18 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, Literal, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, VariantExtraction}
 import org.apache.spark.sql.execution.datasources.{FilePartition, NoopCache, PartitionedFile, PartitioningAwareFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.sql.vectorized.{ColumnarArray, ColumnarBatch, ColumnarMap, ColumnVector}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.table.SnapshotLog
 
 /** Bridge constructing the ENGINE's own vectorized parquet [[Batch]] over
   * an explicit, manifest-pinned file list — the read machinery behind the
@@ -74,126 +77,63 @@ object GraftParquetShim {
       pushedVariantExtractions = Array.empty[VariantExtraction])
   }
 
-  /** The MASKED vectorized variant — the deletion-vector read (the
-    * Iceberg vectorized position-delete / Delta DV design): files with
-    * pending positional masks stay ON the engine's vectorized columnar
-    * parquet reader; the read schema additionally requests the engine's
-    * own row-index generator column (`ParquetFileFormat.
-    * ROW_INDEX_TEMPORARY_COLUMN_NAME` — populated by the vectorized
-    * reader itself, page-skipping-safe, never read from the file), and a
-    * per-batch SELECTION WRAPPER drops exactly the masked ordinals
-    * without copying a single value ([[GraftSelectedColumnVector]]:
-    * logical row → surviving physical row through an int indirection).
-    * Unmasked files read through the plain packed batch with no
-    * row-index column and zero wrapper overhead. Downstream stays
-    * columnar either way — no InternalRow bridge, no whole-stage-codegen
-    * break.
-    *
-    * EQUALITY masks (r15) ride the same wrapper: the folded
-    * (key → max delete seq) table ships ONCE per executor inside the
-    * reader factory ([[GraftEqMask]], budget-gated driver metadata);
-    * an eq-affected file additionally reads its key column (appended to
-    * the inner schema when the projection pruned it) and the selection
-    * drops rows whose key's delete seq exceeds the FILE's commit seq —
-    * exactly [[graft.table.SnapshotLog]]'s `_graft_del_seq <=
-    * _graft_seq` survival rule, evaluated per batch instead of through
-    * a broadcast join on the Row bridge.
-    *
-    * Each masked file gets its OWN input partition: the row-index
-    * column resets per file, so the reader must know which file's mask
-    * applies (the same one-file-per-task shape Delta's DV scan uses);
-    * unmasked files keep the engine's `maxPartitionBytes` packing. */
+  /** The MASKED vectorized read — the Iceberg delete-file design
+    * (https://iceberg.apache.org/spec/#scan-planning): each masked data
+    * file is read in its OWN input partition, whose task streams only
+    * the mask files the driver picked for it from the manifests
+    * ([[GraftFileSpec]]) and drops the rows they hit. The inner read
+    * requests the engine's row-index generator column
+    * (`ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME` — populated by
+    * the vectorized reader itself, page-skipping-safe, never read from
+    * the file) and, when the projection pruned it, the equality key; a
+    * per-batch SELECTION WRAPPER drops the masked rows without copying a
+    * single value ([[GraftSelectedColumnVector]]). Planning runs no job
+    * and ships no mask contents. Unmasked files keep the engine's
+    * `maxPartitionBytes` packing on the plain batch, with no row-index
+    * column and no wrapper; with none masked this IS the plain batch. */
   def maskedBatch(spark: SparkSession,
-                  plain: Seq[(String, Long)],
-                  masked: Seq[GraftMaskedFileSpec],
+                  files: Seq[GraftFileSpec],
                   dataSchema: StructType,
                   readDataSchema: StructType,
                   pushedFilters: Array[Filter],
-                  eqMask: Option[GraftEqMask] = None): Batch = {
-    require(masked.nonEmpty, "maskedBatch with no masked files")
+                  /** The equality key (PHYSICAL name, visible type) when
+                    * equality masks are live. */
+                  eqKey: Option[StructField] = None): Batch = {
+    val (masked, plain) = files.partition(_.masked)
     val plainBatch =
-      if (plain.isEmpty) None
-      else Some(parquetBatch(spark, plain, dataSchema, readDataSchema,
-        pushedFilters))
-    // the equality key column joins the masked inner read when the
-    // projection pruned it; the wrapper consumes and drops it
-    val needKey = eqMask.filter(e =>
-      !readDataSchema.fieldNames.exists(_.equalsIgnoreCase(e.keyCol)))
-    val keyOrdinal = eqMask.map(e =>
-      readDataSchema.fieldNames.indexWhere(_.equalsIgnoreCase(e.keyCol)) match {
-        case -1 => readDataSchema.length // appended just below
-        case i => i
-      })
-    val withKey = needKey match {
-      case Some(e) => StructType(readDataSchema.fields :+
-        dataSchema.fields.find(_.name.equalsIgnoreCase(e.keyCol)).get
-          .copy(nullable = true))
-      case None => readDataSchema
-    }
-    // the TEMPORARY row-index column: the parquet readers recognize it
-    // by name, exclude it from the file's requested schema, and
-    // populate it with each row's file ordinal (page-skipping-safe)
-    // nullable: the column is never IN the file — the requested parquet
-    // schema must mark it optional (a required missing column refuses at
-    // reader init); the generator then overwrites the null vector with
-    // real ordinals before every batch is handed out
-    val readWithIdx = StructType(withKey.fields :+
-      org.apache.spark.sql.types.StructField(
-        ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
-        org.apache.spark.sql.types.LongType, nullable = true))
-    val maskedInner = parquetBatch(spark,
-      masked.map(m => (m.path, m.len)),
-      dataSchema, readWithIdx, pushedFilters)
-    // Vectorization is decided PER SCHEMA (field count, types), and the
-    // two inner factories differ by the appended row-index column — at
-    // the codegen maxFields boundary one can answer columnar while the
-    // other answers row-based, and the engine's DataSourceV2ScanExecBase
-    // requires ONE answer for the whole scan ("Cannot mix row-based and
-    // columnar partitions"). Decide ONCE here over representative
-    // partitions of both shapes; on disagreement every partition takes
-    // the row-based path (always available) instead of failing the query.
+      if (plain.nonEmpty || masked.isEmpty)
+        Some(parquetBatch(spark, plain.map(f => (f.path, f.len)), dataSchema,
+          readDataSchema, pushedFilters))
+      else None
+    if (masked.isEmpty) return plainBatch.get
+    val read = GraftMaskedFileRead(spark, masked, dataSchema, readDataSchema,
+      readDataSchema.indices.toArray, readDataSchema, eqKey, pushedFilters)
     val plainFactory = plainBatch.map(_.createReaderFactory())
-    val maskedFactory = maskedInner.createReaderFactory()
-    val uniformColumnar = {
-      val maskedProbe = masked.headOption.forall { m =>
-        maskedFactory.supportColumnarReads(FilePartition(0, Array(
-          PartitionedFile(InternalRow.empty, SparkPath.fromPathString(m.path),
-            0L, m.len, Array.empty, 0L, m.len, Map.empty))))
-      }
-      val plainProbe = plainBatch.forall(
-        _.planInputPartitions().forall(plainFactory.get.supportColumnarReads))
-      maskedProbe && plainProbe
-    }
-    new Batch {
-      override def planInputPartitions(): Array[InputPartition] = {
-        val pp = plainBatch.map(_.planInputPartitions())
-          .getOrElse(Array.empty[InputPartition])
-        pp ++ masked.zipWithIndex.map { case (m, i) =>
-          val pf = PartitionedFile(InternalRow.empty,
-            SparkPath.fromPathString(m.path), 0L, m.len, Array.empty, 0L,
-            m.len, Map.empty)
-          GraftMaskedPartition(m.positions, m.fileSeq, m.eqApplies,
-            FilePartition(pp.length + i, Array(pf))): InputPartition
-        }
-      }
-      override def createReaderFactory(): PartitionReaderFactory =
-        new GraftMaskedReaderFactory(plainFactory, maskedFactory,
-          readDataSchema, uniformColumnar, eqMask, keyOrdinal.getOrElse(-1),
-          keyOrdinal.map(withKey(_).dataType).orNull)
-    }
+    val pp = plainBatch.map(_.planInputPartitions())
+      .getOrElse(Array.empty[InputPartition])
+    // Vectorization is decided PER SCHEMA, and the two inner factories
+    // differ by the appended columns — at the codegen maxFields boundary
+    // one can answer columnar while the other answers row-based, and the
+    // engine requires ONE answer for the whole scan ("Cannot mix
+    // row-based and columnar partitions"). On disagreement every
+    // partition takes the row-based path (always available).
+    val columnar = pp.forall(p => plainFactory.get.supportColumnarReads(p)) &&
+      read.supportsColumnar(masked.head)
+    batchOf(pp ++ masked.zipWithIndex.map { case (f, i) =>
+        GraftMaskedPartition(f, null, f.partition(pp.length + i)): InputPartition },
+      new GraftMaskedReaderFactory(plainFactory, Some(read), columnar))
   }
 
-  /** The ROW-ID vectorized variant (r15): serves scans whose projection
-    * includes the scan-metadata columns (`_graft_file`/`_graft_pos` —
-    * the row-id face of the delta-based row-level operations, and
-    * explicit metadata-column SELECTs), keeping the read columnar
-    * instead of degrading to the Row bridge. Every file gets its OWN
-    * partition (the row index resets per file and the file path is a
-    * per-partition CONSTANT): the inner vectorized read requests the
-    * engine's row-index generator column, and the wrapper emits
-    *   - `_graft_pos` as that vector (selection-filtered under a mask —
-    *     surviving rows keep their ORIGINAL file ordinal, which is what
-    *     a posdelete entry must name), and
+  /** The ROW-ID variant: serves scans whose projection includes the
+    * scan-metadata columns (`_graft_file`/`_graft_pos` — the row-id face
+    * of the delta-based row-level operations, and explicit
+    * metadata-column SELECTs), keeping the read columnar. Every file
+    * reads through the masked reader in its OWN partition (the row
+    * index resets per file and the file path is a per-partition
+    * CONSTANT), which emits
+    *   - `_graft_pos` as the row-index vector (selection-filtered under
+    *     a mask — surviving rows keep their ORIGINAL file ordinal, which
+    *     is what a posdelete entry must name), and
     *   - `_graft_file` as a zero-copy constant string vector carrying
     *     the same qualified-URI rendering the V1 `_metadata.file_path`
     *     read emits (pinned in RowLevelSpec), so both paths' row ids
@@ -202,7 +142,7 @@ object GraftParquetShim {
     * columns at their requested ordinals; data columns keep their
     * relative order. */
   def posBatch(spark: SparkSession,
-               files: Seq[GraftPosFileSpec],
+               files: Seq[GraftFileSpec],
                dataSchema: StructType,
                outputSchema: StructType,
                fileColName: String, posColName: String,
@@ -211,546 +151,414 @@ object GraftParquetShim {
                  * (same field order, files' column names) — what the
                  * inner parquet read requests; defaults to the output. */
                physOutputSchema: StructType = null,
-               /** Folded EQUALITY mask (r15): row-id reads of eq-masked
-                 * tables — the vanilla-session DML source scan between
-                 * upsert ingests — stay vectorized; surviving rows keep
-                 * their ORIGINAL file ordinals (selection filters by
-                 * position, exactly like the positional mask). */
-               eqMask: Option[GraftEqMask] = None): Batch = {
+               eqKey: Option[StructField] = None): Batch = {
     def isMeta(n: String): Boolean =
       n.equalsIgnoreCase(fileColName) || n.equalsIgnoreCase(posColName)
     val physOut = Option(physOutputSchema).getOrElse(outputSchema)
-    val dataFields = physOut.fields.filterNot(f => isMeta(f.name))
-    // the eq key column joins the inner read when the projection pruned
-    // it (GraftEqMask.keyCol is PHYSICAL — compare in the files' space)
-    val needKey = eqMask.filter(e =>
-      !dataFields.exists(_.name.equalsIgnoreCase(e.keyCol)))
-    val keyOrdinal = eqMask.map(e =>
-      dataFields.indexWhere(_.name.equalsIgnoreCase(e.keyCol)) match {
-        case -1 => dataFields.length // appended just below
-        case i => i
-      }).getOrElse(-1)
-    val withKey = needKey match {
-      case Some(e) => dataFields :+
-        dataSchema.fields.find(_.name.equalsIgnoreCase(e.keyCol)).get
-          .copy(nullable = true)
-      case None => dataFields
-    }
-    val idxOrdinal = withKey.length
-    val readWithIdx = StructType(withKey :+
-      org.apache.spark.sql.types.StructField(
-        ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
-        org.apache.spark.sql.types.LongType, nullable = true))
+    val data = StructType(physOut.fields.filterNot(f => isMeta(f.name)))
     // output ordinal → inner ordinal; FileCode/PosCode mark the two
     // synthesized columns
     val colMap: Array[Int] = {
       var next = 0
       outputSchema.fields.map { f =>
-        if (f.name.equalsIgnoreCase(fileColName)) GraftPosReaderFactory.FileCode
-        else if (f.name.equalsIgnoreCase(posColName)) GraftPosReaderFactory.PosCode
+        if (f.name.equalsIgnoreCase(fileColName)) GraftMaskedFileRead.FileCode
+        else if (f.name.equalsIgnoreCase(posColName)) GraftMaskedFileRead.PosCode
         else { val i = next; next += 1; i }
       }
     }
-    val inner = parquetBatch(spark, files.map(f => (f.path, f.len)),
-      dataSchema, readWithIdx, pushedFilters)
+    val read = GraftMaskedFileRead(spark, files, dataSchema, data, colMap,
+      outputSchema, eqKey, pushedFilters)
     val hadoopConf = spark.sessionState.newHadoopConf()
-    new Batch {
-      override def planInputPartitions(): Array[InputPartition] =
-        files.zipWithIndex.map { case (f, i) =>
-          val raw = new Path(f.path)
-          // the emitted _graft_file value — the same qualified Path
-          // rendering ("file:/x", Path.toString) the V1 read's
-          // _metadata.file_path carries for this file (pinned against
-          // it in RowLevelSpec)
-          val qualified = raw.getFileSystem(hadoopConf)
-            .makeQualified(raw).toString
-          val pf = PartitionedFile(InternalRow.empty,
-            SparkPath.fromPathString(f.path), 0L, f.len, Array.empty, 0L,
-            f.len, Map.empty)
-          GraftPosPartition(qualified, f.positions, f.fileSeq, f.eqApplies,
-            FilePartition(i, Array(pf))): InputPartition
-        }.toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new GraftPosReaderFactory(inner.createReaderFactory(),
-          outputSchema, colMap, idxOrdinal, eqMask, keyOrdinal,
-          if (keyOrdinal >= 0) withKey(keyOrdinal).dataType else null)
-    }
+    val parts = files.zipWithIndex.map { case (f, i) =>
+      val raw = new Path(f.path)
+      // the emitted _graft_file value — the same qualified Path
+      // rendering ("file:/x", Path.toString) the V1 read's
+      // _metadata.file_path carries for this file
+      val qualified = raw.getFileSystem(hadoopConf).makeQualified(raw).toString
+      GraftMaskedPartition(f, qualified, f.partition(i)): InputPartition
+    }.toArray
+    batchOf(parts, new GraftMaskedReaderFactory(None, Some(read),
+      files.headOption.forall(read.supportsColumnar)))
   }
 
   /** The KEY-GROUPED variant for storage-partitioned joins: one input
     * partition per bucket group, each carrying its bucket id as the
     * [[HasPartitionKey]] row — `EnsureRequirements` then aligns two
     * same-bucketed scans WITHOUT an exchange (the Iceberg SPJ shape).
-    * Within-bucket files concatenate into one task (no splitting): the
-    * classic bucketed-join tradeoff of per-bucket parallelism for zero
-    * shuffle. The reader factory is the stock vectorized parquet one,
-    * unwrapped per partition. */
+    * Within-bucket files read back to back in one task (no splitting):
+    * the classic bucketed-join tradeoff of per-bucket parallelism for
+    * zero shuffle. Masks — positional AND equality — filter rows WITHIN
+    * files and can never change a row's bucket membership (the bucket is
+    * a pure function of the key; an eq-delete removes rows, never moves
+    * them), so masked files simply take the masked reader; selection
+    * preserves row order, so a sorted single-file bucket stays sorted. */
   def bucketedBatch(spark: SparkSession,
-                    groups: Seq[(Int, Seq[(String, Long)])],
+                    groups: Seq[(Int, Seq[GraftFileSpec])],
                     dataSchema: StructType,
                     readDataSchema: StructType,
-                    pushedFilters: Array[Filter]): Batch = {
-    val inner = parquetBatch(spark, groups.flatMap(_._2), dataSchema,
-      readDataSchema, pushedFilters)
-    new Batch {
-      override def planInputPartitions(): Array[InputPartition] =
-        groups.sortBy(_._1).zipWithIndex.map { case ((bucket, fs), i) =>
-          val pfiles = fs.map { case (p, len) =>
-            PartitionedFile(InternalRow.empty, SparkPath.fromPathString(p),
-              0L, len, Array.empty, 0L, len, Map.empty)
-          }.toArray
-          GraftBucketedPartition(
-            new GenericInternalRow(Array[Any](bucket)),
-            FilePartition(i, pfiles)): InputPartition
-        }.toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new GraftUnwrapReaderFactory(inner.createReaderFactory())
-    }
-  }
-
-  /** Key-grouped + MASKED (r15): storage-partitioned joins on a
-    * merge-on-read table between compactions. Masks — positional AND
-    * equality — filter rows WITHIN files and can never change a row's
-    * bucket membership (the bucket is a pure function of the key; an
-    * eq-delete removes rows, never moves them), so key-grouped
-    * reporting stays sound — each bucket keeps ONE [[HasPartitionKey]]
-    * partition, whose reader concatenates its files sequentially:
-    * masked files through the row-index selection read, unmasked
-    * through the plain packed read. Selection preserves row order, so a
-    * sorted single-file bucket stays sorted under its mask. */
-  def bucketedMaskedBatch(spark: SparkSession,
-                          groups: Seq[(Int, Seq[GraftMaskedFileRef])],
-                          dataSchema: StructType,
-                          readDataSchema: StructType,
-                          pushedFilters: Array[Filter],
-                          eqMask: Option[GraftEqMask] = None): Batch = {
-    def needsMask(f: GraftMaskedFileRef): Boolean =
-      f.positions.nonEmpty || f.eqApplies
-    val plainInner = parquetBatch(spark,
-      groups.flatMap(_._2).map(f => (f.path, f.len)),
-      dataSchema, readDataSchema, pushedFilters)
-    // the eq key joins the masked inner read when the projection pruned
-    // it; the wrapper consumes and drops it (same shape as maskedBatch)
-    val needKey = eqMask.filter(e =>
-      !readDataSchema.fieldNames.exists(_.equalsIgnoreCase(e.keyCol)))
-    val keyOrdinal = eqMask.map(e =>
-      readDataSchema.fieldNames.indexWhere(_.equalsIgnoreCase(e.keyCol)) match {
-        case -1 => readDataSchema.length
-        case i => i
-      }).getOrElse(-1)
-    val withKey = needKey match {
-      case Some(e) => StructType(readDataSchema.fields :+
-        dataSchema.fields.find(_.name.equalsIgnoreCase(e.keyCol)).get
-          .copy(nullable = true))
-      case None => readDataSchema
-    }
-    val idxOrdinal = withKey.length
-    val readWithIdx = StructType(withKey.fields :+
-      org.apache.spark.sql.types.StructField(
-        ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME,
-        org.apache.spark.sql.types.LongType, nullable = true))
-    val maskedInner = parquetBatch(spark,
-      groups.flatMap(_._2).collect { case f if needsMask(f) => (f.path, f.len) },
-      dataSchema, readWithIdx, pushedFilters)
-    val plainFactory = plainInner.createReaderFactory()
-    val maskedFactory = maskedInner.createReaderFactory()
+                    pushedFilters: Array[Filter],
+                    eqKey: Option[StructField] = None): Batch = {
+    val all = groups.flatMap(_._2)
+    val masked = all.filter(_.masked)
+    val plain = parquetBatch(spark, all.map(f => (f.path, f.len)), dataSchema,
+      readDataSchema, pushedFilters).createReaderFactory()
+    val read =
+      if (masked.isEmpty) None
+      else Some(GraftMaskedFileRead(spark, masked, dataSchema, readDataSchema,
+        readDataSchema.indices.toArray, readDataSchema, eqKey, pushedFilters))
     // one pre-agreed columnar answer for the whole scan (the engine
-    // refuses mixed row/columnar partitions) — the two factories'
-    // schemas differ by the appended columns, so probe both
-    def probePartition(p: String, len: Long): FilePartition =
-      FilePartition(0, Array(PartitionedFile(InternalRow.empty,
-        SparkPath.fromPathString(p), 0L, len, Array.empty, 0L, len,
-        Map.empty)))
-    val uniformColumnar =
-      groups.flatMap(_._2).headOption.forall(f =>
-        plainFactory.supportColumnarReads(probePartition(f.path, f.len))) &&
-      groups.flatMap(_._2).find(needsMask)
-        .forall(f =>
-          maskedFactory.supportColumnarReads(probePartition(f.path, f.len)))
-    new Batch {
-      override def planInputPartitions(): Array[InputPartition] =
-        groups.sortBy(_._1).zipWithIndex.map { case ((bucket, fs), i) =>
-          GraftBucketedMaskedPartition(
-            new GenericInternalRow(Array[Any](bucket)), i, fs)
-            : InputPartition
-        }.toArray
-      override def createReaderFactory(): PartitionReaderFactory =
-        new GraftBucketedMaskedReaderFactory(plainFactory, maskedFactory,
-          readDataSchema, uniformColumnar, idxOrdinal, eqMask, keyOrdinal,
-          if (keyOrdinal >= 0) withKey(keyOrdinal).dataType else null)
-    }
+    // refuses mixed row/columnar partitions)
+    val columnar =
+      all.headOption.forall(f => plain.supportColumnarReads(f.partition(0))) &&
+        masked.headOption.forall(f => read.get.supportsColumnar(f))
+    batchOf(groups.sortBy(_._1).zipWithIndex.map { case ((bucket, fs), i) =>
+        GraftBucketedPartition(new GenericInternalRow(Array[Any](bucket)), i, fs)
+          : InputPartition
+      }.toArray,
+      new GraftMaskedReaderFactory(Some(plain), read, columnar))
+  }
+
+  private def batchOf(parts: Array[InputPartition],
+                      factory: PartitionReaderFactory): Batch = new Batch {
+    override def planInputPartitions(): Array[InputPartition] = parts
+    override def createReaderFactory(): PartitionReaderFactory = factory
   }
 }
 
-/** One bucket group of a key-grouped graft scan: the partition key is
-  * the bucket id row the engine groups/aligns on. */
-private[graftshim] final case class GraftBucketedPartition(
-    key: InternalRow,
-    files: FilePartition) extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow = key
-  override def preferredLocations(): Array[String] = files.preferredLocations()
+/** One data file of a graft scan and the mask files that can hit it,
+  * picked from the manifests on the driver: positional masks younger
+  * than the file whose recorded `_graft_file` set names it (or records
+  * none), and equality masks younger than the file whose key zone
+  * overlaps its own. `keyZone` is the file's recorded zone of the
+  * equality key, in the key's long domain. */
+final case class GraftFileSpec(
+    path: String, len: Long, seq: Long,
+    posMasks: Seq[GraftMaskFile] = Nil,
+    eqMasks: Seq[GraftMaskFile] = Nil,
+    keyZone: Option[(Long, Long)] = None) {
+  def masked: Boolean = posMasks.nonEmpty || eqMasks.nonEmpty
+  private[graftshim] def partition(index: Int): FilePartition =
+    GraftFileSpec.partitionOf(path, len, index)
 }
 
-/** One file of a key-grouped masked scan: path, length, sorted deleted
-  * ordinals (empty = no positional mask), commit seq + equality-mask
-  * applicability. */
-final case class GraftMaskedFileRef(
-    path: String, len: Long, positions: Array[Long],
-    fileSeq: Long = Long.MaxValue, eqApplies: Boolean = false)
+/** One mask file: path, length and commit seq — the delete seq of
+  * equality rows that embed none. */
+final case class GraftMaskFile(path: String, len: Long, seq: Long)
 
-/** One bucket group of a key-grouped MASKED scan (r15): the partition
-  * key is the bucket id; files read sequentially within the task,
-  * masked ones through the selection read. */
-private[graftshim] final case class GraftBucketedMaskedPartition(
-    key: InternalRow, index: Int,
-    files: Seq[GraftMaskedFileRef]) extends InputPartition with HasPartitionKey {
-  override def partitionKey(): InternalRow = key
-}
+object GraftFileSpec {
+  /** The scheme-less path a `_graft_file` value (a qualified URI) names —
+    * the form manifests record data files under. */
+  def pathOf(fileValue: String): String = new java.net.URI(fileValue).getPath
 
-/** Reader factory of [[GraftParquetShim.bucketedMaskedBatch]]: per
-  * partition, a sequential concatenation of per-file readers — plain
-  * files on the packed factory, masked files on the row-index factory
-  * with the zero-copy selection filter. */
-private[graftshim] final class GraftBucketedMaskedReaderFactory(
-    plain: PartitionReaderFactory,
-    maskedInner: PartitionReaderFactory,
-    readDataSchema: StructType,
-    uniformColumnar: Boolean,
-    /** Ordinal of the row-index generator column in the masked inner
-      * schema (after the appended eq key, when one rides). */
-    idxOrd: Int,
-    eqMask: Option[GraftEqMask] = None,
-    keyOrd: Int = -1,
-    /** INNER-schema type of the eq key column (null without one). */
-    keyType: org.apache.spark.sql.types.DataType = null)
-    extends PartitionReaderFactory {
-
-  private def dataCols: Int = readDataSchema.length
-
-  private def needsMask(f: GraftMaskedFileRef): Boolean =
-    f.positions.nonEmpty || f.eqApplies
-
-  private def filePartition(f: GraftMaskedFileRef): FilePartition =
-    FilePartition(0, Array(PartitionedFile(InternalRow.empty,
-      SparkPath.fromPathString(f.path), 0L, f.len, Array.empty, 0L, f.len,
+  private[graftshim] def partitionOf(path: String, len: Long,
+                                     index: Int): FilePartition =
+    FilePartition(index, Array(PartitionedFile(InternalRow.empty,
+      SparkPath.fromPathString(path), 0L, len, Array.empty, 0L, len,
       Map.empty)))
-
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    uniformColumnar
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[ColumnarBatch] = {
-    val g = p.asInstanceOf[GraftBucketedMaskedPartition]
-    val cols = dataCols
-    new PartitionReader[ColumnarBatch] {
-      private val it = g.files.iterator
-      private var reader: PartitionReader[ColumnarBatch] = _
-      private var file: GraftMaskedFileRef = _
-      private var current: ColumnarBatch = _
-      override def next(): Boolean = {
-        while (true) {
-          if (reader == null) {
-            if (!it.hasNext) return false
-            file = it.next()
-            reader =
-              if (!needsMask(file)) plain.createColumnarReader(filePartition(file))
-              else maskedInner.createColumnarReader(filePartition(file))
-          }
-          if (reader.next()) {
-            val b = reader.get()
-            current =
-              if (!needsMask(file)) b
-              else GraftMaskedReaderFactory.filterBatch(b, file.positions,
-                cols, idxOrd, if (file.eqApplies) eqMask else None, keyOrd,
-                file.fileSeq)
-            return true
-          }
-          reader.close(); reader = null
-        }
-        false
-      }
-      override def get(): ColumnarBatch = current
-      override def close(): Unit = if (reader != null) reader.close()
-    }
-  }
-
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val g = p.asInstanceOf[GraftBucketedMaskedPartition]
-    val cols = dataCols
-    val drop = UnsafeProjection.create(
-      readDataSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-        BoundReference(i, f.dataType, nullable = true)
-      })
-    new PartitionReader[InternalRow] {
-      private val it = g.files.iterator
-      private var reader: PartitionReader[InternalRow] = _
-      private var file: GraftMaskedFileRef = _
-      private var row: InternalRow = _
-      private var masked = false
-      override def next(): Boolean = {
-        while (true) {
-          if (reader == null) {
-            if (!it.hasNext) return false
-            file = it.next()
-            masked = needsMask(file)
-            reader =
-              if (masked) maskedInner.createReader(filePartition(file))
-              else plain.createReader(filePartition(file))
-          }
-          var advanced = false
-          while (!advanced && reader.next()) {
-            val r = reader.get()
-            val posKeep = !masked || file.positions.isEmpty ||
-              java.util.Arrays.binarySearch(
-                file.positions, r.getLong(idxOrd)) < 0
-            val eqKeep = !masked || !file.eqApplies || eqMask.forall { e =>
-              r.isNullAt(keyOrd) || {
-                val ds =
-                  if (e.isString) e.delSeqOfStr(r.getUTF8String(keyOrd))
-                  else e.delSeqOfLong(GraftMaskedReaderFactory.keyAsLong(
-                    r, keyOrd, keyType))
-                ds <= file.fileSeq
-              }
-            }
-            if (posKeep && eqKeep) {
-              row = r
-              advanced = true
-            }
-          }
-          if (advanced) return true
-          reader.close(); reader = null
-        }
-        false
-      }
-      override def get(): InternalRow = if (masked) drop(row) else row
-      override def close(): Unit = if (reader != null) reader.close()
-    }
-  }
 }
 
-/** One masked file handed to [[GraftParquetShim.maskedBatch]]: sorted
-  * deleted row ordinals (may be empty when only the equality mask
-  * applies), the file's commit seq, and whether the equality mask can
-  * affect it (some key's delete seq exceeds the file's). */
-final case class GraftMaskedFileSpec(
-    path: String, len: Long, positions: Array[Long],
-    fileSeq: Long, eqApplies: Boolean)
-
-/** The folded EQUALITY mask (r15), shipped once per executor in the
-  * reader factory: aligned (sorted key → max delete seq) arrays. A row
-  * with key k in a file of commit seq s is deleted iff
-  * delSeq(k) > s — the broadcast-join survival rule
-  * (`_graft_del_seq <= _graft_seq` keeps), evaluated per batch.
-  * Integral keys normalize to longs; string keys compare in UTF8String
-  * binary order (the driver sorted them that way). Null keys never
-  * match (SQL join semantics). */
-final case class GraftEqMask(
-    keyCol: String,
-    longKeys: Array[Long],
-    strKeys: Array[String],
-    delSeqs: Array[Long]) {
-  @transient lazy val strKeysU8: Array[org.apache.spark.unsafe.types.UTF8String] =
-    strKeys.map(org.apache.spark.unsafe.types.UTF8String.fromString)
-  def isString: Boolean = strKeys.nonEmpty
-  /** delete seq of `k`, Long.MinValue when unmasked. */
-  def delSeqOfLong(k: Long): Long = {
-    val i = java.util.Arrays.binarySearch(longKeys, k)
-    if (i < 0) Long.MinValue else delSeqs(i)
-  }
-  def delSeqOfStr(k: org.apache.spark.unsafe.types.UTF8String): Long = {
-    val i = java.util.Arrays.binarySearch(
-      strKeysU8.asInstanceOf[Array[AnyRef]], k.asInstanceOf[AnyRef],
-      GraftEqMask.U8Order.asInstanceOf[java.util.Comparator[AnyRef]])
-    if (i < 0) Long.MinValue else delSeqs(i)
-  }
-}
-
-object GraftEqMask {
-  val U8Order: java.util.Comparator[org.apache.spark.unsafe.types.UTF8String] =
-    (a, b) => a.compareTo(b)
-}
-
-/** One MASKED data file: its sorted deleted row ordinals, commit seq +
-  * equality-mask applicability, plus the single-file [[FilePartition]]
-  * the stock parquet reader consumes. */
+/** One masked data file in its own partition: `fileValue` is the
+  * `_graft_file` string its rows carry (null unless the scan emits row
+  * ids); `files` is the single-file partition the inner reader opens. */
 private[graftshim] final case class GraftMaskedPartition(
-    positions: Array[Long],
-    fileSeq: Long,
-    eqApplies: Boolean,
+    file: GraftFileSpec,
+    fileValue: String,
     files: FilePartition) extends InputPartition {
   override def preferredLocations(): Array[String] = files.preferredLocations()
 }
 
-/** Routes plain partitions to the untouched packed reader and masked
-  * partitions through the row-index (+ equality-key) selection filter.
-  * `readDataSchema` is the OUTPUT schema; masked inner readers see up
-  * to two extra trailing columns (the eq key when the projection pruned
-  * it, then the row index) the wrapper consumes and drops. */
-private[graftshim] final class GraftMaskedReaderFactory(
-    plain: Option[PartitionReaderFactory],
-    maskedInner: PartitionReaderFactory,
-    readDataSchema: StructType,
-    /** ONE pre-agreed answer for every partition (the engine refuses
-      * mixed row/columnar scans); false routes everything row-based. */
-    uniformColumnar: Boolean,
-    eq: Option[GraftEqMask] = None,
-    /** Ordinal of the eq key column in the masked INNER schema (-1 when
-      * no equality mask rides this scan). */
-    keyOrdinal: Int = -1,
-    /** INNER-schema type of the eq key column (null without one) — the
-      * row-based probe's access type; the OUTPUT schema may have pruned
-      * the key away, so it is never looked up there. */
-    keyType: org.apache.spark.sql.types.DataType = null)
-    extends PartitionReaderFactory {
+/** One bucket group of a key-grouped graft scan: the partition key is
+  * the bucket id row the engine groups/aligns on; its files read back
+  * to back. */
+private[graftshim] final case class GraftBucketedPartition(
+    key: InternalRow, index: Int,
+    files: Seq[GraftFileSpec]) extends InputPartition with HasPartitionKey {
+  override def partitionKey(): InternalRow = key
+}
 
-  private def dataCols: Int = readDataSchema.length
-  /** the row-index generator column is always LAST in the inner schema */
-  private def idxOrdinal: Int =
-    if (eq.isDefined && keyOrdinal == dataCols) dataCols + 1 else dataCols
+/** The one masked-file reader, built once per scan on the driver (each
+  * factory broadcasts the Hadoop configuration once): `inner` reads a
+  * data file's columns plus the equality key when the projection pruned
+  * it plus the row index; `posMasks` and `eqMasks` read the two mask
+  * schemas (null when no file has a mask of that kind). Per file it
+  * loads the file's masks in the task ([[load]]), drops the rows they
+  * hit, and emits the output columns through `colMap` — an inner
+  * ordinal, or one of the two synthesized row-id columns. */
+private[graftshim] final class GraftMaskedFileRead(
+    inner: PartitionReaderFactory,
+    posMasks: PartitionReaderFactory,
+    eqMasks: PartitionReaderFactory,
+    outputSchema: StructType,
+    colMap: Array[Int],
+    idxOrd: Int,
+    keyOrd: Int,
+    /** Type of the equality key, in the inner read and the eq mask read
+      * alike (null without equality masks). */
+    keyType: DataType) extends Serializable {
 
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    uniformColumnar
+  def supportsColumnar(f: GraftFileSpec): Boolean =
+    inner.supportColumnarReads(f.partition(0))
 
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[ColumnarBatch] = p match {
-    case m: GraftMaskedPartition =>
-      val inner = maskedInner.createColumnarReader(m.files)
-      val cols = dataCols
-      val idxOrd = idxOrdinal
-      val eqFor = if (m.eqApplies) eq else None
-      new PartitionReader[ColumnarBatch] {
-        private var current: ColumnarBatch = _
-        override def next(): Boolean = {
-          if (!inner.next()) return false
-          current = GraftMaskedReaderFactory.filterBatch(inner.get(),
-            m.positions, cols, idxOrd, eqFor, keyOrdinal, m.fileSeq)
-          true
-        }
-        override def get(): ColumnarBatch = current
-        override def close(): Unit = inner.close()
-      }
-    case other => plain.get.createColumnarReader(other)
+  private def eachRow(factory: PartitionReaderFactory, m: GraftMaskFile)(
+      fn: InternalRow => Unit): Unit = {
+    val r = factory.createReader(GraftFileSpec.partitionOf(m.path, m.len, 0))
+    try while (r.next()) fn(r.get()) finally r.close()
   }
 
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = p match {
-    case m: GraftMaskedPartition =>
-      // row-based fallback (schemas the vectorized reader declines):
-      // skip masked ordinals by the trailing row-index field and eq-
-      // masked keys, then project the extras away so the output matches
-      // readDataSchema exactly
-      val inner = maskedInner.createReader(m.files)
-      val cols = dataCols
-      val idxOrd = idxOrdinal
-      val eqFor = if (m.eqApplies) eq else None
-      val drop = UnsafeProjection.create(
-        readDataSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
-          BoundReference(i, f.dataType, nullable = true)
-        })
-      new PartitionReader[InternalRow] {
-        private var row: InternalRow = _
-        override def next(): Boolean = {
-          while (inner.next()) {
-            val r = inner.get()
-            val posKeep = m.positions.isEmpty ||
-              java.util.Arrays.binarySearch(m.positions, r.getLong(idxOrd)) < 0
-            val eqKeep = eqFor.forall { e =>
-              r.isNullAt(keyOrdinal) || {
-                val ds =
-                  if (e.isString) e.delSeqOfStr(r.getUTF8String(keyOrdinal))
-                  else e.delSeqOfLong(
-                    GraftMaskedReaderFactory.keyAsLong(r, keyOrdinal, keyType))
-                ds <= m.fileSeq
-              }
-            }
-            if (posKeep && eqKeep) {
-              row = r
-              return true
-            }
-          }
-          false
-        }
-        override def get(): InternalRow = drop(row)
-        override def close(): Unit = inner.close()
+  /** The masks that hit `f`, streamed from its candidate mask files:
+    * the positions naming `f` itself, and the equality keys inside its
+    * key zone folded to their max delete seq — the embedded
+    * `_graft_del_seq`, else the mask file's seq, exactly as
+    * `SnapshotLog.foldMasks` folds. Null keys drop (null never matches). */
+  private[graftshim] def load(f: GraftFileSpec): GraftFileMask = {
+    val positions = mutable.ArrayBuilder.make[Long]
+    // `_graft_file` values repeat per row: normalize each distinct one once
+    val names = new java.util.HashMap[UTF8String, java.lang.Boolean]()
+    f.posMasks.foreach(m => eachRow(posMasks, m) { r =>
+      val v = r.getUTF8String(0)
+      var hit = names.get(v)
+      if (hit == null) {
+        hit = GraftFileSpec.pathOf(v.toString) == f.path
+        names.put(v.clone(), hit)
       }
-    case other => plain.get.createReader(other)
+      if (hit) positions += r.getLong(1)
+    })
+    val sorted = positions.result()
+    java.util.Arrays.sort(sorted)
+    val longDel = mutable.LongMap.empty[Long]
+    val strDel = new java.util.HashMap[UTF8String, java.lang.Long]()
+    f.eqMasks.foreach(m => eachRow(eqMasks, m) { r =>
+      if (!r.isNullAt(0)) {
+        val ds = if (r.isNullAt(1)) m.seq else r.getLong(1)
+        if (keyType == StringType) {
+          val k = r.getUTF8String(0)
+          val prev = strDel.get(k)
+          if (prev == null || prev < ds) strDel.put(k.clone(), ds)
+        } else {
+          val k = GraftFileMask.keyAsLong(r, 0, keyType)
+          if (f.keyZone.forall { case (lo, hi) => lo <= k && k <= hi } &&
+              longDel.getOrElse(k, Long.MinValue) < ds)
+            longDel(k) = ds
+        }
+      }
+    })
+    new GraftFileMask(sorted, longDel, strDel, f.seq, idxOrd, keyOrd, keyType)
+  }
+
+  def columnarReader(f: GraftFileSpec, fileValue: String)
+      : PartitionReader[ColumnarBatch] = {
+    val mask = load(f)
+    val in = inner.createColumnarReader(f.partition(0))
+    val fileVec: ColumnVector =
+      if (fileValue == null) null
+      else new GraftConstantStringVector(UTF8String.fromString(fileValue))
+    new PartitionReader[ColumnarBatch] {
+      private var current: ColumnarBatch = _
+      override def next(): Boolean = {
+        if (!in.next()) return false
+        val b = in.get()
+        val sel = mask.select(b)
+        def view(v: ColumnVector): ColumnVector =
+          if (sel == null) v else new GraftSelectedColumnVector(v, sel)
+        current = new ColumnarBatch(colMap.map {
+          case GraftMaskedFileRead.FileCode => fileVec
+          case GraftMaskedFileRead.PosCode => view(b.column(idxOrd))
+          case c => view(b.column(c))
+        }, if (sel == null) b.numRows() else sel.length)
+        true
+      }
+      override def get(): ColumnarBatch = current
+      override def close(): Unit = in.close()
+    }
+  }
+
+  /** Row-based twin (schemas the vectorized reader declines): skips
+    * masked rows, then projects the output columns. */
+  def rowReader(f: GraftFileSpec, fileValue: String)
+      : PartitionReader[InternalRow] = {
+    val mask = load(f)
+    val in = inner.createReader(f.partition(0))
+    val proj = UnsafeProjection.create(
+      outputSchema.fields.toIndexedSeq.zip(colMap).map {
+        case (_, GraftMaskedFileRead.FileCode) =>
+          Literal(UTF8String.fromString(fileValue), StringType): Expression
+        case (_, GraftMaskedFileRead.PosCode) =>
+          BoundReference(idxOrd, LongType, nullable = false)
+        case (o, c) => BoundReference(c, o.dataType, nullable = true)
+      })
+    new PartitionReader[InternalRow] {
+      private var row: InternalRow = _
+      override def next(): Boolean = {
+        while (in.next()) {
+          val r = in.get()
+          if (mask.keeps(r)) {
+            row = r
+            return true
+          }
+        }
+        false
+      }
+      override def get(): InternalRow = proj(row)
+      override def close(): Unit = in.close()
+    }
   }
 }
 
-private[graftshim] object GraftMaskedReaderFactory {
+private[graftshim] object GraftMaskedFileRead {
+  final val FileCode = -1
+  final val PosCode = -2
 
-  private[graftshim] def keyAsLong(r: InternalRow, ord: Int,
-                                   dt: org.apache.spark.sql.types.DataType): Long =
-    dt match {
-      case org.apache.spark.sql.types.LongType => r.getLong(ord)
-      case org.apache.spark.sql.types.IntegerType => r.getInt(ord).toLong
-      case org.apache.spark.sql.types.ShortType => r.getShort(ord).toLong
-      case org.apache.spark.sql.types.ByteType => r.getByte(ord).toLong
-      // temporal keys (r15): the internal representations ARE the fold's
-      // long domain — dates epoch days (int), timestamps epoch micros
-      case org.apache.spark.sql.types.DateType => r.getInt(ord).toLong
-      case org.apache.spark.sql.types.TimestampType => r.getLong(ord)
-      case other => throw new IllegalStateException(s"bad eq key type $other")
-    }
+  private val PosMaskSchema = StructType(Seq(
+    StructField(SnapshotLog.PosFileCol, StringType),
+    StructField(SnapshotLog.PosOrdCol, LongType)))
 
-  /** Internal-representation long of one key vector cell — the eq
-    * probe's read side, shared by every columnar filter loop. */
-  private[graftshim] def vecKeyAsLong(v: ColumnVector, i: Int): Long =
-    v.dataType() match {
-      case org.apache.spark.sql.types.LongType => v.getLong(i)
-      case org.apache.spark.sql.types.IntegerType => v.getInt(i).toLong
-      case org.apache.spark.sql.types.ShortType => v.getShort(i).toLong
-      case org.apache.spark.sql.types.ByteType => v.getByte(i).toLong
-      case org.apache.spark.sql.types.DateType => v.getInt(i).toLong
-      case org.apache.spark.sql.types.TimestampType => v.getLong(i)
-      case other => throw new IllegalStateException(s"bad eq key type $other")
-    }
+  /** The masked reader of `masked` files emitting `data` columns through
+    * `colMap`. The inner schema is the data columns, then the equality
+    * key when the projection pruned it, then the row-index column —
+    * nullable: it is never IN the file, and a required missing column
+    * refuses at reader init; the generator overwrites the null vector
+    * with real ordinals before every batch is handed out. */
+  def apply(spark: SparkSession, masked: Seq[GraftFileSpec],
+            dataSchema: StructType, data: StructType, colMap: Array[Int],
+            outputSchema: StructType, eqKey: Option[StructField],
+            pushedFilters: Array[Filter]): GraftMaskedFileRead = {
+    val withKey = data.fields ++ eqKey
+      .filter(k => !data.fieldNames.exists(_.equalsIgnoreCase(k.name)))
+      .map(_.copy(nullable = true))
+    val keyOrd = eqKey
+      .map(k => withKey.indexWhere(_.name.equalsIgnoreCase(k.name)))
+      .getOrElse(-1)
+    val inner = StructType(withKey :+ StructField(
+      ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType,
+      nullable = true))
+    def masks(files: Seq[GraftMaskFile], schema: StructType) =
+      if (files.isEmpty) null
+      else GraftParquetShim.parquetBatch(spark,
+        files.distinct.map(m => (m.path, m.len)), schema, schema,
+        Array.empty).createReaderFactory()
+    new GraftMaskedFileRead(
+      GraftParquetShim.parquetBatch(spark, masked.map(f => (f.path, f.len)),
+        dataSchema, inner, pushedFilters).createReaderFactory(),
+      masks(masked.flatMap(_.posMasks), PosMaskSchema),
+      masks(masked.flatMap(_.eqMasks), StructType(eqKey.toSeq.map(
+        _.copy(nullable = true)) :+ StructField("_graft_del_seq", LongType))),
+      outputSchema, colMap, idxOrd = withKey.length, keyOrd,
+      eqKey.map(_.dataType).orNull)
+  }
+}
 
-  /** Drop masked rows from one columnar batch: positional ordinals by
-    * the row-index vector, equality-masked keys by the factory's folded
-    * (key → delete seq) arrays against the FILE's commit seq. Surviving
-    * ordinals become the selection map of zero-copy wrapper vectors. A
-    * fully surviving batch passes the inner vectors through untouched
-    * (minus the extras) — between-mask files pay nothing per value. */
-  private[graftshim] def filterBatch(b: ColumnarBatch, positions: Array[Long],
-                                     dataCols: Int, idxOrd: Int,
-                                     eq: Option[GraftEqMask], keyOrd: Int,
-                                     fileSeq: Long): ColumnarBatch = {
-    val idx = if (positions.isEmpty) null else b.column(idxOrd)
-    val key = eq.map(_ => b.column(keyOrd)).orNull
-    val isStr = eq.exists(_.isString)
+/** The masks that hit ONE data file, loaded in its reading task: its
+  * sorted deleted ordinals, and its equality keys folded to their max
+  * delete seq. [[keeps]] is the one survival rule of every masked read:
+  * a row survives when its ordinal is unrecorded AND its key is null,
+  * unmasked, or deleted at a seq no later than the file's own —
+  * `SnapshotLog`'s `_graft_del_seq <= _graft_seq` rule, so re-inserts
+  * survive. Integral and temporal keys compare in their internal long
+  * domain (dates epoch days, timestamps epoch micros); strings compare
+  * as UTF8String bytes. */
+private[graftshim] final class GraftFileMask(
+    positions: Array[Long],
+    longDel: mutable.LongMap[Long],
+    strDel: java.util.HashMap[UTF8String, java.lang.Long],
+    fileSeq: Long, idxOrd: Int, keyOrd: Int, keyType: DataType) {
+
+  private val isStr = keyType == StringType
+  private val hasEq = longDel.nonEmpty || !strDel.isEmpty
+
+  private def delSeq(r: InternalRow): Long =
+    if (isStr) {
+      val d = strDel.get(r.getUTF8String(keyOrd))
+      if (d == null) Long.MinValue else d.longValue
+    } else longDel.getOrElse(GraftFileMask.keyAsLong(r, keyOrd, keyType),
+      Long.MinValue)
+
+  def keeps(r: InternalRow): Boolean =
+    (positions.isEmpty ||
+      java.util.Arrays.binarySearch(positions, r.getLong(idxOrd)) < 0) &&
+      (!hasEq || r.isNullAt(keyOrd) || delSeq(r) <= fileSeq)
+
+  /** The surviving rows of `b` as a selection map, or null when every
+    * row survives — a batch no mask touches passes through untouched. */
+  def select(b: ColumnarBatch): Array[Int] = {
+    if (positions.isEmpty && !hasEq) return null
     val n = b.numRows()
     val sel = new Array[Int](n)
     var out = 0
     var i = 0
     while (i < n) {
-      val posKeep = idx == null ||
-        java.util.Arrays.binarySearch(positions, idx.getLong(i)) < 0
-      val eqKeep = eq match {
-        case None => true
-        case Some(e) =>
-          key.isNullAt(i) || {
-            val ds =
-              if (isStr) e.delSeqOfStr(key.getUTF8String(i))
-              else e.delSeqOfLong(GraftMaskedReaderFactory.vecKeyAsLong(key, i))
-            ds <= fileSeq
-          }
-      }
-      if (posKeep && eqKeep) {
+      if (keeps(b.getRow(i))) {
         sel(out) = i
         out += 1
       }
       i += 1
     }
-    if (out == n)
-      new ColumnarBatch(Array.tabulate[ColumnVector](dataCols)(b.column), n)
-    else {
-      val selTrim = java.util.Arrays.copyOf(sel, out)
-      new ColumnarBatch(Array.tabulate[ColumnVector](dataCols)(c =>
-        new GraftSelectedColumnVector(b.column(c), selTrim)), out)
-    }
+    if (out == n) null else java.util.Arrays.copyOf(sel, out)
   }
+}
+
+private[graftshim] object GraftFileMask {
+  def keyAsLong(r: InternalRow, ord: Int, dt: DataType): Long = dt match {
+    case LongType | TimestampType => r.getLong(ord)
+    case IntegerType | DateType => r.getInt(ord).toLong
+    case ShortType => r.getShort(ord).toLong
+    case ByteType => r.getByte(ord).toLong
+    case other => throw new IllegalStateException(s"bad eq key type $other")
+  }
+}
+
+/** The reader factory of every masked shape: plain packed partitions go
+  * to the stock reader, masked files to the masked reader, and a
+  * key-grouped partition reads its files back to back, each through the
+  * reader its masks call for. */
+private[graftshim] final class GraftMaskedReaderFactory(
+    plain: Option[PartitionReaderFactory],
+    read: Option[GraftMaskedFileRead],
+    /** ONE pre-agreed answer for every partition (the engine refuses
+      * mixed row/columnar scans); false routes everything row-based. */
+    columnar: Boolean)
+    extends PartitionReaderFactory {
+
+  override def supportColumnarReads(p: InputPartition): Boolean = columnar
+
+  override def createColumnarReader(p: InputPartition)
+      : PartitionReader[ColumnarBatch] = p match {
+    case m: GraftMaskedPartition => read.get.columnarReader(m.file, m.fileValue)
+    case g: GraftBucketedPartition =>
+      new GraftConcatReader(g.files.iterator.map(f =>
+        if (f.masked) read.get.columnarReader(f, null)
+        else plain.get.createColumnarReader(f.partition(0))))
+    case other => plain.get.createColumnarReader(other)
+  }
+
+  override def createReader(p: InputPartition)
+      : PartitionReader[InternalRow] = p match {
+    case m: GraftMaskedPartition => read.get.rowReader(m.file, m.fileValue)
+    case g: GraftBucketedPartition =>
+      new GraftConcatReader(g.files.iterator.map(f =>
+        if (f.masked) read.get.rowReader(f, null)
+        else plain.get.createReader(f.partition(0))))
+    case other => plain.get.createReader(other)
+  }
+}
+
+/** Per-file readers opened lazily and read back to back. */
+private[graftshim] final class GraftConcatReader[T](
+    readers: Iterator[PartitionReader[T]]) extends PartitionReader[T] {
+  private var current: PartitionReader[T] = _
+  override def next(): Boolean = {
+    while (true) {
+      if (current == null) {
+        if (!readers.hasNext) return false
+        current = readers.next()
+      }
+      if (current.next()) return true
+      current.close()
+      current = null
+    }
+    false
+  }
+  override def get(): T = current.get()
+  override def close(): Unit = if (current != null) current.close()
 }
 
 /** A zero-copy SELECTION view of a column vector: logical row `i` reads
@@ -790,164 +598,6 @@ private[graftshim] final class GraftSelectedColumnVector(
     new GraftSelectedColumnVector(inner.getChild(ordinal), sel)
 }
 
-/** One file of a ROW-ID scan: path, length, sorted deleted ordinals
-  * (empty = unmasked), the file's commit seq, and whether the equality
-  * mask can affect it. */
-final case class GraftPosFileSpec(
-    path: String, len: Long, positions: Array[Long],
-    fileSeq: Long = Long.MaxValue, eqApplies: Boolean = false)
-
-/** One partition of a ROW-ID scan: the qualified-URI string its rows
-  * carry as `_graft_file`, the sorted deleted ordinals (empty =
-  * unmasked), the file's commit seq + equality-mask applicability, and
-  * the single-file [[FilePartition]] the stock reader consumes. */
-private[graftshim] final case class GraftPosPartition(
-    fileValue: String,
-    positions: Array[Long],
-    fileSeq: Long,
-    eqApplies: Boolean,
-    files: FilePartition) extends InputPartition {
-  override def preferredLocations(): Array[String] = files.preferredLocations()
-}
-
-/** Reader factory of [[GraftParquetShim.posBatch]]: the inner reader
-  * sees the data columns (+ the eq key when the projection pruned it)
-  * + the trailing row-index generator column; the wrapper reorders data
-  * columns to their output ordinals and synthesizes the two metadata
-  * columns — `_graft_file` as a constant string vector, `_graft_pos` as
-  * the row-index vector itself (both selection-filtered under a mask,
-  * so surviving rows keep their original file ordinals). Columnar
-  * support is a per-scan constant (one schema for every partition), so
-  * the engine's uniformity requirement holds structurally. */
-private[graftshim] final class GraftPosReaderFactory(
-    inner: PartitionReaderFactory,
-    outputSchema: StructType,
-    colMap: Array[Int],
-    /** Ordinal of the row-index generator column in the inner schema
-      * (last; after the appended eq key, when one rides). */
-    idxOrd: Int,
-    eq: Option[GraftEqMask] = None,
-    keyOrd: Int = -1,
-    /** INNER-schema type of the eq key column (null without an eq
-      * mask) — the row-based probe's access type; never looked up in
-      * the output schema, which may have pruned the key away. */
-    keyType: org.apache.spark.sql.types.DataType = null)
-    extends PartitionReaderFactory {
-
-  override def supportColumnarReads(p: InputPartition): Boolean = p match {
-    case g: GraftPosPartition => inner.supportColumnarReads(g.files)
-    case other => inner.supportColumnarReads(other)
-  }
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[ColumnarBatch] = {
-    val g = p.asInstanceOf[GraftPosPartition]
-    val innerR = inner.createColumnarReader(g.files)
-    val fileU8 = org.apache.spark.unsafe.types.UTF8String
-      .fromString(g.fileValue)
-    val eqFor = if (g.eqApplies) eq else None
-    val isStr = eqFor.exists(_.isString)
-    new PartitionReader[ColumnarBatch] {
-      private var current: ColumnarBatch = _
-      override def next(): Boolean = {
-        if (!innerR.next()) return false
-        val b = innerR.get()
-        val idx = b.column(idxOrd)
-        val key = eqFor.map(_ => b.column(keyOrd)).orNull
-        val n = b.numRows()
-        val sel: Array[Int] =
-          if (g.positions.isEmpty && eqFor.isEmpty) null
-          else {
-            val s = new Array[Int](n)
-            var out = 0; var i = 0
-            while (i < n) {
-              val posKeep = g.positions.isEmpty ||
-                java.util.Arrays.binarySearch(
-                  g.positions, idx.getLong(i)) < 0
-              val eqKeep = eqFor match {
-                case None => true
-                case Some(e) =>
-                  key.isNullAt(i) || {
-                    val ds =
-                      if (isStr) e.delSeqOfStr(key.getUTF8String(i))
-                      else e.delSeqOfLong(
-                        GraftMaskedReaderFactory.vecKeyAsLong(key, i))
-                    ds <= g.fileSeq
-                  }
-              }
-              if (posKeep && eqKeep) { s(out) = i; out += 1 }
-              i += 1
-            }
-            if (out == n) null else java.util.Arrays.copyOf(s, out)
-          }
-        val rows = if (sel == null) n else sel.length
-        def view(v: ColumnVector): ColumnVector =
-          if (sel == null) v else new GraftSelectedColumnVector(v, sel)
-        current = new ColumnarBatch(colMap.map {
-          case GraftPosReaderFactory.FileCode =>
-            new GraftConstantStringVector(fileU8): ColumnVector
-          case GraftPosReaderFactory.PosCode => view(idx)
-          case c => view(b.column(c))
-        }, rows)
-        true
-      }
-      override def get(): ColumnarBatch = current
-      override def close(): Unit = innerR.close()
-    }
-  }
-
-  override def createReader(p: InputPartition)
-      : PartitionReader[InternalRow] = {
-    val g = p.asInstanceOf[GraftPosPartition]
-    val innerR = inner.createReader(g.files)
-    val eqFor = if (g.eqApplies) eq else None
-    val proj = UnsafeProjection.create(
-      outputSchema.fields.toIndexedSeq.zip(colMap).map {
-        case (_, GraftPosReaderFactory.FileCode) =>
-          org.apache.spark.sql.catalyst.expressions.Literal(
-            org.apache.spark.unsafe.types.UTF8String.fromString(g.fileValue),
-            org.apache.spark.sql.types.StringType)
-            : org.apache.spark.sql.catalyst.expressions.Expression
-        case (_, GraftPosReaderFactory.PosCode) =>
-          BoundReference(idxOrd, org.apache.spark.sql.types.LongType,
-            nullable = false)
-        case (f, c) => BoundReference(c, f.dataType, nullable = true)
-      })
-    new PartitionReader[InternalRow] {
-      private var row: InternalRow = _
-      override def next(): Boolean = {
-        while (innerR.next()) {
-          val r = innerR.get()
-          val posKeep = g.positions.isEmpty ||
-            java.util.Arrays.binarySearch(
-              g.positions, r.getLong(idxOrd)) < 0
-          val eqKeep = eqFor.forall { e =>
-            r.isNullAt(keyOrd) || {
-              val ds =
-                if (e.isString) e.delSeqOfStr(r.getUTF8String(keyOrd))
-                else e.delSeqOfLong(GraftMaskedReaderFactory.keyAsLong(
-                  r, keyOrd, keyType))
-              ds <= g.fileSeq
-            }
-          }
-          if (posKeep && eqKeep) {
-            row = r
-            return true
-          }
-        }
-        false
-      }
-      override def get(): InternalRow = proj(row)
-      override def close(): Unit = innerR.close()
-    }
-  }
-}
-
-private[graftshim] object GraftPosReaderFactory {
-  final val FileCode = -1
-  final val PosCode = -2
-}
-
 /** A constant non-null string column — the per-partition `_graft_file`
   * value, one shared UTF8String however many rows read it. */
 private[graftshim] final class GraftConstantStringVector(
@@ -977,20 +627,4 @@ private[graftshim] final class GraftConstantStringVector(
   override def getBinary(i: Int): Array[Byte] = value.getBytes
   override def getChild(ordinal: Int): ColumnVector =
     throw new UnsupportedOperationException
-}
-
-/** Unwraps [[GraftBucketedPartition]]s back to the [[FilePartition]]s
-  * the stock parquet reader factory expects. */
-private[graftshim] final class GraftUnwrapReaderFactory(
-    inner: PartitionReaderFactory) extends PartitionReaderFactory {
-  private def unwrap(p: InputPartition): InputPartition = p match {
-    case g: GraftBucketedPartition => g.files
-    case other => other
-  }
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    inner.createReader(unwrap(p))
-  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] =
-    inner.createColumnarReader(unwrap(p))
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    inner.supportColumnarReads(unwrap(p))
 }

@@ -578,8 +578,10 @@ private[graftshim] final class GraftBucketDataWriter(
 }
 
 /** One posdelete file written by a delta task (path, recorded
-  * positions, bytes). */
-final case class GraftPosFileResult(path: String, rows: Long, bytes: Long)
+  * positions, bytes, and the `_graft_file` values it names — None past
+  * the partition-value cap). */
+final case class GraftPosFileResult(path: String, rows: Long, bytes: Long,
+                                    files: Option[Seq[String]])
     extends Serializable
 
 /** A delta task's combined result: new data files + the task's
@@ -609,6 +611,8 @@ final class GraftDeltaWriterFactory(
       private var posWriter: org.apache.spark.sql.execution.datasources.OutputWriter = _
       private val posPath = s"$posDir/delete-$partitionId-$taskId.parquet"
       private var posRows = 0L
+      // the files this task's deletes name; null once over the cap
+      private var posFiles = mutable.Set.empty[String]
 
       override def insert(row: InternalRow): Unit = inner.write(row)
 
@@ -624,6 +628,11 @@ final class GraftDeltaWriterFactory(
         }
         posWriter.write(id)
         posRows += 1
+        if (posFiles != null) {
+          posFiles += id.getUTF8String(0).toString
+          if (posFiles.size > graft.table.SnapshotLog.MaxPartValuesPerFile)
+            posFiles = null
+        }
       }
 
       override def update(metadata: InternalRow, id: InternalRow,
@@ -639,7 +648,8 @@ final class GraftDeltaWriterFactory(
             posWriter.close()
             val p = new Path(posPath)
             Some(GraftPosFileResult(p.toUri.getPath, posRows,
-              p.getFileSystem(conf.value).getFileStatus(p).getLen))
+              p.getFileSystem(conf.value).getFileStatus(p).getLen,
+              Option(posFiles).map(_.toSeq.sorted)))
           }
         GraftDeltaTaskResult(inner.finishFiles(), pos)
       }

@@ -239,7 +239,8 @@ class ConnectorSpec extends AnyFunSuite {
       lit("upd").as("cat"), (col("id") * 3).as("v")), keyCol = "id")
     val eq = spark.read.format("graft").load(eqDir)
     val eqScan = batchScanOf(eq)
-    assert(eqScan.exists(d => d.startsWith("GraftBatchScan(") && d.contains("eqKeys=")),
+    assert(eqScan.exists(d => d.startsWith("GraftBatchScan(") &&
+      d.contains("eqMaskFiles=1, eqMaskRows=10")),
       s"expected the masked V2 scan, got $eqScan")
     assert(eq.orderBy("id").collect().toSeq === apiRows(eqDir, eq))
     assert(eq.count() === 410)
@@ -249,7 +250,7 @@ class ConnectorSpec extends AnyFunSuite {
     val pos = spark.read.format("graft").load(posDir)
     val posScan = batchScanOf(pos)
     assert(posScan.exists(d => d.startsWith("GraftBatchScan(") &&
-      d.contains("maskedRows=58")),
+      d.contains("posMaskRows=58")),
       s"expected the position-masked V2 scan, got $posScan")
     assert(pos.orderBy("id").collect().toSeq === apiRows(posDir, pos))
     assert(pos.count() === 400 - 58)
@@ -274,26 +275,29 @@ class ConnectorSpec extends AnyFunSuite {
       Seq(("upd", 750L)))
     // snapshot 2 is masked too: time travel reads it through the same scan
     val v2 = spark.read.format("graft").option("versionAsOf", "2").load(dir)
-    assert(batchScanOf(v2).exists(_.contains("eqKeys=8")))
+    assert(batchScanOf(v2).exists(_.contains("eqMaskRows=8")))
     assert(v2.orderBy("id").collect().toSeq === apiRows(dir, v2, Some(2L)))
   }
 
-  test("masked reads over the mask budget answer through the V2 bridge scan") {
-    val dir = clustered("maskbudget")
+  test("masked reads keyed on an unprobed equality-key type answer through the V2 bridge scan") {
+    val dir = tmp("maskbridge")
+    rows(400).withColumn("dk", col("id").cast("double"))
+      .repartitionByRange(4, col("id"))
+      .write.format("graft").option("statsCols", "id").save(dir)
     Merge.deleteWhere(spark, dir, col("id") % 3 === 0)
+    // a DOUBLE equality key: the vectorized read probes integral,
+    // string and temporal keys only
     Merge.mergeOnRead(spark, dir, spark.range(395, 405).select(col("id"),
-      lit("upd").as("cat"), (col("id") * 3).as("v")), keyCol = "id")
-    spark.conf.set("graft.v2.maskedScan.maxPositions", "0")
-    try {
-      val back = spark.read.format("graft").load(dir)
-      assert(batchScanOf(back).isEmpty, "over-budget masks must not plan the vectorized scan")
-      val scans = back.queryExecution.optimizedPlan.collect {
-        case DataSourceV2ScanRelation(_, w: V1ScanWrapper, _, _, _) =>
-          w.v1Scan.description() }
-      assert(scans.exists(_.startsWith("GraftBridgeScan(")), scans.toString)
-      assert(back.orderBy("id").collect().toSeq === apiRows(dir, back))
-      assert(back.filter(col("id") === 398).select("v").head.getLong(0) === 398L * 3)
-    } finally spark.conf.unset("graft.v2.maskedScan.maxPositions")
+      lit("upd").as("cat"), (col("id") * 3).as("v"),
+      col("id").cast("double").as("dk")), keyCol = "dk")
+    val back = spark.read.format("graft").load(dir)
+    assert(batchScanOf(back).isEmpty, "a double eq key must not plan the vectorized scan")
+    val scans = back.queryExecution.optimizedPlan.collect {
+      case DataSourceV2ScanRelation(_, w: V1ScanWrapper, _, _, _) =>
+        w.v1Scan.description() }
+    assert(scans.exists(_.startsWith("GraftBridgeScan(")), scans.toString)
+    assert(back.orderBy("id").collect().toSeq === apiRows(dir, back))
+    assert(back.filter(col("id") === 398).select("v").head.getLong(0) === 398L * 3)
   }
 
   test("overwrite replaces atomically; history keeps the pre-overwrite snapshot") {

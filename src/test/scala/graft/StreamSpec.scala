@@ -693,9 +693,9 @@ class StreamSpec extends AnyFunSuite {
     assert(SnapshotLog.commits(spark, s"$base/t").size == 2)
   }
 
-  test("upsert sink auto-materializes masks past the threshold; feed unaffected") {
+  test("upsert sink masks fold into data via materializeDeletes after the drain; feed intact") {
     import spark.implicits._
-    import graft.table.{DiffConsumer, SnapshotLog}
+    import graft.table.{DiffConsumer, Merge, SnapshotLog}
     val base = Files.createTempDirectory("graft-automat").toString
     Files.createDirectories(Paths.get(s"$base/in"))
     def addFile(rows: Seq[(Long, String, Long, Boolean)], tag: String): Unit = {
@@ -714,9 +714,10 @@ class StreamSpec extends AnyFunSuite {
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in"),
       s"$base/t", s"$base/chk", keyCol = "id", orderCol = "ord",
-      deleteCol = Some("is_del"), materializeAtMasks = Some(1))
-    // batch 1's 2 mask entries crossed the threshold: the sink appended a
-    // materializing replace, live files are data-only, content exact
+      deleteCol = Some("is_del"))
+    // batch 1 left 2 mask entries; maintenance after the drain folds them
+    // in with a replace: live files are data-only, content exact
+    assert(Merge.materializeDeletes(spark, s"$base/t").isDefined)
     val commits = SnapshotLog.commits(spark, s"$base/t")
     assert(commits.map(_.op) == Seq("append", "rowdelta", "replace"))
     assert(SnapshotLog.filesAt(spark, s"$base/t").forall(_.kind == "data"))
@@ -731,9 +732,9 @@ class StreamSpec extends AnyFunSuite {
       + ((2L, "upsert")) + ((3L, "delete"))))
   }
 
-  test("upsert sink consolidates mask files inline past the file threshold") {
+  test("upsert sink mask files fold to one through consolidateMasks after the drain") {
     import spark.implicits._
-    import graft.table.{DiffConsumer, SnapshotLog}
+    import graft.table.{DiffConsumer, Merge, SnapshotLog}
     val base = Files.createTempDirectory("graft-autoconsol").toString
     Files.createDirectories(Paths.get(s"$base/in"))
     def addFile(rows: Seq[(Long, String, Long, Boolean)], tag: String): Unit = {
@@ -754,11 +755,15 @@ class StreamSpec extends AnyFunSuite {
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in"),
       s"$base/t", s"$base/chk", keyCol = "id", orderCol = "ord",
-      deleteCol = Some("is_del"), consolidateAtMaskFiles = Some(3))
-    // mask FILE count stays bounded by the threshold (each consolidation
-    // folds the accrued files to one; data files are never rewritten)
-    val masks = SnapshotLog.filesAt(spark, s"$base/t").filter(_.kind == "eqdelete")
-    assert(masks.size <= 3, s"mask files unbounded: ${masks.size}")
+      deleteCol = Some("is_del"))
+    def masks = SnapshotLog.filesAt(spark, s"$base/t").filter(_.kind == "eqdelete")
+    assert(masks.size == 5, s"one mask file per update batch: ${masks.size}")
+    // maintenance after the drain folds the accrued files to one
+    // (metadata-only; data files are never rewritten)
+    val dataBefore = SnapshotLog.filesAt(spark, s"$base/t").filter(_.kind == "data")
+    assert(Merge.consolidateMasks(spark, s"$base/t").isDefined)
+    assert(masks.size == 1, s"mask files not folded: ${masks.size}")
+    assert(SnapshotLog.filesAt(spark, s"$base/t").filter(_.kind == "data") == dataBefore)
     assert(SnapshotLog.commits(spark, s"$base/t").exists(c =>
       c.op == "replace" && c.summary.contains("consolidated_masks")))
     // content exact through the consolidations

@@ -439,7 +439,7 @@ class ConnectorV2Spec extends AnyFunSuite {
       "the delete-only delta must have landed as an equality mask")
     new GraftScanBuilder(spark, s"$wh/a").build() match {
       case b: GraftV2BatchScan =>
-        assert(b.description().contains("eqKeys=100"), b.description())
+        assert(b.description().contains("eqMaskRows=100"), b.description())
         assert(b.outputPartitioning().isInstanceOf[
           org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning],
           s"eq masks must not disable key-grouped reporting: ${b.description()}")
@@ -494,7 +494,7 @@ class ConnectorV2Spec extends AnyFunSuite {
         .withColumn("_del", lit(true)), "ts", deleteCol = Some("_del"))
     new GraftScanBuilder(spark, dir).build() match {
       case b: GraftV2BatchScan =>
-        assert(b.description().contains("eqKeys=5"), b.description())
+        assert(b.description().contains("eqMaskRows=5"), b.description())
       case other => fail(s"timestamp eq keys must vectorize, got $other")
     }
     val df = spark.sql("SELECT count(*) AS n, sum(id) AS s FROM gv2_eqts.t")
@@ -514,7 +514,7 @@ class ConnectorV2Spec extends AnyFunSuite {
         .withColumn("_del", lit(true)), "d", deleteCol = Some("_del"))
     new GraftScanBuilder(spark, dir2).build() match {
       case b: GraftV2BatchScan =>
-        assert(b.description().contains("eqKeys=3"), b.description())
+        assert(b.description().contains("eqMaskRows=3"), b.description())
       case other => fail(s"date eq keys must vectorize, got $other")
     }
     assert(spark.sql("SELECT count(*) FROM gv2_eqts.t2").head.getLong(0)
@@ -887,7 +887,7 @@ class ConnectorV2Spec extends AnyFunSuite {
       case b: GraftV2BatchScan =>
         assert(b.description().contains("files=4"), b.description())
         assert(b.description().contains("pruned=0"), b.description())
-        assert(b.description().contains("maskedRows=5"), b.description())
+        assert(b.description().contains("posMaskRows=5"), b.description())
       case other => fail(s"expected the masked batch scan, got $other")
     }
     assert(spark.sql("SELECT count(*) FROM (SELECT * FROM gv2_limit.t LIMIT 4000) s")
@@ -908,8 +908,8 @@ class ConnectorV2Spec extends AnyFunSuite {
     val sb = new GraftScanBuilder(spark, dir)
     sb.build() match {
       case b: GraftV2BatchScan =>
-        assert(b.description().contains("maskedFiles=2"), b.description())
-        assert(b.description().contains("maskedRows=200"), b.description())
+        assert(b.description().contains("filesWithMasks=2"), b.description())
+        assert(b.description().contains("posMaskRows=200"), b.description())
         val st = b.estimateStatistics()
         assert(st.numRows().getAsLong === 3800,
           "CBO rows = manifest rows minus recorded mask debt")
@@ -942,15 +942,11 @@ class ConnectorV2Spec extends AnyFunSuite {
     // an ALL-ROWS-MASKED file still reads correctly (empty batches)
     Merge.deleteWhere(spark, dir, col("id") >= 3000 && col("id") < 4000)
     assert(spark.sql("SELECT count(*) FROM gv2_mor.t").head.getLong(0) === 2801)
-    // the bridge twin answers identically (budget 0 forces it): the
+    // SnapshotLog's merge-on-read plan answers identically: the
     // vectorized mask path may only change the PLAN, never the answer
-    spark.conf.set("graft.v2.maskedScan.maxPositions", "0")
-    try {
-      val sb2 = new GraftScanBuilder(spark, dir)
-      assert(sb2.build().isInstanceOf[GraftBridgeScan],
-        "debt beyond the budget must fall back to the bridge")
-      assert(spark.sql("SELECT count(*) FROM gv2_mor.t").head.getLong(0) === 2801)
-    } finally spark.conf.unset("graft.v2.maskedScan.maxPositions")
+    assert(new GraftScanBuilder(spark, dir).build().isInstanceOf[GraftV2BatchScan],
+      "growing mask debt stays on the vectorized scan")
+    assert(SnapshotLog.read(spark, dir).get.count() === 2801)
     // EQUALITY masks vectorize too since r15 (the seq-rule fold ships
     // in the reader factory as sorted key → max-delete-seq arrays)
     Merge.mergeOnRead(spark, dir,
@@ -959,7 +955,7 @@ class ConnectorV2Spec extends AnyFunSuite {
     val sb3 = new GraftScanBuilder(spark, dir)
     sb3.build() match {
       case b: GraftV2BatchScan =>
-        assert(b.description().contains("eqKeys=10"), b.description())
+        assert(b.description().contains("eqMaskRows=10"), b.description())
       case other => fail(s"expected the eq-masked batch scan, got $other")
     }
     // 9 live rows leave (key 103 was already positionally deleted)
@@ -997,6 +993,58 @@ class ConnectorV2Spec extends AnyFunSuite {
     assert(kept.size === 1 && planned === kept)
   }
 
+  test("each data file is handed exactly the mask files that can hit it") {
+    val wh = freshWarehouse("cand")
+    val dir = s"$wh/t"
+    // 4 range-clustered files with id zones
+    for (b <- 0 until 4)
+      rows(b * 1000L, (b + 1) * 1000L).coalesce(1).write.format("graft")
+        .mode(if (b == 0) "error" else "append")
+        .option("statsCols", "id").save(dir)
+    val Seq(f0, f1, f2, f3) = SnapshotLog.filesAt(spark, dir).sortBy(_.statsMin)
+    // a DELETE touching files 0 and 1: its manifest names both
+    Merge.deleteWhere(spark, dir, col("id") % 10 === 3 && col("id") < 2000)
+    // an equality delete whose key zone [2500, 3450] overlaps files 2, 3
+    Merge.mergeOnRead(spark, dir,
+      rows(2500, 3500).filter(col("id") % 50 === 0).withColumn("_del", lit(true)),
+      "id", deleteCol = Some("_del"))
+    // a positional mask in the shape written before posdelete manifests
+    // recorded their `_graft_file` set: it names file 3, says nothing
+    val legacy = SnapshotLog.writeData(spark.read.parquet(f3.path)
+        .select(col("_metadata.file_path").as(SnapshotLog.PosFileCol),
+          col("_metadata.row_index").as(SnapshotLog.PosOrdCol))
+        .filter(col(SnapshotLog.PosOrdCol) < 10).coalesce(1),
+      dir, kind = "posdelete", rawPhysical = true)
+    assert(legacy.forall(_.parts.isEmpty))
+    SnapshotLog.commit(spark, dir, "rowdelta", legacy)
+    // a re-insert, younger than every mask
+    rows(3, 4).coalesce(1).write.format("graft").mode("append")
+      .option("statsCols", "id").save(dir)
+    val live = SnapshotLog.filesAt(spark, dir)
+    val Seq(named) = live.filter(f => f.kind == "posdelete" && f.parts.nonEmpty)
+    val Seq(eq) = live.filter(_.kind == "eqdelete")
+    val Seq(reinsert) = live.filter(f => f.kind == "data" && f.rows == 1)
+    val scan = new GraftScanBuilder(spark, dir).build().asInstanceOf[GraftV2BatchScan]
+    val handed = scan.fileSpecs.map(s =>
+      s.path -> ((s.posMasks.map(_.path).toSet, s.eqMasks.map(_.path).toSet))).toMap
+    val l = legacy.head.path
+    assert(handed === Map(
+      f0.path -> ((Set(named.path, l), Set.empty[String])),
+      f1.path -> ((Set(named.path, l), Set.empty[String])),
+      f2.path -> ((Set(l), Set(eq.path))),
+      f3.path -> ((Set(l), Set(eq.path))),
+      reinsert.path -> ((Set.empty[String], Set.empty[String]))))
+    assert(scan.description().contains("filesWithMasks=4"), scan.description())
+    // the answers equal SnapshotLog's merge-on-read plan
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "v").collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    val got = sorted(spark.sql("SELECT * FROM gv2_cand.t"))
+    assert(got === sorted(SnapshotLog.read(spark, dir).get))
+    val survivors = (0L until 4000L).filterNot(i => (i % 10 == 3 && i < 2000) ||
+      (i >= 2500 && i < 3500 && i % 50 == 0) || (i >= 3000 && i < 3010)) :+ 3L
+    assert(got === survivors.map(i => (i, i * 2)).sorted)
+  }
+
   test("vectorized equality-mask read: seq rule, re-inserts and budget fallback (r15)") {
     val wh = freshWarehouse("eqv")
     val dir = s"$wh/t"
@@ -1019,7 +1067,7 @@ class ConnectorV2Spec extends AnyFunSuite {
     val sb = new GraftScanBuilder(spark, dir)
     sb.build() match {
       case b: GraftV2BatchScan =>
-        assert(b.description().contains("eqKeys=200"), b.description())
+        assert(b.description().contains("eqMaskRows=200"), b.description())
         assert(!b.estimateStatistics().numRows().isPresent,
           "eq-masked row counts are unknowable from metadata")
       case other => fail(s"expected the eq-masked batch scan, got $other")
@@ -1036,23 +1084,17 @@ class ConnectorV2Spec extends AnyFunSuite {
     // column joins the inner read and is dropped by the wrapper)
     val vOnly = spark.sql("SELECT v FROM gv2_eqv.t WHERE id >= 0").collect()
     assert(vOnly.length === expected)
-    // the bridge twin answers identically (budget 0 forces it)
-    spark.conf.set("graft.v2.maskedScan.maxPositions", "0")
-    try {
-      assert(new GraftScanBuilder(spark, dir).build()
-        .isInstanceOf[GraftBridgeScan],
-        "debt beyond the budget must fall back to the bridge")
-      assert(spark.sql("SELECT count(*) FROM gv2_eqv.t").head.getLong(0)
-        === expected.toLong)
-    } finally spark.conf.unset("graft.v2.maskedScan.maxPositions")
+    // SnapshotLog's merge-on-read plan answers identically
+    assert(SnapshotLog.read(spark, dir).get.count() === expected.toLong)
     // POS + EQ masks COMPOSE on the vectorized path: a positional
     // delete on top of the equality state
     Merge.deleteWhere(spark, dir, col("id") >= 2900 && col("id") < 3000)
     val afterPos = expected - (2900L until 3000L).count(_ % 15 != 2)
     new GraftScanBuilder(spark, dir).build() match {
       case b: GraftV2BatchScan =>
-        assert(b.description().contains("eqKeys=200") &&
-          b.description().contains("maskedFiles="), b.description())
+        assert(b.description().contains("eqMaskRows=200") &&
+          b.description().contains("posMaskRows=100") &&
+          b.description().contains("filesWithMasks=3"), b.description())
       case other => fail(s"expected the combined masked scan, got $other")
     }
     assert(spark.sql("SELECT count(*) FROM gv2_eqv.t").head.getLong(0)

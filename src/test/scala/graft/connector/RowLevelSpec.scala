@@ -216,7 +216,7 @@ class RowLevelSpec extends AnyFunSuite {
     val probe = vanilla.sql(s"SELECT k, _graft_file, _graft_pos FROM $t")
     val pplan = probe.queryExecution.executedPlan
     assert(pplan.toString.contains("rowIds=true") &&
-      pplan.toString.contains("eqKeys=100") &&
+      pplan.toString.contains("eqMaskRows=100") &&
       !pplan.toString.contains("GraftBridgeRelation"),
       s"the eq-masked row-id scan must vectorize:\n$pplan")
     val scans = pplan.collect {
@@ -248,39 +248,53 @@ class RowLevelSpec extends AnyFunSuite {
     assert(r2.getLong(0) === live.filterNot(_ % 7 == 1).map(_ * 2).sum)
   }
 
-  test("mask load memoizes per posdelete set: re-planning runs zero jobs (r15)") {
-    val (t, _) = freshTable("maskmemo")
+  test("masked V2 reads plan with zero Spark jobs: masks load in the reading task") {
+    // a freshly DELETEd (positional) snapshot and a freshly
+    // mergeOnRead (equality) one — neither planned before
+    val (t, _) = freshTable("posplan")
     vanilla.sql(s"DELETE FROM $t WHERE k % 9 = 2")
-    // first plan of this snapshot loads the masks (a bounded job)
-    vanilla.sql(s"SELECT k FROM $t WHERE k < 10")
-      .queryExecution.executedPlan
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val (te, dire) = freshTable("eqplan")
+    graft.table.Merge.mergeOnRead(main, dire,
+      main.range(0, 1000).filter(col("id") % 10 === 6)
+        .selectExpr("id AS k", "id * 2 AS v")
+        .withColumn("_del", lit(true)), "k", deleteCol = Some("_del"))
+    val sc = vanilla.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        sites.add(j.stageInfos.map(si =>
-          si.name + "@" + si.details.linesIterator.take(3).mkString("|"))
-          .mkString(";"))
-      }
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(j.stageInfos.map(si =>
+            si.name + "@" + si.details.linesIterator.take(3).mkString("|"))
+            .mkString(";")))
     }
-    vanilla.sparkContext.addSparkListener(listener)
-    try {
-      // a DIFFERENT query over the same snapshot: planning must be a
-      // pure cache hit — zero Spark jobs until execution
-      vanilla.sql(s"SELECT v FROM $t WHERE k > 500")
-        .queryExecution.executedPlan
-      // prove listener delivery with one marker job, then require the
-      // marker to be the ONLY job seen (the bus is FIFO: any plan-time
-      // job would have been counted before the marker's event)
-      vanilla.sparkContext.parallelize(Seq(1)).count()
+    // one tagged job; the bus is FIFO, so once its start is seen every
+    // earlier job's start has been delivered too
+    def marker(tag: String): Unit = {
+      sc.setJobDescription(tag)
+      try sc.parallelize(Seq(1)).count() finally sc.setJobDescription(null)
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-      while (jobs.get() < 1 && System.nanoTime() < deadline)
+      while (!seen.contains(tag) && System.nanoTime() < deadline)
         Thread.sleep(50)
-      assert(jobs.get() === 1,
-        "re-planning the same masked snapshot must not re-run the mask " +
-          s"load (jobs: ${sites.toArray.mkString(", ")})")
-    } finally vanilla.sparkContext.removeSparkListener(listener)
+      assert(seen.contains(tag), s"listener never saw the $tag marker")
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("before-plan")
+      seen.clear()
+      // first plans of each masked snapshot, the row-id face included
+      vanilla.sql(s"SELECT k FROM $t WHERE k < 10").queryExecution.executedPlan
+      vanilla.sql(s"SELECT v FROM $te WHERE k > 500").queryExecution.executedPlan
+      vanilla.sql(s"SELECT k, _graft_file, _graft_pos FROM $te")
+        .queryExecution.executedPlan
+      marker("after-plan")
+      assert(seen.toArray.toSeq === Seq("after-plan"),
+        "planning a masked read must run no Spark job (jobs: " +
+          s"${seen.toArray.mkString(", ")})")
+    } finally sc.removeSparkListener(listener)
+    assert(vanilla.sql(s"SELECT count(*) FROM $t").head.getLong(0) ===
+      (0L until 1000L).count(_ % 9 != 2))
+    assert(vanilla.sql(s"SELECT count(*) FROM $te").head.getLong(0) === 900)
   }
 }
