@@ -90,9 +90,9 @@ object StreamSync {
     * as one `rowdelta` snapshot — new data files plus one equality-delete
     * key file, ZERO rewrites of the standing table. This is the streaming
     * CDC apply path at 100 TB: per batch the write cost is O(batch)
-    * however large the table, the read side pays one broadcast mask join
-    * until [[graft.table.Merge.materializeDeletes]] folds the masks in
-    * (maintenance, invisible to readers and the change feed), and
+    * however large the table, readers apply the pending masks until
+    * [[graft.table.Merge.materializeDeletes]] folds them in (maintenance
+    * the Advisor names, invisible to readers and the change feed), and
     * downstream consumers tail ROW-LEVEL changes through
     * [[graft.table.DiffConsumer.consumeChanges]] — the face a COW sink
     * cannot offer.
