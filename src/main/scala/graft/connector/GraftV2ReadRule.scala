@@ -12,8 +12,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Row bridge: the rule swaps the [[GraftComputedRelation]] for a
   * `DataSourceV2Relation` over the relation's own pinned table, so the
   * read is the vectorized masked scan with manifest file pruning on
-  * pushed filters (and the scan's own [[GraftBridgeScan]] past the
-  * mask budget). The relation's output attributes are REUSED (same
+  * pushed filters (and the scan's own [[GraftBridgeScan]] for drift
+  * that does not promote and equality keys it cannot probe). The relation's output attributes are REUSED (same
   * exprIds), exactly as [[org.apache.spark.sql.graftshim.GraftStreamingTableRule]]
   * does, so every reference already resolved against it stays valid.
   *

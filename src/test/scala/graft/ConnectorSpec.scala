@@ -15,8 +15,8 @@ import graft.table.{Merge, SnapshotLog}
   * parquet `FileSourceScanExec` (whole-stage codegen, parquet row-group
   * pushdown) whose file set the manifest zones/blooms/partition values
   * prune, while masked or drifted snapshots read through the V2 scan
-  * (vectorized masked reads, the bridge scan past the mask budget) and
-  * stay CORRECT.
+  * (vectorized masked reads, the bridge scan for unprobed equality keys)
+  * and stay CORRECT.
   */
 class ConnectorSpec extends AnyFunSuite {
 

@@ -947,8 +947,8 @@ class ConnectorV2Spec extends AnyFunSuite {
     assert(new GraftScanBuilder(spark, dir).build().isInstanceOf[GraftV2BatchScan],
       "growing mask debt stays on the vectorized scan")
     assert(SnapshotLog.read(spark, dir).get.count() === 2801)
-    // EQUALITY masks vectorize too since r15 (the seq-rule fold ships
-    // in the reader factory as sorted key → max-delete-seq arrays)
+    // EQUALITY masks vectorize too (the reading task folds its candidate
+    // mask files to key → max delete seq)
     Merge.mergeOnRead(spark, dir,
       rows(100, 110).withColumn("_del", lit(true)), "id",
       deleteCol = Some("_del"))

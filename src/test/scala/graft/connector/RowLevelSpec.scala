@@ -284,14 +284,17 @@ class RowLevelSpec extends AnyFunSuite {
       marker("before-plan")
       seen.clear()
       // first plans of each masked snapshot, the row-id face included
-      vanilla.sql(s"SELECT k FROM $t WHERE k < 10").queryExecution.executedPlan
-      vanilla.sql(s"SELECT v FROM $te WHERE k > 500").queryExecution.executedPlan
-      vanilla.sql(s"SELECT k, _graft_file, _graft_pos FROM $te")
-        .queryExecution.executedPlan
+      val plans = Seq(s"SELECT k FROM $t WHERE k < 10",
+        s"SELECT v FROM $te WHERE k > 500",
+        s"SELECT k, _graft_file, _graft_pos FROM $te")
+        .map(q => vanilla.sql(q).queryExecution.executedPlan.toString)
       marker("after-plan")
       assert(seen.toArray.toSeq === Seq("after-plan"),
         "planning a masked read must run no Spark job (jobs: " +
           s"${seen.toArray.mkString(", ")})")
+      // ...and each plan is the vectorized masked scan, not the bridge
+      plans.foreach(p => assert(p.contains("GraftBatchScan(") &&
+        p.contains("MaskFiles=") && !p.contains("GraftBridgeRelation"), p))
     } finally sc.removeSparkListener(listener)
     assert(vanilla.sql(s"SELECT count(*) FROM $t").head.getLong(0) ===
       (0L until 1000L).count(_ % 9 != 2))
