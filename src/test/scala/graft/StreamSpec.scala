@@ -693,9 +693,9 @@ class StreamSpec extends AnyFunSuite {
     assert(SnapshotLog.commits(spark, s"$base/t").size == 2)
   }
 
-  test("upsert sink masks fold into data via materializeDeletes after the drain; feed intact") {
+  test("upsert sink auto-materializes masks past the threshold; feed unaffected") {
     import spark.implicits._
-    import graft.table.{DiffConsumer, Merge, SnapshotLog}
+    import graft.table.{DiffConsumer, SnapshotLog}
     val base = Files.createTempDirectory("graft-automat").toString
     Files.createDirectories(Paths.get(s"$base/in"))
     def addFile(rows: Seq[(Long, String, Long, Boolean)], tag: String): Unit = {
@@ -713,20 +713,22 @@ class StreamSpec extends AnyFunSuite {
     StreamSync.upsertSink(
       spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$base/in"),
-      s"$base/t", s"$base/chk", keyCol = "id", orderCol = "ord",
+      s"$base/t_parquet", s"$base/chk", keyCol = "id", orderCol = "ord",
       deleteCol = Some("is_del"))
-    // batch 1 left 2 mask entries; maintenance after the drain folds them
-    // in with a replace: live files are data-only, content exact
-    assert(Merge.materializeDeletes(spark, s"$base/t").isDefined)
-    val commits = SnapshotLog.commits(spark, s"$base/t")
+    // batch 1 left 2 mask entries against 6 data rows, past the
+    // advisor's mask ratio: the maintenance loop run after the drain
+    // folds them in with a replace — live files are data-only, content exact
+    assert(graft.cdc.PipelineRunner.maintainTable(spark, base, "t") ==
+      Seq("materialize_deletes"))
+    val commits = SnapshotLog.commits(spark, s"$base/t_parquet")
     assert(commits.map(_.op) == Seq("append", "rowdelta", "replace"))
-    assert(SnapshotLog.filesAt(spark, s"$base/t").forall(_.kind == "data"))
-    val got = SnapshotLog.read(spark, s"$base/t").get.collect()
+    assert(SnapshotLog.filesAt(spark, s"$base/t_parquet").forall(_.kind == "data"))
+    val got = SnapshotLog.read(spark, s"$base/t_parquet").get.collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got == Map(1L -> "v1", 2L -> "x", 4L -> "v4", 5L -> "v5", 6L -> "v6"))
     // the replace is invisible to the row-level feed
     val consumer = new DiffConsumer(s"$base/state")
-    val feed = consumer.consumeChanges(spark, s"$base/t", "idx")._1.get.collect()
+    val feed = consumer.consumeChanges(spark, s"$base/t_parquet", "idx")._1.get.collect()
       .map(r => (r.getLong(0), r.getAs[String]("_change_op"))).toSet
     assert(feed == ((1L to 6L).map(k => (k, "insert")).toSet
       + ((2L, "upsert")) + ((3L, "delete"))))

@@ -248,9 +248,11 @@ class RowLevelSpec extends AnyFunSuite {
     assert(r2.getLong(0) === live.filterNot(_ % 7 == 1).map(_ * 2).sum)
   }
 
-  test("masked V2 reads plan with zero Spark jobs: masks load in the reading task") {
-    // a freshly DELETEd (positional) snapshot and a freshly
-    // mergeOnRead (equality) one — neither planned before
+  test("mask load memoizes per posdelete set: re-planning runs zero jobs (r15)") {
+    // masks load in the reading task, so no plan needs a memo: the
+    // FIRST plan of a freshly DELETEd (positional) snapshot and of a
+    // freshly mergeOnRead (equality) one runs zero jobs, and so does
+    // re-planning either with a different query
     val (t, _) = freshTable("posplan")
     vanilla.sql(s"DELETE FROM $t WHERE k % 9 = 2")
     val (te, dire) = freshTable("eqplan")
@@ -283,10 +285,12 @@ class RowLevelSpec extends AnyFunSuite {
     try {
       marker("before-plan")
       seen.clear()
-      // first plans of each masked snapshot, the row-id face included
+      // first plans of each masked snapshot, the row-id face included,
+      // then a re-plan of the positional one
       val plans = Seq(s"SELECT k FROM $t WHERE k < 10",
         s"SELECT v FROM $te WHERE k > 500",
-        s"SELECT k, _graft_file, _graft_pos FROM $te")
+        s"SELECT k, _graft_file, _graft_pos FROM $te",
+        s"SELECT v FROM $t WHERE k > 500")
         .map(q => vanilla.sql(q).queryExecution.executedPlan.toString)
       marker("after-plan")
       assert(seen.toArray.toSeq === Seq("after-plan"),
