@@ -37,13 +37,13 @@ import graft.table.SnapshotLog
   * only skip), `SupportsPushDownRequiredColumns`, and
   * `SupportsPushDownAggregates` with COMPLETE pushdown for the exact
   * cases [[GraftMetadataAggRule]] answers (unfiltered ungrouped
-  * count(*) / min / max over a mask-free single-epoch snapshot with
+  * count(*) / min / max over a mask-free snapshot with
   * zones on every row-bearing file) — so the metadata-only answer rides
   * the ENGINE's own pushdown contract instead of an injected rule's
-  * ordering. The scan itself is a [[V1Scan]] bridge (the JDBCScan
-  * pattern): correctness-first over the full merge-on-read read, with
-  * file pruning already applied. `SupportsReportStatistics` hands CBO
-  * manifest-exact row/byte counts.
+  * ordering. The scan itself is [[GraftV2BatchScan]], the engine's own
+  * vectorized parquet reader over the pruned file list, with masks
+  * applied in the reading task and every schema epoch widened in-scan.
+  * `SupportsReportStatistics` hands CBO manifest-exact row/byte counts.
   *
   * The WRITE path is the real engine-planned batch write — see
   * [[GraftV2WriteBuilder]]: `INSERT INTO cat.t`, `INSERT OVERWRITE`,
@@ -642,7 +642,7 @@ private[connector] final class GraftV2Table(dir: String,
   override def name(): String =
     dir + asOf.fold("")(v => s"@v$v")
 
-  override lazy val schema: StructType = state._4
+  override lazy val schema: StructType = state._3
 
   override def streamTableDir: String = dir
   override def streamPinnedAsOf: Option[Long] = asOf
@@ -690,7 +690,7 @@ private[connector] final class GraftV2Table(dir: String,
     * write under that capability). Pinned per table instance so the
     * capability decision and the write builder can never disagree. */
   private lazy val realWritePlan: GraftRealWritePlan =
-    GraftBucketWrite.planFor(spark, dir, state._4)
+    GraftBucketWrite.planFor(spark, dir, state._3)
 
   /** A time-travel-pinned table is READ-ONLY (no write capabilities at
     * all, so INSERT/DELETE refuse at analysis, not at commit time).
@@ -756,7 +756,7 @@ private[connector] final class GraftV2Table(dir: String,
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(asOf.isEmpty,
       s"graft table $dir: cannot write to a time-travel relation")
-    new GraftV2WriteBuilder(dir, state._4, realWritePlan)
+    new GraftV2WriteBuilder(dir, state._3, realWritePlan)
   }
 
   /** `TRUNCATE TABLE cat.t` — one metadata commit removing every live
@@ -767,7 +767,7 @@ private[connector] final class GraftV2Table(dir: String,
     require(asOf.isEmpty,
       s"graft table $dir: cannot TRUNCATE a time-travel relation")
     val reg = SnapshotLog.registryAt(spark, dir).filterNot(_.isIdentity)
-    val visible = GraftDataSource.visibleState(spark, dir, None)._4
+    val visible = GraftDataSource.visibleState(spark, dir, None)._3
     val carrierSchema = reg match {
       case Some(r) => StructType(visible.fields.map(f =>
         f.copy(name = r.physicalOf(f.name).getOrElse(f.name))))
@@ -830,7 +830,7 @@ private[connector] final class GraftScanBuilder(spark: SparkSession,
     this(spark, dir, GraftDataSource.visibleState(spark, dir, None))
 
   // pinned snapshot state — shared with the TABLE's analyzed schema
-  private val (dels, data, epochSchemas, visible, reg) = state
+  private val (dels, data, visible, reg) = state
 
   private var required: StructType = visible
   private var pushed: Array[Filter] = Array.empty
@@ -953,88 +953,62 @@ private[connector] final class GraftScanBuilder(spark: SparkSession,
           if (need < 0) zoneKept else zoneKept.take(need + 1)
         case None => zoneKept
       }
-      // the fast path: bearing epochs whose column TYPES promote into
-      // the visible merge — a REAL vectorized parquet Batch with runtime
-      // file filtering. POSITIONAL and EQUALITY masks stay ON this path:
-      // the scan hands each file the mask files its manifests say can
-      // hit it, and the reading task loads them — planning runs no job.
-      // Live field registries ride too (inner reads request PHYSICAL
-      // names), and so do requested scan-metadata columns
-      // (_graft_file/_graft_pos — the row-id face, every vanilla-session
-      // DELETE/UPDATE/MERGE's source scan), synthesized per file
+      // ONE columnar scan for every snapshot: the engine's parquet
+      // readers widen each epoch's narrower types to the visible merge
+      // in-scan (the Evolution lattice is exactly their promotions) and
+      // null-fill requested-but-absent columns. POSITIONAL and EQUALITY
+      // masks ride too: the scan hands each file the mask files its
+      // manifests say can hit it, and the reading task loads them —
+      // planning runs no job. Live field registries ride (inner reads
+      // request PHYSICAL names), and so do requested scan-metadata
+      // columns (_graft_file/_graft_pos — the row-id face, every
+      // vanilla-session DELETE/UPDATE/MERGE's source scan), synthesized
+      // per file
       val needPos = required.fieldNames.exists(n =>
         n.equalsIgnoreCase(SnapshotLog.PosFileCol) ||
           n.equalsIgnoreCase(SnapshotLog.PosOrdCol))
-      val eqDels = dels.filter(_.kind == "eqdelete")
-      val eqKey =
-        if (eqDels.isEmpty) None
-        else GraftV2BatchScan.eqKeyOf(spark, eqDels, visible, reg)
-      // DRIFTED epochs also ride: the engine's vectorized parquet reader
-      // natively PROMOTES a file's narrower type to the requested merged
-      // type (int→long, float→double, …) and null-fills
-      // requested-but-absent columns, so any epoch mix whose fields all
-      // promote into the visible merge reads as ONE columnar scan; only
-      // genuinely incompatible drift bridges. The epoch schemas are
-      // already LOGICAL (visibleState translates registries).
-      def promotes(from: DataType, to: DataType): Boolean = (from, to) match {
-        case (a, b) if a == b => true
-        case (ByteType, ShortType | IntegerType | LongType) => true
-        case (ShortType, IntegerType | LongType) => true
-        case (IntegerType, LongType) => true
-        case (ByteType | ShortType | IntegerType, DoubleType) => true
-        case (FloatType, DoubleType) => true
-        case _ => false
-      }
-      val fastPath =
-        epochSchemas.forall(_.fields.forall(f =>
-          visible.fields.exists(v =>
-            v.name == f.name && promotes(f.dataType, v.dataType)))) &&
-        (eqDels.isEmpty || eqKey.isDefined)
-      if (fastPath) {
-        // declared bucket layout (durable props) → the scan can report
-        // key-grouped partitioning for storage-partitioned joins
-        val props = SnapshotLog.tableProps(spark, dir)
-        def prop(k: String): Option[String] = props.collectFirst {
-          case (kk, v) if kk.equalsIgnoreCase(k) => v }
-        val bucketSpec = (for {
-          c <- prop("bucketCol")
-          n <- prop("bucketCount").flatMap(_.toIntOption)
-        } yield (c, n))
-          // a stale/dead spec (column dropped, widened to non-integral,
-          // malformed count) silently disables reporting — the bucket
-          // function could not bind on it and no manifest proof can hold
-          // (registry tables also withhold: the declared name and the
-          // manifest key live in different name spaces)
-          .filter { case (c, _) => reg.isEmpty &&
-            visible.fields.exists(f =>
-              f.name.equalsIgnoreCase(c) &&
-                SnapshotLog.bucketable(f.dataType)) }
-        // filters naming the synthesized metadata columns must not
-        // reach the parquet reader (they are not data columns); the
-        // engine re-applies them as residuals above the scan. On
-        // registry tables the remaining filters TRANSLATE to physical
-        // names for the parquet row-group pushdown (untranslatable
-        // shapes drop — they stay residual above the scan).
-        val pushedData = {
-          val noMeta =
-            if (!needPos) pushed
-            else pushed.filterNot(_.references.exists(r =>
-              r.equalsIgnoreCase(SnapshotLog.PosFileCol) ||
-                r.equalsIgnoreCase(SnapshotLog.PosOrdCol)))
-          reg match {
-            case Some(r) => noMeta.flatMap(
-              GraftFilterRename.translate(_, n => r.physicalOf(n).getOrElse(n)))
-            case None => noMeta
-          }
+      val eqKey = GraftV2BatchScan.eqKeyOf(spark,
+        dels.filter(_.kind == "eqdelete"), visible, reg)
+      // declared bucket layout (durable props) → the scan can report
+      // key-grouped partitioning for storage-partitioned joins
+      val props = SnapshotLog.tableProps(spark, dir)
+      def prop(k: String): Option[String] = props.collectFirst {
+        case (kk, v) if kk.equalsIgnoreCase(k) => v }
+      val bucketSpec = (for {
+        c <- prop("bucketCol")
+        n <- prop("bucketCount").flatMap(_.toIntOption)
+      } yield (c, n))
+        // a stale/dead spec (column dropped, widened to non-integral,
+        // malformed count) silently disables reporting — the bucket
+        // function could not bind on it and no manifest proof can hold
+        // (registry tables also withhold: the declared name and the
+        // manifest key live in different name spaces)
+        .filter { case (c, _) => reg.isEmpty &&
+          visible.fields.exists(f =>
+            f.name.equalsIgnoreCase(c) &&
+              SnapshotLog.bucketable(f.dataType)) }
+      // filters naming the synthesized metadata columns must not
+      // reach the parquet reader (they are not data columns); the
+      // engine re-applies them as residuals above the scan. On
+      // registry tables the remaining filters TRANSLATE to physical
+      // names for the parquet row-group pushdown (untranslatable
+      // shapes drop — they stay residual above the scan).
+      val pushedData = {
+        val noMeta =
+          if (!needPos) pushed
+          else pushed.filterNot(_.references.exists(r =>
+            r.equalsIgnoreCase(SnapshotLog.PosFileCol) ||
+              r.equalsIgnoreCase(SnapshotLog.PosOrdCol)))
+        reg match {
+          case Some(r) => noMeta.flatMap(
+            GraftFilterRename.translate(_, n => r.physicalOf(n).getOrElse(n)))
+          case None => noMeta
         }
-        new GraftV2BatchScan(spark, dir, visible, required, pushedData,
-          kept, staticPruned = data.size - kept.size,
-          bucketSpec = bucketSpec, withPos = needPos, dels = dels,
-          eqKey = eqKey, reg = reg)
       }
-      else
-        new GraftBridgeScan(dir, kept, dels, reg, required,
-          prunedAway = data.size - kept.size, withPos = needPos)
+      new GraftV2BatchScan(spark, dir, visible, required, pushedData,
+        kept, staticPruned = data.size - kept.size,
+        bucketSpec = bucketSpec, withPos = needPos, dels = dels,
+        eqKey = eqKey, reg = reg)
   }
 }
 
@@ -1088,69 +1062,4 @@ private[connector] final class GraftMetadataAggScan(aggSchema: StructType,
         context.sparkSession.sparkContext.parallelize(Seq(row), 1)
       override def toString: String = "GraftMetadataAggRelation"
     }.asInstanceOf[T]
-}
-
-/** The general V2 scan: manifest-pruned file set through the full
-  * masked, epoch-safe read, bridged to V1 rows (the JDBCScan shape).
-  * Reports manifest-exact statistics to CBO. */
-private[connector] final class GraftBridgeScan(dir: String,
-    kept: Seq[SnapshotLog.DataFile], dels: Seq[SnapshotLog.DataFile],
-    pinnedReg: Option[graft.table.FieldRegistry],
-    required: StructType, prunedAway: Int,
-    /** Attach the (_graft_file, _graft_pos) scan-metadata columns to
-      * every surviving row — the row-id read of the delta-based
-      * row-level operations and of explicit metadata-column SELECTs. */
-    withPos: Boolean = false)
-    extends V1Scan with SupportsReportStatistics {
-
-  override def readSchema(): StructType = required
-
-  override def description(): String =
-    s"GraftBridgeScan(files=${kept.size}, pruned=$prunedAway, " +
-      s"masks=${dels.size})"
-
-  override def estimateStatistics(): Statistics = new Statistics {
-    override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(math.max(1L, kept.map(_.bytes).sum))
-    override def numRows(): java.util.OptionalLong =
-      if (dels.isEmpty)
-        java.util.OptionalLong.of(kept.map(_.rows).sum)
-      else java.util.OptionalLong.empty() // masks subtract an unknown count
-  }
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T = {
-    val files = kept; val masks = dels
-    val cols = required
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = cols
-      override def buildScan(): RDD[Row] = {
-        val spark = context.sparkSession
-        val df =
-          if (files.isEmpty)
-            spark.createDataFrame(spark.sparkContext.emptyRDD[Row], cols)
-          else {
-            val full =
-              if (withPos) SnapshotLog.applyMasksWithPos(spark, files, masks)
-              else SnapshotLog.applyMasks(spark, files, masks)
-            // the registry PINNED with the file set — resolving latest
-            // here would rename a time-travel read's columns forward
-            val logical = pinnedReg.map(_.toLogical(full)).getOrElse(full)
-            val present = logical.columns
-              .map(c => c.toLowerCase(java.util.Locale.ROOT)).toSet
-            // old epochs may lack declared columns: null-fill like the
-            // V1 computed relation does
-            cols.fields.foldLeft(logical)((d, f) =>
-              if (present(f.name.toLowerCase(java.util.Locale.ROOT))) d
-              else d.withColumn(f.name,
-                org.apache.spark.sql.functions.lit(null).cast(f.dataType)))
-              .select(cols.fieldNames.map(org.apache.spark.sql.functions.col)
-                .toSeq: _*)
-          }
-        df.rdd
-      }
-      override def toString: String = "GraftBridgeRelation"
-    }.asInstanceOf[T]
-  }
 }

@@ -28,28 +28,30 @@ import graft.table.SnapshotLog
   *
   * READ plans two ways, decided from manifest metadata alone:
   *
-  *  - **fast path** (no pending merge-on-read masks, one schema epoch):
-  *    an ordinary `HadoopFsRelation` over [[GraftFileIndex]] — the log
-  *    enumerates the snapshot's live files, the query's own WHERE prunes
-  *    them against per-file zones/blooms/partition values driver-side,
-  *    and stock Spark does the rest (parquet row-group pushdown, column
-  *    pruning, whole-stage codegen). This is the Delta `TahoeFileIndex`
-  *    shape and the steady state of a freshly maintained table.
-  *  - **general path** (pending position or equality masks, drifted
-  *    epochs, a live field registry): a [[GraftComputedRelation]] pinned
-  *    to the resolved snapshot. In a session with
+  *  - **fast path** (no pending merge-on-read masks, no live field
+  *    registry): an ordinary `HadoopFsRelation` over [[GraftFileIndex]]
+  *    — the log enumerates the snapshot's live files, the query's own
+  *    WHERE prunes them against per-file zones/blooms/partition values
+  *    driver-side, and stock Spark does the rest (parquet row-group
+  *    pushdown, column pruning, whole-stage codegen). Drifted schema
+  *    epochs stay on it: the relation declares the merged schema, and
+  *    the parquet readers widen each file's narrower types in-scan (the
+  *    [[graft.schema.Evolution]] lattice is exactly their promotions)
+  *    and null-fill the columns an epoch lacks. This is the Delta
+  *    `TahoeFileIndex` shape and the steady state of a maintained table.
+  *  - **general path** (pending position or equality masks, a live
+  *    field registry): a [[GraftComputedRelation]] pinned to the
+  *    resolved snapshot. In a session with
   *    [[graft.functions.GraftExtensions]], [[GraftV2ReadRule]] serves
   *    every batch read of it through [[GraftV2Table]]'s scan: masked
   *    files read vectorized, each task loading only the mask files the
   *    manifests say can hit its file, and pushed filters prune files
-  *    from the manifests; drift that does not promote and equality keys
-  *    the scan cannot probe fall back to the scan's own
-  *    [[GraftBridgeScan]]. A masked table therefore stays a
+  *    from the manifests. A masked table therefore stays a
   *    merge-on-read table between maintenance runs instead of having to
   *    be rewritten to be read cheaply. Without the extensions (and for
   *    INSERT/DML targets, which keep their V1 resolution) the relation
   *    answers through [[SnapshotLog.read]]'s merge-on-read plan over the
-  *    DSv1 Row bridge — always correct, just slower.
+  *    DSv1 Row path — always correct, just slower.
   *
   * WRITE commits through the log's optimistic protocol: `Append` is an
   * `append` snapshot; `Overwrite` removes every live file and adds the
@@ -113,7 +115,7 @@ final class GraftDataSource extends RelationProvider
       // would fail any reference to the documented change columns
       val feed = SnapshotLog.changes(spark, dir, from, to, preImages = pre)
         .getOrElse {
-          val base = GraftDataSource.visibleState(spark, dir, None)._4
+          val base = GraftDataSource.visibleState(spark, dir, None)._3
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
             base.add("_change_op", org.apache.spark.sql.types.StringType)
               .add("_change_snapshot", org.apache.spark.sql.types.LongType))
@@ -299,7 +301,7 @@ final class GraftDataSource extends RelationProvider
                            parameters: Map[String, String]): StructType = {
     val dir = tableDirOf(parameters)
     val base = schema.getOrElse(
-      GraftDataSource.visibleState(sqlContext.sparkSession, dir, None)._4)
+      GraftDataSource.visibleState(sqlContext.sparkSession, dir, None)._3)
     if (parameters.get("readChangeFeed").exists(_.toBoolean) &&
         !base.fieldNames.contains("_change_op"))
       base.add("_change_op", org.apache.spark.sql.types.StringType)
@@ -417,20 +419,21 @@ object GraftDataSource {
   private[connector] def nullable(s: StructType): StructType =
     StructType(s.fields.map(_.copy(nullable = true)))
 
-  /** A snapshot's (mask files, data files, per-epoch visible schemas,
-    * user-visible schema, live field registry) — [[visibleState]]'s
-    * answer, shared by the V1 relations and [[GraftV2Table]]. */
+  /** A snapshot's (mask files, data files, user-visible schema, live
+    * field registry) — [[visibleState]]'s answer, shared by the V1
+    * relations and [[GraftV2Table]]. */
   private[connector] type VisibleState =
     (Seq[SnapshotLog.DataFile], Seq[SnapshotLog.DataFile],
-     Seq[StructType], StructType, Option[graft.table.FieldRegistry])
+     StructType, Option[graft.table.FieldRegistry])
 
-  /** The snapshot's (mask files, data files, per-epoch visible schemas,
-    * user-visible schema) — schemas probed from one footer per epoch
-    * (returned so callers never re-probe), internal columns (row lineage)
-    * hidden exactly as [[SnapshotLog.read]] hides them. The visible
-    * schema of a DRIFTED snapshot is the Evolution-MERGED one (what the
-    * epoch-widening read produces), never a single epoch's — picking one
-    * epoch would silently drop the others' columns from streaming reads.
+  /** The snapshot's (mask files, data files, user-visible schema, live
+    * field registry) — the schema probed from one footer per epoch,
+    * internal columns (row lineage) hidden exactly as
+    * [[SnapshotLog.read]] hides them. The visible schema of a DRIFTED
+    * snapshot is the Evolution-MERGED one, never a single epoch's —
+    * picking one epoch would silently drop the others' columns from
+    * streaming reads. Every epoch reads under it in-scan: the lattice
+    * is exactly the parquet readers' own promotions.
     *
     * A table whose CURRENT snapshot is empty (overwritten with an empty
     * frame) stays readable: the schema is recovered from the newest
@@ -458,28 +461,18 @@ object GraftDataSource {
         asOf.fold("")(v => s" at snapshot $v") +
         " and no retained manifest references a readable file to recover" +
         " the schema from")
-      (dels, data, Seq.empty, nullable(hide(recovered.get)), reg)
+      (dels, data, nullable(hide(recovered.get)), reg)
     } else {
-      val groups = SnapshotLog.epochGroups(spark, data)
-      val all = groups.map { case (sch, _) => nullable(hide(sch)) }
-      val merged =
-        if (all.distinct.size == 1) all.head
-        else nullable(graft.schema.Evolution.mergedSchema(all))
-      // epoch schemas reported for the FAST-PATH decision consider only
-      // ROW-BEARING files: a zero-row schema-carrier (ALTER TABLE ADD
-      // COLUMNS) widens the visible schema without forcing the computed
-      // path — the parquet scan null-fills requested-but-absent columns
-      // natively, as long as the bearing epoch's column TYPES survive
-      // the merge unchanged (relationFor checks exactly that)
-      val bearing = groups.filter(_._2.exists(_.rows > 0))
-        .map { case (sch, _) => nullable(hide(sch)) }
-      (dels, data, bearing, merged, reg)
+      (dels, data, SnapshotLog.mergedOf(SnapshotLog.epochGroups(spark, data)
+        .map { case (sch, _) => nullable(hide(sch)) }), reg)
     }
   }
 
   /** Plan the relation for a snapshot: `HadoopFsRelation` over
-    * [[GraftFileIndex]] when the snapshot is mask-free and single-epoch
-    * (modulo hidden internal columns), else the general-path
+    * [[GraftFileIndex]] when the snapshot is mask-free and has no live
+    * field registry — whatever its schema epochs, since the parquet
+    * readers widen every epoch to the merged schema in-scan and
+    * null-fill the columns an epoch lacks — else the general-path
     * [[GraftComputedRelation]], pinned to the snapshot resolved here and
     * carrying the [[GraftV2Table]] [[GraftV2ReadRule]] reads it through.
     * SQL `INSERT INTO` / `INSERT OVERWRITE` against these relations is
@@ -492,7 +485,7 @@ object GraftDataSource {
     // resolve "latest" to an id ONCE: the general path's deferred read
     // and its V2 scan must both see exactly this snapshot
     val pin = asOf.orElse(SnapshotLog.currentSnapshotId(spark, dir))
-    val state @ (dels, data, epochSchemas, visible, reg) = visibleState(spark, dir, pin)
+    val state @ (dels, data, visible, reg) = visibleState(spark, dir, pin)
     if (data.isEmpty) // empty snapshot: zero rows under the recovered schema
       new GraftComputedRelation(sqlContext,
         spark.createDataFrame(spark.sparkContext
@@ -502,13 +495,7 @@ object GraftDataSource {
     // physical file names differ from the visible ones, which the bare
     // parquet scan cannot express: the general path projects them;
     // OPTIMIZE's materializing rewrite is the road back to this fast path
-    else if (reg.isEmpty && dels.isEmpty && epochSchemas.distinct.size <= 1 &&
-        // a visible schema WIDER than the bearing epoch (schema carriers
-        // from ALTER ADD COLUMNS) stays on the fast path only when the
-        // bearing columns' types survived the merge unchanged: parquet
-        // null-fills absent columns but cannot widen types in-scan
-        epochSchemas.headOption.forall(_.fields.forall(f =>
-          visible.fields.exists(v => v.name == f.name && v.dataType == f.dataType))))
+    else if (reg.isEmpty && dels.isEmpty)
       HadoopFsRelation(
         location = new GraftFileIndex(dir, data, asOf),
         partitionSchema = new StructType(),
@@ -596,12 +583,12 @@ object GraftDataSource {
 }
 
 /** The relation behind every non-fast-path read: the general path (a
-  * snapshot with masks, drifted epochs or a live field registry), the
-  * empty snapshot and the batch change feed.
+  * snapshot with masks or a live field registry), the empty snapshot
+  * and the batch change feed.
   *
   * `df` is evaluated only when Spark asks this relation for rows. On the
-  * general path it is [[SnapshotLog.read]]'s merge-on-read /
-  * epoch-widening plan, which a session with the graft extensions never
+  * general path it is [[SnapshotLog.read]]'s merge-on-read plan, which
+  * a session with the graft extensions never
   * builds: [[GraftV2ReadRule]] swaps the relation for `v2Table`'s
   * vectorized scan during analysis. The declared `schema` is the snapshot's visible
   * one (the fast path's and [[GraftV2Table]]'s); [[buildScan]] binds the

@@ -27,10 +27,12 @@ import graft.table.SnapshotLog.DataFile
   *
   *  - the child is the graft FAST-PATH relation (`HadoopFsRelation` over
   *    [[GraftFileIndex]]) with no Filter anywhere below the Aggregate:
-  *    a masked (merge-on-read) or epoch-drifted snapshot plans the
-  *    computed relation instead and is therefore never matched — which
-  *    is what makes manifest row counts EQUAL logical row counts here
-  *    (no mask ever subtracts rows from a fast-path snapshot);
+  *    a masked (merge-on-read) snapshot plans the computed relation
+  *    instead and is therefore never matched — which is what makes
+  *    manifest row counts EQUAL logical row counts here (no mask ever
+  *    subtracts rows from a fast-path snapshot). Drifted epochs do
+  *    match: the integral widening chain shares the zones' long domain;
+  *    a column an older row-bearing file lacks has no zone there;
   *  - `count` only as `count(*)`/`count(<non-null literal>)`, never
   *    `count(col)` (null-skipping needs the data), never DISTINCT,
   *    never FILTER (WHERE …);

@@ -75,12 +75,11 @@ private[connector] final class GraftRowLevelOperation(
   * masks, committed as one guarded `rowdelta` snapshot. */
 private[connector] final class GraftDeltaWrite(
     spark: SparkSession, dir: String, baseId: Long,
-    state: (Seq[SnapshotLog.DataFile], Seq[SnapshotLog.DataFile],
-      Seq[StructType], StructType, Option[graft.table.FieldRegistry]),
+    state: GraftDataSource.VisibleState,
     rowSchema: StructType)
     extends DeltaWrite with DeltaBatchWrite {
 
-  private val reg = state._5.filterNot(_.isIdentity)
+  private val reg = state._4.filterNot(_.isIdentity)
   private def phys(c: String): String =
     reg.flatMap(_.physicalOf(c)).getOrElse(c)
   private val physicalSchema = StructType(rowSchema.fields.map(f =>
@@ -93,7 +92,7 @@ private[connector] final class GraftDeltaWrite(
   // inherited pruning metadata for the INSERT side, the insertInto
   // posture, planned by the one spec builder every write shares
   private val (specs, bucketSpec) = {
-    val visible = state._4
+    val visible = state._3
     val (stats0, bloom0, parts0) =
       GraftDataSource.inheritedMeta(spark, dir, visible)
     val props = SnapshotLog.tableProps(spark, dir)

@@ -321,7 +321,7 @@ object GraftMaintenance {
       change: graft.table.FieldRegistry => graft.table.FieldRegistry): Long = {
     val baseId = SnapshotLog.currentSnapshotId(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"not a graft table: $dir"))
-    val visible = GraftDataSource.visibleState(spark, dir, None)._4
+    val visible = GraftDataSource.visibleState(spark, dir, None)._3
     val reg = SnapshotLog.registryAt(spark, dir, Some(baseId))
       .getOrElse(graft.table.FieldRegistry.bootstrap(visible.fieldNames.toSeq))
     val updated = change(syncRegistry(reg, visible.fieldNames.toSeq))
@@ -331,7 +331,7 @@ object GraftMaintenance {
     if (ident.isEmpty) // V2-name / path target: no entry to refresh
       spark.sessionState.catalog.invalidateAllCachedTables()
     ident.foreach { tid =>
-      val after = GraftDataSource.visibleState(spark, dir, None)._4
+      val after = GraftDataSource.visibleState(spark, dir, None)._3
       // the SessionCatalog face refuses any change that removes a column
       // NAME (renames and drops both do); the external catalog applies
       // the log-derived truth directly — reads would otherwise refuse on
@@ -459,7 +459,7 @@ final case class GraftOptimizeCommand(target: String, where: Option[String],
     val (dir, ident) = GraftMaintenance.resolveTarget(spark, target)
     val scope = where.map { predText =>
       import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-      val schema = GraftDataSource.visibleState(spark, dir, None)._4
+      val schema = GraftDataSource.visibleState(spark, dir, None)._3
       val raw = split(spark.sessionState.sqlParser.parseExpression(predText))
       val unknown = raw.flatMap(_.collect {
         case u: UnresolvedAttribute => u.name
@@ -509,7 +509,7 @@ final case class GraftAddColumnsCommand(target: String, cols: StructType)
     val (dir, ident) = GraftMaintenance.resolveTarget(spark, target)
     val baseId = SnapshotLog.currentSnapshotId(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"not a graft table: $dir"))
-    val visible = GraftDataSource.visibleState(spark, dir, None)._4
+    val visible = GraftDataSource.visibleState(spark, dir, None)._3
     val dup = cols.fieldNames.filter(n =>
       visible.fieldNames.exists(_.equalsIgnoreCase(n)))
     require(dup.isEmpty, s"graft table $dir: column(s) " +
@@ -622,7 +622,7 @@ final case class GraftAlterColumnTypeCommand(target: String, column: String,
     val (dir, ident) = GraftMaintenance.resolveTarget(spark, target)
     val baseId = SnapshotLog.currentSnapshotId(spark, dir).getOrElse(
       throw new IllegalArgumentException(s"not a graft table: $dir"))
-    val visible = GraftDataSource.visibleState(spark, dir, None)._4
+    val visible = GraftDataSource.visibleState(spark, dir, None)._3
     val f = visible.fields.find(_.name.equalsIgnoreCase(column)).getOrElse(
       throw new IllegalArgumentException(s"graft table $dir: no such column " +
         s"'$column' (has: ${visible.fieldNames.mkString(", ")})"))
@@ -712,7 +712,7 @@ final case class GraftRestoreCommand(target: String, version: Option[Long],
       // RESTORE restores the schema too (dropped schema carriers, reverted
       // registries): re-derive the catalog's stored schema from the
       // restored log state or every later read refuses on the mismatch
-      val after = GraftDataSource.visibleState(spark, dir, None)._4
+      val after = GraftDataSource.visibleState(spark, dir, None)._3
       try spark.sharedState.externalCatalog.alterTableDataSchema(
         tid.database.getOrElse(spark.sessionState.catalog.getCurrentDatabase),
         tid.table, after)

@@ -14,22 +14,19 @@ import org.apache.spark.sql.types._
 import graft.table.{Constraints, SnapshotLog}
 import graft.table.SnapshotLog.DataFile
 
-/** The FAST-PATH V2 scan: a real [[Batch]] over the engine's own
-  * vectorized parquet reader (no Row bridge, columnar, whole-stage-
-  * codegen-friendly), with [[SupportsRuntimeFiltering]] — the V2 face of
-  * dynamic partition pruning for the table format. Eligibility mirrors
-  * the V1 relation's fast path ([[GraftDataSource.relationFor]]):
-  * bearing schema epochs whose column types promote into the visible
-  * merge (parquet null-fills later-declared columns natively).
-  * POSITIONAL and EQUALITY masks, row-id projections, live FIELD
-  * REGISTRIES (renames / drops — the inner read requests physical
-  * names) and temporal equality keys all ride this path: the standing
-  * read traffic stays columnar instead of degrading to the Row bridge.
-  * Masks apply in the reading task, the Iceberg delete-file shape: the
-  * scan hands each data file the mask files its manifests say can hit
-  * it ([[fileSpecs]]), so planning runs no Spark job. Drift that does
-  * not promote and equality keys of other types stay on the
-  * always-correct [[GraftBridgeScan]].
+/** The V2 batch scan of every graft snapshot: a real [[Batch]] over the
+  * engine's own vectorized parquet reader (no Row bridge, columnar,
+  * whole-stage-codegen-friendly), with [[SupportsRuntimeFiltering]] —
+  * the V2 face of dynamic partition pruning for the table format.
+  * Drifted schema epochs read under the visible (merged) schema: the
+  * parquet readers widen each file's narrower types in-scan — the
+  * [[graft.schema.Evolution]] lattice is exactly their promotions — and
+  * null-fill the columns an epoch lacks. POSITIONAL and EQUALITY masks
+  * (any key type), row-id projections and live FIELD REGISTRIES
+  * (renames / drops — the inner read requests physical names) all ride
+  * this scan. Masks apply in the reading task, the Iceberg delete-file
+  * shape: the scan hands each data file the mask files its manifests
+  * say can hit it ([[fileSpecs]]), so planning runs no Spark job.
   *
   * RUNTIME file pruning: when this scan sits under a join whose other
   * side is selectively filtered, Catalyst's partition-pruning rule sees
@@ -310,7 +307,7 @@ private[connector] final class GraftV2BatchScan(
       java.util.OptionalLong.of(math.max(1L, kept.map(_.bytes).sum))
     override def numRows(): java.util.OptionalLong =
       // an equality mask's subtraction is unknowable from metadata (a
-      // key may match zero or many rows) — like the bridge, report none
+      // key may match zero or many rows) — report none
       if (eqDels.nonEmpty) java.util.OptionalLong.empty()
       else {
         val keptPaths = kept.map(_.path).toSet
@@ -337,25 +334,20 @@ private[connector] object GraftNumFilesMetric {
 
 private[connector] object GraftV2BatchScan {
 
-  /** The equality key of `eqDels` as the vectorized read probes it: the
-    * PHYSICAL column the mask files carry (from their footers), typed as
-    * the visible schema types it. None for a key the read cannot probe
-    * — absent from the visible schema, or not integral, string, date or
-    * timestamp — whose masks read through the bridge. */
+  /** The equality key of `eqDels` as the masked read probes it: the
+    * PHYSICAL column the mask files carry ([[SnapshotLog.maskKey]]),
+    * typed as the visible schema types it — or, for a key dropped
+    * through the field registry, as the mask footers type it. None iff
+    * no equality mask is live. */
   def eqKeyOf(spark: SparkSession, eqDels: Seq[DataFile], visible: StructType,
               reg: Option[graft.table.FieldRegistry]): Option[StructField] =
-    SnapshotLog.epochGroups(spark, eqDels)
-      .flatMap(_._1.fieldNames.filterNot(_ == "_graft_del_seq")).distinct match {
-      case Seq(keyCol) =>
-        val logical = reg.flatMap(_.logicalOf(keyCol)).getOrElse(keyCol)
-        visible.fields.find(_.name.equalsIgnoreCase(logical))
-          .filter(_.dataType match {
-            case ByteType | ShortType | IntegerType | LongType | StringType |
-                 DateType | TimestampType => true
-            case _ => false
-          })
-          .map(_.copy(name = keyCol))
-      case _ => None
+    if (eqDels.isEmpty) None
+    else {
+      val key = SnapshotLog.maskKey(spark, eqDels)
+      Some(visible.fields
+        .find(f => reg.flatMap(_.physicalOf(f.name)).getOrElse(f.name)
+          .equalsIgnoreCase(key.name))
+        .fold(key)(f => key.copy(dataType = f.dataType)))
     }
 
   /** The pruning [[Constraints]] of pushed or runtime V2 filters: each

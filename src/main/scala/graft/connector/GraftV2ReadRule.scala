@@ -7,14 +7,12 @@ import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Batch `spark.read.format("graft")` reads of a general-path snapshot
-  * (pending position or equality masks, drifted epochs, a live field
-  * registry) resolve onto [[GraftV2Table]]'s scan instead of the DSv1
-  * Row bridge: the rule swaps the [[GraftComputedRelation]] for a
-  * `DataSourceV2Relation` over the relation's own pinned table, so the
-  * read is the vectorized masked scan with manifest file pruning on
-  * pushed filters (and the scan's own [[GraftBridgeScan]] for drift
-  * that does not promote and equality keys it cannot probe). The relation's output attributes are REUSED (same
-  * exprIds), exactly as [[org.apache.spark.sql.graftshim.GraftStreamingTableRule]]
+  * (pending position or equality masks, a live field registry) resolve
+  * onto [[GraftV2Table]]'s scan instead of the DSv1 Row path: the rule
+  * swaps the [[GraftComputedRelation]] for a `DataSourceV2Relation`
+  * over the relation's own pinned table, so the read is the vectorized
+  * masked scan with manifest file pruning on pushed filters. The
+  * relation's output attributes are REUSED (same exprIds), exactly as [[org.apache.spark.sql.graftshim.GraftStreamingTableRule]]
   * does, so every reference already resolved against it stays valid.
   *
   * Kept on their V1 resolution:

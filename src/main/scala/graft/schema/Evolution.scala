@@ -17,10 +17,12 @@ import org.apache.spark.sql.types._
   *  1. **Type widening** ([[widen]]): a least-upper-bound lattice over
   *     the safe promotions (byte→short→int→long, float→double,
   *     decimal(p,s) joined by max integral digits + max scale, and
-  *     integral→decimal where the decimal can hold every value). Epochs
-  *     decoded under the old and new types merge by casting BOTH sides to
-  *     the LUB — lossless by construction. Anything off the lattice
-  *     (string vs int, narrowing) throws instead of corrupting.
+  *     integral→decimal where the decimal can hold every value). It is
+  *     exactly the set of promotions Spark's parquet readers (vectorized
+  *     and row-based) perform in-scan, so a file written under any epoch
+  *     reads under the LUB schema with one `spark.read.schema(lub)` —
+  *     lossless by construction, and equal to casting. Anything off the
+  *     lattice (string vs int, narrowing) throws instead of corrupting.
   *  2. **Rename mapping** ([[mergeEpochs]]'s `renames`): a declarative
   *     old→new name map applied before the union, so a renamed column's
   *     history stays ONE column instead of two half-null ones. Renames
@@ -61,10 +63,12 @@ object Evolution {
     case _ => None
   }
 
+  /** Byte and short count as int's 10 integer digits, as in Delta's
+    * type-widening table: the parquet readers store all three as INT32
+    * and read INT32 only into decimals with at least 10 integer digits
+    * (https://docs.delta.io/latest/delta-type-widening.html). */
   private def widenIntegralDecimal(i: DataType, d: DecimalType): Option[DataType] = {
-    val intDigits = i match {
-      case ByteType => 3; case ShortType => 5; case IntegerType => 10; case _ => 20
-    }
+    val intDigits = if (i == LongType) 20 else 10
     val p = intDigits + d.scale
     if (p <= DecimalType.MAX_PRECISION)
       Some(DecimalType(math.max(p, d.precision), d.scale))

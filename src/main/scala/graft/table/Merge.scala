@@ -395,23 +395,25 @@ object Merge {
   /** The touched files with row lineage resolved: rows keep their
     * existing [[LineageCol]] where one was stamped, and rows from
     * pre-lineage files adopt their file's commit seq (the best lower
-    * bound the metadata has). Per-seq groups merge through the same
-    * Evolution lattice as the plain epoch-safe read. Package-visible:
-    * the SQL DML face routes its copy-on-write rewrites through the
-    * same lineage-preserving read. */
+    * bound the metadata has). Each seq group reads under the groups'
+    * merged schema, like the plain epoch-safe read; a legacy declared
+    * `renames` map merges per epoch through the Evolution lattice.
+    * Package-visible: the SQL DML face routes its copy-on-write
+    * rewrites through the same lineage-preserving read. */
   private[graft] def readTouchedLineage(spark: SparkSession,
                                  touched: Seq[SnapshotLog.DataFile],
                                  renames: Map[String, String]): DataFrame = {
-    val groups = touched.groupBy(_.seq).toSeq.sortBy(_._1).map { case (seq, fs) =>
-      val df = spark.read.parquet(fs.map(_.path): _*)
+    val groups = SnapshotLog.epochGroups(spark, touched)
+    val merged = if (renames.isEmpty) Some(SnapshotLog.mergedOf(groups.map(_._1))) else None
+    val stamped = groups.map { case (sch, fs) =>
+      val df = SnapshotLog.readAs(spark, merged.getOrElse(sch), fs)
+      val seq = lit(fs.head.seq)
       if (df.columns.contains(LineageCol))
-        df.withColumn(LineageCol, coalesce(col(LineageCol), lit(seq)))
-      else df.withColumn(LineageCol, lit(seq))
+        df.withColumn(LineageCol, coalesce(col(LineageCol), seq))
+      else df.withColumn(LineageCol, seq)
     }
-    val schemas = groups.map(_.schema)
-    if (renames.isEmpty && schemas.forall(_ == schemas.head))
-      groups.reduce(_ unionByName _)
-    else graft.schema.Evolution.mergeEpochs(groups, renames)
+    if (merged.isDefined) stamped.reduce(_ unionByName _)
+    else graft.schema.Evolution.mergeEpochs(stamped, renames)
   }
 
   private def isStringKey(df: DataFrame, keyCol: String): Boolean =
@@ -677,10 +679,10 @@ object Merge {
     // clustering key: the equality masks' key column when any exists; a
     // posdelete-only fold has no key of its own — fall back to the data
     // files' first recorded zone column (keeps the rewrite prunable)
-    val keyColPOpt = dels.find(_.kind == "eqdelete")
-      .map(f => spark.read.parquet(f.path).columns
-        .filterNot(_ == "_graft_del_seq").head)
-      .orElse(data.flatMap(_.stats.keys).headOption)
+    val eqDels = dels.filter(_.kind == "eqdelete")
+    val keyColPOpt =
+      (if (eqDels.isEmpty) None else Some(SnapshotLog.maskKey(spark, eqDels).name))
+        .orElse(data.flatMap(_.stats.keys).headOption)
     // the masked read exits in LOGICAL space (registry projection);
     // translate back to physical once so the mask key, the cluster
     // columns and the written footers all agree

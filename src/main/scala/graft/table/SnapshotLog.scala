@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.{GraftFileResult, GraftParquetSchema, GraftWriteShim, GraftWriteSpecs}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Minimal snapshot/table-format layer over a parquet directory — the
   * capability the reference *installs but never uses*: its Docker image
@@ -1159,21 +1160,6 @@ object SnapshotLog {
     * is a mask by the latest one. Data files are read grouped by seq so
     * the seq column is a literal per relation — no per-row file-name
     * parsing, and the whole mask stays inside codegen. */
-  /** Union per-seq file groups whose schemas may have DRIFTED between
-    * commits (the table-format face of [[graft.schema.Evolution]]):
-    * equal schemas take the plain multi-relation union; drifted ones go
-    * through the widening lattice — renames applied, both sides cast to
-    * the LUB types, additions null-filled on older epochs, incompatible
-    * drift thrown. Each group keeps its sequence number column when the
-    * caller needs the merge-on-read mask rule. */
-  private def unionEpochs(groups: Seq[DataFrame],
-                          renames: Map[String, String]): DataFrame = {
-    val schemas = groups.map(_.schema)
-    if (renames.isEmpty && schemas.forall(_ == schemas.head))
-      groups.reduce(_ unionByName _)
-    else graft.schema.Evolution.mergeEpochs(groups, renames)
-  }
-
   /** The files grouped by commit seq, each with its schema probed from
     * ONE head-file footer (a commit's files share a schema by
     * construction — [[writeData]] writes one frame per call, and
@@ -1210,52 +1196,48 @@ object SnapshotLog {
     v
   }
 
-  /** Read a set of live data files SAFELY across schema epochs: uniform
-    * schemas (and no renames) read as one multi-path relation — the
-    * pruning- and codegen-friendly scan; drifted ones read per epoch
-    * and merge through the Evolution widening lattice. A raw multi-path
-    * read of drifted files would infer a single file's schema and
-    * silently null the other epochs' columns — every consumer of a
-    * snapshot table's file list (reads, merges, compactions) must come
-    * through here or [[applyEqDeletes]]. */
+  /** Read a set of live data files SAFELY across schema epochs: ONE
+    * multi-path relation under the epochs' merged schema — the parquet
+    * readers widen each file's narrower types in-scan (the Evolution
+    * lattice is exactly their promotions) and null-fill the columns an
+    * epoch lacks. Only a legacy declared `renames` map reads per epoch
+    * and merges through [[graft.schema.Evolution.mergeEpochs]]. A raw
+    * multi-path read would infer a single file's schema and silently
+    * null the other epochs' columns — every consumer of a snapshot
+    * table's file list (reads, merges, compactions) must come through
+    * here or [[applyEqDeletes]]. */
   private[graft] def readEpochSafe(spark: SparkSession, files: Seq[DataFile],
                                    renames: Map[String, String] = Map.empty)
       : DataFrame = {
     val groups = epochGroups(spark, files)
-    val schemas = groups.map(_._1)
-    if (renames.isEmpty && schemas.forall(_ == schemas.head))
-      readAs(spark, schemas.head, files)
+    if (renames.isEmpty) readAs(spark, mergedOf(groups.map(_._1)), files)
     else graft.schema.Evolution.mergeEpochs(
       groups.map { case (sch, fs) => readAs(spark, sch, fs) }, renames)
   }
 
-  /** One epoch's files under its already-probed footer schema — a
+  /** The merged schema of epoch schemas (the one schema when they agree). */
+  private[graft] def mergedOf(schemas: Seq[StructType]): StructType =
+    schemas.distinct match {
+      case Seq(one) => one
+      case many => graft.schema.Evolution.mergedSchema(many)
+    }
+
+  /** Files under an already-known (footer or merged) schema — a
     * `spark.read.parquet` that skips the schema-inference job. */
-  private def readAs(spark: SparkSession,
-                     schema: org.apache.spark.sql.types.StructType,
-                     files: Seq[DataFile]): DataFrame =
+  private[graft] def readAs(spark: SparkSession, schema: StructType,
+                            files: Seq[DataFile]): DataFrame =
     spark.read.schema(schema).parquet(files.map(_.path): _*)
+
+  private def withPos(df: DataFrame): DataFrame = df.select(col("*"),
+    col("_metadata.file_path").as(PosFileCol),
+    col("_metadata.row_index").as(PosOrdCol))
 
   /** [[readEpochSafe]] with the two scan-metadata position columns
     * ([[PosFileCol]], [[PosOrdCol]]) appended — what a positional-delete
-    * writer scans to locate matching rows. Metadata columns attach PER
-    * EPOCH GROUP (before any union — a unioned plan has no single file
-    * source to ask for `_metadata`). */
+    * writer scans to locate matching rows. */
   private[graft] def readEpochSafeWithPos(spark: SparkSession,
-                                          files: Seq[DataFile],
-                                          renames: Map[String, String] = Map.empty)
-      : DataFrame = {
-    def withPos(df: DataFrame) = df.select(col("*"),
-      col("_metadata.file_path").as(PosFileCol),
-      col("_metadata.row_index").as(PosOrdCol))
-    val groups = epochGroups(spark, files)
-    val schemas = groups.map(_._1)
-    if (renames.isEmpty && schemas.forall(_ == schemas.head))
-      withPos(readAs(spark, schemas.head, files))
-    else graft.schema.Evolution.mergeEpochs(
-      groups.map { case (sch, fs) => withPos(readAs(spark, sch, fs)) },
-      renames)
-  }
+                                          files: Seq[DataFile]): DataFrame =
+    withPos(readAs(spark, mergedOf(epochGroups(spark, files).map(_._1)), files))
 
   /** Is this manifest entry a pending DELETE MASK (either kind)?
     * Every reader that partitions a live set into "masks vs data" must
@@ -1308,16 +1290,23 @@ object SnapshotLog {
                                 keepPos: Boolean): DataFrame = {
     val (posDels, eqDels) = dels.partition(_.kind == "posdelete")
     val needPos = keepPos || posDels.nonEmpty
-    val withSeq = unionEpochs(epochGroups(spark, data).map { case (sch, fs) =>
-      val seq = fs.head.seq
-      val raw = readAs(spark, sch, fs)
-      val df =
-        if (!needPos) raw
-        else raw.select(col("*"),
-          col("_metadata.file_path").as(PosFileCol),
-          col("_metadata.row_index").as(PosOrdCol))
-      df.withColumn("_graft_seq", lit(seq))
-    }, renames)
+    def pos(df: DataFrame) = if (needPos) withPos(df) else df
+    val groups = epochGroups(spark, data)
+    // equality masks need each row's commit seq: one relation per seq
+    // group, a literal column each — under the merged schema, so the
+    // groups join with a plain union. Positional masks alone need none.
+    val withSeq =
+      if (renames.nonEmpty)
+        graft.schema.Evolution.mergeEpochs(groups.map { case (sch, fs) =>
+          pos(readAs(spark, sch, fs)).withColumn("_graft_seq", lit(fs.head.seq))
+        }, renames)
+      else if (eqDels.isEmpty) pos(readAs(spark, mergedOf(groups.map(_._1)), data))
+      else {
+        val merged = mergedOf(groups.map(_._1))
+        groups.map { case (_, fs) =>
+          pos(readAs(spark, merged, fs)).withColumn("_graft_seq", lit(fs.head.seq))
+        }.reduce(_ unionByName _)
+      }
     val eqApplied =
       if (eqDels.isEmpty) withSeq
       else {
@@ -1337,7 +1326,7 @@ object SnapshotLog {
             Seq(PosFileCol, PosOrdCol), "left_anti")
         if (keepPos) applied else applied.drop(PosFileCol, PosOrdCol)
       }
-    posApplied.drop("_graft_seq")
+    if (eqDels.isEmpty) posApplied else posApplied.drop("_graft_seq")
   }
 
   private def stagedPath(tableDir: String, token: String): Path =
@@ -1533,19 +1522,30 @@ object SnapshotLog {
     * (folded frame keyed key + `_graft_del_seq`, key column name). */
   private[graft] def foldMasks(spark: SparkSession,
                                dels: Seq[DataFile]): (DataFrame, String) = {
-    val delDf = epochGroups(spark, dels).map { case (sch, fs) =>
-      val seq = fs.head.seq
-      val df = readAs(spark, sch, fs)
-      if (df.columns.contains("_graft_del_seq")) df
-      else df.withColumn("_graft_del_seq", lit(seq))
+    val key = maskKey(spark, dels)
+    val schema = StructType(Seq(key, StructField("_graft_del_seq", LongType)))
+    val delDf = epochGroups(spark, dels).map { case (_, fs) =>
+      readAs(spark, schema, fs).withColumn("_graft_del_seq",
+        coalesce(col("_graft_del_seq"), lit(fs.head.seq)))
     }.reduce(_ unionByName _)
-    val keyCol = delDf.columns.filterNot(_ == "_graft_del_seq") match {
-      case Array(k) => k
+    (delDf.groupBy(col(key.name))
+      .agg(max(col("_graft_del_seq")).as("_graft_del_seq")), key.name)
+  }
+
+  /** The key column of equality masks `dels`, from their footers: its
+    * PHYSICAL name, typed as the widest type any mask file holds it
+    * under. Mask files hold exactly one key column (plus an optional
+    * embedded `_graft_del_seq`); anything else throws. Driver-side
+    * metadata: one footer per mask epoch, no job. */
+  private[graft] def maskKey(spark: SparkSession, dels: Seq[DataFile]): StructField = {
+    val keys = epochGroups(spark, dels)
+      .flatMap(_._1.fields.filterNot(_.name == "_graft_del_seq"))
+    keys.map(_.name).distinct match {
+      case Seq(k) => StructField(k, graft.schema.Evolution
+        .mergedSchema(keys.map(f => StructType(Seq(f)))).head.dataType)
       case other => throw new IllegalStateException(
         s"equality-delete files must hold exactly one key column, got ${other.mkString(",")}")
     }
-    (delDf.groupBy(col(keyCol))
-      .agg(max(col("_graft_del_seq")).as("_graft_del_seq")), keyCol)
   }
 
   /** Resolve AS OF TIMESTAMP to a snapshot id: the newest committed
@@ -2041,19 +2041,12 @@ object SnapshotLog {
     // the targets may span SCHEMA EPOCHS (positions in a pre-widening
     // file next to positions in a drifted one): a raw multi-path read
     // would adopt one arbitrary footer and silently null/drop the other
-    // epoch's columns from the delete payloads — group by footer schema
-    // (one read per targeted file: O(masked files), driver metadata)
-    // and merge through the Evolution lattice like every file-list
-    // consumer
-    def withPos(df: DataFrame) = df.select(col("*"),
-      col("_metadata.file_path").as(PosFileCol),
-      col("_metadata.row_index").as(PosOrdCol))
-    val groups = targets.map(p => GraftParquetSchema.schemaOf(spark, p) -> p)
-      .groupBy(_._1).toSeq.map { case (sch, ps) =>
-        withPos(spark.read.schema(sch).parquet(ps.map(_._2): _*)) }
-    val unioned =
-      if (groups.size == 1) groups.head
-      else graft.schema.Evolution.mergeEpochs(groups, Map.empty)
+    // epoch's columns from the delete payloads — read them all under
+    // the footers' merged schema (one footer per targeted file:
+    // O(masked files), driver metadata)
+    val unioned = withPos(spark.read
+      .schema(mergedOf(targets.map(GraftParquetSchema.schemaOf(spark, _))))
+      .parquet(targets: _*))
     hideInternal(
       unioned
         .join(broadcast(masks), Seq(PosFileCol, PosOrdCol), "left_semi")

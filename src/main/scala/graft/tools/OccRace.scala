@@ -22,8 +22,7 @@ object OccRace {
       .appName("graft-occ-race")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("occ-race-wh").toString)
+      .config("spark.sql.warehouse.dir", graft.schema.Fixtures.dir("occ-race-wh"))
       .getOrCreate()
     try {
       val deadline = System.currentTimeMillis() + 60000

@@ -105,7 +105,7 @@ object ScaleCurve {
         .select((col("l_orderkey").cast("long") * 100 + col("l_linenumber"))
           .as("id"), col("l_extendedprice").as("v"))
         .repartitionByRange(32, col("id"))
-      val tfBase = java.nio.file.Files.createTempDirectory(s"graft-tf-x$k").toString
+      val tfBase = graft.schema.Fixtures.dir(s"graft-tf-x$k")
       for (t <- Seq("cow", "mor"))
         SnapshotLog.commit(spark, s"$tfBase/$t", "append",
           SnapshotLog.writeData(state, s"$tfBase/$t", statsCol = Some("id")))

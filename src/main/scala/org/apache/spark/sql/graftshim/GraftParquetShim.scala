@@ -6,7 +6,8 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, Literal, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, GenericInternalRow, Literal, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, VariantExtraction}
 import org.apache.spark.sql.execution.datasources.{FilePartition, NoopCache, PartitionedFile, PartitioningAwareFileIndex, PartitionSpec}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -326,23 +327,24 @@ private[graftshim] final class GraftMaskedFileRead(
     val sorted = positions.result()
     java.util.Arrays.sort(sorted)
     val longDel = mutable.LongMap.empty[Long]
-    val strDel = new java.util.HashMap[UTF8String, java.lang.Long]()
+    val keyDel = new java.util.HashMap[UnsafeRow, java.lang.Long]()
+    lazy val keyOf = GraftFileMask.keyProjection(0, keyType)
     f.eqMasks.foreach(m => eachRow(eqMasks, m) { r =>
       if (!r.isNullAt(0)) {
         val ds = if (r.isNullAt(1)) m.seq else r.getLong(1)
-        if (keyType == StringType) {
-          val k = r.getUTF8String(0)
-          val prev = strDel.get(k)
-          if (prev == null || prev < ds) strDel.put(k.clone(), ds)
-        } else {
+        if (GraftFileMask.longDomain(keyType)) {
           val k = GraftFileMask.keyAsLong(r, 0, keyType)
           if (f.keyZone.forall { case (lo, hi) => lo <= k && k <= hi } &&
               longDel.getOrElse(k, Long.MinValue) < ds)
             longDel(k) = ds
+        } else {
+          val k = keyOf(r)
+          val prev = keyDel.get(k)
+          if (prev == null || prev < ds) keyDel.put(k.copy(), ds)
         }
       }
     })
-    new GraftFileMask(sorted, longDel, strDel, f.seq, idxOrd, keyOrd, keyType)
+    new GraftFileMask(sorted, longDel, keyDel, f.seq, idxOrd, keyOrd, keyType)
   }
 
   def columnarReader(f: GraftFileSpec, fileValue: String)
@@ -454,23 +456,27 @@ private[graftshim] object GraftMaskedFileRead {
   * unmasked, or deleted at a seq no later than the file's own —
   * `SnapshotLog`'s `_graft_del_seq <= _graft_seq` rule, so re-inserts
   * survive. Integral and temporal keys compare in their internal long
-  * domain (dates epoch days, timestamps epoch micros); strings compare
-  * as UTF8String bytes. */
+  * domain (dates epoch days, timestamps epoch micros); every other key
+  * type compares as the [[UnsafeRow]] of its normalized value, so
+  * -0.0 equals 0.0 and all NaNs are equal, as in the join and groupBy
+  * of `SnapshotLog.applyMasks`. */
 private[graftshim] final class GraftFileMask(
     positions: Array[Long],
     longDel: mutable.LongMap[Long],
-    strDel: java.util.HashMap[UTF8String, java.lang.Long],
+    keyDel: java.util.HashMap[UnsafeRow, java.lang.Long],
     fileSeq: Long, idxOrd: Int, keyOrd: Int, keyType: DataType) {
 
-  private val isStr = keyType == StringType
-  private val hasEq = longDel.nonEmpty || !strDel.isEmpty
+  private val hasEq = longDel.nonEmpty || !keyDel.isEmpty
+  private val inLong = hasEq && GraftFileMask.longDomain(keyType)
+  private lazy val keyOf = GraftFileMask.keyProjection(keyOrd, keyType)
 
   private def delSeq(r: InternalRow): Long =
-    if (isStr) {
-      val d = strDel.get(r.getUTF8String(keyOrd))
+    if (inLong)
+      longDel.getOrElse(GraftFileMask.keyAsLong(r, keyOrd, keyType), Long.MinValue)
+    else {
+      val d = keyDel.get(keyOf(r))
       if (d == null) Long.MinValue else d.longValue
-    } else longDel.getOrElse(GraftFileMask.keyAsLong(r, keyOrd, keyType),
-      Long.MinValue)
+    }
 
   def keeps(r: InternalRow): Boolean =
     (positions.isEmpty ||
@@ -497,6 +503,18 @@ private[graftshim] final class GraftFileMask(
 }
 
 private[graftshim] object GraftFileMask {
+  /** Key types probed in their internal long domain. */
+  def longDomain(dt: DataType): Boolean = dt match {
+    case ByteType | ShortType | IntegerType | LongType | DateType |
+         TimestampType => true
+    case _ => false
+  }
+
+  /** The key at `ord` as a one-field [[UnsafeRow]], floats normalized. */
+  def keyProjection(ord: Int, dt: DataType): UnsafeProjection =
+    UnsafeProjection.create(Seq(NormalizeFloatingNumbers.normalize(
+      BoundReference(ord, dt, nullable = true))))
+
   def keyAsLong(r: InternalRow, ord: Int, dt: DataType): Long = dt match {
     case LongType | TimestampType => r.getLong(ord)
     case IntegerType | DateType => r.getInt(ord).toLong

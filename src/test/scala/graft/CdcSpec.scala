@@ -445,6 +445,13 @@ class CdcSpec extends AnyFunSuite {
     // the lattice must refuse at merge time instead
     assert(widen(DecimalType(38, 0), DecimalType(10, 10)).isEmpty)
     assert(widen(DecimalType(30, 0), DecimalType(10, 8)).contains(DecimalType(38, 8)))
+    // byte and short count as int's 10 integer digits (Delta's table):
+    // the parquet readers read INT32 only into decimals that wide
+    assert(widen(ByteType, DecimalType(4, 2)).contains(DecimalType(12, 2)))
+    assert(widen(DecimalType(4, 2), ByteType).contains(DecimalType(12, 2)))
+    assert(widen(ShortType, DecimalType(5, 0)).contains(DecimalType(10, 0)))
+    assert(widen(ShortType, DecimalType(12, 2)).contains(DecimalType(12, 2)))
+    assert(widen(ByteType, DecimalType(38, 30)).isEmpty)
   }
 
   test("widened-epoch warehouse round-trip: merge, write, read back, values intact") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
-import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation, V1ScanWrapper}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,11 +11,11 @@ import graft.table.{Merge, SnapshotLog}
 
 /** The `format("graft")` data-source face: reader/writer/time-travel/
   * streaming equivalence to the Scala table API, and the plan-shape
-  * guarantees — mask-free single-epoch snapshots scan as a plain
-  * parquet `FileSourceScanExec` (whole-stage codegen, parquet row-group
-  * pushdown) whose file set the manifest zones/blooms/partition values
-  * prune, while masked or drifted snapshots read through the V2 scan
-  * (vectorized masked reads, the bridge scan for unprobed equality keys)
+  * guarantees — mask-free snapshots, drifted epochs included, scan as a
+  * plain parquet `FileSourceScanExec` (whole-stage codegen, parquet
+  * row-group pushdown) whose file set the manifest zones/blooms/partition
+  * values prune, while masked snapshots read through the vectorized V2
+  * batch scan (masks applied in the reading task, any equality-key type)
   * and stay CORRECT.
   */
 class ConnectorSpec extends AnyFunSuite {
@@ -212,7 +212,9 @@ class ConnectorSpec extends AnyFunSuite {
         (col("id") * 1.5).as("score"))
       .write.format("graft").mode("append").save(dir)
     val back = spark.read.format("graft").load(dir)
-    assert(fileScanOf(back).isEmpty) // two epochs: computed path
+    // two epochs: one parquet scan under the merged schema, the older
+    // epoch null-filling the added column in-scan
+    assert(fileScanOf(back).isDefined)
     assert(back.count() === 20)
     assert(back.filter(col("score").isNull).count() === 10)
     assert(back.schema.fieldNames.toSet === Set("id", "cat", "score"))
@@ -280,26 +282,50 @@ class ConnectorSpec extends AnyFunSuite {
   }
 
   test("masked reads over the mask budget answer through the V2 bridge scan") {
-    // masks load in the reading task, so no mask count is over budget;
-    // what the vectorized read cannot take is a key type it cannot
-    // probe (it probes integral, string and temporal keys only)
+    // masks load in the reading task, so no mask count is over budget,
+    // and the batch scan probes every equality-key type, a DOUBLE too
     val dir = tmp("maskbridge")
     rows(400).withColumn("dk", col("id").cast("double"))
       .repartitionByRange(4, col("id"))
       .write.format("graft").option("statsCols", "id").save(dir)
     Merge.deleteWhere(spark, dir, col("id") % 3 === 0)
-    // a DOUBLE equality key: over the vectorized read's probe set
     Merge.mergeOnRead(spark, dir, spark.range(395, 405).select(col("id"),
       lit("upd").as("cat"), (col("id") * 3).as("v"),
       col("id").cast("double").as("dk")), keyCol = "dk")
     val back = spark.read.format("graft").load(dir)
-    assert(batchScanOf(back).isEmpty, "a double eq key must not plan the vectorized scan")
-    val scans = back.queryExecution.optimizedPlan.collect {
-      case DataSourceV2ScanRelation(_, w: V1ScanWrapper, _, _, _) =>
-        w.v1Scan.description() }
-    assert(scans.exists(_.startsWith("GraftBridgeScan(")), scans.toString)
+    assert(batchScanOf(back).exists(_.contains("eqMaskRows=")),
+      s"a double eq key must plan the batch scan: ${batchScanOf(back)}")
     assert(back.orderBy("id").collect().toSeq === apiRows(dir, back))
     assert(back.filter(col("id") === 398).select("v").head.getLong(0) === 398L * 3)
+  }
+
+  test("decimal and integral-to-decimal drift reads as one parquet scan") {
+    val dir = tmp("decdrift")
+    spark.range(0, 40).select(col("id"),
+        (col("id") * 1.25 - 20).cast("decimal(5,2)").as("a"),
+        (col("id") * 1000 - 7).cast("int").as("b"))
+      .coalesce(1).write.format("graft").option("statsCols", "id").save(dir)
+    spark.range(40, 80).select(col("id"),
+        (col("id") * 0.125 - 3).cast("decimal(10,3)").as("a"),
+        (col("id") * 100.5).cast("decimal(12,2)").as("b"))
+      .coalesce(1).write.format("graft").mode("append").save(dir)
+    val back = spark.read.format("graft").load(dir)
+    assert(back.schema("a").dataType.sql === "DECIMAL(10,3)")
+    assert(back.schema("b").dataType.sql === "DECIMAL(12,2)")
+    // the per-epoch cast model over the raw files
+    val model = SnapshotLog.filesAt(spark, dir).map(f =>
+      spark.read.parquet(f.path).select(col("id"),
+        col("a").cast("decimal(10,3)").as("a"),
+        col("b").cast("decimal(12,2)").as("b"))).reduce(_ unionByName _)
+    def sorted(df: DataFrame) = df.orderBy("id").collect().toSeq
+    assert(fileScanOf(back).isDefined, "drift must plan one parquet scan")
+    assert(sorted(back) === sorted(model))
+    // filters pushed into the scan of the narrower epoch's file
+    val pred = col("a") > lit(BigDecimal("-1.5")) && col("b") < lit(5000)
+    val filtered = back.filter(pred)
+    assert(fileScanOf(filtered).isDefined)
+    assert(sorted(filtered) === sorted(model.filter(pred)))
+    assert(sorted(filtered).nonEmpty)
   }
 
   test("overwrite replaces atomically; history keeps the pre-overwrite snapshot") {

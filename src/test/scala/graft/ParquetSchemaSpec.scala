@@ -49,6 +49,35 @@ class ParquetSchemaSpec extends AnyFunSuite {
     jobs.get()
   }
 
+  /** The details of every stage started while `body` runs that runs
+    * Spark's parquet schema inference (`mergeSchemasInParallel`). Spark
+    * records a job's call site from the outermost Spark frame, so the
+    * inference job's details name the reader call that started it,
+    * `DataFrameReader.parquet`, on their first line: a reader given a
+    * schema starts no job, so that frame marks inference. */
+  private def inferenceStagesOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val group = s"pqinfer-${System.nanoTime}"
+    val found = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit = {
+        val d = s.stageInfo.details
+        if (Option(s.properties).exists(_.getProperty("spark.jobGroup.id") == group) &&
+            (d.contains("mergeSchemasInParallel") ||
+              d.linesIterator.nextOption().exists(_.contains("DataFrameReader.parquet("))))
+          found.add(d)
+      }
+    }
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "inference probe")
+    try { body; Thread.sleep(800) } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(l)
+    }
+    found.toArray(Array.empty[String]).toSeq
+  }
+
   test("test data tables: the footer schema is the one Spark infers") {
     val tables = new java.io.File(sf).list().filter(_.endsWith(".parquet")).sorted
     assert(tables.contains("events.parquet") && tables.length >= 10)
@@ -132,5 +161,34 @@ class ParquetSchemaSpec extends AnyFunSuite {
     var staged: org.apache.spark.sql.DataFrame = null
     assert(jobsOf { staged = SnapshotLog.readStagedOnly(spark, dir, token) } === 0)
     assert(staged.count() === 3)
+  }
+
+  test("materializing masks and lineage merges take key columns and schemas from footers") {
+    import spark.implicits._
+    import graft.table.Merge
+    val dir = tmp("noinfer") + "/t"
+    SnapshotLog.commit(spark, dir, "append",
+      SnapshotLog.writeData((1 to 20).map(k => (k, s"v$k")).toDF("id", "v")
+        .coalesce(1), dir, statsCol = Some("id")))
+    // a drifted epoch: the key widens to long and a column is added
+    SnapshotLog.commit(spark, dir, "append",
+      SnapshotLog.writeData((21 to 30).map(k => (k.toLong, s"v$k", k * 2))
+        .toDF("id", "v", "w").coalesce(1), dir, statsCol = Some("id")))
+    // the probe sees the inference a plain parquet read runs
+    assert(inferenceStagesOf(
+      spark.read.parquet(SnapshotLog.filesAt(spark, dir).head.path).columns).nonEmpty)
+    // a lineage merge reads every touched seq group under the merged schema
+    val lineage = inferenceStagesOf(Merge.applyChanges(spark, dir,
+      Seq((5L, "upd", 0), (25L, "upd", 0)).toDF("id", "v", "w"), "id",
+      deleteCol = None, lineage = true))
+    Merge.mergeOnRead(spark, dir, Seq((7L, "mor", 1)).toDF("id", "v", "w"), "id")
+    // the equality masks' key column comes from their footers
+    val materialize = inferenceStagesOf(Merge.materializeDeletes(spark, dir))
+    assert(lineage.isEmpty, lineage.mkString("\n\n"))
+    assert(materialize.isEmpty, materialize.mkString("\n\n"))
+    val back = SnapshotLog.read(spark, dir).get
+    assert(back.count() === 30)
+    assert(back.filter($"v" === "upd" || $"v" === "mor").select("id").as[Long]
+      .collect().sorted.toSeq === Seq(5L, 7L, 25L))
   }
 }

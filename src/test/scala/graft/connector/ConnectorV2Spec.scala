@@ -10,7 +10,8 @@ import graft.table.{Merge, SnapshotLog}
 
 /** DataSourceV2 catalog face ([[GraftCatalog]]): TableCatalog lifecycle
   * (SHOW TABLES / SHOW CREATE / CREATE / RENAME / DROP), reads through
-  * the V1Scan bridge, manifest FILE PRUNING from pushed V2 filters, and
+  * the vectorized batch scan (masks of any equality-key type, drifted
+  * epochs), manifest FILE PRUNING from pushed V2 filters, and
   * COMPLETE aggregate pushdown answered from manifests alone — the
   * engine-contract replacement for the injected GraftMetadataAggRule
   * ordering dependence. Both faces share one log: a V1 `format("graft")`
@@ -1721,5 +1722,106 @@ class ConnectorV2Spec extends AnyFunSuite {
     assert(eOff.getMessage.contains("widening-only") ||
       eOff.getMessage.contains("NOT_SUPPORTED_CHANGE_COLUMN"),
       eOff.getMessage)
+  }
+
+  // ---- equality masks over every key type, on the batch scan ----
+
+  /** Commit `keys` (one column) as an equality mask of `dir`, as the
+    * merge-on-read writer lays one out. */
+  private def commitEqMask(dir: String, keys: org.apache.spark.sql.DataFrame): Unit =
+    SnapshotLog.commit(spark, dir, "rowdelta",
+      SnapshotLog.writeData(keys.coalesce(1), dir, kind = "eqdelete",
+        rawPhysical = true))
+
+  /** The batch scan `dir` plans (it must plan one), and its read equal to
+    * `SnapshotLog.read`'s merge-on-read plan. */
+  private def assertBatchScanAnswers(dir: String): Seq[org.apache.spark.sql.Row] = {
+    new GraftScanBuilder(spark, dir).build() match {
+      case b: GraftV2BatchScan =>
+        assert(b.description().contains("eqMaskRows="), b.description())
+      case other => fail(s"expected the eq-masked batch scan, got $other")
+    }
+    val back = spark.read.format("graft").load(dir)
+    val plan = back.queryExecution.executedPlan
+    assert(plan.toString.contains("GraftBatchScan("), plan.toString)
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.sortBy(_.getLong(0))
+    val got = sorted(back)
+    val ref = SnapshotLog.read(spark, dir).get
+    assert(got === sorted(ref.select(back.columns.map(col).toSeq: _*)))
+    got
+  }
+
+  test("equality masks on a DOUBLE key: -0.0 equals 0.0 and NaNs are one key") {
+    val dir = freshWarehouse("eqdbl") + "/t"
+    // ids 0..11 cycle the keys 0.0, -0.0, NaN, 1.5, -2.5, 3.0
+    val keys = Seq("0.0", "-0.0", "NaN", "1.5", "-2.5", "3.0")
+    spark.range(0, 60).select(col("id"),
+        element_at(array(keys.map(k => lit(k).cast("double")): _*),
+          (col("id") % 6 + 1).cast("int")).as("dk"),
+        (col("id") * 2).as("v"))
+      .coalesce(1).write.format("graft").option("statsCols", "dk").save(dir)
+    // the mask names 0.0 (not -0.0) and a NaN
+    import spark.implicits._
+    commitEqMask(dir, Seq(0.0, Double.NaN, 3.0).toDF("dk"))
+    val got = assertBatchScanAnswers(dir)
+    assert(got.map(_.getLong(0)) === (0L until 60L).filter(i => i % 6 == 3 || i % 6 == 4))
+  }
+
+  test("equality masks on a DECIMAL key read through the batch scan") {
+    val dir = freshWarehouse("eqdec") + "/t"
+    spark.range(0, 300).select(col("id"),
+        (col("id") * 0.25).cast("decimal(10,2)").as("dk"), (col("id") * 2).as("v"))
+      .repartition(3).write.format("graft").option("statsCols", "dk").save(dir)
+    Merge.mergeOnRead(spark, dir,
+      spark.range(0, 300).filter(col("id") % 7 === 1).select(col("id"),
+        (col("id") * 0.25).cast("decimal(10,2)").as("dk"),
+        (col("id") * 2).as("v"), lit(true).as("_del")),
+      "dk", deleteCol = Some("_del"))
+    val got = assertBatchScanAnswers(dir)
+    assert(got.map(_.getLong(0)) === (0L until 300L).filterNot(_ % 7 == 1))
+  }
+
+  test("equality masks on a BINARY key read through the batch scan") {
+    val dir = freshWarehouse("eqbin") + "/t"
+    spark.range(0, 200).select(col("id"),
+        unhex(format_string("%04X", col("id") % 40)).as("bk"), (col("id") * 2).as("v"))
+      .coalesce(2).write.format("graft").save(dir)
+    commitEqMask(dir, spark.range(0, 40).filter(col("id") % 4 === 0)
+      .select(unhex(format_string("%04X", col("id"))).as("bk")))
+    val got = assertBatchScanAnswers(dir)
+    assert(got.map(_.getLong(0)) === (0L until 200L).filterNot(_ % 40 % 4 == 0))
+  }
+
+  test("equality masks keep applying after their key column is dropped") {
+    val wh = freshWarehouse("eqdrop")
+    val dir = s"$wh/t"
+    spark.range(0, 400).select(col("id"), (col("id") % 50).cast("int").as("k"),
+        (col("id") * 2).as("v"))
+      .repartition(2).write.format("graft").option("statsCols", "k").save(dir)
+    Merge.mergeOnRead(spark, dir,
+      spark.range(0, 50).filter(col("id") % 5 === 0).select(col("id"),
+        col("id").cast("int").as("k"), (col("id") * 2).as("v"),
+        lit(true).as("_del")),
+      "k", deleteCol = Some("_del"))
+    spark.sql(s"CREATE TABLE gv2eqdrop_wh USING graft OPTIONS (path '$dir')")
+    try spark.sql("ALTER TABLE gv2eqdrop_wh DROP COLUMN k")
+    finally spark.sql("DROP TABLE gv2eqdrop_wh")
+    val got = assertBatchScanAnswers(dir)
+    assert(got.head.length === 2, "the dropped key stays invisible")
+    assert(got.map(_.getLong(0)) === (0L until 400L).filterNot(_ % 50 % 5 == 0))
+  }
+
+  test("equality masks over two key columns refuse like the merge-on-read plan") {
+    val dir = freshWarehouse("eqtwo") + "/t"
+    rows(0, 100).coalesce(1).write.format("graft").option("statsCols", "id").save(dir)
+    Merge.mergeOnRead(spark, dir, rows(0, 5), "id")
+    Merge.mergeOnRead(spark, dir, rows(10, 15), "v")
+    val scan = intercept[IllegalStateException] {
+      new GraftScanBuilder(spark, dir).build() }
+    val plan = intercept[IllegalStateException] {
+      SnapshotLog.read(spark, dir).get.collect() }
+    assert(scan.getMessage.contains("exactly one key column"), scan.getMessage)
+    assert(scan.getMessage === plan.getMessage)
   }
 }
