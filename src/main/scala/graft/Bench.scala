@@ -28,7 +28,7 @@ object Bench {
                            pipeline: org.apache.spark.sql.DataFrame =>
                              org.apache.spark.sql.DataFrame =
                              graft.stream.StreamSync.windowedCounts): (Double, Long, Int) = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-bench").toString
+    val tmp = graft.schema.Fixtures.dir("graft-stream-bench")
     val src = s"$tmp/in"; val chk = s"$tmp/chk"; val out = s"$tmp/out"
     val ev0 = graft.schema.Tables.events(spark, sfDir)
     // The bulk probe replays the table ×replicate (events are tiny at test
@@ -90,7 +90,7 @@ object Bench {
   private def upsertApplyProbe(spark: SparkSession, sfDir: String): (Double, Long) = {
     import org.apache.spark.sql.functions._
     import graft.table.SnapshotLog
-    val tmp = java.nio.file.Files.createTempDirectory("graft-upsert-bench").toString
+    val tmp = graft.schema.Fixtures.dir("graft-upsert-bench")
     val (src, chk, tbl) = (s"$tmp/in", s"$tmp/chk", s"$tmp/t")
     val state = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select((col("l_orderkey").cast("long") * 100 + col("l_linenumber")).as("id"),
@@ -132,7 +132,7 @@ object Bench {
   private def cdfTailProbe(spark: SparkSession, sfDir: String): (Double, Long) = {
     import org.apache.spark.sql.functions._
     import graft.table.SnapshotLog
-    val tmp = java.nio.file.Files.createTempDirectory("graft-cdf-bench").toString
+    val tmp = graft.schema.Fixtures.dir("graft-cdf-bench")
     val (chk, out, tbl) = (s"$tmp/chk", s"$tmp/out", s"$tmp/t")
     val state = spark.read.parquet(s"$sfDir/lineitem.parquet")
       .select((col("l_orderkey").cast("long") * 100 + col("l_linenumber")).as("id"),

@@ -433,18 +433,17 @@ object CdcQueries {
     }),
     // MERGE under SCHEMA DRIFT: the table holds epoch-1 latest-state
     // under the OLD source shape (int key, decimal(10,2) amount,
-    // pre-rename `address`); the delta arrives under the NEW shape
-    // (bigint key, decimal(12,4), `shipping_address`, added customer_id)
-    // and upserts through [[graft.table.Merge.applyChanges]] with the
-    // declared rename — carried-forward rows LUB-cast and null-filled at
-    // WRITE time by the Evolution lattice, and the one untouched
-    // old-schema file surviving by reference exercises the READ-side
-    // epoch merge too. Oracle: latest-per-key over the drift-shaped
-    // replay of the wire fixture. Off-lattice drift refusal is pinned in
-    // CdcSpec.
+    // `address`), renames `address` to `shipping_address` through the
+    // field registry, and the delta arrives under the NEW shape (bigint
+    // key, decimal(12,4), `shipping_address`, added customer_id) and
+    // upserts through [[graft.table.Merge.applyChanges]] — carried-forward
+    // rows LUB-cast and null-filled at WRITE time by the Evolution
+    // lattice, and the one untouched old-schema file surviving by
+    // reference exercises the READ-side widening too. Oracle:
+    // latest-per-key over the drift-shaped replay of the wire fixture.
+    // Off-lattice drift refusal is pinned in CdcSpec.
     "cdc_merge_drift" -> ((s, _) => {
-      graft.table.SnapshotLog.read(s, driftMergeWarehouse(s),
-          renames = Map("address" -> "shipping_address")).get
+      graft.table.SnapshotLog.read(s, driftMergeWarehouse(s)).get
         .select(col("order_id").cast("long").as("order_id"), col("status"),
           round(col("amount").cast("double"), 4).as("amount"),
           col("shipping_address"), col("kafka_offset"), col("customer_id"))
@@ -525,14 +524,13 @@ object CdcQueries {
     }),
     // SCHEMA EVOLUTION through the snapshot layer: the same two drifting
     // epochs as cdc_schema_drift_widening, but committed as SNAPSHOTS of
-    // one table — the read resolves the per-commit schemas and merges
-    // them through the Evolution widening lattice (declared rename, LUB
-    // casts, null-filled addition) instead of failing the scan. Same
-    // oracle as the epoch-merge form: two mechanisms, one invariant.
+    // one table with a registry rename between them — the read scans
+    // every epoch as one relation under the merged schema (LUB widening,
+    // null-filled addition) and the field registry maps the renamed
+    // column, instead of failing the scan. Same oracle as the
+    // epoch-merge form: two mechanisms, one invariant.
     "cdc_snapshot_schema_drift" -> ((s, _) => {
-      graft.table.SnapshotLog
-        .read(s, driftSnapshotWarehouse(s),
-          renames = Map("address" -> "shipping_address")).get
+      graft.table.SnapshotLog.read(s, driftSnapshotWarehouse(s)).get
         .withColumn("amount", round(col("amount").cast("double"), 4))
         .orderBy(col("kafka_offset"))
     }),
@@ -752,9 +750,11 @@ object CdcQueries {
 
   /** The COW-merge-under-drift warehouse behind `cdc_merge_drift`:
     * epoch-1 latest-state written under the old shape in THREE
-    * key-range files ([1-2], [3-4], [5-6]); the epoch-2 delta (keys
-    * 2, 5, 7, 8 under the new shape) touches files 1 and 3 and leaves
-    * file 2 carried forward by reference with its OLD schema. */
+    * key-range files ([1-2], [3-4], [5-6]); `address` renamed to
+    * `shipping_address` (a metadata-only `schema` commit); the epoch-2
+    * delta (keys 2, 5, 7, 8 under the new shape) touches files 1 and 3
+    * and leaves file 2 carried forward by reference with its OLD
+    * schema. */
   private def driftMergeWarehouse(spark: SparkSession): String =
     Fixtures.memo(spark, "graft-driftmerge") { base =>
       import graft.table.{Merge, SnapshotLog}
@@ -764,8 +764,8 @@ object CdcQueries {
       SnapshotLog.commit(spark, dir, "append",
         SnapshotLog.writeData(snap, dir, statsCol = Some("order_id")),
         summary = Map("table" -> "orders_drift_state"))
-      Merge.applyChanges(spark, dir, latestPerKey(e2), "order_id", None,
-        renames = Map("address" -> "shipping_address"))
+      renameAddress(spark, dir)
+      Merge.applyChanges(spark, dir, latestPerKey(e2), "order_id", None)
       dir
     }
 
@@ -829,16 +829,23 @@ object CdcQueries {
 
   /** The two drifting-schema epochs committed as consecutive SNAPSHOTS
     * of one table (epoch 1 under the old source shape, epoch 2 under
-    * the widened/renamed/extended one). */
+    * the widened/renamed/extended one), with the rename declared between
+    * them — epoch 2's `shipping_address` is stored as `address`. */
   private def driftSnapshotWarehouse(spark: SparkSession): String =
     Fixtures.memo(spark, "graft-driftsnap") { base =>
       import graft.table.SnapshotLog
       val dir = s"$base/orders_drift"
       val (e1, e2) = driftEpochs(spark)
       SnapshotLog.commit(spark, dir, "append", SnapshotLog.writeData(e1, dir))
+      renameAddress(spark, dir)
       SnapshotLog.commit(spark, dir, "append", SnapshotLog.writeData(e2, dir))
       dir
     }
+
+  /** The drift epochs' one rename, declared on the table: a
+    * metadata-only field-registry commit. */
+  private def renameAddress(spark: SparkSession, dir: String): Unit =
+    spark.sql(s"ALTER TABLE '$dir' RENAME COLUMN address TO shipping_address")
 
   /** Four ingest-ordered appends of orders (round-robin by orderkey, so
     * every file spans the whole key range — the zone-map-blind layout)

@@ -151,7 +151,7 @@ object Compaction {
     * DISJOINT [min,max] stats intervals in the manifest. Ingest-ordered
     * appends overlap on the merge/range key (every file spans most of
     * the key space), which slowly degrades [[graft.table.Merge]]'s and
-    * `readRange`'s pruning to "touch everything"; clustering during the
+    * `readPruned`'s pruning to "touch everything"; clustering during the
     * compaction the table needs anyway restores pruning to
     * one-file-per-key-range — the same reason lakehouse OPTIMIZE takes a
     * cluster/Z-order spec. */
@@ -422,14 +422,6 @@ object Compaction {
         else {
           val df = spark.read.parquet(cls.map(_.path): _*)
           val statKeys = cls.flatMap(_.stats.keys).distinct.filter(df.columns.contains)
-          // keep the legacy first-stats slot on kafka_offset when the
-          // COLUMN is present (readRange's offset pruning — even files
-          // committed by pre-stats writers gain the zone here), then the
-          // rest of the recorded zone columns
-          val ordered =
-            if (df.columns.contains("kafka_offset"))
-              "kafka_offset" +: statKeys.filterNot(_ == "kafka_offset")
-            else statKeys
           val bloom = cls.flatMap(_.blooms.keys).distinct
             .filter(df.columns.contains).headOption
           val partCols = cls.flatMap(_.parts.keys).distinct
@@ -439,7 +431,7 @@ object Compaction {
               case c => df.columns.contains(c)
             }
           val rewritten = SnapshotLog.writeData(df.repartition(bins), dir,
-            statsCol = ordered.headOption, statsCols = ordered.drop(1),
+            statsCols = statKeys,
             bloomCol = bloom, partitionCols = partCols,
             rawPhysical = true) // raw class read: names are already physical
           val (nOld, nNew) = (cls.map(_.rows).sum, rewritten.map(_.rows).sum)
@@ -488,24 +480,15 @@ object Compaction {
       totalBytes - removed.map(_.bytes).sum + rewritten.map(_.bytes).sum)
   }
 
-  /** Z-ORDER arrangement shared by the clustering compaction and
-    * [[graft.table.Merge.materializeDeletes]]: min-max-normalize both
-    * dims to 8 bits (raw dims of unequal range would let the wide one
-    * dominate the interleave) and range-partition + sort on the
-    * codegen'd Morton value — each written file becomes a near-square
-    * tile of the 2-D key space, so BOTH dims' manifest stats prune. */
-  private[graft] def zorderArrange(df: org.apache.spark.sql.DataFrame,
-                                   cx: String, cy: String,
-                                   targetFiles: Int): org.apache.spark.sql.DataFrame =
-    zorderArrange(df, Seq(cx, cy), targetFiles)
-
-  /** N-dimensional Z-order (Morton) arrangement: each dimension buckets
-    * to `bits` levels within its observed range (bits = min(8, 62/D),
-    * so the interleaved value stays in one long — 8 bits through 7
-    * dims, 7 bits at 8, degrading gracefully beyond), the per-dimension bits
-    * interleave into one codegen'd arithmetic expression (no custom
-    * Expression needed beyond 2-D: `D × bits` shift-and-mask terms), and
-    * the frame range-partitions + sorts by the interleaved value — every
+  /** N-dimensional Z-order (Morton) arrangement, shared by the
+    * clustering compaction, [[graft.table.Merge.materializeDeletes]] and
+    * the V1 writer: each dimension buckets to `bits` levels within its
+    * observed range (bits = min(8, 62/D), so the interleaved value stays
+    * in one long — 8 bits through 7 dims, 7 bits at 8, degrading
+    * gracefully beyond), the per-dimension bits interleave into one
+    * codegen'd arithmetic expression (no custom Expression needed beyond
+    * 2-D: `D × bits` shift-and-mask terms), and the frame
+    * range-partitions + sorts by the interleaved value — every
     * dimension's zone maps then prune roughly equally, the multi-dim
     * analog of Delta's `ZORDER BY (a, b, …)`. */
   private[graft] def zorderArrange(df: org.apache.spark.sql.DataFrame,

@@ -332,9 +332,10 @@ object ConnectorQueries {
       // scan every DML below reads through
       val probe = v.sql(
         s"SELECT o_orderkey, _graft_file, _graft_pos FROM $cat.orders_erd")
-        .queryExecution.executedPlan.toString
-      require(probe.contains("rowIds=true") && probe.contains("eqMaskFiles=1") &&
-          !probe.contains("GraftBridgeRelation"),
+        .queryExecution.executedPlan
+      require(probe.toString.contains("rowIds=true") &&
+          probe.toString.contains("eqMaskFiles=1") &&
+          GraftV2BatchScan.readsColumnar(probe),
         s"the eq-masked row-id scan must vectorize:\n$probe")
       v.sql(s"DELETE FROM $cat.orders_erd WHERE o_orderkey % 9 = 4")
       v.sql(s"UPDATE $cat.orders_erd SET o_totalprice = o_totalprice * 3 " +

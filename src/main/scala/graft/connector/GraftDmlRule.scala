@@ -332,7 +332,7 @@ object GraftDml {
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
         if (lineage) schemaOf(t).add(Merge.LineageCol, LongType) else schemaOf(t))
     else if (lineage)
-      aligned(logical(Merge.readTouchedLineage(spark, files, Map.empty)), t)
+      aligned(logical(Merge.readTouchedLineage(spark, files)), t)
     else aligned(logical(SnapshotLog.readEpochSafe(spark, files)), t)
   }
 

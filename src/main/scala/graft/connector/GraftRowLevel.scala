@@ -148,7 +148,7 @@ private[connector] final class GraftDeltaWrite(
       bucketKey = bucketKey,
       sortedBy = r => if (r.sorted) bucketSpec.map(_._1) else None)
     val posFiles = results.flatMap(_.pos).filter(_.rows > 0).map(p =>
-      SnapshotLog.DataFile(p.path, p.rows, p.bytes, None, None,
+      SnapshotLog.DataFile(p.path, p.rows, p.bytes,
         kind = "posdelete",
         parts = p.files.map(SnapshotLog.PosFileCol -> _).toMap))
     if (dataFiles.isEmpty && posFiles.isEmpty) return // matched nothing

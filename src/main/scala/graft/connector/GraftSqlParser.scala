@@ -362,8 +362,7 @@ object GraftMaintenance {
     val part = fs.listStatus(new org.apache.hadoop.fs.Path(dst)).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
       .maxBy(_.getLen)
-    SnapshotLog.DataFile(part.getPath.toUri.getPath, 0L, part.getLen,
-      None, None, kind = "data")
+    SnapshotLog.DataFile(part.getPath.toUri.getPath, 0L, part.getLen)
   }
 
   /** The table dir behind a `cat.name` target when `cat` is a CONFIGURED

@@ -6,6 +6,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, 
 import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.graftshim.{GraftFileSpec, GraftMaskFile, GraftParquetShim}
@@ -332,7 +333,25 @@ private[connector] object GraftNumFilesMetric {
   val Name = "numFiles"
 }
 
-private[connector] object GraftV2BatchScan {
+private[connector] object GraftV2BatchScan
+    extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+
+  /** Does `plan` read through a columnar `BatchScanExec` over this scan?
+    * Descends into adaptive plans, their query stages and an executed
+    * command's plan. False for every Row path (the V1
+    * `GraftComputedRelation` scan included). */
+  def readsColumnar(plan: SparkPlan): Boolean =
+    find(plan) {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan.isInstanceOf[GraftV2BatchScan] && b.supportsColumnar
+      case _ => false
+    }.isDefined
+
+  override def allChildren(p: SparkPlan): Seq[SparkPlan] = p match {
+    case c: org.apache.spark.sql.execution.CommandResultExec =>
+      Seq(c.commandPhysicalPlan)
+    case _ => super.allChildren(p)
+  }
 
   /** The equality key of `eqDels` as the masked read probes it: the
     * PHYSICAL column the mask files carry ([[SnapshotLog.maskKey]]),

@@ -101,10 +101,6 @@ object Advisor {
 
     // overlap fraction PER zone column (clustered layouts are ~0,
     // ingest-ordered ones approach 1), reported for the worst column.
-    // The legacy first-stats slot is deliberately NOT used: different
-    // files may record different columns there (a Z-order compaction
-    // points it at a cluster dimension), and mixing domains makes the
-    // fraction meaningless — the same pitfall Merge.keyZone documents.
     val overlapByCol = data.flatMap(_.stats.keys).distinct.flatMap { c =>
       val ivs = data.flatMap(_.stats.get(c))
       if (ivs.size > 1) Some(c -> overlapFraction(ivs)) else None

@@ -21,11 +21,13 @@ import graft.table.SnapshotLog.DataFile
   *  - `parts`: per-column allowed partition-value strings checked
   *    against the recorded per-file partition-value sets.
   *
-  * Every face prunes through it: the V1 file index, the V2 scan's
+  * It is the only code that turns a predicate into file pruning, and
+  * every face prunes through it: the V1 file index, the V2 scan's
   * static and runtime filters (rebuilt as Catalyst predicates first),
   * `OPTIMIZE … WHERE`, the DML rule's candidates and coverage proof
-  * ([[interval]]), and [[SnapshotLog.readPruned]] — one literal-to-
-  * domain table, so no two faces can prune the same predicate apart.
+  * ([[interval]]), positional deletes' locating scan and
+  * [[SnapshotLog.readPruned]] — one literal-to-domain table, so no two
+  * faces can prune the same predicate apart.
   * Pruning may only skip: anything unrecognized contributes NO
   * constraint, and a file missing metadata for a constrained column is
   * always kept.
@@ -162,8 +164,7 @@ object Constraints {
 
   /** A file is kept unless some requested column has recorded zone
     * stats proving its range misses. A column with no stats on this file
-    * keeps it (the legacy single-column statsMin/statsMax are NOT
-    * consulted: they may describe a different column). */
+    * keeps it. */
   private def zoneKeeps(f: DataFile, ranges: Map[String, (Long, Long)]): Boolean =
     ranges.forall { case (c, (lo, hi)) =>
       f.stats.get(c).forall { case (mn, mx) => mx >= lo && mn <= hi }

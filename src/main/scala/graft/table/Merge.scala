@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.StructType
   * the standard lakehouse answer (Delta/Iceberg copy-on-write MERGE,
   * both published designs):
   *
-  *  1. **Prune by manifest stats.** Each live file's [stats_min,
-  *     stats_max] key interval is intersected with the delta's key set —
+  *  1. **Prune by manifest stats.** Each live file's recorded zone for
+  *     the merge key is intersected with the delta's key set —
   *     only files that MAY hold a matched key are touched. For CDC-scale
   *     deltas (≤ [[DefaultMaxDriverKeys]] distinct keys) the key set is
   *     a KB-scale sorted array on the driver; beyond that the decision
@@ -47,11 +47,13 @@ import org.apache.spark.sql.types.StructType
   * CdcSpec ("composite keys via canonical surrogate").
   *
   * Schema DRIFT between the table and the delta routes through the
-  * [[graft.schema.Evolution]] widening lattice: declared renames apply
-  * to the table side, both sides cast to the LUB types, added columns
-  * null-fill on carried-forward rows — and off-lattice drift (string vs
-  * int, narrowing) throws at WRITE time instead of corrupting the table
-  * or failing some later read.
+  * [[graft.schema.Evolution]] widening lattice: both sides cast to the
+  * LUB types, added columns null-fill on carried-forward rows — and
+  * off-lattice drift (string vs int, narrowing) throws at WRITE time
+  * instead of corrupting the table or failing some later read. A renamed
+  * column is declared once on the table (`ALTER TABLE … RENAME COLUMN`,
+  * the [[FieldRegistry]]); the delta then speaks the new name and both
+  * sides meet in physical space.
   *
   * [[SnapshotLog.diff]] refuses ranges containing an `upsert` commit
   * (row-level change feeds need delete vectors / row lineage — exactly
@@ -175,20 +177,11 @@ object Merge {
     from < keys.length && keys(from) <= mx
   }
 
-  /** A file's manifest zone for the MERGE KEY, from the per-COLUMN stats
-    * map — never the legacy first-stats-column pair, which may describe a
-    * different column entirely (e.g. a Z-order compaction records its
-    * cluster dimension first): pruning in the wrong domain would skip
-    * files that DO hold delta keys and silently lose updates. A file
-    * with no recorded zone for `keyCol` is conservatively unprunable. */
-  private def keyZone(f: SnapshotLog.DataFile, keyCol: String): Option[(Long, Long)] =
-    f.stats.get(keyCol)
-
   /** Does this file carry ANY pruning metadata for the merge key — a
     * zone (long keys) or a bloom (either; the only index string keys
     * get)? Files with neither are unprunable: always touched. */
   private def prunable(f: SnapshotLog.DataFile, keyCol: String): Boolean =
-    keyZone(f, keyCol).isDefined || f.blooms.contains(keyCol)
+    f.stats.contains(keyCol) || f.blooms.contains(keyCol)
 
   /** Broadcastable metadata frame of the prunable live files:
     * (idx, mn, mx, bloom) — the file's manifest key-column zone (null
@@ -200,7 +193,7 @@ object Merge {
                           useBloom: Boolean = true): DataFrame = {
     import spark.implicits._
     stated.zipWithIndex.map { case (f, i) =>
-      val zone = keyZone(f, keyCol)
+      val zone = f.stats.get(keyCol)
       (i, zone.map(_._1), zone.map(_._2),
         f.blooms.get(keyCol).filter(_ => useBloom)
           .map(java.util.Base64.getDecoder.decode).orNull)
@@ -221,7 +214,7 @@ object Merge {
   private def driverKeeps(f: SnapshotLog.DataFile, keyCol: String,
                           arr: Array[Long], bloomBudget: Boolean,
                           useBloom: Boolean = true): Boolean = {
-    val zoneOk = keyZone(f, keyCol) match {
+    val zoneOk = f.stats.get(keyCol) match {
       case Some((mn, mx)) => hits(arr, mn, mx)
       case None => true
     }
@@ -280,11 +273,9 @@ object Merge {
     * delete must touch the file holding its row), but contribute no
     * output row. The caller resolves the delta to latest-per-key first —
     * a re-insert after a delete therefore arrives as a plain upsert.
-    * `renames` declares old→new column renames when the delta's schema
-    * drifted from the table's (`keyCol` is the POST-rename name). */
+    * The delta and `keyCol` speak the table's LOGICAL names. */
   def applyChanges(spark: SparkSession, tableDir: String, delta: DataFrame,
                    keyCol: String, deleteCol: Option[String],
-                   renames: Map[String, String] = Map.empty,
                    maxDriverKeys: Int = DefaultMaxDriverKeys,
                    lineage: Boolean = false): MergeResult = {
     // PIN the snapshot this merge derives from: reading "latest" twice
@@ -337,12 +328,12 @@ object Merge {
       else {
         // touched files may themselves span SCHEMA EPOCHS (a drift merge
         // leaves old-schema files live by reference): the epoch-safe
-        // read merges them through the Evolution lattice — one raw
+        // read scans them under their merged schema — one raw
         // multi-path relation would infer a single file's schema and
         // silently null the other epoch's drifted columns
         val touchedDf =
-          if (lineage) readTouchedLineage(spark, touched, renames)
-          else SnapshotLog.readEpochSafe(spark, touched, renames)
+          if (lineage) readTouchedLineage(spark, touched)
+          else SnapshotLog.readEpochSafe(spark, touched)
         val survivors = touchedDf
           .join(delta0.select(col(keyColP)).distinct(), Seq(keyColP), "left_anti")
         if (sameShape(survivors.schema, upserts.schema))
@@ -396,24 +387,20 @@ object Merge {
     * existing [[LineageCol]] where one was stamped, and rows from
     * pre-lineage files adopt their file's commit seq (the best lower
     * bound the metadata has). Each seq group reads under the groups'
-    * merged schema, like the plain epoch-safe read; a legacy declared
-    * `renames` map merges per epoch through the Evolution lattice.
-    * Package-visible: the SQL DML face routes its copy-on-write
-    * rewrites through the same lineage-preserving read. */
+    * merged schema, like the plain epoch-safe read, and the groups meet
+    * in one union. Package-visible: the SQL DML face routes its
+    * copy-on-write rewrites through the same lineage-preserving read. */
   private[graft] def readTouchedLineage(spark: SparkSession,
-                                 touched: Seq[SnapshotLog.DataFile],
-                                 renames: Map[String, String]): DataFrame = {
+                                 touched: Seq[SnapshotLog.DataFile]): DataFrame = {
     val groups = SnapshotLog.epochGroups(spark, touched)
-    val merged = if (renames.isEmpty) Some(SnapshotLog.mergedOf(groups.map(_._1))) else None
-    val stamped = groups.map { case (sch, fs) =>
-      val df = SnapshotLog.readAs(spark, merged.getOrElse(sch), fs)
+    val merged = SnapshotLog.mergedOf(groups.map(_._1))
+    groups.map { case (_, fs) =>
+      val df = SnapshotLog.readAs(spark, merged, fs)
       val seq = lit(fs.head.seq)
       if (df.columns.contains(LineageCol))
         df.withColumn(LineageCol, coalesce(col(LineageCol), seq))
       else df.withColumn(LineageCol, seq)
-    }
-    if (merged.isDefined) stamped.reduce(_ unionByName _)
-    else graft.schema.Evolution.mergeEpochs(stamped, renames)
+    }.reduce(_ unionByName _)
   }
 
   private def isStringKey(df: DataFrame, keyCol: String): Boolean =
@@ -436,15 +423,15 @@ object Merge {
     * table size — at 100 TB a 1000-row CDC batch costs 1000 rows + a
     * KB-scale key file, vs COW's rewrite of every key-intersecting data
     * file. The price moves to reads (a broadcast-hash mask join per
-    * scan, see [[SnapshotLog.applyEqDeletes]]) until
+    * scan, see [[SnapshotLog.applyMasks]]) until
     * [[materializeDeletes]] folds the masks back into clustered data —
     * the classic write-amplification/read-amplification trade, chosen
     * per table by update rate.
     *
     * Manifest key stats still engage, on the WRITE side: delta keys
-    * provably outside every live data file's [stats_min, stats_max] are
-    * pure inserts and get NO delete entry — steady-state append-mostly
-    * tables accrue almost no mask debt. Past [[DefaultMaxDriverKeys]]
+    * provably outside every live data file's key zone are pure inserts
+    * and get NO delete entry — steady-state append-mostly tables accrue
+    * almost no mask debt. Past [[DefaultMaxDriverKeys]]
     * distinct keys that selection runs as a distributed semi-join
     * against the broadcast file intervals (+ manifest blooms) instead
     * of a driver array. Tombstoned rows (`deleteCol` true) contribute
@@ -459,7 +446,6 @@ object Merge {
   def mergeOnRead(spark: SparkSession, tableDir: String, delta: DataFrame,
                   keyCol: String, deleteCol: Option[String] = None,
                   summary: Map[String, String] = Map.empty,
-                  renames: Map[String, String] = Map.empty,
                   maxDriverKeys: Int = DefaultMaxDriverKeys,
                   maxRetries: Int = 5): MorResult = {
     val (allFiles0, mreg0) = SnapshotLog.stateAt(spark, tableDir)
@@ -477,9 +463,9 @@ object Merge {
     // off-lattice drift fails the WRITE: cheap fast path (one footer)
     // when nothing drifted, full per-epoch validation when it did
     val headSchema = GraftParquetSchema.schemaOf(spark, live0.head.path)
-    if (renames.nonEmpty || !sameShape(headSchema, upserts.schema)) {
+    if (!sameShape(headSchema, upserts.schema)) {
       val epochSchemas = SnapshotLog.epochGroups(spark, live0).map(_._1)
-      graft.schema.Evolution.mergedSchema(epochSchemas :+ upserts.schema, renames)
+      graft.schema.Evolution.mergedSchema(epochSchemas :+ upserts.schema)
     }
     val keys = keySet(delta0, keyColP, maxDriverKeys)
     val nKeys = keys.fold(_.length.toLong, _.count())
@@ -509,7 +495,7 @@ object Merge {
               // decodes once, not once per key), then every key tests
               // zone ∧ bloom
               val budget = arr.length.toLong * stated.size <= MaxDriverBloomProbes
-              val probes = stated.map(f => (keyZone(f, keyColP),
+              val probes = stated.map(f => (f.stats.get(keyColP),
                 f.blooms.get(keyColP).filter(_ => budget && useBloom)
                   .map(java.util.Base64.getDecoder.decode)))
               arr.toSeq.filter(k => probes.exists { case (zone, bloom) =>
@@ -661,8 +647,7 @@ object Merge {
     * deletes (no commit made). */
   def materializeDeletes(spark: SparkSession, tableDir: String,
                          targetFiles: Int = 2,
-                         clusterZOrder: Seq[String] = Nil,
-                         renames: Map[String, String] = Map.empty): Option[Long] = {
+                         clusterZOrder: Seq[String] = Nil): Option[Long] = {
     require(clusterZOrder.isEmpty || clusterZOrder.size >= 2,
       s"clusterZOrder takes at least two dimensions, got $clusterZOrder")
     // pin ONE snapshot for the file list, the masked read and the
@@ -688,11 +673,8 @@ object Merge {
     // columns and the written footers all agree
     val reg = SnapshotLog.registryAt(spark, tableDir, Some(baseId))
       .filterNot(_.isIdentity)
-    val masked = reg.map(_.toPhysical(
-        SnapshotLog.read(spark, tableDir, asOf = Some(baseId),
-          renames = renames).get))
-      .getOrElse(SnapshotLog.read(spark, tableDir, asOf = Some(baseId),
-        renames = renames).get)
+    val logical = SnapshotLog.read(spark, tableDir, asOf = Some(baseId)).get
+    val masked = reg.map(_.toPhysical(logical)).getOrElse(logical)
     val zOrderP = clusterZOrder.map(c =>
       reg.flatMap(_.physicalOf(c)).getOrElse(c))
     val keyColP = keyColPOpt.filter(masked.columns.contains)
@@ -738,7 +720,7 @@ object Merge {
     val dels = SnapshotLog.filesAt(spark, tableDir, Some(baseId))
       .filter(_.kind == "eqdelete")
     if (dels.size <= 1) return None
-    // the fold IS applyEqDeletes' fold — one shared definition, so the
+    // the fold IS applyMasks' fold — one shared definition, so the
     // write-side consolidation can never drift from read-side semantics
     val (folded0, keyCol) = SnapshotLog.foldMasks(spark, dels)
     val folded = folded0

@@ -55,10 +55,10 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    adds no logical rows. No more full-table rescans to find "what's
   *    new".
   *  - **manifest-level pruning**: each added file carries row count plus
-  *    min/max of a designated stats column, so offset- or time-bounded
-  *    reads skip whole files from metadata alone — the manifest is a
-  *    zone map ([[filesAt]] exposes the stats; [[readRange]] and
-  *    [[readPruned]] apply them).
+  *    per-column min/max zones (and optional blooms and partition-value
+  *    sets), so key-, offset- or time-bounded reads skip whole files from
+  *    metadata alone — the manifest is a zone map ([[filesAt]] exposes
+  *    it; [[readPruned]] applies it through [[Constraints]]).
   *  - **safe compaction**: [[graft.cdc.Compaction]] commits `replace`
   *    manifests through this protocol instead of swapping directories —
   *    readers of any pinned snapshot are unaffected mid-rewrite.
@@ -67,9 +67,9 @@ object SnapshotLog {
 
   final class ConcurrentCommitException(msg: String) extends RuntimeException(msg)
 
-  /** One immutable file plus its manifest-level stats. `statsMin`/
-    * `statsMax` are min/max of the table's designated stats column (null
-    * when none was configured at commit time). `kind` is `data` (table
+  /** One immutable file plus its manifest-level stats. `stats` maps each
+    * recorded zone column to its (min, max) in the column's long domain
+    * (empty when none was requested at write time). `kind` is `data` (table
     * rows) or `eqdelete` (an equality-delete file: single-column key set
     * whose rows MASK older data rows — the merge-on-read path). `seq` is
     * the file's data sequence number = the snapshot id that first added
@@ -91,7 +91,6 @@ object SnapshotLog {
     * so co-located bucket joins drop their per-task Sort. Absent on
     * pre-r14 manifests = unknown, never "unsorted". */
   final case class DataFile(path: String, rows: Long, bytes: Long,
-                            statsMin: Option[Long], statsMax: Option[Long],
                             kind: String = "data", seq: Long = 0L,
                             stats: Map[String, (Long, Long)] = Map.empty,
                             blooms: Map[String, String] = Map.empty,
@@ -373,7 +372,6 @@ object SnapshotLog {
     * nested structs, and the row stays a plain product encoder. */
   private[graft] final case class CheckpointRow(
       path: String, rows: Long, bytes: Long,
-      statsMin: Option[Long], statsMax: Option[Long],
       kind: String, seq: Long,
       statsCols: Seq[String], statsMins: Seq[Long], statsMaxs: Seq[Long],
       blooms: Map[String, String], parts: Map[String, Seq[String]],
@@ -383,7 +381,7 @@ object SnapshotLog {
       // within-file sort column (r14); pre-r14 checkpoints lack the
       // column and read back as None = unknown
       sortedBy: Option[String]) {
-    def toDataFile: DataFile = DataFile(path, rows, bytes, statsMin, statsMax,
+    def toDataFile: DataFile = DataFile(path, rows, bytes,
       kind = kind, seq = seq,
       stats = statsCols.indices.map(i =>
         statsCols(i) -> (statsMins(i), statsMaxs(i))).toMap,
@@ -392,8 +390,8 @@ object SnapshotLog {
 
   private def toCheckpointRow(f: DataFile): CheckpointRow = {
     val cols = f.stats.keys.toSeq.sorted
-    CheckpointRow(f.path, f.rows, f.bytes, f.statsMin, f.statsMax, f.kind,
-      f.seq, cols, cols.map(f.stats(_)._1), cols.map(f.stats(_)._2),
+    CheckpointRow(f.path, f.rows, f.bytes, f.kind, f.seq,
+      cols, cols.map(f.stats(_)._1), cols.map(f.stats(_)._2),
       f.blooms, f.parts, f.nulls, f.sortedBy)
   }
 
@@ -472,6 +470,9 @@ object SnapshotLog {
     * before [[commit]] leaves unreferenced files that
     * [[expireSnapshots]]' orphan sweep reclaims.
     *
+    * `statsCol` and `statsCols` name the zone columns recorded per file;
+    * `statsCol` is one more of them, with no special role.
+    *
     * `rawPhysical = true` declares the frame (and the requested metadata
     * column names) ALREADY in physical space — set by internal rewrites
     * that read files raw (bin-pack, mask consolidation, merge adapters);
@@ -535,9 +536,7 @@ object SnapshotLog {
       sortedBy: GraftFileResult => Option[String]): Seq[DataFile] =
     results.map { r =>
       val stats = r.mins.keys.map(c => c -> (r.mins(c), r.maxs(c))).toMap
-      val first = specs.stats.headOption.flatMap(c => stats.get(c.name))
-      DataFile(r.path, r.rows, r.bytes, first.map(_._1), first.map(_._2),
-        kind = kind, stats = stats,
+      DataFile(r.path, r.rows, r.bytes, kind = kind, stats = stats,
         blooms = (for { c <- specs.bloom; b <- r.bloom } yield
           c.name -> java.util.Base64.getEncoder.encodeToString(b)).toMap,
         parts = r.parts ++ bucketKey.map(_ -> Seq(r.bucketId.toString)),
@@ -750,8 +749,6 @@ object SnapshotLog {
     val n = arr.addObject()
     n.put("path", f.path); n.put("rows", f.rows); n.put("bytes", f.bytes)
     n.put("kind", f.kind); n.put("seq", f.seq)
-    f.statsMin.foreach(n.put("stats_min", _))
-    f.statsMax.foreach(n.put("stats_max", _))
     if (f.stats.nonEmpty) {
       val sn = n.putObject("stats")
       f.stats.toSeq.sortBy(_._1).foreach { case (c, (mn, mx)) =>
@@ -894,8 +891,6 @@ object SnapshotLog {
           e.getKey -> e.getValue.elements().asScala.toSeq.map(_.asText())).toMap
       }.getOrElse(Map.empty[String, Seq[String]])
       DataFile(f.get("path").asText(), f.get("rows").asLong(), f.get("bytes").asLong(),
-        Option(f.get("stats_min")).map(_.asLong()),
-        Option(f.get("stats_max")).map(_.asLong()),
         kind = Option(f.get("kind")).map(_.asText()).getOrElse("data"),
         seq = Option(f.get("seq")).map(_.asLong()).getOrElse(0L),
         stats = stats, blooms = blooms, parts = parts, nulls = nulls,
@@ -1200,20 +1195,15 @@ object SnapshotLog {
     * multi-path relation under the epochs' merged schema — the parquet
     * readers widen each file's narrower types in-scan (the Evolution
     * lattice is exactly their promotions) and null-fill the columns an
-    * epoch lacks. Only a legacy declared `renames` map reads per epoch
-    * and merges through [[graft.schema.Evolution.mergeEpochs]]. A raw
-    * multi-path read would infer a single file's schema and silently
-    * null the other epochs' columns — every consumer of a snapshot
-    * table's file list (reads, merges, compactions) must come through
-    * here or [[applyEqDeletes]]. */
-  private[graft] def readEpochSafe(spark: SparkSession, files: Seq[DataFile],
-                                   renames: Map[String, String] = Map.empty)
-      : DataFrame = {
-    val groups = epochGroups(spark, files)
-    if (renames.isEmpty) readAs(spark, mergedOf(groups.map(_._1)), files)
-    else graft.schema.Evolution.mergeEpochs(
-      groups.map { case (sch, fs) => readAs(spark, sch, fs) }, renames)
-  }
+    * epoch lacks. Renames never reach this layer: files are read under
+    * their PHYSICAL names and the field registry maps them to logical
+    * ones afterwards. A raw multi-path read would infer a single file's
+    * schema and silently null the other epochs' columns — every consumer
+    * of a snapshot table's file list (reads, merges, compactions) must
+    * come through here or [[applyMasks]]. */
+  private[graft] def readEpochSafe(spark: SparkSession,
+                                   files: Seq[DataFile]): DataFrame =
+    readAs(spark, mergedOf(epochGroups(spark, files).map(_._1)), files)
 
   /** The merged schema of epoch schemas (the one schema when they agree). */
   private[graft] def mergedOf(schemas: Seq[StructType]): StructType =
@@ -1237,7 +1227,7 @@ object SnapshotLog {
     * writer scans to locate matching rows. */
   private[graft] def readEpochSafeWithPos(spark: SparkSession,
                                           files: Seq[DataFile]): DataFrame =
-    withPos(readAs(spark, mergedOf(epochGroups(spark, files).map(_._1)), files))
+    withPos(readEpochSafe(spark, files))
 
   /** Is this manifest entry a pending DELETE MASK (either kind)?
     * Every reader that partitions a live set into "masks vs data" must
@@ -1257,11 +1247,6 @@ object SnapshotLog {
   val PosFileCol = "_graft_file"
   val PosOrdCol = "_graft_pos"
 
-  private def applyEqDeletes(spark: SparkSession, data: Seq[DataFile],
-                             dels: Seq[DataFile],
-                             renames: Map[String, String] = Map.empty): DataFrame =
-    applyMasks(spark, data, dels, renames)
-
   /** Apply EVERY pending mask kind to the epoch-safe read of `data`:
     * equality masks fold to (key → max seq) and filter by the seq rule
     * (re-inserts at/after the mask's seq survive); positional masks
@@ -1270,9 +1255,8 @@ object SnapshotLog {
     * place, so a recorded position is valid for exactly as long as the
     * file is live). */
   private[graft] def applyMasks(spark: SparkSession, data: Seq[DataFile],
-                                dels: Seq[DataFile],
-                                renames: Map[String, String] = Map.empty): DataFrame =
-    applyMasksKeepPos(spark, data, dels, renames, keepPos = false)
+                                dels: Seq[DataFile]): DataFrame =
+    applyMasksKeepPos(spark, data, dels, keepPos = false)
 
   /** [[applyMasks]] variant RETAINING the ([[PosFileCol]], [[PosOrdCol]])
     * scan-metadata columns on every surviving row — the read a
@@ -1280,33 +1264,25 @@ object SnapshotLog {
     * the engine filters/joins the visible rows, and the surviving
     * positions become the posdelete entries the delta writer records. */
   private[graft] def applyMasksWithPos(spark: SparkSession, data: Seq[DataFile],
-                                       dels: Seq[DataFile],
-                                       renames: Map[String, String] = Map.empty): DataFrame =
-    applyMasksKeepPos(spark, data, dels, renames, keepPos = true)
+                                       dels: Seq[DataFile]): DataFrame =
+    applyMasksKeepPos(spark, data, dels, keepPos = true)
 
   private def applyMasksKeepPos(spark: SparkSession, data: Seq[DataFile],
                                 dels: Seq[DataFile],
-                                renames: Map[String, String],
                                 keepPos: Boolean): DataFrame = {
     val (posDels, eqDels) = dels.partition(_.kind == "posdelete")
     val needPos = keepPos || posDels.nonEmpty
     def pos(df: DataFrame) = if (needPos) withPos(df) else df
     val groups = epochGroups(spark, data)
+    val merged = mergedOf(groups.map(_._1))
     // equality masks need each row's commit seq: one relation per seq
     // group, a literal column each — under the merged schema, so the
     // groups join with a plain union. Positional masks alone need none.
     val withSeq =
-      if (renames.nonEmpty)
-        graft.schema.Evolution.mergeEpochs(groups.map { case (sch, fs) =>
-          pos(readAs(spark, sch, fs)).withColumn("_graft_seq", lit(fs.head.seq))
-        }, renames)
-      else if (eqDels.isEmpty) pos(readAs(spark, mergedOf(groups.map(_._1)), data))
-      else {
-        val merged = mergedOf(groups.map(_._1))
-        groups.map { case (_, fs) =>
-          pos(readAs(spark, merged, fs)).withColumn("_graft_seq", lit(fs.head.seq))
-        }.reduce(_ unionByName _)
-      }
+      if (eqDels.isEmpty) pos(readAs(spark, merged, data))
+      else groups.map { case (_, fs) =>
+        pos(readAs(spark, merged, fs)).withColumn("_graft_seq", lit(fs.head.seq))
+      }.reduce(_ unionByName _)
     val eqApplied =
       if (eqDels.isEmpty) withSeq
       else {
@@ -1511,7 +1487,7 @@ object SnapshotLog {
   }
 
   /** The ONE definition of mask-fold semantics, shared by the read-side
-    * application ([[applyEqDeletes]]) and the write-side consolidation
+    * application ([[applyMasks]]) and the write-side consolidation
     * ([[Merge.consolidateMasks]]) so they can never diverge: every
     * pending mask file folds to (key → MAX application seq). A plain
     * mask file's application seq is its FILE's commit seq; a
@@ -1562,16 +1538,6 @@ object SnapshotLog {
     eligible.last.snapshotId
   }
 
-  /** Snapshot-isolated read: resolve the manifest file list once, then
-    * scan exactly those immutable files. Live equality-delete files (the
-    * merge-on-read path) are applied as a broadcast mask; a table with
-    * none reads as a bare multi-path parquet scan. Commits whose SCHEMAS
-    * drifted (a widened type, a declared rename, an added column) merge
-    * through the [[graft.schema.Evolution]] lattice instead of failing
-    * the scan — time travel to a pre-drift snapshot still returns that
-    * epoch's own schema, because reads resolve only the files that
-    * existed then. Returns None for a table with no live data files
-    * (schema unknowable from an empty file set). */
   /** The row-lineage stamp is table metadata ([[Merge.LineageCol]]),
     * not user data — hidden from every read face, visible only to the
     * feed deriver (which reads files directly). */
@@ -1590,7 +1556,7 @@ object SnapshotLog {
     if (pruned.isEmpty) None
     else Some(applyRegistry(hideInternal(
       if (dels.isEmpty) readEpochSafe(spark, pruned)
-      else applyEqDeletes(spark, pruned, dels)), reg))
+      else applyMasks(spark, pruned, dels)), reg))
 
   /** Project a physical-space frame to logical space through the field
     * registry (identity/absent registries are free). Every read face
@@ -1614,33 +1580,22 @@ object SnapshotLog {
     }
   }
 
+  /** Snapshot-isolated read: resolve the manifest file list once, then
+    * scan exactly those immutable files. Pending masks (the merge-on-read
+    * path) apply as broadcast joins; a table with none reads as a bare
+    * multi-path parquet scan. Commits whose SCHEMAS drifted (a widened
+    * type, an added column) read as one relation under the merged schema
+    * instead of failing the scan, and renamed or dropped columns resolve
+    * through the snapshot's field registry — time travel to a pre-drift
+    * or pre-rename snapshot still returns that snapshot's own schema,
+    * because reads resolve only the files and registry that existed
+    * then. Returns None for a table with no live data files (schema
+    * unknowable from an empty file set). */
   def read(spark: SparkSession, tableDir: String,
-           asOf: Option[Long] = None,
-           renames: Map[String, String] = Map.empty): Option[DataFrame] = {
+           asOf: Option[Long] = None): Option[DataFrame] = {
     val (files, reg) = stateAt(spark, tableDir, asOf)
     val (dels, data) = files.partition(isMask)
-    if (data.isEmpty) None
-    else Some(applyRegistry(hideInternal(
-      if (dels.isEmpty) readEpochSafe(spark, data, renames)
-      else applyEqDeletes(spark, data, dels, renames)), reg))
-  }
-
-  /** Manifest-pruned range read over the stats column: files whose
-    * [stats_min, stats_max] interval misses [lo, hi] are skipped from
-    * METADATA alone — no footer open, no scan task. Files without stats
-    * are conservatively kept. Equality-delete files are never
-    * range-pruned (a delete's key stats describe MASKED keys, not
-    * produced rows — pruning them could resurrect deleted rows). */
-  def readRange(spark: SparkSession, tableDir: String, lo: Long, hi: Long,
-                asOf: Option[Long] = None): Option[DataFrame] = {
-    val (files, reg) = logicalStateAt(spark, tableDir, asOf)
-    val (dels, data) = files.partition(isMask)
-    val pruned = data.filter(f =>
-      (f.statsMin, f.statsMax) match {
-        case (Some(mn), Some(mx)) => mx >= lo && mn <= hi
-        case _ => true
-      })
-    assemble(spark, pruned, dels, reg)
+    assemble(spark, data, dels, reg)
   }
 
   /** Manifest-pruned read: skip every data file the [[Constraints]]
@@ -1943,11 +1898,8 @@ object SnapshotLog {
     val (dels, data) = filesAt(spark, tableDir, Some(parentId))
       .partition(isMask)
     val (touched, _) = Merge.pruneTouched(spark, keyCol, data, keys)
-    if (touched.isEmpty) None
-    else Some(hideInternal(
-      if (dels.isEmpty) readEpochSafe(spark, touched)
-      else applyEqDeletes(spark, touched, dels))
-      .join(keys.distinct(), Seq(keyCol), "left_semi"))
+    assemble(spark, touched, dels)
+      .map(_.join(keys.distinct(), Seq(keyCol), "left_semi"))
   }
 
   /** Pre/post-image events of one merge-on-read commit: split its added

@@ -555,9 +555,10 @@ class CdcSpec extends AnyFunSuite {
 
     // manifests carry per-file offset stats for metadata pruning
     val files = SnapshotLog.filesAt(spark, dir)
-    assert(files.forall(f => f.statsMin.isDefined && f.statsMax.isDefined))
+    assert(files.forall(f => f.stats.contains("kafka_offset")))
     // a range probe below every file's min resolves to no files at all
-    assert(SnapshotLog.readRange(spark, dir, -10L, -1L).isEmpty)
+    assert(SnapshotLog.readPruned(spark, dir,
+      Constraints(ranges = Map("kafka_offset" -> (-10L, -1L)))).isEmpty)
   }
 
   test("crash between data write and commit is unobservable; torn manifests ignored") {
@@ -617,7 +618,7 @@ class CdcSpec extends AnyFunSuite {
     assert(now.count() == 10)
     assert(SnapshotLog.filesAt(spark, dir).size == res.filesAfter)
     // stats survive the rewrite (manifest pruning still works)
-    assert(SnapshotLog.filesAt(spark, dir).forall(_.statsMin.isDefined))
+    assert(SnapshotLog.filesAt(spark, dir).forall(_.stats.contains("kafka_offset")))
     // pre-compaction snapshots still time travel (no swap window ever)
     assert(SnapshotLog.read(spark, dir, asOf = Some(5L)).get.count() == 5)
     // the replace commit is INVISIBLE to incremental consumers
@@ -670,10 +671,10 @@ class CdcSpec extends AnyFunSuite {
     val delta = Seq((8L, "v8'"), (12L, "v12")).toDF("id", "v")
     val res = Merge.upsert(spark, dir, delta, "id")
     assert(res.filesTouched == 1 && res.filesUntouched == 1,
-      s"pruning failed: $res (stats ${before.map(f => (f.statsMin, f.statsMax))})")
+      s"pruning failed: $res (stats ${before.map(_.stats.get("id"))})")
     // the untouched file survives by PATH — its bytes were never rewritten
     val after = SnapshotLog.filesAt(spark, dir).map(_.path).toSet
-    val untouchedPath = before.filter(f => f.statsMax.exists(_ <= 5)).map(_.path)
+    val untouchedPath = before.filter(f => f.stats.get("id").exists(_._2 <= 5)).map(_.path)
     assert(untouchedPath.nonEmpty && untouchedPath.forall(after.contains))
     // merged content: delta wins on match, inserts appended, rest intact
     val got = SnapshotLog.read(spark, dir).get.collect()
@@ -845,7 +846,7 @@ class CdcSpec extends AnyFunSuite {
     val after = SnapshotLog.filesAt(spark, dir)
     assert(after.size > 1, s"need multiple clustered files, got ${after.size}")
     // clustered files: stats intervals pairwise DISJOINT
-    val ivs = after.map(f => (f.statsMin.get, f.statsMax.get)).sortBy(_._1)
+    val ivs = after.map(f => f.stats("id")).sortBy(_._1)
     ivs.sliding(2).foreach {
       case Seq((_, aMax), (bMin, _)) => assert(aMax < bMin, s"overlap: $ivs")
       case _ =>
@@ -1580,7 +1581,7 @@ class CdcSpec extends AnyFunSuite {
     assert(got.filter(col("id") === 1515L).count() == 0)
     assert(got.filter(col("id") === 10001L).count() == 1)
     // and the key column's own zone survives for future merge pruning
-    assert(files.forall(f => f.statsMin.isDefined))
+    assert(files.forall(f => f.stats.contains("id")))
   }
 
   test("change feed prunes phantom deletes from manifest stats and blooms") {
@@ -2815,8 +2816,65 @@ class CdcSpec extends AnyFunSuite {
     val m = wide.collect().map(r => r.getLong(0) ->
       Option(r.getAs[java.lang.Long]("extra"))).toMap
     assert(m == Map(1L -> None, 2L -> Some(42L)), m.toString)
-    assert(SnapshotLog.readRange(spark, dir, 1L, 2L).get
+    assert(SnapshotLog.readPruned(spark, dir,
+      Constraints(ranges = Map("id" -> (1L, 2L)))).get
       .columns.contains("extra"))
+  }
+
+  test("registry rename across widening drift: COW and MOR deltas, both read faces agree") {
+    import spark.implicits._
+    import graft.table.{Merge, SnapshotLog}
+    val dir = Files.createTempDirectory("graft-rendrift").toString + "/t"
+    type Row4 = (BigDecimal, Option[String], Option[String])
+    var model = Map.empty[Long, Row4] // id -> (amt, ship_to, note)
+    // epoch 1: INT key, decimal(10,2), `addr`, two key-range files
+    SnapshotLog.commit(spark, dir, "append", SnapshotLog.writeData(
+      (1 to 6).map(k => (k, s"$k.25", s"a$k")).toDF("id", "amt", "addr")
+        .selectExpr("id", "CAST(amt AS DECIMAL(10,2)) AS amt", "addr")
+        .repartitionByRange(2, col("id")), dir, statsCol = Some("id")))
+    (1 to 6).foreach(k => model += k.toLong -> ((BigDecimal(s"$k.25"), Some(s"a$k"), None)))
+    val preRename = SnapshotLog.currentSnapshotId(spark, dir).get
+    spark.sql(s"ALTER TABLE '$dir' RENAME COLUMN addr TO ship_to")
+    // epoch 2, under the new name: BIGINT key, decimal(12,4), added `note`
+    def epoch(rows: Seq[(Long, String, String, String)]) =
+      rows.toDF("id", "amt", "ship_to", "note")
+        .selectExpr("id", "CAST(amt AS DECIMAL(12,4)) AS amt", "ship_to", "note")
+    SnapshotLog.commit(spark, dir, "append", SnapshotLog.writeData(
+      epoch(Seq((7L, "7.1234", "s7", "n7"), (8L, "8.5", "s8", "n8"))).coalesce(1),
+      dir, statsCol = Some("id")))
+    model ++= Map(7L -> ((BigDecimal("7.1234"), Some("s7"), Some("n7"))),
+      8L -> ((BigDecimal("8.5"), Some("s8"), Some("n8"))))
+    // copy-on-write delta under the new name: update 2 and 7, insert 9
+    val cow = Seq((2L, "20.5", "c2", "x2"), (7L, "70.0001", "c7", "x7"),
+      (9L, "9.9", "c9", "x9"))
+    Merge.applyChanges(spark, dir, epoch(cow), "id", None)
+    cow.foreach { case (k, a, s, n) => model += k -> ((BigDecimal(a), Some(s), Some(n))) }
+    // merge-on-read delta: update 3, delete 5, insert 10
+    val mor = Seq((3L, "30.0", "m3", "y3", false), (5L, "0", "m5", "y5", true),
+      (10L, "10.5", "m10", "y10", false))
+    Merge.mergeOnRead(spark, dir, mor.toDF("id", "amt", "ship_to", "note", "del")
+      .selectExpr("id", "CAST(amt AS DECIMAL(12,4)) AS amt", "ship_to", "note", "del"),
+      "id", Some("del"))
+    mor.foreach { case (k, a, s, n, d) =>
+      if (d) model -= k else model += k -> ((BigDecimal(a), Some(s), Some(n))) }
+
+    val viaLog = SnapshotLog.read(spark, dir).get
+    val viaFormat = spark.read.format("graft").load(dir)
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.toSeq.map(f => f.name -> f.dataType.sql)
+    assert(shape(viaLog) === Seq("id" -> "BIGINT", "amt" -> "DECIMAL(12,4)",
+      "ship_to" -> "STRING", "note" -> "STRING"))
+    assert(shape(viaFormat) === shape(viaLog))
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Row4] =
+      df.collect().map(r => r.getLong(0) -> ((BigDecimal(r.getDecimal(1)),
+        Option(r.getString(2)), Option(r.getString(3))))).toMap
+    assert(rows(viaLog) === model)
+    assert(rows(viaFormat) === model)
+    // time travel before the rename shows the old name and old types
+    val old = SnapshotLog.read(spark, dir, asOf = Some(preRename)).get
+    assert(shape(old) === Seq("id" -> "INT", "amt" -> "DECIMAL(10,2)", "addr" -> "STRING"))
+    assert(spark.read.format("graft").option("versionAsOf", preRename).load(dir)
+      .columns.toSeq === Seq("id", "amt", "addr"))
   }
 
   test("advisor overlap is per-column: mixed stats domains never fabricate a finding") {

@@ -68,7 +68,7 @@ class OccSpec extends AnyFunSuite {
     assert(c.summary("rebased_over") === "1")
     // the appended file survived the rewrite's removed set
     val live = SnapshotLog.filesAt(spark, dir)
-    assert(live.exists(_.statsMin.contains(5000L)))
+    assert(live.exists(_.stats.get("id").exists(_._1 == 5000L)))
   }
 
   test("chained rebases: two interleaved appends, then a foreign removal conflicts") {
@@ -115,9 +115,9 @@ class OccSpec extends AnyFunSuite {
     // the guard a DML/merge hands commitPinned: an appended file
     // conflicts only when its id zone may hold keys the derivation read
     def guardFor(lo: Long, hi: Long) = ConflictGuard(mayReadAdded = Some(fs =>
-      fs.filter(f => (f.statsMin, f.statsMax) match {
-        case (Some(mn), Some(mx)) => mx >= lo && mn < hi
-        case _ => true // no zone: conservatively conflicting
+      fs.filter(f => f.stats.get("id") match {
+        case Some((mn, mx)) => mx >= lo && mn < hi
+        case None => true // no zone: conservatively conflicting
       })))
     // outside: rebases
     val d1 = seed("foot1")

@@ -159,7 +159,7 @@ object OccWalkProps extends Properties("OccWalk") {
       // interleave appends fresh ids (< nextId + 1000 always holds)
       val bound = w.nextId + 1000
       val guard = ConflictGuard(mayReadAdded = Some(_.filter(f =>
-        f.statsMin.forall(_ < bound))))
+        f.stats.get("id").forall(_._1 < bound))))
       if (inside) w.append(3)
       else {
         // outside the footprint: ids from bound + margin

@@ -81,7 +81,8 @@ class PosDeleteSpec extends AnyFunSuite {
       .filter(col("id") === 1995).count() === 0)
     assert(SnapshotLog.readPruned(spark, dir, Constraints.in("id", 505L)).get
       .filter(col("id") === 505).head.getString(2) === "q505")
-    assert(SnapshotLog.readRange(spark, dir, 1980L, 2010L).get
+    assert(SnapshotLog.readPruned(spark, dir,
+        Constraints(ranges = Map("id" -> (1980L, 2010L)))).get
       .filter(col("id").between(1980, 2010)).count() === 10)
   }
 

@@ -53,11 +53,11 @@ class WriteInlineSpec extends AnyFunSuite {
   private def tmp(tag: String) =
     java.nio.file.Files.createTempDirectory(s"graft-wi-$tag").toString
 
-  private type Meta = (Long, Option[Long], Option[Long], Seq[(String, (Long, Long))],
+  private type Meta = (Long, Seq[(String, (Long, Long))],
     Seq[(String, Long)], Seq[(String, Seq[String])], Seq[(String, String)])
 
   private def meta(f: SnapshotLog.DataFile): Meta =
-    (f.rows, f.statsMin, f.statsMax, f.stats.toSeq.sortBy(_._1),
+    (f.rows, f.stats.toSeq.sortBy(_._1),
       f.nulls.toSeq.sortBy(_._1),
       f.parts.toSeq.sortBy(_._1).map { case (k, vs) => (k, vs.sorted) },
       f.blooms.toSeq.sortBy(_._1))
@@ -100,15 +100,13 @@ class WriteInlineSpec extends AnyFunSuite {
           Option(r.getAs[java.lang.Long](s"smin_$i")).map(mn =>
             c -> (mn.longValue, r.getAs[Long](s"smax_$i")))
         }.toMap
-        val first = zoned.headOption.flatMap(z.get)
         val pv = parts.zipWithIndex.flatMap { case (c, i) =>
           val vs = r.getAs[scala.collection.Seq[String]](s"pvals_$i")
           if (vs.isEmpty || vs.size > SnapshotLog.MaxPartValuesPerFile) None
           else Some(c -> vs.toSeq.sorted)
         }
         new java.net.URI(r.getAs[String]("file")).getPath ->
-          (r.getAs[Long]("rows"), first.map(_._1), first.map(_._2),
-            z.toSeq.sortBy(_._1),
+          (r.getAs[Long]("rows"), z.toSeq.sortBy(_._1),
             zoned.zipWithIndex.collect { case (c, i) if z.contains(c) =>
               c -> r.getAs[Long](s"snull_$i") }.sortBy(_._1),
             pv.sortBy(_._1),

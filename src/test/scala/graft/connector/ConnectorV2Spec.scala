@@ -502,8 +502,7 @@ class ConnectorV2Spec extends AnyFunSuite {
     val live = (0L until 500L).filterNot(_ % 40 < 5)
     val r = df.collect()(0)
     assert((r.getLong(0), r.getLong(1)) === ((live.size.toLong, live.sum)))
-    assert(!df.queryExecution.executedPlan.toString
-      .contains("GraftBridgeRelation"))
+    assert(GraftV2BatchScan.readsColumnar(df.queryExecution.executedPlan))
     // a DATE-keyed mask folds to epoch days the same way
     val dir2 = s"$wh/t2"
     spark.range(0, 300)
@@ -600,7 +599,7 @@ class ConnectorV2Spec extends AnyFunSuite {
     def lastAdded(d: String) =
       SnapshotLog.commits(spark, d).last.added.filter(_.rows > 0)
     def meta(f: SnapshotLog.DataFile) =
-      (f.rows, f.statsMin, f.statsMax, f.stats, f.nulls, f.parts, f.blooms)
+      (f.rows, f.stats.get("id"), f.stats, f.nulls, f.parts, f.blooms)
     // CTAS: manifest metadata equals writeData's for the same frame
     src(0, 100).createOrReplaceTempView("gv2_wide_a")
     spark.sql("CREATE TABLE gv2_wide.t TBLPROPERTIES ('statsCols' = 'id,m', " +
@@ -916,8 +915,7 @@ class ConnectorV2Spec extends AnyFunSuite {
           "CBO rows = manifest rows minus recorded mask debt")
       case other => fail(s"expected the masked batch scan, got $other")
     }
-    // plan face: a real columnar BatchScan (ColumnarToRow on top), no
-    // GraftBridgeRelation RDD bridge anywhere
+    // plan face: a real columnar BatchScan (ColumnarToRow on top)
     val df = spark.sql(
       "SELECT count(*) AS n, sum(id) AS s FROM gv2_mor.t")
     val expectedSum = (0L until 4000L)
@@ -925,10 +923,11 @@ class ConnectorV2Spec extends AnyFunSuite {
     val r = df.collect()(0) // collect (not head): finalizes the AQE plan
     assert((r.getLong(0), r.getLong(1)) === ((3800L, expectedSum)))
     // the EXECUTED (AQE-final) plan: a real columnar BatchScan consumed
-    // through ColumnarToRow — no GraftBridgeRelation RDD bridge anywhere
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow"), s"masked read must stay columnar:\n$plan")
-    assert(!plan.contains("GraftBridgeRelation"), s"no Row bridge:\n$plan")
+    // through ColumnarToRow
+    val plan = df.queryExecution.executedPlan
+    assert(plan.toString.contains("ColumnarToRow"),
+      s"masked read must stay columnar:\n$plan")
+    assert(GraftV2BatchScan.readsColumnar(plan), s"no Row path:\n$plan")
     // column pruning + residual filters compose with the mask filter
     val f = spark.sql("SELECT v FROM gv2_mor.t WHERE id >= 1990 AND id < 2010")
     assert(f.collect().map(_.getLong(0)).sorted.toSeq ===
@@ -1002,7 +1001,7 @@ class ConnectorV2Spec extends AnyFunSuite {
       rows(b * 1000L, (b + 1) * 1000L).coalesce(1).write.format("graft")
         .mode(if (b == 0) "error" else "append")
         .option("statsCols", "id").save(dir)
-    val Seq(f0, f1, f2, f3) = SnapshotLog.filesAt(spark, dir).sortBy(_.statsMin)
+    val Seq(f0, f1, f2, f3) = SnapshotLog.filesAt(spark, dir).sortBy(_.stats("id")._1)
     // a DELETE touching files 0 and 1: its manifest names both
     Merge.deleteWhere(spark, dir, col("id") % 10 === 3 && col("id") < 2000)
     // an equality delete whose key zone [2500, 3450] overlaps files 2, 3
@@ -1078,8 +1077,9 @@ class ConnectorV2Spec extends AnyFunSuite {
     val expectedSum = (0L until 3000L).filterNot(_ % 15 == 2).sum +
       (0L until 450L).filter(_ % 15 == 2).sum
     assert((r.getLong(0), r.getLong(1)) === ((expected.toLong, expectedSum)))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow") && !plan.contains("GraftBridgeRelation"),
+    val plan = df.queryExecution.executedPlan
+    assert(plan.toString.contains("ColumnarToRow") &&
+      GraftV2BatchScan.readsColumnar(plan),
       s"eq-masked read must stay columnar:\n$plan")
     // column pruning away the KEY still filters correctly (the key
     // column joins the inner read and is dropped by the wrapper)
@@ -1125,8 +1125,9 @@ class ConnectorV2Spec extends AnyFunSuite {
     // plan + value face through the catalog name
     val df = spark.sql("SELECT cost FROM gv2_reg.t WHERE id = 500")
     assert(df.head.getLong(0) === 1000L)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow") && !plan.contains("GraftBridgeRelation"),
+    val plan = df.queryExecution.executedPlan
+    assert(plan.toString.contains("ColumnarToRow") &&
+      GraftV2BatchScan.readsColumnar(plan),
       s"renamed-table reads must stay columnar:\n$plan")
     assert(spark.sql("SELECT sum(cost) FROM gv2_reg.t").head.getLong(0)
       === (0L until 1200L).map(_ * 2).sum)
@@ -1145,8 +1146,7 @@ class ConnectorV2Spec extends AnyFunSuite {
     val after = spark.sql("SELECT count(*) AS n, sum(cost) AS s FROM gv2_reg.t")
     val live = (0L until 1200L).filterNot(_ % 10 == 7)
     assert(after.head.toSeq === Seq(live.size.toLong, live.map(_ * 2).sum))
-    assert(!after.queryExecution.executedPlan.toString
-      .contains("GraftBridgeRelation"))
+    assert(GraftV2BatchScan.readsColumnar(after.queryExecution.executedPlan))
     // a DROPPED-and-READDED namesake must NOT resurrect old values:
     // old files lack the new field id, so the column null-fills there
     spark.sql(s"CREATE TABLE gv2reg_wh2 USING graft OPTIONS (path '$dir')")
@@ -1233,14 +1233,16 @@ class ConnectorV2Spec extends AnyFunSuite {
     assert(r.getLong(0) === (0L until 100L).sum + (1000L until 1100L).sum)
     assert(r.getDouble(1) === 2.0 * (0 until 100).sum)
     assert(r.getLong(2) === 100, "the old epoch null-fills the added column")
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("ColumnarToRow") && !plan.contains("GraftBridgeRelation"),
+    val plan = df.queryExecution.executedPlan
+    assert(plan.toString.contains("ColumnarToRow") &&
+      GraftV2BatchScan.readsColumnar(plan),
       s"promotable drift must stay columnar:\n$plan")
     // positional masks compose with the drift
     Merge.deleteWhere(spark, dir, col("a") >= 1050L)
     assert(spark.sql("SELECT count(*) FROM gv2_drift.t").head.getLong(0) === 150)
-    assert(!spark.sql("SELECT a FROM gv2_drift.t WHERE a >= 1000")
-      .queryExecution.executedPlan.toString.contains("GraftBridgeRelation"))
+    assert(GraftV2BatchScan.readsColumnar(
+      spark.sql("SELECT a FROM gv2_drift.t WHERE a >= 1000")
+        .queryExecution.executedPlan))
   }
 
   test("CBO statistics come from manifests (exact rows on mask-free tables)") {

@@ -94,7 +94,7 @@ object PruneProps extends Properties("Prune") {
       java.util.Base64.getEncoder.encodeToString(bb.array())
     }
     val strings = values(4).map(_.toString)
-    DataFile(s"f$n", rows.size.toLong, 1L, None, None,
+    DataFile(s"f$n", rows.size.toLong, 1L,
       stats = zoned.map(c => schema(c).name -> (zoneOf(c).min, zoneOf(c).max)).toMap,
       nulls = zoned.map(c => schema(c).name -> (rows.size - values(c).size).toLong).toMap,
       parts = if (strings.isEmpty) Map.empty else Map("s" -> strings.distinct.sorted),

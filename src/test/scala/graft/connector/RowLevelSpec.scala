@@ -156,7 +156,7 @@ class RowLevelSpec extends AnyFunSuite {
     val plan = df.queryExecution.executedPlan
     assert(plan.toString.contains("rowIds=true"),
       s"row-id read must be the batch scan:\n$plan")
-    assert(!plan.toString.contains("GraftBridgeRelation"),
+    assert(GraftV2BatchScan.readsColumnar(plan),
       s"no Row bridge under a row-id projection:\n$plan")
     val scans = plan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
@@ -187,6 +187,22 @@ class RowLevelSpec extends AnyFunSuite {
     assert(vanilla.sql(s"SELECT count(*) FROM $t").head.getLong(0) === 800)
   }
 
+  test("the columnar batch-scan plan check fails on the V1 Row path") {
+    val (_, dir) = freshTable("rowpath")
+    graft.table.Merge.deleteWhere(main, dir, col("k") % 10 === 3)
+    // a masked V1 format("graft") read without the extensions answers
+    // through GraftComputedRelation's Row scan: the check must refuse it
+    val v1 = vanilla.read.format("graft").load(dir)
+    assert(v1.count() === 900)
+    val v1Plan = v1.queryExecution.executedPlan
+    assert(!GraftV2BatchScan.readsColumnar(v1Plan), s"V1 Row path:\n$v1Plan")
+    // the same read with the extensions is rewritten to the batch scan
+    val v2 = main.read.format("graft").load(dir)
+    assert(v2.count() === 900)
+    assert(GraftV2BatchScan.readsColumnar(v2.queryExecution.executedPlan),
+      v2.queryExecution.executedPlan.toString)
+  }
+
   test("vanilla-session DML on a RENAMED table stays exact (registry row-id scan, r15)") {
     val (t, dir) = freshTable("ren")
     main.sql(s"CREATE TABLE grlren_wh USING graft OPTIONS (path '$dir')")
@@ -195,8 +211,9 @@ class RowLevelSpec extends AnyFunSuite {
     // the vanilla UPDATE's source scan reads the renamed schema with
     // row ids — vectorized (registry + row-id composition)
     val upd = vanilla.sql(s"UPDATE $t SET w = w + 5 WHERE k % 4 = 1")
-    val plan = upd.queryExecution.executedPlan.toString
-    assert(plan.contains("rowIds=true") && !plan.contains("GraftBridgeRelation"),
+    val plan = upd.queryExecution.executedPlan
+    assert(plan.toString.contains("rowIds=true") &&
+      GraftV2BatchScan.readsColumnar(plan),
       s"the renamed row-id scan must vectorize:\n$plan")
     val r = vanilla.sql(s"SELECT sum(w) AS s, count(*) AS n FROM $t").head
     val expected = (0L until 1000L)
@@ -217,7 +234,7 @@ class RowLevelSpec extends AnyFunSuite {
     val pplan = probe.queryExecution.executedPlan
     assert(pplan.toString.contains("rowIds=true") &&
       pplan.toString.contains("eqMaskRows=100") &&
-      !pplan.toString.contains("GraftBridgeRelation"),
+      GraftV2BatchScan.readsColumnar(pplan),
       s"the eq-masked row-id scan must vectorize:\n$pplan")
     val scans = pplan.collect {
       case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
@@ -291,14 +308,15 @@ class RowLevelSpec extends AnyFunSuite {
         s"SELECT v FROM $te WHERE k > 500",
         s"SELECT k, _graft_file, _graft_pos FROM $te",
         s"SELECT v FROM $t WHERE k > 500")
-        .map(q => vanilla.sql(q).queryExecution.executedPlan.toString)
+        .map(q => vanilla.sql(q).queryExecution.executedPlan)
       marker("after-plan")
       assert(seen.toArray.toSeq === Seq("after-plan"),
         "planning a masked read must run no Spark job (jobs: " +
           s"${seen.toArray.mkString(", ")})")
       // ...and each plan is the vectorized masked scan, not the bridge
-      plans.foreach(p => assert(p.contains("GraftBatchScan(") &&
-        p.contains("MaskFiles=") && !p.contains("GraftBridgeRelation"), p))
+      plans.foreach(p => assert(p.toString.contains("GraftBatchScan(") &&
+        p.toString.contains("MaskFiles=") && GraftV2BatchScan.readsColumnar(p),
+        p))
     } finally sc.removeSparkListener(listener)
     assert(vanilla.sql(s"SELECT count(*) FROM $t").head.getLong(0) ===
       (0L until 1000L).count(_ % 9 != 2))
