@@ -2825,8 +2825,8 @@ class CdcSpec extends AnyFunSuite {
     import spark.implicits._
     import graft.table.{Merge, SnapshotLog}
     val dir = Files.createTempDirectory("graft-rendrift").toString + "/t"
-    type Row4 = (BigDecimal, Option[String], Option[String])
-    var model = Map.empty[Long, Row4] // id -> (amt, ship_to, note)
+    type Vals = (BigDecimal, Option[String], Option[String])
+    var model = Map.empty[Long, Vals] // id -> (amt, ship_to, note)
     // epoch 1: INT key, decimal(10,2), `addr`, two key-range files
     SnapshotLog.commit(spark, dir, "append", SnapshotLog.writeData(
       (1 to 6).map(k => (k, s"$k.25", s"a$k")).toDF("id", "amt", "addr")
@@ -2865,7 +2865,7 @@ class CdcSpec extends AnyFunSuite {
     assert(shape(viaLog) === Seq("id" -> "BIGINT", "amt" -> "DECIMAL(12,4)",
       "ship_to" -> "STRING", "note" -> "STRING"))
     assert(shape(viaFormat) === shape(viaLog))
-    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Row4] =
+    def rows(df: org.apache.spark.sql.DataFrame): Map[Long, Vals] =
       df.collect().map(r => r.getLong(0) -> ((BigDecimal(r.getDecimal(1)),
         Option(r.getString(2)), Option(r.getString(3))))).toMap
     assert(rows(viaLog) === model)
