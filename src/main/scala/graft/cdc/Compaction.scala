@@ -260,7 +260,6 @@ object Compaction {
     val nOld =
       if (delFiles.isEmpty) dataFiles.map(_.rows).sum
       else df.count() // masked logical count — manifests alone can't know it
-    val hasOffset = df.columns.contains("kafka_offset")
     // the DECLARED bucket layout (durable bucketCol/bucketCount props —
     // the declaration, resolved case-insensitively against the frame's
     // LOGICAL columns, so renames and case drift can't silently bypass
@@ -305,9 +304,11 @@ object Compaction {
     val rowCap = bucketSpec.map { _ =>
       math.max(1L, nOld * targetBytes / math.max(1L, totalBytes)) }
     val rewritten = SnapshotLog.writeData(arranged, dir,
-      statsCol = clusterBy.orElse(clusterZOrder.headOption)
-        .orElse(if (hasOffset) Some("kafka_offset") else None),
-      statsCols = clusterZOrder,
+      // the zone columns the files recorded — bin-pack's set — plus the
+      // layout's own key columns, in the frame's logical names
+      statsCols = (dataFiles.flatMap(_.stats.keys)
+        .map(c => reg.flatMap(_.logicalOf(c)).getOrElse(c)) ++
+        clusterBy ++ clusterZOrder).distinct.filter(df.columns.contains),
       maxRecordsPerFile = rowCap,
       // partition-value metadata survives the rewrite (a compaction must
       // not blind partition pruning); an unclustered rewrite may mix values

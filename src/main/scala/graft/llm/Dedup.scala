@@ -150,7 +150,8 @@ object Dedup {
 
   /** (doc_id, band, bucket) LSH keys straight from (doc_id, text) rows —
     * shared by the batch incremental admission and the streaming dedup
-    * index ([[graft.stream.StreamSync.maintainDedupIndex]]). */
+    * index ([[graft.stream.StreamSync.maintainDedupIndex]], which appends
+    * the admitted docs' keys to its `keys` snapshot table). */
   def lshKeysOf(docs: DataFrame): DataFrame =
     bandKeys(docs
       .select(col("doc_id"),
@@ -531,7 +532,8 @@ object Dedup {
     * ≈1, and no testdata bucket approaches the cap. */
   /** The bounded incremental-admission candidate fold — shared by the
     * batch admission ([[incremental]]) and the streaming dedup index
-    * ([[graft.stream.StreamSync.maintainDedupIndex]]). From
+    * ([[graft.stream.StreamSync.maintainDedupIndex]], whose old keys are
+    * its `keys` table as of the snapshot before the batch). From
     * (doc_id, band, bucket, is_new) LSH keys to the DISTINCT
     * (doc_id, o_id, o_new) probe set: doc_id is NEW and o is
     * earlier-in-ingest (any old doc, or a new doc with smaller id).

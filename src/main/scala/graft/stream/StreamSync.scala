@@ -1,10 +1,12 @@
 package graft.stream
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, Trigger}
+import org.apache.spark.sql.types.{DecimalType, StructType}
 import graft.cdc.Envelope
 import graft.schema.Schemas
+import graft.table.{Merge, SnapshotLog}
 
 /** Typed event row for the custom-state operators. */
 final case class Ev(event_id: Long, user_id: Long, event_type: String,
@@ -18,6 +20,13 @@ final case class UserTotals(user_id: Long, n_events: Long, total_value: Double)
   * OffsetStore, `Trigger.AvailableNow` subsumes the 5-minute Airflow cron,
   * and the sink's commit log upgrades the reference's at-least-once
   * write-then-commit to exactly-once file output.
+  *
+  * Every foreachBatch writer — the two table sinks and the view
+  * maintainers — writes graft tables through [[graft.table.SnapshotLog]]
+  * commits tagged with the batch id and the stream's lineage, so the
+  * table's own log records what it applied (the replayable-source plus
+  * idempotent-sink design of Structured Streaming, SIGMOD 2018); one
+  * guard ([[committedAt]]) makes each replayed batch a no-op.
   */
 object StreamSync {
 
@@ -40,6 +49,96 @@ object StreamSync {
     q.awaitTermination()
   }
 
+  /** Drain `stream` once (AvailableNow), handing each micro-batch and its
+    * id to `write` — the shape every foreachBatch writer here shares. */
+  private def drainBatches(stream: DataFrame, checkpointDir: String)
+                          (write: (DataFrame, Long) => Unit): Unit =
+    stream.writeStream
+      .foreachBatch(write)
+      .option("checkpointLocation", checkpointDir)
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** The summary every foreachBatch commit carries: the batch id and the
+    * stream's lineage (its checkpoint location). */
+  private def batchTag(batchId: Long, streamId: String): Map[String, String] =
+    Map("batch_id" -> batchId.toString, "stream_id" -> streamId)
+
+  /** The ONE batch-id guard of every foreachBatch writer: the snapshot at
+    * which THIS stream committed `batchId` to the table, if it did.
+    * Batch ids are monotone only within one checkpoint lineage, so the
+    * guard is scoped by `streamId` (the checkpoint location — the same
+    * stable identity GraftStreamSink's txnAppId uses): two streams with
+    * separate checkpoints appending to one table interleave their ids,
+    * and an unscoped early-stop at the first `b < batchId` would miss
+    * this stream's own older commit and re-commit duplicate rows. The
+    * REVERSE manifest scan stops at the first SAME-LINEAGE data commit
+    * whose batch id falls below the probe — O(1) typical, never
+    * O(table history); foreign-lineage commits are walked past without
+    * stopping. Legacy commits written before the stream_id field are
+    * attributed to every lineage (conservative: a pre-upgrade
+    * single-stream table keeps its early stop and its dedup). */
+  private def committedAt(spark: SparkSession, tableDir: String, batchId: Long,
+                          streamId: String): Option[Long] = {
+    val it = SnapshotLog.commitsReverse(spark, tableDir)
+    while (it.hasNext) {
+      val c = it.next()
+      val sameLineage = c.summary.get("stream_id").forall(_ == streamId)
+      c.summary.get("batch_id").map(_.toLong) match {
+        case Some(b) if sameLineage && b == batchId => return Some(c.snapshotId)
+        case Some(b) if sameLineage && b < batchId => return None
+        case _ => () // maintenance or foreign-stream commit: keep walking
+      }
+    }
+    None
+  }
+
+  /** `read`, or an empty frame of `schema` when it found no rows. */
+  private def orEmpty(spark: SparkSession, read: Option[DataFrame],
+                      schema: StructType): DataFrame =
+    read.getOrElse(spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema))
+
+  /** The table's latest snapshot — what every view reader returns. */
+  private def latest(spark: SparkSession, tableDir: String,
+                     schema: StructType): DataFrame =
+    orEmpty(spark, SnapshotLog.read(spark, tableDir), schema)
+
+  /** The table as a batch's previous state: as of the snapshot just
+    * before the batch's own commit when the table already holds it (a
+    * replay after a crash before the stream checkpoint committed), else
+    * as of the head. Never the batch's own commit, so a replay
+    * recomputes from the same pre-batch state and the same inputs. Past
+    * the first batch a missing base fails LOUDLY: the state was expired
+    * past the replay horizon, and silently rebuilding from empty would
+    * drop it. */
+  private def preBatch(spark: SparkSession, tableDir: String, batchId: Long,
+                       committed: Option[Long], schema: StructType): DataFrame = {
+    val ids = SnapshotLog.snapshots(spark, tableDir)
+    val base = committed.fold(ids.lastOption)(s => ids.find(_ == s - 1))
+    if (batchId > 0 && base.isEmpty)
+      throw new IllegalStateException(
+        s"$tableDir has no retained snapshot before batch $batchId " +
+          s"(retained: ${ids.mkString(",")}); state was evicted past the " +
+          "replay horizon — rebuild it")
+    orEmpty(spark, base.flatMap(id => SnapshotLog.read(spark, tableDir, Some(id))), schema)
+  }
+
+  /** Append `rows` as ONE snapshot commit carrying `tag`. */
+  private def append(rows: DataFrame, tableDir: String, tag: Map[String, String],
+                     statsCol: Option[String] = None): Unit = {
+    SnapshotLog.commit(rows.sparkSession, tableDir, "append",
+      SnapshotLog.writeData(rows, tableDir, statsCol), summary = tag)
+    ()
+  }
+
+  /** [[append]] the batch's `rows` unless this stream already committed
+    * the batch to the table. */
+  private def appendOnce(tableDir: String, batchId: Long, streamId: String,
+                         statsCol: Option[String] = None)(rows: DataFrame): Unit =
+    if (committedAt(rows.sparkSession, tableDir, batchId, streamId).isEmpty)
+      append(rows, tableDir, batchTag(batchId, streamId), statsCol)
+
   /** Streaming sink INTO the snapshot table format — [[syncOnce]]'s
     * production upgrade and the composition that closes the loop between
     * the streaming layer and [[graft.table.SnapshotLog]]: every
@@ -52,36 +151,21 @@ object StreamSync {
     *    [[graft.table.DiffConsumer]] — each drain's new snapshots ARE
     *    the change feed;
     *  - replay within the checkpoint lineage is exactly-once: a replayed
-    *    batch finds its batch id already committed (a metadata scan of
-    *    the manifests) and skips, and a crash between stage and commit
-    *    leaves only invisible orphans for the expiry sweep. (After a
-    *    checkpoint LOSS batch ids restart with different contents — the
-    *    id guard must not be trusted across lineages, same as any
-    *    foreachBatch idempotence keyed on batchId.)
+    *    batch finds its batch id already committed ([[committedAt]], a
+    *    metadata scan of the manifests) and skips, and a crash between
+    *    stage and commit leaves only invisible orphans for the expiry
+    *    sweep. (After a checkpoint LOSS batch ids restart with different
+    *    contents — the id guard must not be trusted across lineages, same
+    *    as any foreachBatch idempotence keyed on batchId.)
     * Compaction and retention then run through the same protocol
     * ([[graft.cdc.Compaction.compactSnapshotted]] /
     * [[graft.table.SnapshotLog.expireSnapshots]]), invisible to the
     * stream and its consumers. */
   def snapshotSink(stream: DataFrame, tableDir: String, checkpointDir: String,
-                   statsCol: Option[String] = None): Unit = {
-    import graft.table.SnapshotLog
-    val q = stream.writeStream
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = b.sparkSession
-        val already = batchAlreadyCommitted(spark, tableDir, batchId, checkpointDir)
-        if (!already) {
-          val files = SnapshotLog.writeData(b, tableDir, statsCol)
-          SnapshotLog.commit(spark, tableDir, "append", files,
-            summary = Map("batch_id" -> batchId.toString,
-              "stream_id" -> checkpointDir))
-        }
-        () // foreachBatch needs Unit, not the commit id
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                   statsCol: Option[String] = None): Unit =
+    drainBatches(stream, checkpointDir) { (b, batchId) =>
+      appendOnce(tableDir, batchId, checkpointDir, statsCol)(b)
+    }
 
   /** Streaming UPSERT sink — [[snapshotSink]]'s keyed upgrade, writing
     * each micro-batch through [[graft.table.Merge.mergeOnRead]] instead
@@ -104,53 +188,40 @@ object StreamSync {
                  keyCol: String, orderCol: String,
                  deleteCol: Option[String] = None): Unit = {
     import org.apache.spark.sql.expressions.Window
-    import graft.table.{Merge, SnapshotLog}
-    val q = stream.writeStream
-      .foreachBatch { (b: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = b.sparkSession
-        val already = batchAlreadyCommitted(spark, tableDir, batchId, checkpointDir)
-        if (!already) {
-          val w = Window.partitionBy(col(keyCol)).orderBy(col(orderCol).desc)
-          val latest = b.withColumn("_rk", row_number().over(w))
-            .filter(col("_rk") === 1).drop("_rk")
-            .localCheckpoint(true) // consumed twice below (emptiness + write)
-          if (SnapshotLog.currentSnapshotId(spark, tableDir).isEmpty) {
-            val rows = deleteCol.fold(latest)(dc => latest.filter(!col(dc)).drop(dc))
-            // an empty or all-tombstone batch against a not-yet-created
-            // table is a no-op (deletes of nothing): skip the commit
-            // entirely rather than writing a zero-file snapshot that
-            // would wedge every later mergeOnRead. Replay is safe —
-            // nothing was written, so re-processing writes nothing again.
-            if (!rows.isEmpty)
-              // partition count follows the batch's own parallelism — a
-              // backfill-sized first drain must not serialize into the
-              // fixture-scale constant 2 write tasks
-              SnapshotLog.commit(spark, tableDir, "append",
-                SnapshotLog.writeData(rows.repartitionByRange(
-                    math.max(2, rows.rdd.getNumPartitions), col(keyCol)),
-                  tableDir, statsCol = Some(keyCol),
-                  // string/UUID keys record no long zone — the manifest
-                  // bloom is their only merge-prune index, so the
-                  // bootstrap must write it or the table starts life
-                  // unprunable
-                  bloomCol = Some(keyCol).filter(_ => rows.schema(keyCol)
-                    .dataType == org.apache.spark.sql.types.StringType)),
-                summary = Map("batch_id" -> batchId.toString,
-                  "stream_id" -> checkpointDir))
-          } else if (latest.isEmpty) {
-            () // empty micro-batch: nothing to merge, nothing to commit
-          } else {
-            Merge.mergeOnRead(spark, tableDir, latest, keyCol, deleteCol,
-              summary = Map("batch_id" -> batchId.toString,
-                "stream_id" -> checkpointDir))
-          }
-        }
-        ()
+    drainBatches(stream, checkpointDir) { (b, batchId) =>
+      val spark = b.sparkSession
+      if (committedAt(spark, tableDir, batchId, checkpointDir).isEmpty) {
+        val w = Window.partitionBy(col(keyCol)).orderBy(col(orderCol).desc)
+        val latest = b.withColumn("_rk", row_number().over(w))
+          .filter(col("_rk") === 1).drop("_rk")
+          .localCheckpoint(true) // consumed twice below (emptiness + write)
+        if (SnapshotLog.currentSnapshotId(spark, tableDir).isEmpty) {
+          val rows = deleteCol.fold(latest)(dc => latest.filter(!col(dc)).drop(dc))
+          // an empty or all-tombstone batch against a not-yet-created
+          // table is a no-op (deletes of nothing): skip the commit
+          // entirely rather than writing a zero-file snapshot that
+          // would wedge every later mergeOnRead. Replay is safe —
+          // nothing was written, so re-processing writes nothing again.
+          if (!rows.isEmpty)
+            // partition count follows the batch's own parallelism — a
+            // backfill-sized first drain must not serialize into the
+            // fixture-scale constant 2 write tasks
+            SnapshotLog.commit(spark, tableDir, "append",
+              SnapshotLog.writeData(rows.repartitionByRange(
+                  math.max(2, rows.rdd.getNumPartitions), col(keyCol)),
+                tableDir, statsCol = Some(keyCol),
+                // string/UUID keys record no long zone — the manifest
+                // bloom is their only merge-prune index, so the
+                // bootstrap must write it or the table starts life
+                // unprunable
+                bloomCol = Some(keyCol).filter(_ => rows.schema(keyCol)
+                  .dataType == org.apache.spark.sql.types.StringType)),
+              summary = batchTag(batchId, checkpointDir))
+        } else if (!latest.isEmpty) // an empty micro-batch commits nothing
+          Merge.mergeOnRead(spark, tableDir, latest, keyCol, deleteCol,
+            summary = batchTag(batchId, checkpointDir))
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Wire-contract file stream over a topic dir of JSON-lines files —
@@ -168,6 +239,11 @@ object StreamSync {
         col("topic"), col("partition"), col("offset"), col("timestamp"))
   }
 
+  /** Columns of [[maintainStatusView]]'s per-status view. */
+  private val StatusViewSchema = new StructType()
+    .add("status", "string").add("n_orders", "long")
+    .add("total_amount", DecimalType(20, 2))
+
   /** Streaming CDC view maintenance (foreachBatch IVM) — the streaming
     * twin of `cdc_incremental_agg`. A native streaming aggregation counts
     * EVENTS, so an upsert stream double-counts every updated key; correct
@@ -175,106 +251,41 @@ object StreamSync {
     * each micro-batch applies +new-version / −stored-version increments to
     * the view, alongside a keyed current-state table.
     *
-    * Durability/replay: every batch writes a SELF-CONTAINED snapshot dir
-    * `viewDir/batch=<id>/{state,view}` finished by a `_COMMIT` marker, and
-    * readers take the newest committed dir. A replayed batch recomputes
-    * against the newest snapshot STRICTLY OLDER than itself — never its
-    * own surviving dir (a crash after `_COMMIT` but before the stream
-    * checkpoint commits would otherwise make the batch read and overwrite
-    * the same path) — so replay is a deterministic rebuild of the same
-    * dir from the same pre-batch snapshot and the same inputs. The view
-    * stays exactly right — no torn intermediate is ever visible. The same guard makes
-    * out-of-order batch arrival safe (an older version never displaces a
-    * newer one). Dirs older than the previous snapshot are pruned.
+    * Storage: two snapshot tables under `viewDir`. `state` holds the
+    * current version per order; each batch MERGES its applied rows
+    * through [[graft.table.Merge.mergeOnRead]] (the first batch
+    * bootstraps it as an `append`, [[upsertSink]]'s shape), so a batch
+    * writes O(batch) bytes however large the state. `view` is the small
+    * per-status aggregate, republished by one `replace` commit per batch.
+    *
+    * Replay: each commit carries the batch id, and a table that already
+    * holds the batch skips its write ([[committedAt]]). Both tables are
+    * read as of the snapshot BEFORE the batch ([[preBatch]]), so a batch
+    * replayed after a crash between its two commits recomputes the same
+    * increments from the same pre-batch state. The offset guard (only
+    * strictly-newer versions apply) makes out-of-order arrival safe: an
+    * older version never displaces a newer one.
     *
     * Scale: per batch, the work is one window over the micro-batch, one
     * keyed join against the state table, and two ~|groups| aggregates —
-    * the full fact history is never re-aggregated. The parquet state pair
-    * is the fixture-scale stand-in for a table format / key-value store;
-    * the dataflow is what carries to 100 TB. */
-  /** Committed `batch=<id>` dirs under `root`, ascending — the ONE
-    * definition of the _COMMIT listing every batch-dir store uses (six
-    * hand-rolled copies had already let one store drop the marker). */
-  private def committedBatchIds(fs: org.apache.hadoop.fs.FileSystem,
-                                root: org.apache.hadoop.fs.Path): Seq[Long] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.map(_.getPath)
-      .filter(p => p.getName.startsWith("batch=") &&
-        fs.exists(new org.apache.hadoop.fs.Path(p, "_COMMIT")))
-      .map(_.getName.stripPrefix("batch=").toLong).sorted
-
-  /** Was `batchId` already committed to this table BY THIS STREAM?
-    * Batch ids are monotone only within one checkpoint lineage, so the
-    * guard is scoped by `streamId` (the checkpoint location — the same
-    * stable identity GraftStreamSink's txnAppId uses): two streams with
-    * separate checkpoints appending to one table interleave their ids,
-    * and an unscoped early-stop at the first `b < batchId` would miss
-    * this stream's own older commit and re-commit duplicate rows. The
-    * REVERSE manifest scan stops at the first SAME-LINEAGE data commit
-    * whose batch id falls below the probe — O(1) typical, never
-    * O(table history); foreign-lineage commits are walked past without
-    * stopping. Legacy commits written before the stream_id field are
-    * attributed to every lineage (conservative: a pre-upgrade
-    * single-stream table keeps its early stop and its dedup). */
-  private def batchAlreadyCommitted(spark: org.apache.spark.sql.SparkSession,
-                                    tableDir: String, batchId: Long,
-                                    streamId: String): Boolean = {
-    import graft.table.SnapshotLog
-    val it = SnapshotLog.commitsReverse(spark, tableDir)
-    while (it.hasNext) {
-      val s = it.next().summary
-      val sameLineage = s.get("stream_id").forall(_ == streamId)
-      s.get("batch_id").map(_.toLong) match {
-        case Some(b) if sameLineage && b == batchId => return true
-        case Some(b) if sameLineage && b < batchId => return false
-        case _ => () // maintenance or foreign-stream commit: keep walking
-      }
-    }
-    false
-  }
-
+    * the full fact history is never re-aggregated. */
   def maintainStatusView(wire: DataFrame, table: String, viewDir: String,
                          checkpointDir: String): Unit = {
     import org.apache.spark.sql.expressions.Window
-    val decoded = Envelope.decode(wire, table)
-    val q = decoded.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(viewDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def committed: Seq[Long] =
-          committedBatchIds(fs, new org.apache.hadoop.fs.Path(viewDir))
-        // Replay safety: a crash after this batch's _COMMIT but before the
-        // stream checkpoint commit leaves batch=<batchId> committed; basing
-        // on it would self-read-and-overwrite. Always base on the newest
-        // snapshot strictly older than this batch.
-        val prevId = committed.filter(_ < batchId).lastOption
-        // fail LOUDLY on unreplayable state, like maintainDedupIndex: a
-        // rewind past the retention horizon has no predecessor snapshot —
-        // silently rebuilding from empty would drop every previously
-        // aggregated group from the "committed" view
-        if (batchId > 0 && prevId.isEmpty)
-          throw new IllegalStateException(
-            s"status view at $viewDir has no committed snapshot older than " +
-              s"batch $batchId (committed: ${committed.mkString(",")}); " +
-              "state was evicted past the replay horizon — rebuild the view")
+    val (stateDir, viewTable) = (s"$viewDir/state", s"$viewDir/view")
+    drainBatches(Envelope.decode(wire, table), checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val stateAt = committedAt(spark, stateDir, batchId, checkpointDir)
+      val viewAt = committedAt(spark, viewTable, batchId, checkpointDir)
+      if (stateAt.isEmpty || viewAt.isEmpty) {
+        val tag = batchTag(batchId, checkpointDir)
         val amt = col("total_amount").cast("decimal(10,2)")
         val w = Window.partitionBy(col("order_id")).orderBy(col("kafka_offset").desc)
         val b = batch.filter(col("order_id").isNotNull)
           .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
           .select(col("order_id"), col("status"), amt.as("amt"), col("kafka_offset"))
-        val (prevState, prevView) = prevId match {
-          case Some(id) =>
-            (spark.read.parquet(s"$viewDir/batch=$id/state"),
-             spark.read.parquet(s"$viewDir/batch=$id/view"))
-          case None =>
-            (spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-               b.schema),
-             spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-               new org.apache.spark.sql.types.StructType()
-                 .add("status", "string").add("n_orders", "long")
-                 .add("total_amount", org.apache.spark.sql.types.DecimalType(20, 2))))
-        }
+        val prevState = preBatch(spark, stateDir, batchId, stateAt, b.schema)
+        val prevView = preBatch(spark, viewTable, batchId, viewAt, StatusViewSchema)
         // offset guard: only strictly-newer versions apply (replay no-op +
         // out-of-order safety)
         val applied = b.as("b")
@@ -282,86 +293,68 @@ object StreamSync {
             Seq("order_id"), "left")
           .filter(col("old_off").isNull || col("kafka_offset") > col("old_off"))
           .select(col("order_id"), col("status"), col("amt"), col("kafka_offset"))
-        val retracted = prevState.join(
-          broadcast(applied.select(col("order_id"))), Seq("order_id"), "left_semi")
-        val newState = prevState
-          .join(applied.select(col("order_id")), Seq("order_id"), "left_anti")
-          .unionByName(applied)
-        val increments = applied.select(col("status"), col("amt").as("s_amt"), lit(1L).as("s_n"))
-          .unionByName(retracted.select(col("status"), (-col("amt")).as("s_amt"), lit(-1L).as("s_n")))
-        val inc = increments.groupBy(col("status"))
-          .agg(sum(col("s_n")).as("dn"), sum(col("s_amt")).as("damt"))
-        // NULL-SAFE join key: groupBy puts all null statuses in ONE
-        // group, but a plain join never matches null==null — the stored
-        // null-group row would survive unretracted forever while its
-        // retraction increment fell out of the view (phantom rows)
-        val newView = prevView.as("pv").join(inc.as("i"),
-            col("pv.status") <=> col("i.status"), "full_outer")
-          .select(coalesce(col("pv.status"), col("i.status")).as("status"),
-            (coalesce(col("n_orders"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n_orders"),
-            (coalesce(col("total_amount"), lit(0).cast("decimal(20,2)")) +
-              coalesce(col("damt"), lit(0).cast("decimal(20,2)")))
-              .cast("decimal(20,2)").as("total_amount"))
-          .filter(col("n_orders") > 0)
-        val dst = s"$viewDir/batch=$batchId"
-        newState.write.mode("overwrite").parquet(s"$dst/state")
-        newView.write.mode("overwrite").parquet(s"$dst/view")
-        fs.create(new org.apache.hadoop.fs.Path(dst, "_COMMIT"), true).close()
-        // prune everything older than the previous snapshot
-        committed.dropRight(2).foreach(id =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$viewDir/batch=$id"), true))
+          .localCheckpoint(true) // consumed by the state merge and the increments
+        if (stateAt.isEmpty) {
+          if (SnapshotLog.filesAt(spark, stateDir).exists(_.kind == "data"))
+            Merge.mergeOnRead(spark, stateDir, applied, "order_id", summary = tag)
+          else append(applied, stateDir, tag, statsCol = Some("order_id"))
+        }
+        if (viewAt.isEmpty) {
+          val retracted = prevState.join(
+            broadcast(applied.select(col("order_id"))), Seq("order_id"), "left_semi")
+          val increments = applied.select(col("status"), col("amt").as("s_amt"), lit(1L).as("s_n"))
+            .unionByName(retracted.select(col("status"), (-col("amt")).as("s_amt"), lit(-1L).as("s_n")))
+          val inc = increments.groupBy(col("status"))
+            .agg(sum(col("s_n")).as("dn"), sum(col("s_amt")).as("damt"))
+          // NULL-SAFE join key: groupBy puts all null statuses in ONE
+          // group, but a plain join never matches null==null — the stored
+          // null-group row would survive unretracted forever while its
+          // retraction increment fell out of the view (phantom rows)
+          val newView = prevView.as("pv").join(inc.as("i"),
+              col("pv.status") <=> col("i.status"), "full_outer")
+            .select(coalesce(col("pv.status"), col("i.status")).as("status"),
+              (coalesce(col("n_orders"), lit(0L)) + coalesce(col("dn"), lit(0L))).as("n_orders"),
+              (coalesce(col("total_amount"), lit(0).cast("decimal(20,2)")) +
+                coalesce(col("damt"), lit(0).cast("decimal(20,2)")))
+                .cast("decimal(20,2)").as("total_amount"))
+            .filter(col("n_orders") > 0)
+          SnapshotLog.commit(spark, viewTable, "replace",
+            SnapshotLog.writeData(newView.coalesce(1), viewTable),
+            removed = SnapshotLog.filesAt(spark, viewTable).map(_.path), summary = tag)
+        }
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Newest committed view maintained by [[maintainStatusView]]. */
-  def readStatusView(spark: SparkSession, viewDir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(viewDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = committedBatchIds(fs, root)
-    require(ids.nonEmpty, s"no committed view under $viewDir")
-    spark.read.parquet(s"$viewDir/batch=${ids.max}/view")
+  def readStatusView(spark: SparkSession, viewDir: String): DataFrame =
+    latest(spark, s"$viewDir/view", StatusViewSchema)
+
+  /** One micro-batch's quantile sketch row (sketch, row count). */
+  private def quantileRow(events: DataFrame): DataFrame = {
+    import graft.functions.GraftFunctions.quantile_sketch
+    events.agg(quantile_sketch(col("value")).as("sk"), count(lit(1)).as("n_rows"))
   }
 
-  /** Streaming quantile maintenance: each micro-batch persists ONE
-    * ~KB [[graft.functions.QuantileSketchAgg]] row (batch id, row count,
-    * serialized sketch) — the streaming face of the epoch pattern in
-    * `fn_quantile_sketch_epochs`. Any later reader answers "p95 of
-    * everything drained so far" by merging the per-batch sketches
-    * ([[readQuantileView]]) WITHOUT re-reading a single event: at 100 TB
-    * the events are gone from cache minutes after ingest, the sketches
-    * stay.
+  /** Streaming quantile maintenance: each micro-batch appends ONE
+    * ~KB [[graft.functions.QuantileSketchAgg]] row (serialized sketch,
+    * row count) to the snapshot table at `sketchDir` — the streaming face
+    * of the epoch pattern in `fn_quantile_sketch_epochs`. Any later
+    * reader answers "p95 of everything drained so far" by merging the
+    * per-batch sketches ([[readQuantileView]]) WITHOUT re-reading a
+    * single event: at 100 TB the events are gone from cache minutes
+    * after ingest, the sketches stay.
     *
-    * Replay safety mirrors [[maintainStatusView]]'s dirs: a batch
-    * (re)writes only its own `batch=<id>` dir — no cross-batch read, so
-    * replay after any crash is a deterministic self-overwrite, and the
-    * merged answer (a bound-checked estimate, not an exact value) is
-    * unaffected by which compaction order a replayed build took.
+    * Replay safety: the append carries the batch id, and a replayed batch
+    * whose commit already landed skips it ([[committedAt]]). No batch
+    * reads another's row, so the merged answer (a bound-checked
+    * estimate, not an exact value) is order-independent.
     */
   def maintainQuantileSketches(events: DataFrame, sketchDir: String,
-                               checkpointDir: String): Unit = {
-    import graft.functions.GraftFunctions.quantile_sketch
-    val q = events.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(sketchDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val dst = s"$sketchDir/batch=$batchId"
-        batch.agg(quantile_sketch(col("value")).as("sk"),
-            count(lit(1)).as("n_rows"))
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$dst/sketch")
-        fs.create(new org.apache.hadoop.fs.Path(dst, "_COMMIT"), true).close()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                               checkpointDir: String): Unit =
+    drainBatches(events, checkpointDir) { (batch, batchId) =>
+      appendOnce(sketchDir, batchId, checkpointDir)(quantileRow(batch).coalesce(1))
+    }
 
   /** Quantiles over every event drained so far, from the per-batch
     * sketches alone: reads the committed ~KB rows, `quantile_merge`s
@@ -369,46 +362,31 @@ object StreamSync {
   def readQuantileView(spark: SparkSession, sketchDir: String,
                        qs: Seq[Double]): DataFrame = {
     import graft.functions.GraftFunctions.{quantile_merge, quantile_value}
-    val root = new org.apache.hadoop.fs.Path(sketchDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = committedBatchIds(fs, root)
-    require(ids.nonEmpty, s"no committed sketches under $sketchDir")
-    val merged = spark.read
-      .parquet(ids.map(id => s"$sketchDir/batch=$id/sketch"): _*)
+    val merged = latest(spark, sketchDir, quantileRow(spark.range(0).toDF("value")).schema)
       .agg(quantile_merge(col("sk")).as("msk"), sum(col("n_rows")).as("n_rows"))
     merged.select(col("n_rows") +: qs.map(q =>
       quantile_value(col("msk"), q).as(s"q${(q * 100).round}")): _*)
   }
 
-  /** Streaming heavy hitters: each micro-batch persists ONE Misra–Gries
+  /** One micro-batch's Misra–Gries row (≤k counters, token count). */
+  private def heavyHitterRow(docs: DataFrame, k: Int): DataFrame = {
+    import graft.functions.GraftFunctions.heavy_hitters
+    docs.select(explode(split(col("text"), " ")).as("token"))
+      .filter(col("token") =!= "")
+      .agg(heavy_hitters(col("token"), k).as("hh"), count(lit(1)).as("n_tokens"))
+  }
+
+  /** Streaming heavy hitters: each micro-batch appends ONE Misra–Gries
     * sketch row (≤k (token, weight) counters + the batch's token count)
     * over the batch's document tokens — trending-vocabulary maintenance
-    * without any global token state. Same store layout and replay story
-    * as [[maintainQuantileSketches]].
+    * without any global token state. Same store and replay story as
+    * [[maintainQuantileSketches]].
     */
   def maintainHeavyHitters(docs: DataFrame, sketchDir: String,
-                           checkpointDir: String, k: Int = 32): Unit = {
-    import graft.functions.GraftFunctions.heavy_hitters
-    val q = docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(sketchDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val dst = s"$sketchDir/batch=$batchId"
-        batch.select(explode(split(col("text"), " ")).as("token"))
-          .filter(col("token") =!= "")
-          .agg(heavy_hitters(col("token"), k).as("hh"),
-            count(lit(1)).as("n_tokens"))
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$dst/sketch")
-        fs.create(new org.apache.hadoop.fs.Path(dst, "_COMMIT"), true).close()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                           checkpointDir: String, k: Int = 32): Unit =
+    drainBatches(docs, checkpointDir) { (batch, batchId) =>
+      appendOnce(sketchDir, batchId, checkpointDir)(heavyHitterRow(batch, k).coalesce(1))
+    }
 
   /** Stream-wide heavy-hitter candidates from the per-batch sketches
     * alone: the Agarwal-et-al mergeable-summaries merge (sum counters
@@ -422,12 +400,8 @@ object StreamSync {
   def readHeavyHitterView(spark: SparkSession, sketchDir: String,
                           k: Int = 32): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val root = new org.apache.hadoop.fs.Path(sketchDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = committedBatchIds(fs, root)
-    require(ids.nonEmpty, s"no committed sketches under $sketchDir")
-    val rows = spark.read
-      .parquet(ids.map(id => s"$sketchDir/batch=$id/sketch"): _*)
+    val rows = latest(spark, sketchDir,
+      heavyHitterRow(spark.range(0).select(lit("").as("text")), k).schema)
     val summed = rows.select(explode(col("hh")).as("c"))
       .select(col("c.item").as("token"), col("c.est").as("w"))
       .groupBy(col("token")).agg(sum(col("w")).as("w"))
@@ -450,6 +424,11 @@ object StreamSync {
       .orderBy(col("est").desc, col("token"))
   }
 
+  /** Columns of [[maintainDedupIndex]]'s decision log. */
+  private val DedupDecisionSchema = new StructType()
+    .add("doc_id", "long").add("is_dup", "boolean")
+    .add("dup_of", "long").add("jaccard", "double")
+
   /** Streaming near-dup ADMISSION INDEX — the continuous-ingestion form of
     * [[graft.llm.Dedup.incremental]]: each micro-batch of documents is
     * admitted or rejected against the index of previously ADMITTED docs
@@ -461,54 +440,35 @@ object StreamSync {
     * the one-relational-pass approximation of strictly-sequential
     * admission; across batches the sequential semantics are exact.
     *
-    * Layout: the INDEX (keys + shingles of admitted docs) is a
-    * snapshot-per-batch under `indexDir/state/batch=<id>/` finished by a
-    * `_COMMIT` marker — the [[maintainStatusView]] pattern, rebuilt from
-    * the newest snapshot STRICTLY older than a replayed batch, so replay
-    * is deterministic and out-of-order arrival never corrupts it. The
-    * full-rewrite-per-batch of that snapshot is the fixture-scale parquet
-    * stand-in for the table-format / KV store a production pipeline
-    * keeps (which would MERGE the admitted delta instead). DECISIONS are
-    * different: each batch appends only its own delta under
-    * `indexDir/decisions/batch=<id>/` (committed, kept, replay
-    * overwrites its own dir), so the decision log costs O(|batch|) per
-    * batch — accumulating it into each snapshot would write O(N²) rows
-    * over N batches. The probe work itself is O(|batch| · bands) key
-    * lookups plus exact verification on colliding pairs. */
+    * Storage: three snapshot tables under `indexDir`, each appended once
+    * per batch with only that batch's delta — `keys` and `sh` take the
+    * admitted docs' LSH keys and shingle sets, `decisions` every doc's
+    * verdict — so a batch writes O(|batch|) however large the index.
+    * Replay follows [[maintainStatusView]]: a table that holds the batch
+    * skips its append, and the index is read as of the snapshot before
+    * the batch, so a replay decides exactly as the first run did. The
+    * probe work itself is O(|batch| · bands) key lookups plus exact
+    * verification on colliding pairs. */
   def maintainDedupIndex(docs: DataFrame, indexDir: String,
                          checkpointDir: String, threshold: Double = 0.8): Unit = {
     import org.apache.spark.sql.expressions.Window
     import graft.llm.Dedup
-    val q = docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs = new org.apache.hadoop.fs.Path(indexDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        def committed: Seq[Long] =
-          committedBatchIds(fs, new org.apache.hadoop.fs.Path(s"$indexDir/state"))
-        val prevId = committed.filter(_ < batchId).lastOption
-        // fail LOUDLY on unreplayable state: retention keeps only the last
-        // two snapshots, so a rewind of more than one batch (or manual
-        // state cleanup) has no predecessor to rebuild from — silently
-        // starting from an empty index would re-admit everything and break
-        // the determinism contract above
-        if (batchId > 0 && prevId.isEmpty)
-          throw new IllegalStateException(
-            s"dedup index at $indexDir has no committed snapshot older than " +
-              s"batch $batchId (committed: ${committed.mkString(",")}); " +
-              "state was evicted past the replay horizon — rebuild the index")
+    val keysDir = s"$indexDir/keys"
+    val shDir = s"$indexDir/sh"
+    val decisionsDir = s"$indexDir/decisions"
+    drainBatches(docs, checkpointDir) { (batch, batchId) =>
+      val spark = batch.sparkSession
+      val keysAt = committedAt(spark, keysDir, batchId, checkpointDir)
+      val shAt = committedAt(spark, shDir, batchId, checkpointDir)
+      val decisionsAt = committedAt(spark, decisionsDir, batchId, checkpointDir)
+      if (keysAt.isEmpty || shAt.isEmpty || decisionsAt.isEmpty) {
+        val tag = batchTag(batchId, checkpointDir)
         val b = batch.select(col("doc_id"), col("text"))
           .filter(col("doc_id").isNotNull && col("text").isNotNull)
         val shNew = Dedup.shinglesOf(b).localCheckpoint(true)
         val keysNew = Dedup.lshKeysOf(b).localCheckpoint(true)
-        def empty(schema: org.apache.spark.sql.types.StructType) =
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        val (prevKeys, prevSh) = prevId match {
-          case Some(id) =>
-            (spark.read.parquet(s"$indexDir/state/batch=$id/keys"),
-             spark.read.parquet(s"$indexDir/state/batch=$id/sh"))
-          case None => (empty(keysNew.schema), empty(shNew.schema))
-        }
+        val prevKeys = preBatch(spark, keysDir, batchId, keysAt, keysNew.schema)
+        val prevSh = preBatch(spark, shDir, batchId, shAt, shNew.schema)
         // same MaxBucket crowded-bucket cap + bounded bucket fold as the
         // batch path ([[graft.llm.Dedup.incrementalCandidates]], shared
         // code): a degenerate boilerplate bucket would otherwise fan out
@@ -540,27 +500,15 @@ object StreamSync {
           .join(pick, Seq("doc_id"), "left")
           .select(col("doc_id"), col("o_id").isNotNull.as("is_dup"),
             col("o_id").as("dup_of"), round(col("jaccard"), 6).as("jaccard"))
+          .localCheckpoint(true) // consumed by up to three appends
         val admitted = decisions.filter(!col("is_dup")).select(col("doc_id"))
-        val newKeys = prevKeys.unionByName(
-          keysNew.join(admitted, Seq("doc_id"), "left_semi"))
-        val newSh = prevSh.unionByName(
-          shNew.join(admitted, Seq("doc_id"), "left_semi"))
-        // decision DELTA only — the cumulative log lives as the union of
-        // these per-batch dirs, never rewritten
-        val decDst = s"$indexDir/decisions/batch=$batchId"
-        decisions.write.mode("overwrite").parquet(decDst)
-        fs.create(new org.apache.hadoop.fs.Path(decDst, "_COMMIT"), true).close()
-        val dst = s"$indexDir/state/batch=$batchId"
-        newKeys.write.mode("overwrite").parquet(s"$dst/keys")
-        newSh.write.mode("overwrite").parquet(s"$dst/sh")
-        fs.create(new org.apache.hadoop.fs.Path(dst, "_COMMIT"), true).close()
-        committed.dropRight(2).foreach(id =>
-          fs.delete(new org.apache.hadoop.fs.Path(s"$indexDir/state/batch=$id"), true))
+        if (decisionsAt.isEmpty) append(decisions, decisionsDir, tag)
+        if (keysAt.isEmpty)
+          append(keysNew.join(admitted, Seq("doc_id"), "left_semi"), keysDir, tag)
+        if (shAt.isEmpty)
+          append(shNew.join(admitted, Seq("doc_id"), "left_semi"), shDir, tag)
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
   }
 
   /** Streaming IVF VECTOR INDEX — continuous embedding ingestion into an
@@ -626,6 +574,10 @@ object StreamSync {
       .limit(k)
   }
 
+  /** Columns of [[maintainDriftMonitor]]'s per-batch rows. */
+  private val DriftSchema = new StructType()
+    .add("batch_id", "long").add("n_tokens", "long").add("js_divergence", "double")
+
   /** Streaming DRIFT MONITOR: each micro-batch of documents is scored
     * against a REFERENCE unigram distribution (the offline corpus
     * snapshot — a model-scale (token, p_ref) table) with Jensen–Shannon
@@ -636,73 +588,49 @@ object StreamSync {
     * disjoint support, and is bounded by ln 2 — a stable alerting
     * signal. Per batch: one token count aggregate + a full-outer join
     * against the broadcast reference — the batch crosses one exchange,
-    * the monitor row is O(1). The same `batch=<id>` one-row layout as
-    * the sketch stores, so replays overwrite only their own row. */
+    * the monitor row is O(1). The same one-row append per batch as the
+    * sketch stores, with the same replay guard. */
   def maintainDriftMonitor(docs: DataFrame, reference: DataFrame,
-                           monitorDir: String, checkpointDir: String): Unit = {
-    val q = docs.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        val fs2 = new org.apache.hadoop.fs.Path(monitorDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val cnt = batch.select(explode(split(col("text"), " ")).as("token"))
-          .filter(col("token") =!= "")
-          .groupBy(col("token")).agg(count(lit(1)).as("n"))
-        val total = cnt.agg(sum(col("n")).as("n_total"))
-        val joined = cnt.crossJoin(broadcast(total))
-          .select(col("token"), (col("n").cast("double") / col("n_total")).as("p"),
-            col("n_total"))
-          .join(broadcast(reference.select(col("token"), col("p_ref"))),
-            Seq("token"), "full_outer")
-          .select(coalesce(col("p"), lit(0.0)).as("p"),
-            coalesce(col("p_ref"), lit(0.0)).as("q"),
-            col("n_total"))
-        val m = (col("p") + col("q")) / 2.0
-        val term =
-          when(col("p") > 0, col("p") * log(col("p") / m) / 2.0).otherwise(0.0) +
-          when(col("q") > 0, col("q") * log(col("q") / m) / 2.0).otherwise(0.0)
-        // a batch whose tokens all filter out has NO distribution: report
-        // n_tokens = 0 with a NULL divergence instead of the misleading
-        // ln(2)/2 the reference-only full-outer rows would otherwise sum to
-        val row = joined.agg(max(col("n_total")).as("n_raw"),
-            sum(term).as("js_raw"))
-          .select(lit(batchId).as("batch_id"),
-            coalesce(col("n_raw"), lit(0L)).as("n_tokens"),
-            when(coalesce(col("n_raw"), lit(0L)) > 0, col("js_raw"))
-              .as("js_divergence"))
-        val dst = s"$monitorDir/batch=$batchId"
-        row.coalesce(1).write.mode("overwrite").parquet(dst)
-        // the _COMMIT marker the store's own docstring promises: without
-        // it a torn batch dir was indistinguishable from a committed one
-        fs2.create(new org.apache.hadoop.fs.Path(dst, "_COMMIT"), true).close()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
+                           monitorDir: String, checkpointDir: String): Unit =
+    drainBatches(docs, checkpointDir) { (batch, batchId) =>
+      val cnt = batch.select(explode(split(col("text"), " ")).as("token"))
+        .filter(col("token") =!= "")
+        .groupBy(col("token")).agg(count(lit(1)).as("n"))
+      val total = cnt.agg(sum(col("n")).as("n_total"))
+      val joined = cnt.crossJoin(broadcast(total))
+        .select(col("token"), (col("n").cast("double") / col("n_total")).as("p"),
+          col("n_total"))
+        .join(broadcast(reference.select(col("token"), col("p_ref"))),
+          Seq("token"), "full_outer")
+        .select(coalesce(col("p"), lit(0.0)).as("p"),
+          coalesce(col("p_ref"), lit(0.0)).as("q"),
+          col("n_total"))
+      val m = (col("p") + col("q")) / 2.0
+      val term =
+        when(col("p") > 0, col("p") * log(col("p") / m) / 2.0).otherwise(0.0) +
+        when(col("q") > 0, col("q") * log(col("q") / m) / 2.0).otherwise(0.0)
+      // a batch whose tokens all filter out has NO distribution: report
+      // n_tokens = 0 with a NULL divergence instead of the misleading
+      // ln(2)/2 the reference-only full-outer rows would otherwise sum to
+      val row = joined.agg(max(col("n_total")).as("n_raw"),
+          sum(term).as("js_raw"))
+        .select(lit(batchId).as("batch_id"),
+          coalesce(col("n_raw"), lit(0L)).as("n_tokens"),
+          when(coalesce(col("n_raw"), lit(0L)) > 0, col("js_raw"))
+            .as("js_divergence"))
+      appendOnce(monitorDir, batchId, checkpointDir)(row.coalesce(1))
+    }
 
   /** All per-batch drift rows written by [[maintainDriftMonitor]]. */
-  def readDriftView(spark: SparkSession, monitorDir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(monitorDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ids = committedBatchIds(fs, root)
-    require(ids.nonEmpty, s"no committed drift rows under $monitorDir")
-    spark.read.parquet(ids.map(id => s"$monitorDir/batch=$id"): _*)
+  def readDriftView(spark: SparkSession, monitorDir: String): DataFrame =
+    latest(spark, monitorDir, DriftSchema)
       .select(col("batch_id"), col("n_tokens"), col("js_divergence"))
       .orderBy(col("batch_id"))
-  }
 
   /** Cumulative admission decisions maintained by [[maintainDedupIndex]]:
     * the union of every committed per-batch decision delta. */
-  def readDedupDecisions(spark: SparkSession, indexDir: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(s"$indexDir/decisions")
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = committedBatchIds(fs, root)
-      .map(id => s"$indexDir/decisions/batch=$id")
-    require(dirs.nonEmpty, s"no committed dedup decisions under $indexDir")
-    spark.read.parquet(dirs: _*)
-  }
+  def readDedupDecisions(spark: SparkSession, indexDir: String): DataFrame =
+    latest(spark, s"$indexDir/decisions", DedupDecisionSchema)
 
   /** Watermarked tumbling-window aggregation over an event stream —
     * the streaming form of [[graft.ops.Events.tumbling]]. Late data beyond

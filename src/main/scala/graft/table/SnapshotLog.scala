@@ -1255,8 +1255,9 @@ object SnapshotLog {
     * place, so a recorded position is valid for exactly as long as the
     * file is live). */
   private[graft] def applyMasks(spark: SparkSession, data: Seq[DataFile],
-                                dels: Seq[DataFile]): DataFrame =
-    applyMasksKeepPos(spark, data, dels, keepPos = false)
+                                dels: Seq[DataFile],
+                                schema: Option[StructType] = None): DataFrame =
+    applyMasksKeepPos(spark, data, dels, keepPos = false, schema)
 
   /** [[applyMasks]] variant RETAINING the ([[PosFileCol]], [[PosOrdCol]])
     * scan-metadata columns on every surviving row — the read a
@@ -1268,13 +1269,13 @@ object SnapshotLog {
     applyMasksKeepPos(spark, data, dels, keepPos = true)
 
   private def applyMasksKeepPos(spark: SparkSession, data: Seq[DataFile],
-                                dels: Seq[DataFile],
-                                keepPos: Boolean): DataFrame = {
+                                dels: Seq[DataFile], keepPos: Boolean,
+                                schema: Option[StructType] = None): DataFrame = {
     val (posDels, eqDels) = dels.partition(_.kind == "posdelete")
     val needPos = keepPos || posDels.nonEmpty
     def pos(df: DataFrame) = if (needPos) withPos(df) else df
     val groups = epochGroups(spark, data)
-    val merged = mergedOf(groups.map(_._1))
+    val merged = schema.getOrElse(mergedOf(groups.map(_._1)))
     // equality masks need each row's commit seq: one relation per seq
     // group, a literal column each — under the merged schema, so the
     // groups join with a plain union. Positional masks alone need none.
@@ -1544,19 +1545,23 @@ object SnapshotLog {
   private def hideInternal(df: DataFrame): DataFrame =
     if (df.columns.contains(Merge.LineageCol)) df.drop(Merge.LineageCol) else df
 
-  /** Shared post-prune assembly for every pruned read face: the
-    * surviving data files scan EPOCH-SAFELY (a raw multi-path read of
-    * drifted files would infer one file's schema and silently null the
-    * other epochs' columns), pending masks apply, internal columns
-    * hide. One definition so no reader can drift from [[read]]'s
-    * semantics. */
-  private def assemble(spark: SparkSession, pruned: Seq[DataFile],
-                       dels: Seq[DataFile],
+  /** Shared post-prune assembly for every pruned read face: the kept
+    * data files scan EPOCH-SAFELY under the merged schema of EVERY live
+    * data file's epoch — so the result schema never depends on which
+    * files a predicate kept, and a raw multi-path read never infers one
+    * file's schema and nulls the other epochs' columns — pending masks
+    * apply, internal columns hide. One definition so no reader can
+    * drift from [[read]]'s semantics. */
+  private def assemble(spark: SparkSession, live: Seq[DataFile],
+                       kept: Seq[DataFile], dels: Seq[DataFile],
                        reg: Option[FieldRegistry] = None): Option[DataFrame] =
-    if (pruned.isEmpty) None
-    else Some(applyRegistry(hideInternal(
-      if (dels.isEmpty) readEpochSafe(spark, pruned)
-      else applyMasks(spark, pruned, dels)), reg))
+    if (kept.isEmpty) None
+    else {
+      val schema = mergedOf(epochGroups(spark, live).map(_._1))
+      Some(applyRegistry(hideInternal(
+        if (dels.isEmpty) readAs(spark, schema, kept)
+        else applyMasks(spark, kept, dels, Some(schema))), reg))
+    }
 
   /** Project a physical-space frame to logical space through the field
     * registry (identity/absent registries are free). Every read face
@@ -1595,7 +1600,7 @@ object SnapshotLog {
            asOf: Option[Long] = None): Option[DataFrame] = {
     val (files, reg) = stateAt(spark, tableDir, asOf)
     val (dels, data) = files.partition(isMask)
-    assemble(spark, data, dels, reg)
+    assemble(spark, data, data, dels, reg)
   }
 
   /** Manifest-pruned read: skip every data file the [[Constraints]]
@@ -1617,7 +1622,7 @@ object SnapshotLog {
                  asOf: Option[Long] = None): Option[DataFrame] = {
     val (files, reg) = logicalStateAt(spark, tableDir, asOf)
     val (dels, data) = files.partition(isMask)
-    assemble(spark, data.filter(cs.keeps), dels, reg)
+    assemble(spark, data, data.filter(cs.keeps), dels, reg)
   }
 
   /** [[readPruned]]'s pruning decision alone — (data files kept, data
@@ -1898,7 +1903,7 @@ object SnapshotLog {
     val (dels, data) = filesAt(spark, tableDir, Some(parentId))
       .partition(isMask)
     val (touched, _) = Merge.pruneTouched(spark, keyCol, data, keys)
-    assemble(spark, touched, dels)
+    assemble(spark, data, touched, dels)
       .map(_.join(keys.distinct(), Seq(keyCol), "left_semi"))
   }
 

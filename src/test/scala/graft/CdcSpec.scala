@@ -2816,9 +2816,39 @@ class CdcSpec extends AnyFunSuite {
     val m = wide.collect().map(r => r.getLong(0) ->
       Option(r.getAs[java.lang.Long]("extra"))).toMap
     assert(m == Map(1L -> None, 2L -> Some(42L)), m.toString)
-    assert(SnapshotLog.readPruned(spark, dir,
-      Constraints(ranges = Map("id" -> (1L, 2L)))).get
-      .columns.contains("extra"))
+    // pruning down to the OLD epoch alone must not narrow the schema:
+    // the result's columns never depend on which files the predicate kept
+    val old = SnapshotLog.readPruned(spark, dir,
+      Constraints(ranges = Map("id" -> (1L, 1L)))).get
+    assert(old.columns.contains("extra"), old.columns.mkString(","))
+    assert(old.collect().map(r => r.getLong(0) ->
+      Option(r.getAs[java.lang.Long]("extra"))).toSeq == Seq(1L -> None))
+  }
+
+  test("a full rewrite and a bin-pack record the same zone columns") {
+    import spark.implicits._
+    import graft.table.{Merge, SnapshotLog}
+    val base = graft.schema.Fixtures.dir("graft-zoneset")
+    val dir = s"$base/t_parquet"
+    for (s <- 0 until 4)
+      SnapshotLog.commit(spark, dir, "append",
+        SnapshotLog.writeData((0 until 50).map(i => (s * 50L + i, s * 50L + i, s"v$i"))
+          .toDF("id", "kafka_offset", "v").coalesce(1), dir, statsCol = Some("id")))
+    def zoneKeys: Set[Set[String]] =
+      SnapshotLog.filesAt(spark, dir).filterNot(SnapshotLog.isMask)
+        .map(_.stats.keySet).toSet
+    // bin-pack: mask-free, unclustered, four small files into one
+    val packed = Compaction.compactSnapshotted(spark, base, "t", targetBytes = 1L << 30)
+    assert(packed.filesAfter == 1, s"$packed")
+    val binPackKeys = zoneKeys
+    assert(binPackKeys == Set(Set("id")), binPackKeys.toString)
+    // a pending mask sends the next compaction down the full rewrite
+    Merge.mergeOnRead(spark, dir, Seq((7L, 1000L, "u")).toDF("id", "kafka_offset", "v"), "id")
+    val full = Compaction.compactSnapshotted(spark, base, "t", targetBytes = 1L << 30)
+    assert(SnapshotLog.filesAt(spark, dir).forall(f => !SnapshotLog.isMask(f)), s"$full")
+    assert(zoneKeys == binPackKeys,
+      s"full rewrite recorded $zoneKeys, bin-pack recorded $binPackKeys")
+    assert(SnapshotLog.read(spark, dir).get.count() == 200)
   }
 
   test("registry rename across widening drift: COW and MOR deltas, both read faces agree") {

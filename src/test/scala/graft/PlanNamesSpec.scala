@@ -66,4 +66,11 @@ class PlanNamesSpec extends AnyFunSuite {
     assert(dead.isEmpty, "plan checks name classes or descriptions src/main no " +
       s"longer has: ${dead.mkString(", ")}")
   }
+
+  test("no src/main file writes a _COMMIT marker: stores commit to the snapshot log") {
+    val root = Paths.get(sys.props("user.dir"))
+    val writers = scalaFiles(root.resolve("src/main"))
+      .filter(p => code(text(p)).contains("_COMMIT")).map(root.relativize)
+    assert(writers.isEmpty, s"_COMMIT marker written by: ${writers.mkString(", ")}")
+  }
 }

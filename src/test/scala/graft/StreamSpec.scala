@@ -4,8 +4,9 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.cdc.CdcQueries
-import graft.schema.Tables
+import graft.schema.{Fixtures, Tables}
 import graft.stream.StreamSync
+import graft.table.SnapshotLog
 
 /** Structured Streaming path: checkpointed CDC sync (AvailableNow) and
   * watermarked windowed aggregation, pinned against their batch
@@ -14,6 +15,19 @@ import graft.stream.StreamSync
 class StreamSpec extends AnyFunSuite {
   lazy val spark = Sessions.local("4", "stream-spec")
   val sf = "/root/testdata/sf0.001"
+
+  /** Drop the stream checkpoint's commit of batch `n` and its checksum
+    * sidecar: what a crash after the batch's table commits but before
+    * the checkpoint commit leaves, so the next drain replays batch `n`. */
+  private def dropCheckpointCommit(chk: String, n: Int): Unit = {
+    Files.delete(Paths.get(s"$chk/commits/$n"))
+    Files.deleteIfExists(Paths.get(s"$chk/commits/.$n.crc"))
+  }
+
+  /** How many of the table's commits carry batch id `n`. */
+  private def batchCommits(tableDir: String, n: Long): Int =
+    SnapshotLog.commits(spark, tableDir)
+      .count(_.summary.get("batch_id").contains(n.toString))
 
   test("streaming CDC sync: first drain writes all rows, re-run drains nothing new") {
     val base = Files.createTempDirectory("graft-stream").toString
@@ -34,7 +48,7 @@ class StreamSpec extends AnyFunSuite {
   }
 
   test("foreachBatch view maintenance equals batch recompute across drains") {
-    val base = Files.createTempDirectory("graft-stream-ivm").toString
+    val base = Fixtures.dir("graft-stream-ivm")
     val topicDir = Files.createDirectories(Paths.get(s"$base/topic")).toString
     val fixture = Files.readAllLines(
       Paths.get(s"${CdcQueries.FixtureDir}/dbserver1.ecommerce.orders.jsonl"))
@@ -69,7 +83,7 @@ class StreamSpec extends AnyFunSuite {
   }
 
   test("view maintenance replays a batch whose _COMMIT survived (crash before checkpoint commit)") {
-    val base = Files.createTempDirectory("graft-stream-replay").toString
+    val base = Fixtures.dir("graft-stream-replay")
     val topicDir = Files.createDirectories(Paths.get(s"$base/topic")).toString
     val fixture = Files.readAllLines(
       Paths.get(s"${CdcQueries.FixtureDir}/dbserver1.ecommerce.orders.jsonl"))
@@ -84,15 +98,94 @@ class StreamSpec extends AnyFunSuite {
     Files.write(Paths.get(s"$topicDir/part-1.jsonl"), fixture.subList(6, fixture.size))
     drain()
     val settled = view()
-    // simulate a crash AFTER the view dir's _COMMIT but BEFORE the stream
-    // checkpoint committed batch 1: the checkpoint commit file vanishes,
-    // the batch=1/_COMMIT dir survives, and the next drain replays batch 1
-    Files.delete(Paths.get(s"$base/chk/commits/1"))
-    // the local fs writes a checksum sidecar alongside each commit file; a
-    // real pre-commit crash leaves neither, so remove both
-    Files.deleteIfExists(Paths.get(s"$base/chk/commits/.1.crc"))
+    // simulate a crash AFTER batch 1's table commits (they play the old
+    // _COMMIT marker's role) but BEFORE the stream checkpoint committed
+    // it: the checkpoint commit file vanishes, and the next drain
+    // replays batch 1
+    dropCheckpointCommit(s"$base/chk", 1)
     drain() // must not throw (no self-read-overwrite) and must not move the view
     assert(view() == settled, s"replay changed the view: ${view()} vs $settled")
+    Seq("state", "view").foreach(t =>
+      assert(batchCommits(s"$base/view/$t", 1) == 1, s"$t holds batch 1 once"))
+  }
+
+  test("status view replays a batch whose view commit was lost (crash between state and view commits)") {
+    val base = Fixtures.dir("graft-stream-viewcrash")
+    val topicDir = Files.createDirectories(Paths.get(s"$base/topic")).toString
+    val fixture = Files.readAllLines(
+      Paths.get(s"${CdcQueries.FixtureDir}/dbserver1.ecommerce.orders.jsonl"))
+    def drain(): Unit = StreamSync.maintainStatusView(
+      StreamSync.wireStream(spark, topicDir), "orders",
+      s"$base/view", s"$base/chk")
+    def view(): Map[String, (Long, String)] =
+      StreamSync.readStatusView(spark, s"$base/view").collect()
+        .map(r => r.getString(0) -> (r.getLong(1), r.getDecimal(2).toPlainString)).toMap
+    Files.write(Paths.get(s"$topicDir/part-0.jsonl"), fixture.subList(0, 6))
+    drain()
+    Files.write(Paths.get(s"$topicDir/part-1.jsonl"), fixture.subList(6, fixture.size))
+    drain()
+    val settled = view()
+    // the crash lands after batch 1's state commit, before its view
+    // manifest was published: the view's newest manifest never existed
+    val viewTable = s"$base/view/view"
+    val newest = SnapshotLog.currentSnapshotId(spark, viewTable).get
+    def crashBeforeViewCommit(): Unit = {
+      Files.delete(Paths.get(f"$viewTable/_graft_log/$newest%020d.json"))
+      Files.deleteIfExists(Paths.get(f"$viewTable/_graft_log/.$newest%020d.json.crc"))
+      SnapshotLog.clearResolveCache()
+      dropCheckpointCommit(s"$base/chk", 1)
+    }
+    crashBeforeViewCommit()
+    assert(view() != settled, "the crash must leave the view a batch behind")
+    // the replay skips the state (it holds batch 1) and rebuilds the view
+    // from both tables as of the snapshot before batch 1
+    drain()
+    assert(view() == settled, s"replay changed the view: ${view()} vs $settled")
+    assert(batchCommits(s"$base/view/state", 1) == 1)
+    assert(batchCommits(viewTable, 1) == 1)
+    // the same crash once the state's pre-batch snapshot was expired:
+    // the replay fails loudly instead of rebuilding from an empty state
+    crashBeforeViewCommit()
+    SnapshotLog.expireSnapshots(spark, s"$base/view/state", retainLast = 1)
+    val err = intercept[Exception](drain())
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("replay horizon")), err.toString)
+  }
+
+  test("status view: the bytes a batch commits follow the batch, not the state") {
+    import scala.jdk.CollectionConverters._
+    def wire(id: Int, status: String, off: Long): String =
+      raw"""{"key": "{\"order_id\": $id}", "value": "{\"order_id\": $id, \"customer_id\": 1, \"order_date\": 0, \"status\": \"$status\", \"total_amount\": \"10.50\", \"shipping_address\": \"x\"}", "topic": "dbserver1.ecommerce.orders", "partition": 0, "offset": $off, "timestamp": "2026-01-15 10:00:00"}"""
+    val k = 20
+    // (bytes batch 0 added, bytes batch 1 added) over both tables, for a
+    // state of n orders and the same k-order update batch
+    def committedBytes(n: Int): (Long, Long) = {
+      val base = Fixtures.dir("graft-stream-viewcost")
+      val topic = Files.createDirectories(Paths.get(s"$base/topic"))
+      def drain(): Unit = StreamSync.maintainStatusView(
+        StreamSync.wireStream(spark, topic.toString), "orders",
+        s"$base/view", s"$base/chk")
+      val statuses = Seq("PENDING", "SHIPPED", "DELIVERED")
+      Files.write(topic.resolve("part-0.jsonl"),
+        (1 to n).map(i => wire(i, statuses(i % 3), i - 1L)).asJava)
+      drain()
+      Files.write(topic.resolve("part-1.jsonl"),
+        (1 to k).map(i => wire(i, "CANCELLED", n + i - 1L)).asJava)
+      drain()
+      val cancelled = StreamSync.readStatusView(spark, s"$base/view")
+        .filter(col("status") === "CANCELLED").collect()
+      assert(cancelled.map(_.getLong(1)).toSeq == Seq(k.toLong))
+      def added(batch: Long): Long = Seq("state", "view")
+        .flatMap(t => SnapshotLog.commits(spark, s"$base/view/$t"))
+        .filter(_.summary.get("batch_id").contains(batch.toString))
+        .flatMap(_.added).map(_.bytes).sum
+      (added(0), added(1))
+    }
+    val (boot1, upd1) = committedBytes(2000)
+    val (boot4, upd4) = committedBytes(8000)
+    assert(boot4 > 2 * boot1, s"the state must really grow: $boot1 -> $boot4")
+    assert(math.abs(upd4 - upd1) <= upd1 / 10,
+      s"an update batch must commit O(batch) bytes: $upd1 at n, $upd4 at 4n")
   }
 
   test("streaming windowed agg equals the batch tumbling query") {
@@ -129,7 +222,7 @@ class StreamSpec extends AnyFunSuite {
   }
 
   test("per-batch quantile sketches merge to the whole stream's quantiles") {
-    val base = Files.createTempDirectory("graft-stream-qs").toString
+    val base = Fixtures.dir("graft-stream-qs")
     Files.createDirectories(Paths.get(s"$base/in"))
     val events = Tables.events(spark, sf)
     def drain(): Unit = StreamSync.maintainQuantileSketches(
@@ -170,7 +263,7 @@ class StreamSpec extends AnyFunSuite {
   }
 
   test("per-batch heavy-hitter sketches keep the Misra-Gries guarantee when merged") {
-    val base = Files.createTempDirectory("graft-stream-hh").toString
+    val base = Fixtures.dir("graft-stream-hh")
     Files.createDirectories(Paths.get(s"$base/in"))
     val docs = Tables(spark, sf, "documents").select(col("doc_id"), col("text"))
     val k = 32
@@ -782,7 +875,7 @@ class StreamSpec extends AnyFunSuite {
   }
 
   test("streaming dedup index matches sequential admission over the pair graph") {
-    val base = Files.createTempDirectory("graft-stream-dix").toString
+    val base = Fixtures.dir("graft-stream-dix")
     Files.createDirectories(Paths.get(s"$base/in"))
     val docs = graft.schema.Tables(spark, sf, "documents")
       .select(col("doc_id"), col("text"))
@@ -831,7 +924,7 @@ class StreamSpec extends AnyFunSuite {
   }
 
   test("drift monitor: per-batch JS matches a reference replay; disjoint vocab hits ln 2") {
-    val base = Files.createTempDirectory("graft-stream-drift").toString
+    val base = Fixtures.dir("graft-stream-drift")
     Files.createDirectories(Paths.get(s"$base/in"))
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     // reference = the full corpus unigram distribution
@@ -886,6 +979,47 @@ class StreamSpec extends AnyFunSuite {
     // disjoint support ⇒ JS = ln 2 exactly; and the alien batch must alarm
     assert(math.abs(jsAlien - math.log(2.0)) < 1e-12)
     assert(jsAlien > jsCorpus)
+  }
+
+  test("sketch, drift and dedup stores: a replayed batch changes no answer and commits once") {
+    val base = Fixtures.dir("graft-stream-store-replay")
+    Files.createDirectories(Paths.get(s"$base/in"))
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    val tokens = docs.select(explode(split(col("text"), " ")).as("token"))
+      .filter(col("token") =!= "")
+    val nTokens = tokens.count().toDouble
+    val reference = tokens.groupBy(col("token")).agg(count(lit(1)).as("n"))
+      .select(col("token"), (col("n") / nTokens).as("p_ref"))
+    def stream() = spark.readStream.schema(docs.schema)
+      .option("maxFilesPerTrigger", "1").parquet(s"$base/in")
+    def drain(): Unit = {
+      StreamSync.maintainQuantileSketches(stream().withColumn("value", col("n_chars")),
+        s"$base/qs", s"$base/chk_qs")
+      StreamSync.maintainHeavyHitters(stream(), s"$base/hh", s"$base/chk_hh")
+      StreamSync.maintainDriftMonitor(stream(), reference, s"$base/mon", s"$base/chk_mon")
+      StreamSync.maintainDedupIndex(stream(), s"$base/idx", s"$base/chk_idx")
+    }
+    def answers() = (
+      StreamSync.readQuantileView(spark, s"$base/qs", Seq(0.5, 0.95)).collect().toSeq,
+      StreamSync.readHeavyHitterView(spark, s"$base/hh").collect().toSeq,
+      StreamSync.readDriftView(spark, s"$base/mon").collect().toSeq,
+      StreamSync.readDedupDecisions(spark, s"$base/idx").collect().map(_.toSeq).toSet)
+    for ((m, tag) <- Seq(0 -> "a", 1 -> "b")) {
+      val stage = s"$base/stage_$tag"
+      docs.filter(col("doc_id") % 2 === m).coalesce(1).write.parquet(stage)
+      import scala.jdk.CollectionConverters._
+      Files.list(Paths.get(stage)).iterator().asScala
+        .filter(_.toString.endsWith(".parquet"))
+        .foreach(p => Files.copy(p, Paths.get(s"$base/in/${tag}_${p.getFileName}")))
+    }
+    drain() // one file per trigger: batches 0 and 1 in every stream
+    val settled = answers()
+    assert(settled._3.size == 2 && settled._4.size == docs.count())
+    Seq("qs", "hh", "mon", "idx").foreach(t => dropCheckpointCommit(s"$base/chk_$t", 1))
+    drain()
+    assert(answers() == settled, s"replay changed an answer: ${answers()} vs $settled")
+    Seq("qs", "hh", "mon", "idx/keys", "idx/sh", "idx/decisions").foreach(t =>
+      assert(batchCommits(s"$base/$t", 1) == 1, s"$t must hold batch 1 once"))
   }
 
   test("streamed IVF vector index: partition-pruned ANN equals the batch IVF query") {
